@@ -40,9 +40,7 @@ object Bpe {
 
   /** Ordered merge rules; rule i was learned at step i and must apply
     * before rule i+1 (BPE application order = learning order). */
-  final case class BpeModel(merges: Seq[(String, String)], endOfWord: String) {
-    def vocabSeed: Seq[String] = merges.map { case (a, b) => a + b }
-  }
+  final case class BpeModel(merges: Seq[(String, String)], endOfWord: String)
 
   /** One greedy leftmost-non-overlapping application of merge (a,b) to
     * a symbol array: fold each symbol onto an accumulator, replacing a
@@ -151,10 +149,4 @@ object Bpe {
           s => s.getField("syms"))),
         lit(Array.empty[String]).cast(ArrayType(StringType))).as(outCol))
   }
-
-  /** Invert the end-of-word convention: tokens → the original words
-    * (validation surface — encode must be lossless). */
-  def decodeTokens(tokens: Column, endOfWord: String): Column =
-    filter(split(array_join(tokens, ""), java.util.regex.Pattern.quote(endOfWord)),
-      s => s =!= "")
 }

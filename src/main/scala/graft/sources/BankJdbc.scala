@@ -17,13 +17,15 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   *   - writes go through `df.write.jdbc` with `batchsize`, so every
   *     partition batches inserts concurrently.
   *
-  * OFFLINE GATE: this container has no reachable database and no
-  * redistributable driver jar, so nothing here runs in CI — the calls are
-  * gated behind [[fromEnv]] (unset env → None → EtlPipeline substitutes
-  * parquet fixtures, the documented deviation in SURVEY §3). The option
-  * construction is pure and unit-tested (BankJdbcSpec); a deployment sets
-  * GRAFT_JDBC_URL / GRAFT_JDBC_USER / GRAFT_JDBC_PASSWORD (and optionally
-  * GRAFT_JDBC_DRIVER) and gets the reference's exact transport.
+  * ENV GATE: the pipeline reaches a bank database only when one is
+  * configured — the calls are gated behind [[fromEnv]] (unset env → None
+  * → EtlPipeline substitutes parquet fixtures, the documented deviation
+  * in SURVEY §3). The option construction is pure and unit-tested, and
+  * BankJdbcSpec round-trips every read and write call through an
+  * embedded in-memory Derby database (its driver ships with Spark). A
+  * deployment sets GRAFT_JDBC_URL / GRAFT_JDBC_USER / GRAFT_JDBC_PASSWORD
+  * (and optionally GRAFT_JDBC_DRIVER) and gets the reference's exact
+  * transport.
   */
 object BankJdbc {
 

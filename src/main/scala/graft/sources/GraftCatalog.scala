@@ -279,11 +279,13 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
     loadTable(ident)
   }
 
+  // drop, rename and namespace drop go through the read-side memos'
+  // invalidation: a table re-created (or renamed) onto a path reuses its
+  // version numbers and data-dir names
   override def dropTable(ident: Identifier): Boolean = {
     if (!exists(ident)) return false
-    val p = new Path(tablePath(ident))
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.delete(p, true)
+    WarehouseFs.deleteIfExists(spark, tablePath(ident))
+    true
   }
 
   override def renameTable(oldIdent: Identifier, newIdent: Identifier): Unit = {
@@ -295,6 +297,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
     fs.mkdirs(to.getParent)
     require(fs.rename(from, to),
       s"graft catalog: rename $oldIdent → $newIdent failed")
+    WarehouseFs.invalidateReadMemos(spark, from.toString)
+    WarehouseFs.invalidateReadMemos(spark, to.toString)
   }
 
   // ---- namespaces: directories under the warehouse root ----------------
@@ -355,7 +359,9 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
     if (!cascade && fs.listStatus(p).nonEmpty)
       throw new IllegalStateException(
         s"graft catalog: namespace ${namespace.mkString(".")} is not empty")
-    fs.delete(p, true)
+    // a cascade drops its tables: clear their read-side memos too
+    WarehouseFs.deleteIfExists(spark, p.toString)
+    true
   }
 }
 

@@ -72,9 +72,9 @@ object WarehouseFs {
   /** Delete `path` recursively if present. */
   def deleteIfExists(spark: SparkSession, path: String): Unit = {
     val (fs, p) = fsFor(spark, path)
-    // a dropped-and-recreated table may reuse (path, version) pairs — the
-    // one staleness hazard of the deletion-vector presence cache
-    invalidateDvPresence(spark, path)
+    // a dropped-and-recreated table may reuse (path, version) pairs and
+    // data-dir names — the one staleness hazard of the read-side memos
+    invalidateReadMemos(spark, path)
     if (fs.exists(p)) { fs.delete(p, true); () }
   }
 
@@ -445,9 +445,7 @@ object WarehouseFs {
   private def readResolved(spark: SparkSession, table: String,
                            r: ResolvedVersion): DataFrame = r.files match {
     case Some(fl) => readFilesGroupedDv(spark, table, fl, r)
-    case None =>
-      reconcileDeclared(spark, table,
-        spark.read.parquet(s"$table/${r.dirName}").drop(RowIdCol))
+    case None => readDirVersion(spark, table, r)
   }
 
   /** [[readResolved]] WITHOUT the deletion-vector mask — for callers
@@ -456,9 +454,186 @@ object WarehouseFs {
   private def readResolvedRaw(spark: SparkSession, table: String,
                               r: ResolvedVersion): DataFrame = r.files match {
     case Some(fl) => readFilesGrouped(spark, table, fl)
-    case None =>
-      reconcileDeclared(spark, table,
-        spark.read.parquet(s"$table/${r.dirName}").drop(RowIdCol))
+    case None => readDirVersion(spark, table, r)
+  }
+
+  /** A dir-manifest version: its whole data dir (which never carries a
+    * deletion vector), reconciled to the declared schema. */
+  private def readDirVersion(spark: SparkSession, table: String,
+                             r: ResolvedVersion): DataFrame = {
+    val dir = s"$table/${r.dirName}"
+    reconcileDeclared(spark, table, readDataDir(spark, dir, Seq(dir)).drop(RowIdCol))
+  }
+
+  // ---- read-side metadata memos ----------------------------------------
+  //
+  // Committed data is immutable, so what a read derives from it memoizes
+  // like the manifest parses above.
+  //
+  // DATA SCHEMA per committed data dir. One dir is written by one job
+  // with one schema and never rewritten once a manifest references it;
+  // without the memo every read of every file group runs a parquet
+  // schema-inference job (a footer read) during planning. Keyed by the
+  // qualified dir, its modification time (a dir deleted and written
+  // again under the same name — a table dropped and re-created at its
+  // path, even by another JVM — misses) and the session confs that
+  // change what parquet inference returns. Only the data columns
+  // memoize: partition columns are still inferred from each read's own
+  // paths, and [[reconcileTo]] still applies the declared schema after
+  // the read. Pre-conversion files at the table root are not a data dir
+  // and keep inference.
+  //
+  // BLOOM INDEX ENTRIES: each `_index/<dir>` entry collects once onto the
+  // driver as (file, b_<col> bitsets, __utc), keyed by the qualified
+  // entry dir plus the name, length and mtime of its part files from ONE
+  // `listStatus`. An entry changes only by a swap that writes a new part
+  // file ([[swapInEntry]], [[invalidateBloomColumn]]), so a swap — in this
+  // JVM or another — misses, and a stale bitset can never turn into a
+  // bloom false negative. Point probes then run on the driver
+  // ([[probeBloomEntry]]) without a Spark job.
+  //
+  // Both are bounded and cleared with the caches above at
+  // [[invalidateReadMemos]], the drop/recreate choke point.
+
+  private val dataSchemaMemo = new java.util.concurrent.ConcurrentHashMap[
+    (String, Long, String), org.apache.spark.sql.types.StructType]()
+
+  /** The session confs that change the schema parquet inference returns. */
+  private def parquetInferenceConfs(spark: SparkSession): String = {
+    val c = spark.sessionState.conf
+    Seq(c.isParquetBinaryAsString, c.isParquetINT96AsTimestamp,
+      c.legacyParquetNanosAsLong, c.parquetInferTimestampNTZEnabled,
+      c.caseSensitiveAnalysis).map(b => if (b) '1' else '0').mkString
+  }
+
+  /** Read `paths` (the dir itself, or files below it) of the committed
+    * data dir `dir`, with `dir` as `basePath` so Hive `key=value`
+    * segments below it surface as partition columns. The dir's data
+    * schema comes from the memo, so only the dir's first read runs an
+    * inference job; that read memoizes what Spark inferred. Index and
+    * zone-map entry dirs qualify too: each is written by one job, and a
+    * rebuild swaps a new dir in under the name. */
+  private def readDataDir(spark: SparkSession, dir: String,
+                          paths: Seq[String]): DataFrame = {
+    val (fs, d) = fsFor(spark, dir)
+    val key =
+      try Some((fs.makeQualified(d).toString,
+        fs.getFileStatus(d).getModificationTime, parquetInferenceConfs(spark)))
+      catch { case _: java.io.FileNotFoundException => None }
+    val reader = spark.read.option("basePath", dir)
+    key.flatMap(k => Option(dataSchemaMemo.get(k))) match {
+      case Some(s) => reader.schema(s).parquet(paths: _*)
+      case None =>
+        val df = reader.parquet(paths: _*)
+        for (k <- key; s <- inferredDataSchema(df)) {
+          if (dataSchemaMemo.size() > 16384) dataSchemaMemo.clear()
+          dataSchemaMemo.put(k, s)
+        }
+        df
+    }
+  }
+
+  /** The data schema (partition columns excluded) Spark inferred for a
+    * plain parquet read. None when a file column shares a partition
+    * column's name: a user-specified schema would move that column. */
+  private def inferredDataSchema(df: DataFrame)
+      : Option[org.apache.spark.sql.types.StructType] = {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    df.queryExecution.analyzed.collectFirst { case l: LogicalRelation => l.relation }
+      .collect {
+        case h: HadoopFsRelation if {
+            val parts = h.partitionSchema.fieldNames.map(_.toLowerCase).toSet
+            !h.dataSchema.fieldNames.exists(n => parts.contains(n.toLowerCase))
+          } => h.dataSchema
+      }
+  }
+
+  /** One bloom index entry as collected onto the driver: per-file
+    * bitsets by `b_<col>` name, row-aligned with `files`. */
+  private final case class BloomEntry(
+      files: Array[String],
+      bitsets: Map[String, Array[org.apache.spark.sql.catalyst.util.ArrayData]],
+      utc: Boolean,
+      bytes: Long)
+
+  private val bloomEntryMemo =
+    new java.util.concurrent.ConcurrentHashMap[(String, String), BloomEntry]()
+
+  /** Entries whose part files hold more than this many bytes are not
+    * collected: they probe as a Spark job, as before (a 10k-file
+    * version's index is ~160 MB). The memo as a whole holds at most
+    * twice this. */
+  private val BloomEntryMemoMaxBytes: Long = 32L << 20
+
+  /** The files named by the bloom index entry `idx` whose bitset over
+    * the PHYSICAL column `physCol` might hold one of `values`. Values
+    * canonicalize exactly as [[bloomHitExpr]] does ([[bloomProbeStrings]]);
+    * a memoized entry probes on the driver, with no Spark job. None =
+    * no entry, no bitsets for the column, or a value that cannot
+    * canonicalize — the caller reads everything. */
+  private def probeBloomEntry(spark: SparkSession, fs: FileSystem, idx: Path,
+                              physCol: String, values: Seq[Any],
+                              colType: => Option[org.apache.spark.sql.types.DataType])
+      : Option[Seq[String]] = {
+    val parts =
+      try fs.listStatus(idx).filter { st =>
+        val n = st.getPath.getName
+        st.isFile && !n.startsWith("_") && !n.startsWith(".")
+      }
+      catch { case _: java.io.FileNotFoundException => return None }
+    if (parts.isEmpty) None
+    else if (parts.map(_.getLen).sum > BloomEntryMemoMaxBytes) {
+      val index = spark.read.parquet(idx.toString)
+      if (!index.columns.contains(s"b_$physCol")) None
+      else bloomHitExpr(spark, physCol, values, colType,
+          index.columns.contains("__utc")).map(hit =>
+        index.filter(hit).select("file").collect().map(_.getString(0)).toSeq)
+    } else {
+      val entry = bloomEntry(spark, fs, idx, parts)
+      entry.bitsets.get(s"b_$physCol").flatMap { bits =>
+        bloomProbeStrings(spark, values, colType, entry.utc).map { probes =>
+          val items = probes.map(org.apache.spark.unsafe.types.UTF8String.fromString)
+          entry.files.indices.filter { i =>
+            // a null bitset proves nothing: keep the file
+            bits(i) == null || items.exists(p =>
+              org.apache.spark.sql.graft.BloomExpressions
+                .mightContain(bits(i), p, BloomIndexHashes))
+          }.map(entry.files(_))
+        }
+      }
+    }
+  }
+
+  /** The memoized entry of `idx`, whose part files are `parts`; a miss
+    * reads exactly those files. */
+  private def bloomEntry(spark: SparkSession, fs: FileSystem, idx: Path,
+                         parts: Seq[org.apache.hadoop.fs.FileStatus]): BloomEntry = {
+    val key = (fs.makeQualified(idx).toString,
+      parts.map(st => s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
+        .sorted.mkString("/"))
+    val hit = bloomEntryMemo.get(key)
+    if (hit != null) return hit
+    val index = spark.read.parquet(parts.map(_.getPath.toString): _*)
+    val rows = index.collect()
+    def at(c: String) = index.schema.fieldIndex(c)
+    val fileAt = at("file")
+    val bitsets = index.columns.filter(_.startsWith("b_")).map { c =>
+      val i = at(c)
+      c -> rows.map[org.apache.spark.sql.catalyst.util.ArrayData] { r =>
+        if (r.isNullAt(i)) null
+        else org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+          .fromPrimitiveArray(r.getSeq[Long](i).toArray)
+      }
+    }.toMap
+    val entry = BloomEntry(rows.map(_.getString(fileAt)),
+      bitsets, index.columns.contains("__utc"), parts.map(_.getLen).sum)
+    bloomEntryMemo.synchronized {
+      var held = 0L
+      bloomEntryMemo.values.forEach(e => held += e.bytes)
+      if (held + entry.bytes > 2 * BloomEntryMemoMaxBytes) bloomEntryMemo.clear()
+      bloomEntryMemo.put(key, entry)
+    }
+    entry
   }
 
   /** Read a root-relative file list with partition columns RESTORED:
@@ -482,12 +657,14 @@ object WarehouseFs {
       if (DataDirName.matches(seg)) seg else ""
     }.toSeq.sortBy(_._1)
     groups.map { case (dir, fs0) =>
-      val base = if (dir.isEmpty) table else s"$table/$dir"
+      val paths = fs0.map(f => s"$table/$f")
+      val raw =
+        if (dir.isEmpty) spark.read.option("basePath", table).parquet(paths: _*)
+        else readDataDir(spark, s"$table/$dir", paths)
       // the row-tracking carrier column is internal plumbing, never
       // table content (dropped BEFORE reconcile so the declared-schema
       // subset check still fires); untracked files no-op
-      reconcileTo(decl, spark.read.option("basePath", base)
-        .parquet(fs0.map(f => s"$table/$f"): _*).drop(RowIdCol))
+      reconcileTo(decl, raw.drop(RowIdCol))
     }.reduce(_.unionByName(_))
   }
 
@@ -712,9 +889,9 @@ object WarehouseFs {
     if (mapping.isEmpty) mapping
     else resolveVersion(spark, table, version) match {
       case Some(r) if !r.isFileList =>
+        val dir = s"$table/${r.dirName}"
         val raw =
-          try spark.read.parquet(s"$table/${r.dirName}").schema
-            .fieldNames.toSet
+          try readDataDir(spark, dir, Seq(dir)).schema.fieldNames.toSet
           catch { case _: Exception => return mapping }
         mapping.filter { case (l, p) => raw.contains(p) || !raw.contains(l) }
       case _ => mapping
@@ -1417,7 +1594,8 @@ object WarehouseFs {
     // stats describe exactly the bytes the manifest will reference, and
     // approx NDV keeps the pass free of countDistinct's Expand blowup
     if (collectStats) {
-      val committed = spark.read.parquet(new Path(t, dataName).toString)
+      val dir = new Path(t, dataName).toString
+      val committed = readDataDir(spark, dir, Seq(dir))
       graft.operators.Quality
         .profileWithCount(committed, committed.columns.toSeq, exact = false)
         .coalesce(1).write.mode(SaveMode.Overwrite)
@@ -2075,7 +2253,7 @@ object WarehouseFs {
                            utc: Boolean = true): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr, lit}
     import org.apache.spark.sql.graft.BloomExpressions.bloom_build
-    val committed = spark.read.parquet(dataPath)
+    val committed = readDataDir(spark, dataPath, Seq(dataPath))
     val marker = s"/$marker0/"
     val rel = expr(
       s"substring(_metadata.file_path, instr(_metadata.file_path, '$marker') + ${marker.length})")
@@ -2097,13 +2275,6 @@ object WarehouseFs {
     org.apache.spark.sql.graft.BloomExpressions.cast_string_tz(
       c, tz.getOrElse("UTC"))
 
-  /** The version-dir-relative files of `table`@`version` (current by
-    * default) that MIGHT contain one of `values` in `column`, per the
-    * persisted bloom index. None = the version has no index over that
-    * column (caller degrades to a full read, never fails); Some(files) is
-    * a superset of the truly-matching files — bloom false positives cost
-    * an extra open, false negatives cannot occur. The probe touches only
-    * the ≤|files|-row index relation, zero data I/O. */
   /** Combined metadata-pruned scan: ONE file set satisfying a
     * conjunction of point predicates (bloom-probed per column) and
     * range predicates (zone-probed per column) — candidate sets
@@ -2297,9 +2468,19 @@ object WarehouseFs {
                            colType: Option[org.apache.spark.sql.types.DataType],
                            utcIndex: Boolean)
       : Option[Column] = {
-    import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, Literal}
     import org.apache.spark.sql.functions.{col, exists, typedlit}
     import org.apache.spark.sql.graft.BloomExpressions.bloom_might_contain
+    bloomProbeStrings(spark, values, colType, utcIndex).map(probes =>
+      exists(typedlit(probes),
+        p => bloom_might_contain(col(s"b_$column"), p, BloomIndexHashes)))
+  }
+
+  /** The distinct canonical probe strings of `values` ([[bloomHitExpr]]'s
+    * rules); None when one of them cannot canonicalize. */
+  private def bloomProbeStrings(spark: SparkSession, values: Seq[Any],
+                                colType: Option[org.apache.spark.sql.types.DataType],
+                                utcIndex: Boolean): Option[Seq[String]] = {
+    import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, Literal}
     import org.apache.spark.sql.types.StringType
     val tz =
       if (utcIndex) Some("UTC")
@@ -2310,13 +2491,14 @@ object WarehouseFs {
       Option(Cast(typed, StringType, tz).eval()).map(_.toString)
     }
     val probes = values.map(canon)
-    if (probes.exists(_.isEmpty)) None
-    else Some(exists(typedlit(probes.flatten.distinct),
-      p => bloom_might_contain(col(s"b_$column"), p, BloomIndexHashes)))
+    if (probes.exists(_.isEmpty)) None else Some(probes.flatten.distinct)
   }
 
   /** Column types of one committed version — the probe-canonicalization
-    * and write-alignment reference (one parquet footer, no data I/O). */
+    * and write-alignment reference. Metadata only: each data dir's
+    * schema comes from the data-schema memo, so after a dir's first read
+    * this starts no Spark job (the manifest parse and the declared
+    * schema memoize too). */
   private def versionSchema(spark: SparkSession, table: String,
                             r: ResolvedVersion)
       : org.apache.spark.sql.types.StructType =
@@ -2344,11 +2526,17 @@ object WarehouseFs {
     }: _*)
   }
 
+  /** The version-dir-relative files of `table`@`version` (current by
+    * default) that MIGHT contain one of `values` in `column`, per the
+    * persisted bloom index. None = the version has no index over that
+    * column (caller degrades to a full read, never fails); Some(files) is
+    * a superset of the truly-matching files — bloom false positives cost
+    * an extra open, false negatives cannot occur. The probe touches only
+    * the ≤|files|-row index entry, zero data I/O, and runs on the driver
+    * against the memoized entry ([[probeBloomEntry]]). */
   def bloomCandidateFiles(spark: SparkSession, table: String, column: String,
                           values: Seq[Any],
                           version: Option[Long] = None): Option[Seq[String]] = {
-    import org.apache.spark.sql.functions.{col, lit}
-    import org.apache.spark.sql.graft.BloomExpressions.bloom_might_contain
     val (fs, t) = fsFor(spark, table)
     val dataName = (version match {
       case Some(v) => readTableVersionPath(spark, table, v)
@@ -2358,20 +2546,10 @@ object WarehouseFs {
     // lookup resolves through the reconciled (logical) schema
     val physCol = physicalColumn(spark, table, column)
     dataName.flatMap { dn =>
-      val idx = new Path(indexDir(t), dn)
-      if (!fs.exists(idx)) None
-      else {
-        val index = spark.read.parquet(idx.toString)
-        if (!index.columns.contains(s"b_$physCol")) None
-        else {
-          val colType = resolveVersion(spark, table, version)
-            .map(versionSchema(spark, table, _))
-            .flatMap(_.find(_.name == column)).map(_.dataType)
-          bloomHitExpr(spark, physCol, values, colType,
-              index.columns.contains("__utc")).map(hit =>
-            index.filter(hit).select("file").collect().map(_.getString(0)).toSeq)
-        }
-      }
+      probeBloomEntry(spark, fs, new Path(indexDir(t), dn), physCol, values,
+        resolveVersion(spark, table, version)
+          .map(versionSchema(spark, table, _))
+          .flatMap(_.find(_.name == column)).map(_.dataType))
     }
   }
 
@@ -2399,8 +2577,8 @@ object WarehouseFs {
           exact(readFilesGroupedDv(spark, table, files, r))
         case Some(files) => // paths are version-dir-relative
           val p = s"$table/${r.dirName}"
-          exact(reconcileDeclared(spark, table, spark.read.option("basePath", p)
-            .parquet(files.map(f => s"$p/$f"): _*)))
+          exact(reconcileDeclared(spark, table,
+            readDataDir(spark, p, files.map(f => s"$p/$f"))))
       }
     }
   }
@@ -2421,7 +2599,7 @@ object WarehouseFs {
   private def zoneMapDf(spark: SparkSession, dataPath: String,
                         marker0: String, cols: Seq[String]): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr, max, min}
-    val committed = spark.read.parquet(dataPath)
+    val committed = readDataDir(spark, dataPath, Seq(dataPath))
     val marker = s"/$marker0/"
     val rel = expr(
       s"substring(_metadata.file_path, instr(_metadata.file_path, '$marker') + ${marker.length})")
@@ -2476,8 +2654,8 @@ object WarehouseFs {
           exact(readFilesGroupedDv(spark, table, files, r))
         case Some(files) =>
           val p = s"$table/${r.dirName}"
-          exact(reconcileDeclared(spark, table, spark.read.option("basePath", p)
-            .parquet(files.map(f => s"$p/$f"): _*)))
+          exact(reconcileDeclared(spark, table,
+            readDataDir(spark, p, files.map(f => s"$p/$f"))))
       }
     }
   }
@@ -2549,10 +2727,15 @@ object WarehouseFs {
     fs.makeQualified(t).toString
   }
 
-  private[graft] def invalidateDvPresence(spark: SparkSession, path: String): Unit = {
+  /** Forget everything memoized about tables at or below `path`: DV
+    * presence, manifest parses, data-dir schemas and bloom entries. */
+  private[graft] def invalidateReadMemos(spark: SparkSession, path: String): Unit = {
     val q = qualifiedTableKey(spark, path)
-    dvPresenceCache.keySet.removeIf(k => k._1 == q || k._1.startsWith(q + "/"))
-    manifestCache.keySet.removeIf(k => k._1 == q || k._1.startsWith(q + "/"))
+    def under(k: String) = k == q || k.startsWith(q + "/")
+    dvPresenceCache.keySet.removeIf(k => under(k._1))
+    manifestCache.keySet.removeIf(k => under(k._1))
+    dataSchemaMemo.keySet.removeIf(k => under(k._1))
+    bloomEntryMemo.keySet.removeIf(k => under(k._1))
   }
 
   /** Refuse non-deterministic DML expressions — the rule every lakehouse
@@ -2716,8 +2899,8 @@ object WarehouseFs {
       val marker = s"/$dir/"
       val rel = expr(s"concat('$dir/', substring(_metadata.file_path, " +
         s"instr(_metadata.file_path, '$marker') + ${marker.length}))")
-      val raw = spark.read.option("basePath", s"$table/$dir")
-        .parquet(fs0.map(f => s"$table/$f"): _*).drop(RowIdCol)
+      val raw = readDataDir(spark, s"$table/$dir", fs0.map(f => s"$table/$f"))
+        .drop(RowIdCol)
       val tagged = raw.select(Seq(rel.as("__dv_file"),
         expr("_metadata.row_index").as("__dv_pos")) ++
         raw.columns.map(col).toSeq: _*)
@@ -2914,8 +3097,10 @@ object WarehouseFs {
     }.toSeq.sortBy(_._1)
     val perGroup = groups.map { case (dir, fs0) =>
       val basePath = if (dir.isEmpty) table else s"$table/$dir"
-      val raw = spark.read.option("basePath", basePath)
-        .parquet(fs0.map(f => s"$table/$f"): _*)
+      val paths = fs0.map(f => s"$table/$f")
+      val raw =
+        if (dir.isEmpty) spark.read.option("basePath", basePath).parquet(paths: _*)
+        else readDataDir(spark, basePath, paths)
       val rel: Column =
         if (dir.isEmpty) {
           // pre-conversion files at the table root: prefix-probe the
@@ -3042,8 +3227,10 @@ object WarehouseFs {
         val marker = s"/$dir/"
         val rel = expr(s"concat('$dir/', substring(_metadata.file_path, " +
           s"instr(_metadata.file_path, '$marker') + ${marker.length}))")
-        val raw = spark.read.option("basePath", s"$table/$dir")
-          .parquet(fs0.map(f => s"$table/$f"): _*)
+        val paths = fs0.map(f => s"$table/$f")
+        val raw =
+          if (DataDirName.matches(dir)) readDataDir(spark, s"$table/$dir", paths)
+          else spark.read.option("basePath", s"$table/$dir").parquet(paths: _*)
         // a group whose file schema lacks a key column predates an
         // alterAddColumns of that column — its rows read NULL for it,
         // which the non-null probes can never match, so the whole group
@@ -3650,7 +3837,7 @@ object WarehouseFs {
         def cols(dir: Path, prefix: String): Seq[String] = {
           val p = new Path(dir, r.dirName)
           if (!fsi.exists(p)) Nil
-          else spark.read.parquet(p.toString).columns
+          else readDataDir(spark, p.toString, Seq(p.toString)).columns
             .filter(_.startsWith(prefix)).map(_.stripPrefix(prefix)).toSeq
         }
         (cols(indexDir(t), "b_"), cols(zonesDir(t), "min_"),
@@ -5741,8 +5928,7 @@ object WarehouseFs {
                                table: String, column: String,
                                values: Seq[Any],
                                commit: Option[Long] = None): Option[DataFrame] = {
-    import org.apache.spark.sql.functions.{col, lit}
-    import org.apache.spark.sql.graft.BloomExpressions.bloom_might_contain
+    import org.apache.spark.sql.functions.col
     val resolved = commit match {
       case Some(c) => commitVersion(spark, warehouse, c)
       case None => currentCommit(spark, warehouse)
@@ -5753,28 +5939,16 @@ object WarehouseFs {
         readBloomPruned(spark, tablePath, column, values, Some(v))
       }.getOrElse(Some(dataPath).map { dataPath =>
       val exact = (df: DataFrame) => df.filter(col(column).isin(values: _*))
+      val full = () => readDataDir(spark, dataPath, Seq(dataPath))
       val dn = dataPath.substring(dataPath.lastIndexOf('/') + 1)
       val (fs, _) = fsFor(spark, warehouse)
       val idx = new Path(new Path(new Path(warehouse), table), s"_index/$dn")
-      if (!fs.exists(idx)) exact(spark.read.parquet(dataPath))
-      else {
-        val index = spark.read.parquet(idx.toString)
-        if (!index.columns.contains(s"b_$column"))
-          exact(spark.read.parquet(dataPath))
-        else {
-          val colType = spark.read.parquet(dataPath).schema
-            .find(_.name == column).map(_.dataType)
-          bloomHitExpr(spark, column, values, colType,
-              index.columns.contains("__utc")) match {
-            case None => exact(spark.read.parquet(dataPath)) // un-probeable → full read
-            case Some(hit) =>
-              val files = index.filter(hit).select("file").collect()
-                .map(_.getString(0)).toSeq
-              if (files.isEmpty) exact(spark.read.parquet(dataPath)).limit(0)
-              else exact(spark.read.option("basePath", dataPath)
-                .parquet(files.map(f => s"$dataPath/$f"): _*))
-          }
-        }
+      probeBloomEntry(spark, fs, idx, column, values,
+          full().schema.find(_.name == column).map(_.dataType)) match {
+        case None => exact(full()) // unindexed or un-probeable → full read
+        case Some(Nil) => exact(full()).limit(0)
+        case Some(files) =>
+          exact(readDataDir(spark, dataPath, files.map(f => s"$dataPath/$f")))
       }
       })
     }
