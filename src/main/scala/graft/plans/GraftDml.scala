@@ -11,7 +11,7 @@ import org.apache.spark.sql.execution.datasources.DataSourceStrategy
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.functions.{coalesce, col, lit, when}
 
-import graft.sources.{GraftCatalog, GraftCatalogTable, GraftRelation, GraftTable, WarehouseFs}
+import graft.sources.{GraftCatalog, GraftCatalogTable, GraftTable, WarehouseFs}
 
 /** SQL DML over graft tables: an analyzer rule that claims resolved
   * `DELETE FROM` / `UPDATE` / `MERGE INTO` statements whose target is a
@@ -139,7 +139,7 @@ object GraftDmlRule extends Rule[LogicalPlan] with PredicateHelper {
     * translation the read path pushes through the DSv2 scan. */
   private[graft] def probesOf(cond: Expression)
       : (Map[String, Seq[Any]], Map[String, (Any, Any)]) =
-    GraftRelation.indexProbes(
+    GraftV2ScanBuilder.indexProbes(
       splitConjunctivePredicates(cond)
         .flatMap(DataSourceStrategy.translateFilter(_,
           supportNestedPredicatePushdown = true)).toArray)
@@ -452,7 +452,6 @@ case class GraftMergeCommand(path: String, targetOutput: Seq[Attribute],
       }
 
     def cc(e: Expression): Column = recolumn(e, tgt, src)
-    def condCol(c: Option[Expression]): Option[Column] = c.map(cc)
 
     // WHEN MATCHED: ANY number of conditional UPDATE/DELETE clauses,
     // folded first-match-wins (ANSI order): each clause's EFFECTIVE

@@ -475,7 +475,7 @@ case class GraftCatalogTable(spark: SparkSession, path: String,
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new org.apache.spark.sql.graft.GraftV2ScanBuilder(
-      spark, path, pinned, schemaArg, GraftRelation.indexProbes)
+      spark, path, pinned, schemaArg)
 
   // ---- read-only partition management: SHOW PARTITIONS ------------------
   //

@@ -1,8 +1,6 @@
 package graft.sources
 
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Row, SQLContext, SaveMode}
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.{DataFrame, SQLContext, SaveMode}
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types.StructType
 
@@ -16,35 +14,30 @@ import org.apache.spark.sql.types.StructType
   * SELECT * FROM tx WHERE day BETWEEN 10 AND 12  -- zone file pruning
   * }}}
   *
-  * Pushdown: Catalyst hands the relation its filters
-  * ([[PrunedFilteredScan]]); equality / IN conjuncts drive the bloom
-  * index, bounded ranges drive the zone map, and the surviving
-  * predicate set re-applies on the pruned read — Spark ALSO
-  * re-evaluates every filter above the relation (none are declared
-  * handled), so index pruning is strictly a file-skip optimization and
-  * bloom false positives stay invisible. Column pruning maps straight
-  * onto the parquet scan's `ReadSchema`.
-  *
   * Options: `table` (path, required), `version` (time travel).
   *
-  * Scale notes: `spark.read.format("graft")` resolves through DSv2
-  * ([[org.apache.spark.sql.connector.catalog.TableProvider]]): after the
-  * index pruning picks the file set, the scan IS Spark's vectorized
+  * Every read is DSv2 ([[org.apache.spark.sql.connector.catalog.TableProvider]]):
+  * `spark.read.format("graft")`, the `USING graft` temp view (Spark
+  * resolves a `TableProvider` through DSv2 first) and the `graft`
+  * catalog all build their scan in
+  * [[org.apache.spark.sql.graft.GraftV2ScanBuilder]]. Pushed filters
+  * drive the index probes — equality / IN conjuncts the bloom index and
+  * partition paths, bounded ranges the zone map — and every filter is
+  * re-evaluated above the scan, so index pruning is strictly a
+  * file-skip optimization and bloom false positives stay invisible.
+  * After pruning picks the file set, the scan IS Spark's vectorized
   * parquet scan over those files — columnar batches, whole-stage
-  * codegen, row-group pushdown — so full-table analytics pay no row
-  * boundary ([[org.apache.spark.sql.graft.GraftV2ScanBuilder]]), and
-  * committed table statistics report into Catalyst on unpruned scans.
-  * The V1 [[GraftRelation]] remains only for the SQL `USING graft`
-  * temp-view path (resolved through [[RelationProvider]]), where its
-  * row round-trip is noise for the point lookups it serves. Batch
-  * writes and the streaming sink intentionally stay V1: the table
-  * reports no write capability, so Spark falls back to
+  * codegen, row-group pushdown — and committed table statistics report
+  * into Catalyst on unpruned scans.
+  *
+  * Only batch writes and the streaming sink are V1: the table reports
+  * no write capability, so Spark falls back to
   * [[CreatableRelationProvider]] / [[StreamSinkProvider]] — an
   * overwrite publishes a new version via
   * [[WarehouseFs.publishVersioned]] (bloom/zone columns via
   * `bloomIndexCols` / `zoneMapCols` comma-lists). */
-class GraftSource extends RelationProvider with CreatableRelationProvider
-    with StreamSinkProvider with DataSourceRegister
+class GraftSource extends CreatableRelationProvider with StreamSinkProvider
+    with DataSourceRegister
     with org.apache.spark.sql.connector.catalog.TableProvider {
   override def shortName(): String = "graft"
 
@@ -249,12 +242,7 @@ class GraftSource extends RelationProvider with CreatableRelationProvider
     parameters.getOrElse("table",
       throw new IllegalArgumentException("graft source: option 'table' required"))
 
-  override def createRelation(sqlContext: SQLContext,
-                              parameters: Map[String, String]): BaseRelation =
-    GraftRelation(sqlContext, tableOf(parameters),
-      parameters.get("version").map(_.toLong))
-
-  override def createRelation(sqlContext: SQLContext, mode: SaveMode,
+  override def createRelation(ctx: SQLContext, mode: SaveMode,
                               parameters: Map[String, String],
                               data: DataFrame): BaseRelation = {
     val table = tableOf(parameters)
@@ -279,7 +267,12 @@ class GraftSource extends RelationProvider with CreatableRelationProvider
           bloomIndexCols = cols("bloomIndexCols"),
           zoneMapCols = cols("zoneMapCols"))
     }
-    GraftRelation(sqlContext, table, None)
+    // Spark only re-caches by the returned relation; it reads nothing
+    // from it, so the table is not re-read after the commit
+    new BaseRelation {
+      override def sqlContext: SQLContext = ctx
+      override def schema: StructType = data.schema
+    }
   }
 }
 
@@ -303,7 +296,7 @@ case class GraftTable(spark: org.apache.spark.sql.SparkSession,
       options: org.apache.spark.sql.util.CaseInsensitiveStringMap)
       : org.apache.spark.sql.connector.read.ScanBuilder =
     new org.apache.spark.sql.graft.GraftV2ScanBuilder(
-      spark, tablePath, pinnedVersion, schemaArg, GraftRelation.indexProbes)
+      spark, tablePath, pinnedVersion, schemaArg)
 }
 
 object GraftTable {
@@ -319,117 +312,4 @@ object GraftTable {
     }).getOrElse(throw new IllegalArgumentException(
       s"graft source: $table${version.fold("")(v => s"@v$v")} is not a " +
         "committed versioned table")).schema
-}
-
-object GraftRelation {
-  /** (point-equality probes, bounded-range probes) extractable from the
-    * pushed conjunction — ONLY top-level conjuncts participate (a
-    * disjunction can't prune per-branch without union semantics), and
-    * unsupported shapes simply don't prune. Shared by the V1 relation
-    * and the DSv2 scan builder; public so tests can pin the
-    * translation. */
-  def indexProbes(filters: Array[Filter])
-      : (Map[String, Seq[Any]], Map[String, (Any, Any)]) = {
-    val flat = filters.flatMap {
-      case And(l, r) => Seq(l, r)
-      case f => Seq(f)
-    }
-    val point = flat.collect {
-      case EqualTo(a, v) if v != null => a -> Seq(v)
-      case In(a, vs) if vs.nonEmpty && !vs.contains(null) => a -> vs.toSeq
-    }.groupBy(_._1)
-      // two point conjuncts on one column must BOTH hold → value-set ∩
-      .map { case (c, ps) => c -> ps.map(_._2.toSet).reduce(_ intersect _).toSeq }
-      .filter(_._2.nonEmpty)
-    val los = flat.collect {
-      case GreaterThan(a, v) => a -> v
-      case GreaterThanOrEqual(a, v) => a -> v
-      case EqualTo(a, v) if v != null => a -> v
-    }.groupBy(_._1).map { case (c, vs) =>
-      val bs = vs.map(_._2).toSeq; c -> bs.max(boundOrdering(bs)) }
-    val his = flat.collect {
-      case LessThan(a, v) => a -> v
-      case LessThanOrEqual(a, v) => a -> v
-      case EqualTo(a, v) if v != null => a -> v
-    }.groupBy(_._1).map { case (c, vs) =>
-      val bs = vs.map(_._2).toSeq; c -> bs.min(boundOrdering(bs)) }
-    val ranges = los.keySet.intersect(his.keySet)
-      .map(c => c -> ((los(c), his(c)))).toMap
-    (point, ranges)
-  }
-
-  /** Tightest-bound selection among multiple inequality conjuncts on
-    * one column happens in the VALUE's type — numerics numerically
-    * (`id > 3 AND id > 25` probes lo = 25, not the lexicographic 3),
-    * same-class `Comparable`s (strings, dates, timestamps) natively —
-    * with a lexicographic last resort that is still safe: the chosen
-    * bound is looser-or-equal and the exact filters re-apply above. */
-  private def boundOrdering(vs: Seq[Any]): Ordering[Any] = {
-    def num(a: Any): Option[BigDecimal] = a match {
-      case n: java.lang.Number =>
-        scala.util.Try(BigDecimal(n.toString)).toOption // NaN/Inf → None
-      case _ => None
-    }
-    if (vs.forall(num(_).isDefined)) Ordering.by((a: Any) => num(a).get)
-    else if (vs.map(_.getClass).distinct.size == 1 &&
-             vs.head.isInstanceOf[Comparable[_]])
-      new Ordering[Any] {
-        def compare(x: Any, y: Any): Int =
-          x.asInstanceOf[Comparable[Any]].compareTo(y)
-      }
-    else Ordering.by((_: Any).toString)
-  }
-}
-
-/** V1 relation for the SQL `USING graft` temp-view path: pushed filters
-  * drive the same index probes as the DSv2 scan; everything re-checks
-  * above the relation. Point lookups only — full-table analytics use
-  * the DSv2 read ([[GraftTable]]). */
-case class GraftRelation(sqlContext: SQLContext, table: String,
-                         version: Option[Long])
-    extends BaseRelation with PrunedFilteredScan {
-  private def spark = sqlContext.sparkSession
-
-  override val schema: StructType =
-    GraftTable.resolveSchema(spark, table, version)
-
-  /** See [[GraftRelation.indexProbes]] (kept as an instance entry so
-    * tests pin the translation through the relation). */
-  def indexProbes(filters: Array[Filter])
-      : (Map[String, Seq[Any]], Map[String, (Any, Any)]) =
-    GraftRelation.indexProbes(filters)
-
-  /** Best-effort Filter→Column for re-applying pushed predicates inside
-    * the pruned read (row-group pushdown + fewer rows over the V1 row
-    * boundary); None for shapes we leave to Spark's re-evaluation. */
-  private def toColumn(f: Filter): Option[org.apache.spark.sql.Column] = f match {
-    case EqualTo(a, v) => Some(col(a) === lit(v))
-    case In(a, vs) => Some(col(a).isin(vs.toSeq: _*))
-    case GreaterThan(a, v) => Some(col(a) > lit(v))
-    case GreaterThanOrEqual(a, v) => Some(col(a) >= lit(v))
-    case LessThan(a, v) => Some(col(a) < lit(v))
-    case LessThanOrEqual(a, v) => Some(col(a) <= lit(v))
-    case IsNull(a) => Some(col(a).isNull)
-    case IsNotNull(a) => Some(col(a).isNotNull)
-    case And(l, r) => for { lc <- toColumn(l); rc <- toColumn(r) } yield lc && rc
-    case Or(l, r) => for { lc <- toColumn(l); rc <- toColumn(r) } yield lc || rc
-    case Not(c) => toColumn(c).map(!_)
-    case _ => None
-  }
-
-  override def buildScan(requiredColumns: Array[String],
-                         filters: Array[Filter]): RDD[Row] = {
-    val (point, ranges) = indexProbes(filters)
-    val (pruned, _, _) = WarehouseFs
-      .prunedScan(spark, table, point, ranges, version)
-      .getOrElse(throw new IllegalStateException(
-        s"graft source: $table vanished between schema and scan"))
-    val filtered = filters.flatMap(toColumn).foldLeft(pruned)(_.filter(_))
-    val projected =
-      if (requiredColumns.isEmpty)
-        // COUNT(*)-style scans: Spark wants bare rows, any column does
-        filtered.select(lit(1).as("one")).drop("one")
-      else filtered.select(requiredColumns.map(col).toSeq: _*)
-    projected.rdd
-  }
 }

@@ -27,21 +27,20 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * rather than re-implementing a columnar parquet reader: after graft's
   * bloom/zone/partition index pruning selects the FILE set, the scan IS
   * Spark's vectorized parquet scan over exactly those files — whole-stage
-  * codegen, columnar batches, row-group pushdown and all. The V1
-  * `GraftRelation` row boundary (one InternalRow→Row→InternalRow
-  * round-trip per row) only remains for the SQL `USING graft` temp-view
-  * path.
+  * codegen, columnar batches, row-group pushdown and all. Every read of
+  * a graft table — `spark.read.format("graft")`, the `USING graft` temp
+  * view and the `graft` catalog — plans through this builder; only
+  * writes and the streaming sink stay V1.
   *
   * Catalyst filters arrive verbatim ([[SupportsPushDownCatalystFilters]],
   * the same entry the file sources use), drive the index probes in their
   * translated `sources.Filter` form, and are ALL returned as residual —
   * Spark re-evaluates every predicate above the scan, so bloom false
   * positives stay invisible and pruning is strictly a file-skip
-  * optimization, exactly the V1 posture. */
+  * optimization. */
 class GraftV2ScanBuilder(
     spark: SparkSession, table: String, version: Option[Long],
-    tableSchema: StructType,
-    probes: Array[Filter] => (Map[String, Seq[Any]], Map[String, (Any, Any)]))
+    tableSchema: StructType)
   extends ScanBuilder with SupportsPushDownCatalystFilters
   with SupportsPushDownRequiredColumns with SupportsPushDownAggregates {
 
@@ -208,7 +207,7 @@ class GraftV2ScanBuilder(
   private def mkDelegate(exprs: Seq[Expression]): ParquetScanBuilder = {
     val v1 = exprs.flatMap(e =>
       DataSourceStrategy.translateFilter(e, supportNestedPredicatePushdown = true))
-    val (point, ranges) = probes(v1.toArray)
+    val (point, ranges) = GraftV2ScanBuilder.indexProbes(v1.toArray)
     val (files, partCols, kept, total) =
       graft.sources.WarehouseFs.prunedFiles(spark, table, point, ranges, snapshotVersion)
         .getOrElse(throw new IllegalStateException(
@@ -329,6 +328,65 @@ class GraftV2ScanBuilder(
 }
 
 object GraftV2ScanBuilder {
+  /** (point-equality probes, bounded-range probes) extractable from the
+    * pushed conjunction — ONLY top-level conjuncts participate (a
+    * disjunction can't prune per-branch without union semantics), and
+    * unsupported shapes simply don't prune. Shared by the scan builder
+    * and the SQL DML translation; public so tests can pin the
+    * translation. */
+  def indexProbes(filters: Array[Filter])
+      : (Map[String, Seq[Any]], Map[String, (Any, Any)]) = {
+    import org.apache.spark.sql.sources.{And, EqualTo, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual}
+    val flat = filters.flatMap {
+      case And(l, r) => Seq(l, r)
+      case f => Seq(f)
+    }
+    val point = flat.collect {
+      case EqualTo(a, v) if v != null => a -> Seq(v)
+      case In(a, vs) if vs.nonEmpty && !vs.contains(null) => a -> vs.toSeq
+    }.groupBy(_._1)
+      // two point conjuncts on one column must BOTH hold → value-set ∩
+      .map { case (c, ps) => c -> ps.map(_._2.toSet).reduce(_ intersect _).toSeq }
+      .filter(_._2.nonEmpty)
+    val los = flat.collect {
+      case GreaterThan(a, v) => a -> v
+      case GreaterThanOrEqual(a, v) => a -> v
+      case EqualTo(a, v) if v != null => a -> v
+    }.groupBy(_._1).map { case (c, vs) =>
+      val bs = vs.map(_._2).toSeq; c -> bs.max(boundOrdering(bs)) }
+    val his = flat.collect {
+      case LessThan(a, v) => a -> v
+      case LessThanOrEqual(a, v) => a -> v
+      case EqualTo(a, v) if v != null => a -> v
+    }.groupBy(_._1).map { case (c, vs) =>
+      val bs = vs.map(_._2).toSeq; c -> bs.min(boundOrdering(bs)) }
+    val ranges = los.keySet.intersect(his.keySet)
+      .map(c => c -> ((los(c), his(c)))).toMap
+    (point, ranges)
+  }
+
+  /** Tightest-bound selection among multiple inequality conjuncts on
+    * one column happens in the VALUE's type — numerics numerically
+    * (`id > 3 AND id > 25` probes lo = 25, not the lexicographic 3),
+    * same-class `Comparable`s (strings, dates, timestamps) natively —
+    * with a lexicographic last resort that is still safe: the chosen
+    * bound is looser-or-equal and the exact filters re-apply above. */
+  private def boundOrdering(vs: Seq[Any]): Ordering[Any] = {
+    def num(a: Any): Option[BigDecimal] = a match {
+      case n: java.lang.Number =>
+        scala.util.Try(BigDecimal(n.toString)).toOption // NaN/Inf → None
+      case _ => None
+    }
+    if (vs.forall(num(_).isDefined)) Ordering.by((a: Any) => num(a).get)
+    else if (vs.map(_.getClass).distinct.size == 1 &&
+             vs.head.isInstanceOf[Comparable[_]])
+      new Ordering[Any] {
+        def compare(x: Any, y: Any): Int =
+          x.asInstanceOf[Comparable[Any]].compareTo(y)
+      }
+    else Ordering.by((_: Any).toString)
+  }
+
   /** A [[PartitioningAwareFileIndex]] over an EXPLICIT file set.
     * Flat layouts list the files as roots (no partition discovery —
     * there is nothing to discover). Hive layouts get a hand-built

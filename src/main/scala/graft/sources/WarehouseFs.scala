@@ -1074,9 +1074,6 @@ object WarehouseFs {
   // publish rewrites the files, which retires both.
   private def droppedFile(t: Path) = new Path(t, "_meta/dropped")
 
-  private def droppedSpellings(fs: FileSystem, t: Path): Set[String] =
-    ddlState(fs, t).dropped
-
   /** A rename or drop of a column a stored CHECK references would make
     * every subsequent write fail resolving the constraint — refuse the
     * DDL with guidance instead (drop the constraint, alter, re-declare
@@ -1109,13 +1106,6 @@ object WarehouseFs {
         s"$table is not a versioned table"))
     versionSchema(spark, table, r)
   }
-
-  /** The table's current LOGICAL declaration: the sidecar when present,
-    * else the committed schema. */
-  private def currentDeclaration(spark: SparkSession, table: String)
-      : org.apache.spark.sql.types.StructType =
-    declaredSchema(spark, table)
-      .getOrElse(committedDeclaration(spark, table))
 
   private def withPhysical(f: org.apache.spark.sql.types.StructField,
                            physical: String)
@@ -1264,7 +1254,7 @@ object WarehouseFs {
                        f: org.apache.spark.sql.types.StructField =>
                          Option[org.apache.spark.sql.types.StructField])
       : org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types.{StructField, StructType}
+    import org.apache.spark.sql.types.StructType
     path match {
       case Seq(leaf) =>
         StructType(decl.fields.flatMap(fl =>
@@ -2275,42 +2265,6 @@ object WarehouseFs {
     org.apache.spark.sql.graft.BloomExpressions.cast_string_tz(
       c, tz.getOrElse("UTC"))
 
-  /** Combined metadata-pruned scan: ONE file set satisfying a
-    * conjunction of point predicates (bloom-probed per column) and
-    * range predicates (zone-probed per column) — candidate sets
-    * INTERSECT, because every predicate must hold. Predicates on
-    * unindexed columns contribute nothing (the caller re-applies the
-    * exact predicates on the survivors, so pruning is only ever a
-    * file-skip optimization, never a correctness dependence).
-    *
-    * Returns (dataframe over the surviving files, survivors, total) —
-    * the counts are the pruning evidence a caller (or a test) can
-    * assert on. This is the [[GraftSource]] pushdown target; it is
-    * also the direct API for a reader combining both index kinds
-    * (`WHERE user = ? AND day BETWEEN ? AND ?`). */
-  def prunedScan(spark: SparkSession, table: String,
-                 point: Map[String, Seq[Any]] = Map.empty,
-                 ranges: Map[String, (Any, Any)] = Map.empty,
-                 version: Option[Long] = None): Option[(DataFrame, Int, Int)] =
-    resolveVersion(spark, table, version) match {
-      case Some(r) =>
-        Some {
-          val (files, all) = prunedFileCore(spark, table, r, point, ranges)
-          val df =
-            if (files.size == all.size) readResolved(spark, table, r)
-            else if (files.isEmpty) readResolved(spark, table, r).limit(0)
-            else readFilesGroupedDv(spark, table, files, r)
-          (df, files.size, all.size)
-        }
-      case None if version.isEmpty && hasData(spark, table) =>
-        // plain-directory table (the migration posture [[readTable]]
-        // already serves): no manifest → no indexes → no pruning, but
-        // the scan must not fail where the schema resolution succeeded
-        val n = plainDirFiles(spark, table).size
-        Some((spark.read.parquet(table), n, n))
-      case None => None
-    }
-
   /** Root-relative parquet files of a PLAIN (non-manifest) table dir.
     * Mirrors Spark's hidden-file convention: any path SEGMENT starting
     * with `_` or `.` (a `_temporary`/`.spark-staging` leftover of a
@@ -2335,8 +2289,16 @@ object WarehouseFs {
     out.sorted.toSeq
   }
 
-  /** The candidate core shared by [[prunedScan]] and [[prunedFiles]]:
-    * (surviving root-relative files, all root-relative files). */
+  /** The candidate core shared by [[prunedFiles]] and the DML verbs
+    * (which prune against the version they already resolved): ONE file
+    * set satisfying a conjunction of point predicates (bloom-probed, and
+    * path-pruned on partition columns) and range predicates
+    * (zone-probed) — candidate sets INTERSECT, because every predicate
+    * must hold. Predicates on unindexed columns contribute nothing (the
+    * caller re-applies the exact predicates on the survivors, so
+    * pruning is only ever a file-skip optimization, never a correctness
+    * dependence). Returns (surviving root-relative files, all
+    * root-relative files). */
   private def prunedFileCore(spark: SparkSession, table: String,
                              r: ResolvedVersion,
                              point: Map[String, Seq[Any]],
@@ -2367,8 +2329,9 @@ object WarehouseFs {
     (all.filter(cand), all)
   }
 
-  /** [[prunedScan]]'s file-set form, for readers that assemble their own
-    * scan (the DSv2 `graft` source): absolute surviving file paths, the
+  /** The index-pruned file set of `table`@`version` (current by
+    * default) for readers that assemble their own scan (the DSv2 `graft`
+    * source): absolute surviving file paths, the
     * partition columns the file LAYOUT encodes (Hive `key=value`
     * segments — empty for flat layouts), and (survivors, total) as
     * pruning evidence. Metadata-only: index probes + path arithmetic,
@@ -2386,9 +2349,11 @@ object WarehouseFs {
             files.size, all.size)
         }
       case None if version.isEmpty && hasData(spark, table) =>
-        // plain-dir fallback (see [[prunedScan]]); partition columns come
-        // straight off the root-relative layout — no version-dir segment
-        // to drop here
+        // plain-directory table (the migration posture [[readTable]]
+        // already serves): no manifest → no indexes → no pruning, but
+        // the scan must not fail where the schema resolution succeeded;
+        // partition columns come straight off the root-relative layout —
+        // no version-dir segment to drop here
         val files = plainDirFiles(spark, table)
         val partCols = files.headOption.map {
           _.split('/').dropRight(1).filter(_.contains('='))
@@ -2553,36 +2518,6 @@ object WarehouseFs {
     }
   }
 
-  /** Point-lookup read of `table`@`version` (current by default) that
-    * opens ONLY the files whose bloom bitset matches one of `values` —
-    * then re-applies the exact `IN` predicate, so the result is
-    * row-identical to a full-scan filter. Tables/versions published
-    * without `bloomIndexCols` (or indexed on other columns) fall back to
-    * the full read transparently. Partition columns survive the
-    * file-list read via `basePath`. */
-  def readBloomPruned(spark: SparkSession, table: String, column: String,
-                      values: Seq[Any],
-                      version: Option[Long] = None): Option[DataFrame] = {
-    import org.apache.spark.sql.functions.col
-    resolveVersion(spark, table, version).map { r =>
-      val exact = (df: DataFrame) => df.filter(col(column).isin(values: _*))
-      // probe the SAME resolved version, not a re-resolution: a publish
-      // landing between the two reads would mix one version's file list
-      // with another's format
-      bloomCandidateFiles(spark, table, column, values, Some(r.version)) match {
-        case None => exact(readResolved(spark, table, r)) // no index: full read
-        case Some(Nil) => // no file can match: empty, schema preserved
-          exact(readResolved(spark, table, r)).limit(0)
-        case Some(files) if r.isFileList => // paths are table-root-relative
-          exact(readFilesGroupedDv(spark, table, files, r))
-        case Some(files) => // paths are version-dir-relative
-          val p = s"$table/${r.dirName}"
-          exact(reconcileDeclared(spark, table,
-            readDataDir(spark, p, files.map(f => s"$p/$f"))))
-      }
-    }
-  }
-
   // ---- zone maps (per-file min/max) ------------------------------------
   //
   // The range-predicate complement of the bloom index: parquet footers
@@ -2631,31 +2566,6 @@ object WarehouseFs {
         else Some(zones
           .filter(col(s"max_$physCol") >= lit(lo) && col(s"min_$physCol") <= lit(hi))
           .select("file").collect().map(_.getString(0)).toSeq)
-      }
-    }
-  }
-
-  /** Range read `lo <= column <= hi` opening only zone-overlapping files,
-    * then re-applying the exact predicate — row parity with a full scan,
-    * without the per-file footer round-trips. Unzoned tables/columns
-    * fall back to the full read. */
-  def readRangePruned(spark: SparkSession, table: String, column: String,
-                      lo: Any, hi: Any,
-                      version: Option[Long] = None): Option[DataFrame] = {
-    import org.apache.spark.sql.functions.{col, lit}
-    resolveVersion(spark, table, version).map { r =>
-      val exact = (df: DataFrame) =>
-        df.filter(col(column) >= lit(lo) && col(column) <= lit(hi))
-      // pinned to the resolved version (see readBloomPruned)
-      zoneCandidateFiles(spark, table, column, lo, hi, Some(r.version)) match {
-        case None => exact(readResolved(spark, table, r))
-        case Some(Nil) => exact(readResolved(spark, table, r)).limit(0)
-        case Some(files) if r.isFileList =>
-          exact(readFilesGroupedDv(spark, table, files, r))
-        case Some(files) =>
-          val p = s"$table/${r.dirName}"
-          exact(reconcileDeclared(spark, table,
-            readDataDir(spark, p, files.map(f => s"$p/$f"))))
       }
     }
   }
@@ -3558,7 +3468,7 @@ object WarehouseFs {
                          readFiles: Seq[String] = Nil,
                          conflictProbe: Option[(ResolvedVersion, Seq[String]) => Seq[String]] = None,
                          blindAppend: Boolean = false,
-                         op: String = "write",
+                         op: String,
                          txn: Option[(String, Long)] = None): Unit = {
     val (fs, t) = fsFor(spark, table)
     val dirName = // unconditional uniqueness: the nonce is per-attempt
@@ -4355,8 +4265,8 @@ object WarehouseFs {
   private def publishDvOnly(spark: SparkSession, table: String,
                             prior: ResolvedVersion, freshDv: DataFrame,
                             keepVersions: Int,
-                            readFiles: Seq[String] = Nil,
-                            conflictProbe: Option[(ResolvedVersion, Seq[String]) => Seq[String]] = None,
+                            readFiles: Seq[String],
+                            conflictProbe: Option[(ResolvedVersion, Seq[String]) => Seq[String]],
                             op: String = "delete",
                             txn: Option[(String, Long)] = None): Unit = {
     val (fs, t) = fsFor(spark, table)
@@ -5919,11 +5829,13 @@ object WarehouseFs {
   }
 
   /** Bloom-pruned point lookup on a COMMIT-SET table (latest commit by
-    * default) — the commit-set counterpart of [[readBloomPruned]], with
-    * the same contract: open only matching files, exact row parity via
-    * the re-applied predicate, transparent full-read fallback when the
-    * column/table is unindexed. Carried-forward tables resolve to the
-    * index of the data dir their commit line re-references. */
+    * default): open only matching files, exact row parity via the
+    * re-applied `IN` predicate, transparent full-read fallback when the
+    * column/table is unindexed. A version-pinned member reads its pinned
+    * version through the DSv2 `graft` source, whose scan does the same
+    * pruning (None when that version has expired); carried-forward
+    * tables resolve to the index of the data dir their commit line
+    * re-references. */
   def readCommittedBloomPruned(spark: SparkSession, warehouse: String,
                                table: String, column: String,
                                values: Seq[Any],
@@ -5935,8 +5847,12 @@ object WarehouseFs {
     }
     resolved.flatMap(_._2.get(table)).flatMap { dataPath =>
       pinnedVersion(dataPath).map { case (tablePath, v) =>
-        // version-pin member: the member chain's own bloom-pruned read
-        readBloomPruned(spark, tablePath, column, values, Some(v))
+        // version-pin member: the member chain's own index-pruned read
+        resolveVersion(spark, tablePath, Some(v)).map { _ =>
+          spark.read.format("graft").option("table", tablePath)
+            .option("version", v).load()
+            .filter(col(column).isin(values: _*))
+        }
       }.getOrElse(Some(dataPath).map { dataPath =>
       val exact = (df: DataFrame) => df.filter(col(column).isin(values: _*))
       val full = () => readDataDir(spark, dataPath, Seq(dataPath))

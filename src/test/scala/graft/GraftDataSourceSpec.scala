@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources.{And => FAnd, EqualTo => FEq, GreaterThanOrEqual => FGe, In => FIn, LessThanOrEqual => FLe, StringContains}
-import graft.sources.{GraftRelation, WarehouseFs}
+import graft.sources.WarehouseFs
+import org.apache.spark.sql.graft.GraftV2ScanBuilder.indexProbes
 
 /** The registered `graft` data source: versioned tables via
   * `spark.read.format("graft")` and SQL `USING graft`, with pushed
@@ -33,6 +34,7 @@ class GraftDataSourceSpec extends SparkSpec {
       zoneMapCols = Seq("id"))
 
   test("format(graft): schema, full read, point read, and SQL attach agree") {
+    import org.apache.spark.sql.execution.datasources.v2.{BatchScanExec, DataSourceV2Relation}
     val t = tmpTable(); publish(t)
     val df = spark.read.format("graft").option("table", t).load()
     assert(df.columns.toSeq === Seq("id", "user", "grp"))
@@ -42,8 +44,16 @@ class GraftDataSourceSpec extends SparkSpec {
     // short name resolves from SQL too
     spark.sql(s"CREATE OR REPLACE TEMPORARY VIEW graft_ds_v " +
       s"USING graft OPTIONS (table '$t')")
-    assert(spark.sql("SELECT user FROM graft_ds_v WHERE id = 77")
-      .as[String].collect() === Array("u77"))
+    val viaView = spark.sql("SELECT user FROM graft_ds_v WHERE id = 77")
+    assert(viaView.as[String].collect() === Array("u77"))
+    // the view resolves through DSv2, not a V1 relation: its plans hold
+    // the DSv2 relation and Spark's batch scan
+    assert(viaView.queryExecution.analyzed
+      .collectFirst { case r: DataSourceV2Relation => r }.isDefined,
+      s"USING graft must analyze to a DSv2 relation:\n${viaView.queryExecution.analyzed}")
+    assert(viaView.queryExecution.executedPlan
+      .collectFirst { case b: BatchScanExec => b }.isDefined,
+      s"USING graft must execute as a BatchScan:\n${viaView.queryExecution.executedPlan}")
     assert(spark.sql(
       "SELECT count(*) AS n FROM graft_ds_v WHERE id BETWEEN 100 AND 199")
       .as[Long].collect() === Array(100L))
@@ -52,38 +62,37 @@ class GraftDataSourceSpec extends SparkSpec {
 
   test("pushed filters prune files: bloom for equality/IN, zones for ranges, intersected") {
     val t = tmpTable(); publish(t)
-    val rel = GraftRelation(spark.sqlContext, t, None)
     // translation: conjuncts split, IN sets intersect, eq feeds ranges too
-    val (point, ranges) = rel.indexProbes(Array(
+    val (point, ranges) = indexProbes(Array(
       FAnd(FEq("user", "u10"), FIn("id", Array(10L, 11L)))))
     assert(point === Map("user" -> Seq("u10"), "id" -> Seq(10L, 11L)))
     // equality doubles as a degenerate range (zone-prunable); IN does not
     assert(ranges === Map("user" -> (("u10", "u10"))))
     // a range-only probe
-    val (_, r2) = rel.indexProbes(Array(FGe("id", 2000L), FLe("id", 2100L)))
+    val (_, r2) = indexProbes(Array(FGe("id", 2000L), FLe("id", 2100L)))
     assert(r2 === Map("id" -> ((2000L, 2100L))))
     // unsupported shapes translate to nothing (and stay correct upstream)
-    assert(rel.indexProbes(Array(StringContains("user", "u1"))) ===
+    assert(indexProbes(Array(StringContains("user", "u1"))) ===
       ((Map.empty, Map.empty)))
     // tightest-bound selection among multiple conjuncts is TYPED:
     // {9, 10} resolves numerically (lexicographic would pick "9" as the
     // larger lower bound and under-prune)
-    val (_, rTight) = rel.indexProbes(Array(
+    val (_, rTight) = indexProbes(Array(
       FGe("id", 9L), FGe("id", 10L), FLe("id", 10L), FLe("id", 9L)))
     assert(rTight === Map("id" -> ((10L, 9L))),
       "numeric bounds must compare in the value's type, not as strings")
     // strings keep their natural (lexicographic) comparison
-    val (_, rStr) = rel.indexProbes(Array(
+    val (_, rStr) = indexProbes(Array(
       FGe("user", "a"), FGe("user", "b"), FLe("user", "z")))
     assert(rStr === Map("user" -> (("b", "z"))))
 
     // pruning evidence through the combined scan: equality on a bloom
     // column + range on the zone column opens a strict file subset
-    val Some((_, nPoint, total)) = WarehouseFs.prunedScan(spark, t,
+    val Some((_, _, nPoint, total)) = WarehouseFs.prunedFiles(spark, t,
       point = Map("id" -> Seq(42L)))
     assert(total === 8)
     assert(nPoint < total, "bloom must prune the range-clustered layout")
-    val Some((_, nBoth, _)) = WarehouseFs.prunedScan(spark, t,
+    val Some((_, _, nBoth, _)) = WarehouseFs.prunedFiles(spark, t,
       point = Map("user" -> Seq("u4000")),
       ranges = Map("id" -> ((0L, 10L))))
     assert(nBoth === 0,
@@ -101,8 +110,8 @@ class GraftDataSourceSpec extends SparkSpec {
     Seq.tabulate(400)(i => (i.toLong, i % 4, s"u$i")).toDF("id", "day", "user")
       .write.format("graft").option("table", t)
       .option("partitionBy", "day").option("keepVersions", "5").save()
-    // evidence at the prunedScan layer: day=2 keeps a strict file subset
-    val Some((_, n2, total)) = WarehouseFs.prunedScan(spark, t,
+    // evidence at the prunedFiles layer: day=2 keeps a strict file subset
+    val Some((_, _, n2, total)) = WarehouseFs.prunedFiles(spark, t,
       point = Map("day" -> Seq(2)))
     assert(n2 < total, s"partition point predicate must prune: $n2 of $total")
     // end-to-end parity incl. the partition column in the output

@@ -62,6 +62,15 @@ abstract class SparkSpec extends AnyFunSuite
     } finally super.afterEach()
   }
 
+  /** `table` (current version by default) through the registered DSv2
+    * `graft` source — the index-pruned read path every SQL, catalog and
+    * `format("graft")` query takes. */
+  def graftRead(table: String, version: Option[Long] = None)
+      : org.apache.spark.sql.DataFrame = {
+    val r = spark.read.format("graft").option("table", table)
+    version.fold(r)(v => r.option("version", v)).load()
+  }
+
   /** Run `body` with session confs temporarily set, restoring (or
     * unsetting) the previous values afterwards — the session is shared
     * across suites, so leaked confs would couple unrelated tests. */

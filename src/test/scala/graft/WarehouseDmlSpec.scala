@@ -64,13 +64,13 @@ class WarehouseDmlSpec extends SparkSpec {
     // surviving key: pruned read parity, still a strict file subset
     val cand = WarehouseFs.bloomCandidateFiles(spark, t, "id", Seq(7000L)).get
     assert(cand.nonEmpty && cand.size < 8)
-    assert(WarehouseFs.readBloomPruned(spark, t, "id", Seq(7000L)).get
+    assert(graftRead(t).filter(col("id").isin(7000L))
       .select("user").as[String].collect() === Array("u7000"))
     // the deleted key's file was re-indexed from surviving rows only —
     // the pruned read finds nothing
-    assert(WarehouseFs.readBloomPruned(spark, t, "id", Seq(42L)).get.count() === 0)
+    assert(graftRead(t).filter(col("id").isin(42L)).count() === 0)
     // string column index carried/rebuilt too
-    assert(WarehouseFs.readBloomPruned(spark, t, "user", Seq("u6999")).get
+    assert(graftRead(t).filter(col("user").isin("u6999"))
       .select("id").as[Long].collect() === Array(6999L))
   }
 
@@ -95,7 +95,7 @@ class WarehouseDmlSpec extends SparkSpec {
     assert(dirFileCount(t, currentDir(t)) === 1)
     assert(WarehouseFs.readTable(spark, t).get.count() === 8002)
     // ordinary reads keep working across the whole chain
-    assert(WarehouseFs.readBloomPruned(spark, t, "id", Seq(91000L)).get.count() === 1)
+    assert(graftRead(t).filter(col("id").isin(91000L)).count() === 1)
   }
 
   test("GC keeps carried ancestor dirs alive until unreferenced; compaction folds the chain") {
@@ -156,18 +156,18 @@ class WarehouseDmlSpec extends SparkSpec {
     // range-clustered: a narrow range hits ~1 of 8 files
     val cand = WarehouseFs.zoneCandidateFiles(spark, t, "id", 2000L, 2100L).get
     assert(cand.nonEmpty && cand.size <= 2, s"zones must prune: $cand")
-    val got = WarehouseFs.readRangePruned(spark, t, "id", 2000L, 2100L).get
+    val got = graftRead(t).filter(col("id").between(2000L, 2100L))
     assert(got.count() === 101)
     assert(got.agg(min("id"), max("id")).head().toSeq === Seq(2000L, 2100L))
     // out-of-domain range: zero candidates, empty result, schema intact
     assert(WarehouseFs.zoneCandidateFiles(spark, t, "id", -50L, -1L).get.isEmpty)
-    assert(WarehouseFs.readRangePruned(spark, t, "id", -50L, -1L).get.count() === 0)
+    assert(graftRead(t).filter(col("id").between(-50L, -1L)).count() === 0)
     // unzoned column degrades to a full-read filter
-    assert(WarehouseFs.readRangePruned(spark, t, "user", "u10", "u10").get.count() === 1)
+    assert(graftRead(t).filter(col("user").between("u10", "u10")).count() === 1)
 
     // DML maintains the zone map at O(rewritten): carried rows + new-dir rows
     WarehouseFs.deleteWhere(spark, t, "id", Seq(2050L), keepVersions = 5)
-    val got2 = WarehouseFs.readRangePruned(spark, t, "id", 2000L, 2100L).get
+    val got2 = graftRead(t).filter(col("id").between(2000L, 2100L))
     assert(got2.count() === 100)
     val cand2 = WarehouseFs.zoneCandidateFiles(spark, t, "id", 7000L, 7010L).get
     assert(cand2.nonEmpty && cand2.size <= 2, s"carried zones must keep pruning: $cand2")
@@ -190,8 +190,8 @@ class WarehouseDmlSpec extends SparkSpec {
     val candB = WarehouseFs.zoneCandidateFiles(spark, t, "b", 100L, 400L).get
     assert(candA.size < 16 && candB.size < 16,
       s"z-order + zones must prune both dims: id=${candA.size}, b=${candB.size}")
-    assert(WarehouseFs.readRangePruned(spark, t, "id", 100L, 400L).get.count() === 301)
-    assert(WarehouseFs.readRangePruned(spark, t, "b", 100L, 400L).get.count() ===
+    assert(graftRead(t).filter(col("id").between(100L, 400L)).count() === 301)
+    assert(graftRead(t).filter(col("b").between(100L, 400L)).count() ===
       df.filter(col("b").between(100L, 400L)).count())
   }
 
@@ -237,8 +237,9 @@ class WarehouseDmlSpec extends SparkSpec {
     }
 
     // pruned reads of the partitioned FILE-LIST version keep the
-    // partition column: subset reads group per owning dir with basePath
-    val pruned = WarehouseFs.readBloomPruned(spark, t, "id", Seq(100L)).get
+    // partition column: the scan rebuilds each file's partition values
+    // from its path
+    val pruned = graftRead(t).filter(col("id").isin(100L))
     assert(pruned.columns.toSet === Set("id", "day", "user"))
     assert(pruned.select("id", "day").collect().map(_.toSeq).toSet ===
       Set(Seq(100L, 1)))
@@ -910,8 +911,8 @@ class WarehouseDmlSpec extends SparkSpec {
     WarehouseFs.deleteWhereVectors(spark, t, "id", Seq(6L, 7L), keepVersions = 10)  // v3: masks accumulate
     assert(WarehouseFs.deletionVectorRows(spark, t) === 3L)
     // bloom-pruned point reads honor the mask
-    assert(WarehouseFs.readBloomPruned(spark, t, "id", Seq(5L)).get.count() === 0)
-    assert(WarehouseFs.readBloomPruned(spark, t, "id", Seq(8L)).get.count() === 1)
+    assert(graftRead(t).filter(col("id").isin(5L)).count() === 0)
+    assert(graftRead(t).filter(col("id").isin(8L)).count() === 1)
     // a CoW update rewriting the masked rows' file: the rewrite reads
     // MASKED (5/6/7 stay deleted) and that file's DV entries retire
     WarehouseFs.updateWhere(spark, t, "id", Seq(10L),

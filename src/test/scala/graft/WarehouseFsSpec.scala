@@ -333,20 +333,20 @@ class WarehouseFsSpec extends SparkSpec {
     val cand = WarehouseFs.bloomCandidateFiles(spark, t, "id", Seq(12345L)).get
     assert(cand.nonEmpty && cand.size < totalFiles,
       s"bloom must prune files: ${cand.size} of $totalFiles")
-    val pruned = WarehouseFs.readBloomPruned(spark, t, "id", Seq(12345L)).get
+    val pruned = graftRead(t).filter(col("id").isin(12345L))
     assert(pruned.select("id", "grp", "acct").collect().map(_.toSeq).toSet ===
       spark.read.parquet(t + "/" + WarehouseFs.currentVersion(spark, t).get._2.split('/').last)
         .filter(col("id") === 12345L).select("id", "grp", "acct").collect().map(_.toSeq).toSet)
 
     // string-typed key, multi-value IN
     val keys = Seq("acct_7", "acct_19999")
-    val prunedS = WarehouseFs.readBloomPruned(spark, t, "acct", keys).get
+    val prunedS = graftRead(t).filter(col("acct").isin(keys: _*))
     assert(prunedS.count() === 2)
     assert(prunedS.select("acct").as[String].collect().toSet === keys.toSet)
 
     // absent key: no candidate file, empty result, schema preserved
     assert(WarehouseFs.bloomCandidateFiles(spark, t, "id", Seq(-1L)).get.isEmpty)
-    val empty = WarehouseFs.readBloomPruned(spark, t, "id", Seq(-1L)).get
+    val empty = graftRead(t).filter(col("id").isin(-1L))
     assert(empty.count() === 0 && empty.columns.toSeq === Seq("id", "grp", "acct"))
   }
 
@@ -366,7 +366,7 @@ class WarehouseFsSpec extends SparkSpec {
         .repartitionByRange(4, col("id"))
       WarehouseFs.publishVersioned(df, t, bloomIndexCols = Seq("evt_ts"))
       val probe = new java.sql.Timestamp((epoch + 1200L) * 1000L) // id 1200
-      val pruned = WarehouseFs.readBloomPruned(spark, t, "evt_ts", Seq(probe)).get
+      val pruned = graftRead(t).filter(col("evt_ts").isin(probe))
       assert(pruned.select("id").as[Long].collect().toSeq === Seq(1200L),
         "a tz-mismatched probe canonicalization would return zero rows here")
       val cand = WarehouseFs.bloomCandidateFiles(spark, t, "evt_ts", Seq(probe)).get
@@ -377,7 +377,7 @@ class WarehouseFsSpec extends SparkSpec {
       // DIFFERENT zone than the builder's must still hit — the building
       // session's zone is not persisted anywhere else
       spark.conf.set("spark.sql.session.timeZone", "Asia/Tokyo")
-      val prunedX = WarehouseFs.readBloomPruned(spark, t, "evt_ts", Seq(probe)).get
+      val prunedX = graftRead(t).filter(col("evt_ts").isin(probe))
       assert(prunedX.select("id").as[Long].collect().toSeq === Seq(1200L),
         "a session-tz-hashed index would false-negative across sessions")
       assert(WarehouseFs.bloomCandidateFiles(spark, t, "evt_ts", Seq(probe))
@@ -412,10 +412,9 @@ class WarehouseFsSpec extends SparkSpec {
     (1 to 5).toDF("id").coalesce(1).write.parquet(s"$t/.spark-staging-y")
     val expected = spark.read.parquet(t).count()
     assert(expected === 50L)
-    val (df, survivors, total) = WarehouseFs.prunedScan(spark, t).get
-    assert(df.count() === 50L, "hidden-path files must not feed the scan")
-    assert(survivors === total)
-    val (files, _, n, _) = WarehouseFs.prunedFiles(spark, t).get
+    assert(graftRead(t).count() === 50L, "hidden-path files must not feed the scan")
+    val (files, _, n, total) = WarehouseFs.prunedFiles(spark, t).get
+    assert(n === total)
     assert(n.toLong === 50L || files.forall(f =>
       !f.split('/').exists(s => s.startsWith("_") || s.startsWith("."))))
     assert(files.forall(f => !f.contains("_temporary") && !f.contains(".spark-staging")))
@@ -428,13 +427,13 @@ class WarehouseFsSpec extends SparkSpec {
       keepVersions = 1, bloomIndexCols = Seq("id"))
     // column not indexed → None from candidates, parity from the reader
     assert(WarehouseFs.bloomCandidateFiles(spark, t, "v", Seq("v7")).isEmpty)
-    assert(WarehouseFs.readBloomPruned(spark, t, "v", Seq("v7")).get
+    assert(graftRead(t).filter(col("v").isin("v7"))
       .select("id").as[Long].collect() === Array(7L))
     // next version published WITHOUT an index: fallback + GC of v1's index
     WarehouseFs.publishVersioned(
       (101 to 200).map(i => (i.toLong, s"v$i")).toDF("id", "v"), t, keepVersions = 1)
     assert(WarehouseFs.bloomCandidateFiles(spark, t, "id", Seq(150L)).isEmpty)
-    assert(WarehouseFs.readBloomPruned(spark, t, "id", Seq(150L)).get
+    assert(graftRead(t).filter(col("id").isin(150L))
       .select("v").as[String].collect() === Array("v150"))
     assert(WarehouseFs.listNames(spark, s"$t/_index") === Seq.empty,
       "expired version's bloom index must be garbage-collected")
@@ -635,9 +634,9 @@ class WarehouseFsSpec extends SparkSpec {
       .repartition(col("day"))
     WarehouseFs.publishVersioned(df, t, partitionBy = Seq("day"),
       bloomIndexCols = Seq("user"))
-    val got = WarehouseFs.readBloomPruned(spark, t, "user", Seq("u42")).get
+    val got = graftRead(t).filter(col("user").isin("u42"))
     assert(got.select("id", "day", "user").collect().map(_.toSeq).toSet ===
-      Set(Seq(42L, 2, "u42")), "partition column must be restored via basePath")
+      Set(Seq(42L, 2, "u42")), "partition column must be restored from the path")
   }
 
   test("commit instants live in the manifest body: mtime rewrites cannot shift history") {
