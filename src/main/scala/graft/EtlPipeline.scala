@@ -35,7 +35,7 @@ object EtlPipeline {
   }
 
   def main(args: Array[String]): Unit = {
-    val feedDir = args.lift(0).getOrElse("/root/reference")
+    val feedDir = args.lift(0).getOrElse(BankFeeds.ReferenceDir)
     val whDir = args.lift(1).getOrElse("/tmp/graft_warehouse")
     val bankDir = args.lift(2)
     val spark = SparkSession.builder()

@@ -1,5 +1,6 @@
 package graft
 
+import graft.sources.BankFeeds
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -174,11 +175,13 @@ object QueriesBreadth {
 
     // Feed-ingest parity: the reference's quirkiest parser (main.py:316-335,
     // 370 — `;` separator, whitespace-dirty rows, decimal-comma amounts)
-    // under the hash gate. Reads the reference's own .txt feeds (path is
-    // feed-relative, not SF-relative); amt → double for cross-engine dtype
-    // parity.
+    // under the hash gate. Reads the .txt feeds of the session's feed dir
+    // (`BankFeeds.FeedDirConf`, the reference's own files unless set; the
+    // path is feed-relative, not SF-relative); amt → double for
+    // cross-engine dtype parity.
     "feed_transactions_typed" -> ((s, _) =>
-      graft.sources.BankFeeds.transactions(s, "/root/reference/transactions_*.txt")
+      BankFeeds.transactions(s,
+        s.conf.get(BankFeeds.FeedDirConf, BankFeeds.ReferenceDir) + "/transactions_*.txt")
         .withColumn("amt", col("amt").cast(DoubleType))),
 
     // arg-min/arg-max aggregates (min_by/max_by) with a unique ordering
@@ -483,7 +486,7 @@ object QueriesBreadth {
         FROM lineitem WHERE l_linenumber >= 1""",
 
     "feed_transactions_typed" ->
-      """SELECT
+      s"""SELECT
           trim(transaction_id) AS trans_id,
           strptime(trim(transaction_date), '%Y-%m-%d %H:%M:%S') AS trans_date,
           CAST(CAST(replace(trim(amount), ',', '.') AS DECIMAL(20,2)) AS DOUBLE) AS amt,
@@ -491,7 +494,7 @@ object QueriesBreadth {
           trim(oper_type) AS oper_type,
           trim(oper_result) AS oper_result,
           trim(terminal) AS terminal
-        FROM read_csv('/root/reference/transactions_*.txt', delim=';', header=true,
+        FROM read_csv('${BankFeeds.ReferenceDir}/transactions_*.txt', delim=';', header=true,
           columns={'transaction_id':'VARCHAR','transaction_date':'VARCHAR','amount':'VARCHAR',
                    'card_num':'VARCHAR','oper_type':'VARCHAR','oper_result':'VARCHAR','terminal':'VARCHAR'})""",
 

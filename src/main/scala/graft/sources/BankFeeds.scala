@@ -29,6 +29,15 @@ import org.apache.spark.sql.types._
   */
 object BankFeeds {
 
+  /** Default directory of the reference's daily feed files: the input of
+    * `EtlPipeline.main` and of the registry's `feed_transactions_typed`
+    * query and its oracle. */
+  val ReferenceDir = "/root/reference"
+
+  /** Session conf naming the feed directory `feed_transactions_typed`
+    * reads; unset, it is [[ReferenceDir]]. */
+  val FeedDirConf = "spark.graft.feedDir"
+
   val txStagingSchema: StructType = StructType(Seq(
     StructField("transaction_id", StringType),
     StructField("transaction_date", StringType),

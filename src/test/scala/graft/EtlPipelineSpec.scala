@@ -4,6 +4,8 @@ import org.apache.spark.sql.functions._
 
 /** End-to-end replay of the reference's 3 shipped days through the full
   * pipeline (feeds → SCD2/SCD1/fact → fraud mart), with re-run idempotence.
+  * The days are the reference files or the generated feeds that reproduce
+  * their vectors (`SparkTestBase.refDir`, FIXTURES.md §A).
   */
 class EtlPipelineSpec extends SparkSpec {
   private val wh = java.nio.file.Files.createTempDirectory("graft_wh_").toString

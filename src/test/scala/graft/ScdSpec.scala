@@ -7,7 +7,9 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Golden SCD2 vector from the reference's own 3-day terminal snapshots
-  * (FIXTURES.md §A2, verified by diffing the files):
+  * (FIXTURES.md §A2, verified by diffing the files), read from the
+  * reference files or the generated feeds that reproduce their vectors
+  * (`SparkTestBase.refDir`):
   * day2 adds P9111 and changes A8966 + P6934; day3 deletes P9111 and
   * changes A8966 again.
   */

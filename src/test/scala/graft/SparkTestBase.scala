@@ -1,5 +1,6 @@
 package graft
 
+import graft.sources.BankFeeds
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,6 +14,12 @@ object SparkTestBase {
     * catalog) stays per-JVM by construction. */
   private val pid = ProcessHandle.current().pid()
   val catalogWarehouse = s"/tmp/graft_catalog_warehouse_$pid"
+  /** The reference's feed files where they are mounted, else generated
+    * feeds that reproduce their vectors ([[ReferenceFeeds]]), written
+    * once per JVM. */
+  lazy val refDir: String =
+    if (ReferenceFeeds.holdsAll(BankFeeds.ReferenceDir)) BankFeeds.ReferenceDir
+    else ReferenceFeeds.generated()
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
       .master("local[8]")
@@ -24,6 +31,7 @@ object SparkTestBase {
       .config("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
       .config("spark.sql.catalog.graft.warehouse", catalogWarehouse)
       .config("spark.ui.enabled", "false")
+      .config(BankFeeds.FeedDirConf, refDir)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
@@ -34,7 +42,7 @@ abstract class SparkSpec extends AnyFunSuite
     with org.scalatest.BeforeAndAfterEach {
   lazy val spark: SparkSession = SparkTestBase.spark
   val sf0001 = "/root/testdata/sf0.001"
-  val refDir = "/root/reference"
+  def refDir: String = SparkTestBase.refDir
 
   /** The warehouse's process-global test/deployment seams (commit
     * guard, race hooks) are shared across every suite in the forked
