@@ -17,7 +17,8 @@ import graft.sources.{BankFeeds, WarehouseFs}
   * Differences from the reference, by design (SURVEY §3):
   *   - staging tables, per-statement DDL and the close/insert UPDATE
   *     sequence collapse into pure snapshot-rewrite transformations
-  *     written atomically per day — no non-transactional window;
+  *     committed atomically, one commit per run — no non-transactional
+  *     window;
   *   - the processed-file ledger is the warehouse state itself (loads are
   *     idempotent: SCD1/SCD2 re-application is a fixpoint, and the fact
   *     load skips days already present);
@@ -49,100 +50,71 @@ object EtlPipeline {
     spark.stop()
   }
 
-  /** @param asOf logical "run time" (defaults to now) — drives the SCD2
-    *   as-of snapshot and report_dt; injectable so tests can replay one
-    *   nightly run per feed day deterministically. */
-  /** The tables the warehouse SERVES (and the atomic commit set spans);
-    * the append-only transactions fact intentionally stays outside. */
+  /** The tables the warehouse SERVES (the atomic commit set spans
+    * them); the append-only transactions fact intentionally stays
+    * outside. */
   private val servedTables =
     Seq("dwh_dim_terminals_hist", "dwh_fact_pssprt_blcklst", "rep_fraud")
 
+  /** @param asOf logical "run time" (defaults to now) — drives the SCD2
+    *   as-of snapshot and report_dt; injectable so tests can replay one
+    *   nightly run per feed day deterministically. */
   def run(spark: SparkSession, feedDir: String, whDir: String,
           bankDir: Option[String], asOf: Option[Timestamp] = None): Unit = {
     // all warehouse/feed paths go through the Hadoop FileSystem API so the
-    // same pipeline runs against file://, hdfs:// or s3a:// unchanged
+    // same pipeline runs against file://, hdfs:// or s3a:// unchanged.
+    // An absent feed dir is a mistyped or unmounted path, not an empty
+    // night: refuse it (an existing dir without feed files still runs).
+    val (feedFs, feedPath) = WarehouseFs.fsFor(spark, feedDir)
+    if (!feedFs.exists(feedPath))
+      throw new IllegalArgumentException(s"etl: feed dir $feedDir does not exist")
     val files = WarehouseFs.listNames(spark, feedDir)
     def feed(prefix: String): Seq[(String, String)] = // (day, path) in day order
       files.filter(_.startsWith(prefix)).map(f => (dayOf(f), s"$feedDir/$f")).sortBy(_._1)
 
     def tablePath(name: String) = s"$whDir/$name"
-    // snapshot-rewrite with atomic publish. Default: the new state streams
-    // into <table>.tmp while the live table (which the plan may be
-    // reading) stays untouched, then two metadata renames swap it in — a
-    // reader sees the complete old or complete new table, never a partial
-    // write. On object stores (where a directory rename is a copy), set
-    // spark.graft.etl.manifestPublish=true to commit through the
-    // versioned-dir + pointer-file layout instead (no directory rename).
-    val useManifest = spark.conf.getOption("spark.graft.etl.manifestPublish")
-      .exists(_.toBoolean)
-    // Atomic commit sets are the DEFAULT (spark.graft.etl.atomicCommit=
-    // false opts out for the legacy per-table layouts): every SERVED
-    // table (terminal history, blacklist, fraud mart) flips in ONE
-    // commit-set commit ([[WarehouseFs.publishAtomicAll]]) at the end of
-    // the run, so a reader resolving through the latest commit can never
-    // join mart(vN) against blacklist(vN−1) — the cross-version mixture
-    // the per-table publishes permit. During the run the pipeline stages
-    // its intermediate states under `_work/` (private to the run);
-    // tables this run did not touch carry forward into the new commit
-    // with zero data I/O. A LEGACY warehouse (plain dirs or per-table
-    // manifests) upgrades in place on its first default-mode run: reads
-    // fall back through manifest/plain resolution below, and the run's
-    // commit lifts whatever it touched into the commit set. The
-    // append-only transactions fact deliberately stays OUTSIDE the
-    // commit set: its day partitions are immutable once written (new
-    // days only append), so there is no version mixture to protect
-    // against, and re-committing O(history) fact bytes nightly is
-    // exactly what carryForward exists to avoid. The mart itself is
-    // flagged events — orders of magnitude smaller than the fact — so
-    // its full-state commit write stays O(mart), acceptable nightly.
-    // explicit atomicCommit always wins; an UNSET flag defaults to
-    // atomic unless the caller explicitly chose the per-table manifest
-    // layout (manifestPublish=true picks that non-default posture)
-    val useAtomic = spark.conf.getOption("spark.graft.etl.atomicCommit")
-      .map(_.toBoolean).getOrElse(!useManifest)
+    // Every SERVED table (terminal history, blacklist, fraud mart) flips
+    // in ONE commit ([[WarehouseFs.publishAtomicVersioned]]) at the end
+    // of the run, so a reader resolving through the latest commit can
+    // never join mart(vN) against blacklist(vN−1). During the run the
+    // pipeline stages its intermediate states under `_work/` (private to
+    // the run). The append-only transactions fact deliberately stays
+    // OUTSIDE the commit set: its day partitions are immutable once
+    // written (new days only append), so there is no version mixture to
+    // protect against, and re-committing O(history) fact bytes nightly
+    // is exactly what the member chains' file sharing exists to avoid.
     val workDir = s"$whDir/_work"
-    val committedTables: Map[String, String] =
-      if (useAtomic) WarehouseFs.currentCommit(spark, whDir).map(_._2).getOrElse(Map.empty)
-      else Map.empty
+    val committedTables: Map[String, Long] =
+      WarehouseFs.currentCommit(spark, whDir).map(_._2).getOrElse(Map.empty)
     val workWritten = scala.collection.mutable.LinkedHashSet.empty[String]
-    // reads resolve, in order: this run's own staged state, the latest
-    // commit set (atomic mode), a manifest-committed current version, the
-    // plain directory (also the migration path into atomic mode)
+    // reads resolve, in order: this run's own staged state, the version
+    // the latest commit pins, the plain directory (the transactions fact)
     def readIf(name: String): Option[DataFrame] =
-      if (useAtomic) {
-        if (workWritten(name)) Some(spark.read.parquet(s"$workDir/$name"))
-        else committedTables.get(name)
-          .map(entry => WarehouseFs.readCommitEntry(spark, entry).getOrElse(
-            // an expired version pin must fail LOUDLY: falling through to
-            // the non-atomic table path would compute downstream tables
-            // from a stale, possibly mid-write state
-            throw new IllegalStateException(
-              s"etl: $name resolves to an expired member version ($entry) " +
-                "— raise the member table's keepVersions")))
-          .orElse(WarehouseFs.readTable(spark, tablePath(name)))
-      } else WarehouseFs.readTable(spark, tablePath(name))
-    def overwrite(df: DataFrame, name: String): Unit =
-      if (useAtomic) {
-        WarehouseFs.publish(df, s"$workDir/$name"); workWritten += name
-      }
-      else if (useManifest) WarehouseFs.publishVersioned(df, tablePath(name))
-      else WarehouseFs.publish(df, tablePath(name))
+      if (workWritten(name)) Some(spark.read.parquet(s"$workDir/$name"))
+      else committedTables.get(name)
+        .map(v => WarehouseFs.readTableVersion(spark, tablePath(name), v).getOrElse(
+          // an expired version pin must fail LOUDLY: falling through to
+          // the table path would compute downstream tables from a
+          // stale, possibly unsealed state
+          throw new IllegalStateException(
+            s"etl: $name resolves to an expired member version (@$v) " +
+              "— raise the member table's keepVersions")))
+        .orElse(WarehouseFs.readTable(spark, tablePath(name)))
+    def overwrite(df: DataFrame, name: String): Unit = {
+      WarehouseFs.publish(df, s"$workDir/$name"); workWritten += name
+    }
     // One commit spanning everything this run changed. Served tables are
     // VERSIONED MEMBER CHAINS at their own table paths ($wh/<name>): a
     // changed dim SYNCS by row-level delta into its chain
     // ([[WarehouseFs.syncToState]] — copy-on-write, only files holding
     // changed keys rewrite), the mart's report day lands as a CoW
     // partition overwrite, and ONE commit file pins every member's
-    // current version (`table=@version` body lines,
-    // [[WarehouseFs.publishAtomicVersioned]]). Member chains buy what
-    // dir-style commit entries could not: cross-commit FILE sharing (an
-    // unchanged-this-run table re-pins its version — zero I/O — and a
-    // barely-changed one shares every untouched file), and
-    // file-granular commit feeds ([[WarehouseFs.changeFeedCommitted]]
-    // diffs only non-shared files — the reference's cumulative
-    // blacklist feed of ~8 rows/day reads one rewritten file, never the
-    // table). Legacy layouts (plain dirs, per-table manifests,
-    // dir-style commit entries) lift into member chains exactly once.
+    // current version (`table=@version` body lines). An unchanged table
+    // re-pins its version with zero I/O, a barely-changed one shares
+    // every untouched file, and commit feeds
+    // ([[WarehouseFs.changeFeedCommitted]]) diff only non-shared files —
+    // the reference's cumulative blacklist feed of ~8 rows/day reads one
+    // rewritten file, never the table.
     val memberKeep = 8 // member versions retained — covers the commit window
     val syncKeys = Map(
       "dwh_dim_terminals_hist" -> Seq("terminal_id", "effective_from"),
@@ -153,12 +125,13 @@ object EtlPipeline {
       "rep_fraud" -> Seq("passport"),
       "dwh_fact_pssprt_blcklst" -> Seq("passport_num"),
       "dwh_dim_terminals_hist" -> Seq("terminal_id"))
-    def commitAtomic(martDay: Option[DataFrame]): Unit = if (useAtomic) {
+    def commitAtomic(martDay: Option[DataFrame]): Unit = {
       def isVersioned(n: String) =
         WarehouseFs.currentVersion(spark, tablePath(n)).isDefined
-      // stats ride with every member publish: served tables are
-      // dims/mart-sized (never the fact), so the profiling scan is cheap
-      // and readers get committed row counts for join planning
+      // the first publish of a member with no version yet. Stats ride
+      // with every member publish: served tables are dims/mart-sized
+      // (never the fact), so the profiling scan is cheap and readers get
+      // committed row counts for join planning
       def lift(n: String, df: DataFrame, partBy: Seq[String] = Nil): Unit =
         WarehouseFs.publishVersioned(df, tablePath(n), partitionBy = partBy,
           keepVersions = memberKeep, collectStats = true,
@@ -178,36 +151,12 @@ object EtlPipeline {
           // day(s), carry every other day's files by reference
           WarehouseFs.overwritePartitions(rep, tablePath("rep_fraud"),
             Seq("report_dt"), keepVersions = memberKeep)
-        else {
-          // one-time lift: prior mart days (legacy layout) + this day
-          val old = committedTables.get("rep_fraud")
-            .flatMap(WarehouseFs.readCommitEntry(spark, _))
-            .orElse(WarehouseFs.readTable(spark, tablePath("rep_fraud")))
-          val full = old match {
-            case Some(o) =>
-              val days = rep.select("report_dt").distinct()
-              o.select(rep.columns.map(col).toSeq: _*)
-                .join(broadcast(days), Seq("report_dt"), "left_anti")
-                .unionByName(rep)
-            case None => rep
-          }
-          lift("rep_fraud", full, Seq("report_dt"))
-        }
+        else lift("rep_fraud", rep, Seq("report_dt"))
         touched = true
       }
-      // remaining legacy states (untouched this run, not yet versioned)
-      // migrate once so the ENTIRE served set pins; tables a prior commit
-      // carried beyond the served set migrate the same way
+      // every member a prior commit pinned stays pinned, including tables
+      // committed into this warehouse beside the served set
       val allServed = (servedTables ++ committedTables.keySet).distinct
-      for (n <- allServed if !isVersioned(n)) {
-        val legacy = committedTables.get(n)
-          .flatMap(WarehouseFs.readCommitEntry(spark, _))
-          .orElse(WarehouseFs.readTable(spark, tablePath(n)))
-        legacy.foreach { df =>
-          lift(n, df, if (n == "rep_fraud") Seq("report_dt") else Nil)
-          touched = true
-        }
-      }
       // maintenance cadence: a member whose CoW chain spans more data
       // dirs than the budget folds back into ONE clean dir version
       // (indexes/stats preserved, CAS-pinned) BEFORE the seal, so the
@@ -373,10 +322,8 @@ object EtlPipeline {
     // history as-of run time, exactly like the reference (main.py:417) —
     // past mart rows keep the dims they were derived with.
     val factPath = tablePath("dwh_fact_transactions")
-    val martPath = tablePath("rep_fraud")
-    // the mart resolves like every served table: latest commit in atomic
-    // mode (version pins included; member chain / plain dir as the
-    // migration fallbacks), plain-or-manifest dir otherwise
+    // the mart resolves like every served table: the version the latest
+    // commit pins
     def readMart(): Option[DataFrame] = readIf("rep_fraud")
     val martExists = readMart().isDefined
     val allDays = WarehouseFs.listNames(spark, factPath)
@@ -457,48 +404,23 @@ object EtlPipeline {
       .map(_.select(evCols.map(col) :+ col("report_dt"): _*))
       .reduce(_ unionByName _)
     // a second run under the SAME report_dt (late feed batch on the same
-    // calendar day) must not drop what the first run wrote: dynamic
+    // calendar day) must not drop what the first run wrote: the partition
     // overwrite replaces the whole partition, so merge it back in
     val rep = (if (martExists)
         newEvents.unionByName(
           readMart().get.filter(col("report_dt") === lit(reportDt))
             .select(evCols.map(col) :+ col("report_dt"): _*)).distinct()
       else newEvents)
-    val repCount: Any =
-      if (useAtomic) {
-        // commit-set mode: this run's (merged) report day replaces its
-        // partition of the rep_fraud MEMBER CHAIN as one CoW commit —
-        // historical days' files carry by reference — then the whole
-        // served set pins in one commit file. rep is bounded (the run's
-        // windows), so the checkpoint is O(new events).
-        val repFinal = rep.localCheckpoint()
-        commitAtomic(Some(repFinal))
-        repFinal.count()
-      } else {
-        // Dynamic partition overwrite: only the report days present in this
-        // run's output are replaced — historical mart partitions survive a
-        // daily rebuild untouched (the scalable form of the reference's
-        // per-day delete+insert; a full-table overwrite would rewrite the
-        // whole mart history every night).
-        val mode0 = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try {
-          // localCheckpoint materializes the result BEFORE the write truncates
-          // the partition it may be reading (mart merge/anti-join read the same
-          // path); observe() piggybacks the row count on the write job — the
-          // end-of-run log costs zero extra table scans (no O(history) counts)
-          val repObs = new org.apache.spark.sql.Observation("rep_fraud_metrics")
-          rep.localCheckpoint().observe(repObs, count(lit(1)).as("n"))
-            .write.mode(SaveMode.Overwrite)
-            .partitionBy("report_dt").parquet(martPath)
-          repObs.get("n")
-        } finally mode0 match {
-          // restore the caller's mode — leaking `dynamic` session-wide
-          // changes the meaning of every later INSERT OVERWRITE
-          case Some(m) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", m)
-          case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-        }
-      }
+    // this run's (merged) report day replaces its partition of the
+    // rep_fraud MEMBER CHAIN as one CoW commit — historical days' files
+    // carry by reference — then the whole served set pins in one commit
+    // file. localCheckpoint materializes the result BEFORE the commit
+    // replaces the partition it may be reading (the mart merge/anti-join
+    // read the member); rep is bounded (the run's windows), so the
+    // checkpoint is O(new events).
+    val repFinal = rep.localCheckpoint()
+    commitAtomic(Some(repFinal))
+    val repCount = repFinal.count()
 
     val winStr = extended.map { case (a, b, ext) =>
       s"$a..$b${ext.map("+" + _).getOrElse("")}" }.mkString(",")
@@ -571,15 +493,6 @@ object EtlPipeline {
     * fact — DEMO ONLY: real deployments pass bankDir. First 5 clients'
     * passports are wired to blacklist entries so rule 1 has positives.
     */
-  /** Resolve a served warehouse table regardless of publish mode, in
-    * the same order the pipeline itself reads: latest commit set
-    * (atomic mode, the default) → per-table manifest version → plain
-    * directory (legacy layouts). */
-  def readServed(spark: SparkSession, whDir: String,
-                 name: String): Option[DataFrame] =
-    WarehouseFs.readCommitted(spark, whDir, name)
-      .orElse(WarehouseFs.readTable(spark, s"$whDir/$name"))
-
   def demoBankTables(spark: SparkSession, whDir: String,
                      blacklist: Option[DataFrame] = None): (DataFrame, DataFrame, DataFrame) = {
     val tx = spark.read.parquet(s"$whDir/dwh_fact_transactions")
@@ -592,7 +505,7 @@ object EtlPipeline {
       col("cid").as("client"))
     val bl = withDenseId(
       blacklist.orElse(
-        readServed(spark, whDir, "dwh_fact_pssprt_blcklst")).get,
+        WarehouseFs.readCommitted(spark, whDir, "dwh_fact_pssprt_blcklst")).get,
       "passport_num", "bid")
     val clients = cardsSeen
       .join(bl.select(col("bid").as("cid"), col("passport_num").as("bl_passport")),

@@ -57,8 +57,8 @@ object GraftSession {
 
   /** Register every table of a commit-set warehouse as a temp view — SQL
     * over the SERVED warehouse (the reference's users query exactly this
-    * surface). The commit is resolved ONCE and every view reads that
-    * commit's data dir: a publish landing mid-attach cannot produce the
+    * surface). The commit is resolved ONCE and every view reads the
+    * member version that commit pins: a publish landing mid-attach cannot produce the
     * mart(vN) ⋈ blacklist(vN−1) mixture (resolving per-table would).
     * Tables whose committed row count is at most `broadcastMaxRows` get
     * a broadcast hint — join planning from committed statistics, not
@@ -74,17 +74,16 @@ object GraftSession {
     // stat-less temp-view path ([[attach]]) no longer pays for it (r17).
     spark.conf.set("spark.sql.cbo.enabled", "true")
     spark.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
-    WarehouseFs.currentCommit(spark, warehouse).map { case (commit, tables) =>
-      val names = tables.toSeq.sortBy(_._1).map { case (t, dataPath) =>
-        // dir-style entries read directly; version-pin entries resolve
-        // through the member chain's manifest (file-list aware)
-        val df = WarehouseFs.readCommitEntry(spark, dataPath).getOrElse(
+    WarehouseFs.currentCommit(spark, warehouse).map { case (commit, pins) =>
+      val names = pins.toSeq.sortBy(_._1).map { case (t, v) =>
+        val table = s"$warehouse/$t"
+        val df = WarehouseFs.readTableVersion(spark, table, v).getOrElse(
           throw new IllegalStateException(
             s"attachWarehouse: $t resolves to an expired member version " +
-              s"($dataPath) — raise the member table's keepVersions"))
-        // stats resolve from the dataPath already in hand — the commit
-        // file was read ONCE above, never once-per-table
-        val hinted = WarehouseFs.statsForDataPath(spark, warehouse, t, dataPath) match {
+              s"($table@$v) — raise the member table's keepVersions"))
+        // stats resolve from the pin already in hand — the commit file
+        // was read ONCE above, never once-per-table
+        val hinted = WarehouseFs.readStats(spark, table, Some(v)) match {
           case Some(st) if st.rowCount <= broadcastMaxRows =>
             org.apache.spark.sql.functions.broadcast(df)
           case _ => df

@@ -132,10 +132,9 @@ object GraftTableChanges {
   * }}}
   *
   * Lowers onto [[WarehouseFs.changeFeedCommitted]], inheriting its
-  * economics verbatim: a carried-forward member resolves both commits
-  * to the same entry and the feed is EMPTY without scanning anything;
-  * version-pinned members diff file-granularly through the member
-  * chain. The first argument is a graft catalog name (its configured
+  * economics verbatim: members diff file-granularly through the member
+  * chain, so a member both commits pin at the same version feeds EMPTY
+  * without reading any data. The first argument is a graft catalog name (its configured
   * warehouse) or a direct warehouse path; key columns come from the
   * member table's stored `keyCols` property. */
 object GraftCommitChanges {

@@ -18,8 +18,10 @@ import scala.util.matching.Regex
   * data arrives as CSV/parquet and goes through spark.read (BankFeeds).
   */
 object ExcelReader {
+  // a self-closing `<c r="A2" s="1"/>` (Excel's styled blank cell) is an
+  // empty cell: it must not run on into the next cell's `</c>`
   private val CellRe: Regex =
-    """(?s)<c\s+r="([A-Z]+)(\d+)"([^>]*)>(.*?)</c>""".r
+    """(?s)<c\s+r="([A-Z]+)(\d+)"([^>]*?)(?:/>|>(.*?)</c>)""".r
   private val ValRe: Regex = """(?s)<v>(.*?)</v>""".r
   private val InlineRe: Regex = """(?s)<t[^>]*>(.*?)</t>""".r
   private val SiRe: Regex = """(?s)<si>(.*?)</si>""".r
@@ -64,7 +66,8 @@ object ExcelReader {
         val col = colIndex(m.group(1)); val row = m.group(2).toInt - 1
         val attrs = m.group(3); val body = m.group(4)
         val value: Option[String] =
-          if (attrs.contains("t=\"s\""))
+          if (body == null) None // self-closing: no value
+          else if (attrs.contains("t=\"s\""))
             ValRe.findFirstMatchIn(body).map(v => shared(v.group(1).trim.toInt))
           else if (attrs.contains("t=\"inlineStr\""))
             InlineRe.findFirstMatchIn(body).map(v => unescape(v.group(1)))

@@ -87,9 +87,6 @@ class GraftV2ScanBuilder(
   private var filtered = false
   private var pushedAgg: Option[(StructType, InternalRow)] = None
 
-  /** (survivors, total files) of the index pruning — test observability. */
-  def prunedCounts: (Int, Int) = pruneEvidence
-
   // ---- metadata-only COUNT(*) / MIN / MAX --------------------------------
   //
   // `SELECT COUNT(*), MIN(c), MAX(c) FROM t` on an unfiltered table
@@ -506,7 +503,7 @@ case class GraftMetaScan(delegate: Scan,
   // grouping pins its partition count at planning).
 
   /** (kept files, planned files) of the LAST runtime prune — test
-    * observability, mirrors the builder's [[GraftV2ScanBuilder.prunedCounts]]. */
+    * observability. */
   @volatile var runtimeEvidence: Option[(Int, Int)] = None
 
   @volatile private var survivors: Option[(Set[String], Set[String])] = None

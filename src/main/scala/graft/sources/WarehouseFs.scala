@@ -5083,7 +5083,7 @@ object WarehouseFs {
     }
   }
 
-  /** The diff core shared by [[changeFeed]] and [[changeFeedCommitted]]:
+  /** The diff core shared by the change feeds and [[syncToState]]:
     * one null-safe full-outer join; unchanged keys yield a null change
     * array, which explode (non-outer) drops — one join, one pass, no
     * per-class re-execution. */
@@ -5189,41 +5189,25 @@ object WarehouseFs {
     union(steps.map(_.select(ordered.map(col): _*)).toIndexedSeq)
   }
 
-  /** [[changeFeed]] for a table of a COMMIT SET ([[publishAtomicAll]]
-    * or [[publishAtomicVersioned]] layout): the delta of `table`
-    * between two retained commits. A carried-forward table resolves
-    * both commits to the SAME data dir (or the same version pin) —
-    * detected by entry equality, so the feed is empty WITHOUT scanning
-    * anything (the common nightly case costs two commit-file reads).
-    * VERSION-PIN members delegate to the member chain's own
-    * [[changeFeed]], inheriting the file-granular diff: files both
-    * pinned manifests share are never read, so a 1-row CoW change
-    * between commits feeds from its rewritten file + ancestor only.
+  /** [[changeFeed]] for a table of a COMMIT SET
+    * ([[publishAtomicVersioned]]): the delta of `table` between two
+    * retained commits, diffed between the member versions they pin. It
+    * inherits the member chain's file-granular diff: files both pinned
+    * manifests share are never read, so a 1-row CoW change between
+    * commits feeds from its rewritten file + ancestor only, and a
+    * re-pinned (unchanged) member feeds empty without reading any data.
     * None when either commit is expired, lacks the table, or pins an
     * expired member version. */
   def changeFeedCommitted(spark: SparkSession, warehouse: String,
                           table: String, keyCols: Seq[String],
-                          fromCommit: Long, toCommit: Long): Option[DataFrame] = {
-    val resolved = for {
-      f <- commitVersion(spark, warehouse, fromCommit)
-      t <- commitVersion(spark, warehouse, toCommit)
-      fp <- f._2.get(table)
-      tp <- t._2.get(table)
-    } yield (fp, tp)
-    resolved.flatMap { case (fp, tp) =>
-      if (fp == tp) // carry-forward: byte-identical state, empty delta
-        readCommitEntry(spark, tp).map(schema =>
-          rowDiff(schema.limit(0), schema.limit(0), keyCols,
-            s"c$fromCommit and c$toCommit of $table"))
-      else (pinnedVersion(fp), pinnedVersion(tp)) match {
-        case (Some((tablePath, vf)), Some((tp2, vt))) if tablePath == tp2 =>
-          changeFeed(spark, tablePath, keyCols, vf, vt) // file-granular
-        case _ =>
-          for (o <- readCommitEntry(spark, fp); n <- readCommitEntry(spark, tp))
-            yield rowDiff(o, n, keyCols, s"c$fromCommit and c$toCommit of $table")
-      }
-    }
-  }
+                          fromCommit: Long, toCommit: Long): Option[DataFrame] =
+    for {
+      (_, f) <- commitVersion(spark, warehouse, fromCommit)
+      (_, t) <- commitVersion(spark, warehouse, toCommit)
+      vf <- f.get(table)
+      vt <- t.get(table)
+      feed <- changeFeed(spark, s"$warehouse/$table", keyCols, vf, vt)
+    } yield feed
 
   /** [[changeFeed]] from the previous retained version to the current
     * one — the nightly-consumer convenience. None until two versions
@@ -5560,231 +5544,96 @@ object WarehouseFs {
   // [[publishVersioned]] makes ONE table flip atomically; a pipeline that
   // publishes a mart AND the blacklist it was derived from needs both to
   // flip TOGETHER — a reader joining mart v(N) against blacklist v(N−1)
-  // silently produces cross-version garbage. The commit-set layout lifts
-  // the pointer file one level up:
+  // silently produces cross-version garbage. A commit set lifts the
+  // pointer file one level up: every member is an ordinary versioned
+  // table with its own manifest chain, and one commit file pins a
+  // version of each:
   //
   //   warehouse/
-  //     _commits/00000001          <- one file, lines "table=c00000001"
-  //     mart/c00000001/part-*.parquet
-  //     blacklist/c00000001/part-*.parquet
+  //     _commits/00000002          <- one file, lines "table=@version"
+  //     mart/_versions/00000003    <- the member's own manifest chain
+  //     mart/v00000003/part-*.parquet
+  //     blacklist/_versions/...
   //
-  // All tables' new states are written first (long phase, nothing live
-  // touched); the commit is still ONE single-file rename, so readers
-  // resolving any table through the latest commit see a mutually
-  // consistent set — there is no instant at which half the tables have
-  // flipped. Crashes leave orphan data dirs no commit references (GC'd
-  // later); concurrent committers race on the commit name and the loser
-  // fails loudly.
+  // Members publish (or run DML) first, through their own chains; commit
+  // readers do not see those versions until the commit lands. The commit
+  // is ONE single-file CAS, so readers resolving any table through the
+  // latest commit see a mutually consistent set — there is no instant at
+  // which half the tables have flipped. A crash before the commit leaves
+  // member versions no commit pins (the chain's own GC collects them);
+  // concurrent committers race on the commit name and the loser fails
+  // loudly.
 
   private def commitsDir(w: Path) = new Path(w, "_commits")
 
-  /** Latest commit of a commit-set warehouse: (commit number,
-    * table → commit entry). One `listStatus` + one small-file read.
-    * A dir-style entry is a readable data path; a version-pin entry
-    * ([[publishAtomicVersioned]]) is `"$warehouse/$table/@N"` — resolve
-    * either through [[readCommitEntry]]. */
-  def currentCommit(spark: SparkSession,
-                    warehouse: String): Option[(Long, Map[String, String])] = {
-    val (fs, w) = fsFor(spark, warehouse)
-    commitAt(fs, w, warehouse, None)
+  /** Retained commit file names, ascending. */
+  private def commitNames(fs: FileSystem, w: Path): Seq[String] = {
+    val cd = commitsDir(w)
+    if (!fs.exists(cd)) Nil
+    else fs.listStatus(cd).map(_.getPath.getName)
+      .filter(n => ManifestName.matches(n)).sorted.toSeq
   }
+
+  /** Latest commit of a commit-set warehouse: (commit number, table →
+    * pinned member version). One `listStatus` + one small-file read. */
+  def currentCommit(spark: SparkSession,
+                    warehouse: String): Option[(Long, Map[String, Long])] =
+    commitAt(spark, warehouse, None)
 
   /** A specific commit if its file is still retained (time travel across
     * the whole SET — every table resolves to the same point in time). */
   def commitVersion(spark: SparkSession, warehouse: String,
-                    commit: Long): Option[(Long, Map[String, String])] = {
-    val (fs, w) = fsFor(spark, warehouse)
-    commitAt(fs, w, warehouse, Some(commit))
-  }
+                    commit: Long): Option[(Long, Map[String, Long])] =
+    commitAt(spark, warehouse, Some(commit))
 
-  private def commitAt(fs: FileSystem, w: Path, warehouse: String,
-                       commit: Option[Long]): Option[(Long, Map[String, String])] = {
-    val cd = commitsDir(w)
-    if (!fs.exists(cd)) return None
-    val committed = fs.listStatus(cd).map(_.getPath.getName)
-      .filter(n => ManifestName.matches(n))
+  private def commitAt(spark: SparkSession, warehouse: String,
+                       commit: Option[Long]): Option[(Long, Map[String, Long])] = {
+    val (fs, w) = fsFor(spark, warehouse)
+    val committed = commitNames(fs, w)
     val chosen = commit match {
       case Some(c) => Some(vname(c)).filter(committed.contains)
-      case None => if (committed.isEmpty) None else Some(committed.max)
+      case None => committed.lastOption
     }
     chosen.map { name =>
-      val in = fs.open(new Path(cd, name))
+      val in = fs.open(new Path(commitsDir(w), name))
       val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
                  finally in.close()
-      val tables = text.linesIterator.filter(_.contains("=")).map { line =>
-        val Array(t, d) = line.trim.split("=", 2)
-        t -> s"$warehouse/$t/$d"
+      val pins = text.linesIterator.filter(_.contains("=")).map { line =>
+        val Array(t, pin) = line.trim.split("=", 2)
+        require(pin.startsWith("@"),
+          s"commit $name of $warehouse: '$line' is not a version pin")
+        t -> pin.substring(1).toLong
       }.toMap
-      (name.toLong, tables)
+      (name.toLong, pins)
     }
   }
 
-  /** VERSION-PIN commit entries: a commit body line `table=@N` says the
-    * member is an ordinary VERSIONED table at `$warehouse/$table` and
-    * this commit references version N of its own manifest chain (the
-    * [[publishAtomicVersioned]] layout). [[commitAt]] surfaces such a
-    * line as the data path `"$warehouse/$table/@N"`; this parses the
-    * pin back out — (table path, version) — or None for a dir-style
-    * entry. */
-  private[graft] def pinnedVersion(dataPath: String): Option[(String, Long)] = {
-    val i = dataPath.lastIndexOf("/@")
-    if (i < 0) None
-    else dataPath.substring(i + 2).toLongOption
-      .map(v => (dataPath.substring(0, i), v))
-  }
-
-  /** Resolve ONE commit-entry data path — dir-style or version-pin —
-    * to its DataFrame. For callers holding a whole table → dataPath map
-    * from a single commit read (a multi-table SQL attach) that must not
-    * re-read the commit file per table. None when a pinned version has
-    * expired from its member chain. */
-  def readCommitEntry(spark: SparkSession, dataPath: String): Option[DataFrame] =
-    pinnedVersion(dataPath) match {
-      case Some((tablePath, v)) => readTableVersion(spark, tablePath, v)
-      case None => Some(spark.read.parquet(dataPath))
-    }
-
-  /** One table out of the latest (or a pinned) commit set. */
+  /** One table out of the latest (or a retained older) commit set. None
+    * when the commit is not retained, lacks the table, or pins a member
+    * version that has expired. */
   def readCommitted(spark: SparkSession, warehouse: String, table: String,
-                    commit: Option[Long] = None): Option[DataFrame] = {
-    val resolved = commit match {
-      case Some(c) => commitVersion(spark, warehouse, c)
-      case None => currentCommit(spark, warehouse)
-    }
-    resolved.flatMap(_._2.get(table)).flatMap(readCommitEntry(spark, _))
-  }
+                    commit: Option[Long] = None): Option[DataFrame] =
+    commitAt(spark, warehouse, commit).flatMap(_._2.get(table))
+      .flatMap(readTableVersion(spark, s"$warehouse/$table", _))
 
-  /** Atomically publish ALL of `dfs` as one commit: readers observe every
-    * table from the same commit or every table from the previous one,
-    * never a mixture. `keepCommits` old commit sets survive for in-flight
-    * readers; unreferenced data dirs (expired versions and crash orphans)
-    * are garbage-collected after the commit. Returns the commit number.
-    *
-    * `partitionBy` names partition columns per table (the data dir is
-    * written partitioned; readers get ordinary partition discovery +
-    * pruning). `carryForward` tables REUSE their current commit's data
-    * dir in the new commit — one body line, zero data I/O — the scalable
-    * path for tables a run did not change: a nightly that only touched
-    * the blacklist re-lists the mart's existing dir instead of copying
-    * O(history) bytes, and GC keeps any dir a retained commit still
-    * references. */
-  def publishAtomicAll(dfs: Map[String, DataFrame], warehouse: String,
-                       keepCommits: Int = 2,
-                       partitionBy: Map[String, Seq[String]] = Map.empty,
-                       carryForward: Set[String] = Set.empty,
-                       collectStats: Boolean = false,
-                       bloomIndex: Map[String, Seq[String]] = Map.empty): Long = {
-    require(dfs.nonEmpty, "publishAtomicAll: empty table set")
-    require(keepCommits >= 1)
-    require(carryForward.intersect(dfs.keySet).isEmpty,
-      "publishAtomicAll: a table cannot be both written and carried forward")
-    val spark = dfs.head._2.sparkSession
-    val (fs, w) = fsFor(spark, warehouse)
-    val current = currentCommit(spark, warehouse)
-    val next = current.map(_._1).getOrElse(0L) + 1L
-    val dataName = s"c${vname(next)}"
-    // carried tables resolve to their CURRENT data dir names; absent ones
-    // fail loudly (a silent drop would make the next reader lose a table)
-    val carried: Map[String, String] = carryForward.map { t =>
-      val dir = current.flatMap(_._2.get(t)).getOrElse(throw new IllegalArgumentException(
-        s"publishAtomicAll: carryForward table $t has no current commit on $warehouse"))
-      t -> dir.substring(dir.lastIndexOf('/') + 1)
-    }.toMap
-    // phase 1 (long): every table's full new state into fresh dirs.
-    // collectStats profiles each table's OWN committed files (one scan,
-    // [[publishVersioned]] discipline) before the commit lands; carried
-    // tables keep the stats of the data dir they re-reference.
-    dfs.foreach { case (table, df) =>
-      val writer = df.write.mode(SaveMode.Overwrite)
-      partitionBy.get(table).filter(_.nonEmpty)
-        .fold(writer)(cols => writer.partitionBy(cols: _*))
-        .parquet(new Path(w, s"$table/$dataName").toString)
-      if (collectStats) {
-        val committed = spark.read.parquet(new Path(w, s"$table/$dataName").toString)
-        graft.operators.Quality
-          .profileWithCount(committed, committed.columns.toSeq, exact = false)
-          .coalesce(1).write.mode(SaveMode.Overwrite)
-          .parquet(new Path(w, s"$table/_stats/$dataName").toString)
-      }
-      // per-(file, column) bloom bitsets, same pre-commit discipline as
-      // stats; a carried-forward table re-references its data dir AND
-      // with it the _index entry keyed by that dir — nothing to rebuild
-      bloomIndex.get(table).filter(_.nonEmpty).foreach { cols =>
-        bloomIndexDf(spark, new Path(w, s"$table/$dataName").toString,
-            dataName, cols)
-          .coalesce(1).write.mode(SaveMode.Overwrite)
-          .parquet(new Path(w, s"$table/_index/$dataName").toString)
-      }
-    }
-    // phase 2 (commit) + phase 3 (GC)
-    val body = (dfs.keys.map(_ -> dataName) ++ carried).toSeq.sorted
-      .map { case (t, d) => s"$t=$d" }.mkString("\n")
-    sealCommitSet(fs, w, warehouse, next, body, keepCommits, dfs.keys)
-    next
-  }
-
-  /** Phase 2+3 shared by [[publishAtomicAll]] and
-    * [[publishAtomicVersioned]]: CAS-commit `body` as commit `next`
-    * (ONE single-file rename spanning all tables), expire commit files
-    * past `keepCommits`, then GC commit-set-managed artifacts — `c*`
-    * data dirs and their `c*`-keyed `_stats`/`_index` entries no
-    * retained commit references. VERSIONED members' `v*` dirs and
-    * metadata belong to the member chain's own GC (its `keepVersions`)
-    * and are never touched here. */
-  private def sealCommitSet(fs: FileSystem, w: Path, warehouse: String,
-                            next: Long, body: String, keepCommits: Int,
-                            touched: Iterable[String]): Unit = {
-    val cd = commitsDir(w)
-    fs.mkdirs(cd)
-    require(commitManifest(fs, new Path(cd, vname(next)), body),
-      s"publishAtomic: commit $next lost a concurrent race on $warehouse")
-    val commits = fs.listStatus(cd).map(_.getPath.getName)
-      .filter(n => ManifestName.matches(n)).sorted
-    val (expired, kept) = commits.splitAt(math.max(0, commits.length - keepCommits))
-    expired.foreach(n => fs.delete(new Path(cd, n), false))
-    val referenced: Set[(String, String)] = kept.flatMap { n =>
-      val in = fs.open(new Path(cd, n))
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-                 finally in.close()
-      text.linesIterator.filter(_.contains("=")).map { line =>
-        val Array(t, d) = line.trim.split("=", 2); (t, d)
-      }
-    }.toSet
-    val tables = referenced.map(_._1) ++ touched
-    tables.foreach { t =>
-      val td = new Path(w, t)
-      if (fs.exists(td))
-        fs.listStatus(td).map(_.getPath.getName)
-          .filter(n => n.startsWith("c") && ManifestName.matches(n.stripPrefix("c")) &&
-                       !referenced.contains((t, n)))
-          .foreach(n => fs.delete(new Path(td, n), true))
-      Seq("_stats", "_index").foreach { meta =>
-        val sd = new Path(td, meta)
-        if (fs.exists(sd))
-          fs.listStatus(sd).map(_.getPath.getName)
-            .filter(n => n.startsWith("c") && !referenced.contains((t, n)))
-            .foreach(n => fs.delete(new Path(sd, n), true))
-      }
-    }
-  }
-
-  /** [[publishAtomicAll]] over VERSIONED members: each table in
-    * `writes` publishes through its own file-list manifest chain at
-    * `$warehouse/$table` ([[publishVersioned]]), `pinCurrent` tables
-    * pin whatever version their chain currently holds, and ONE commit
-    * file flips the whole set (body lines `table=@version`). Because
-    * members are ordinary versioned tables:
+  /** Atomically publish a commit set over VERSIONED members: each table
+    * in `writes` publishes through its own file-list manifest chain at
+    * `$warehouse/$table` ([[publishVersioned]]), `pinCurrent` tables pin
+    * whatever version their chain currently holds, and ONE commit file
+    * flips the whole set (body lines `table=@version`). Because members
+    * are ordinary versioned tables:
     *
     *   - CoW DML between commits ([[mergeInto]], [[upsertRows]],
     *     [[deleteWhere]] … against `$warehouse/$table`, then a
     *     seal-only call naming the table in `pinCurrent`) shares every
     *     untouched FILE across commits — a 1-row correction costs one
-    *     rewritten file, never a table copy;
+    *     rewritten file, never a table copy; an unchanged table re-pins
+    *     its version with zero data I/O;
     *   - [[changeFeedCommitted]] inherits the member chain's
     *     file-granular diff — files shared by both pinned manifests
     *     are never scanned;
-    *   - [[readCommitted]] / [[readCommittedBloomPruned]] /
-    *     [[readCommittedStats]] resolve pins transparently.
+    *   - [[readCommitted]] / [[readCommittedStats]] resolve the pins
+    *     through the member chain.
     *
     * Retention: commit files expire past `keepCommits`, but pinned
     * VERSIONS live by the member chain's own `keepVersions` — size it
@@ -5793,7 +5642,7 @@ object WarehouseFs {
     * member publishes land before the commit CAS, so a losing racer
     * leaves its member versions as unpinned chain states — orphan
     * work, never a torn read; the next successful seal pins fresh
-    * current versions. */
+    * current versions. Returns the commit number. */
   def publishAtomicVersioned(spark: SparkSession,
                              writes: Map[String, DataFrame], warehouse: String,
                              pinCurrent: Set[String] = Set.empty,
@@ -5808,7 +5657,7 @@ object WarehouseFs {
     require(pinCurrent.intersect(writes.keySet).isEmpty,
       "publishAtomicVersioned: a table cannot be both written and pinned")
     val (fs, w) = fsFor(spark, warehouse)
-    val next = currentCommit(spark, warehouse).map(_._1).getOrElse(0L) + 1L
+    val next = commitNames(fs, w).lastOption.map(_.toLong).getOrElse(0L) + 1L
     writes.foreach { case (table, df) =>
       publishVersioned(df, s"$warehouse/$table",
         partitionBy = partitionBy.getOrElse(table, Nil),
@@ -5823,81 +5672,23 @@ object WarehouseFs {
             s"$warehouse — publish or DML it first, or move it to `writes`"))._1
       s"$t=@$v"
     }.mkString("\n")
-    sealCommitSet(fs, w, warehouse, next, body, keepCommits,
-      writes.keySet ++ pinCurrent)
+    // the commit: ONE single-file CAS spanning all tables, then expire
+    // commit files past the window (member versions GC by their chains)
+    val cd = commitsDir(w)
+    fs.mkdirs(cd)
+    require(commitManifest(fs, new Path(cd, vname(next)), body),
+      s"publishAtomic: commit $next lost a concurrent race on $warehouse")
+    commitNames(fs, w).dropRight(keepCommits)
+      .foreach(n => fs.delete(new Path(cd, n), false))
     next
   }
 
-  /** Bloom-pruned point lookup on a COMMIT-SET table (latest commit by
-    * default): open only matching files, exact row parity via the
-    * re-applied `IN` predicate, transparent full-read fallback when the
-    * column/table is unindexed. A version-pinned member reads its pinned
-    * version through the DSv2 `graft` source, whose scan does the same
-    * pruning (None when that version has expired); carried-forward
-    * tables resolve to the index of the data dir their commit line
-    * re-references. */
-  def readCommittedBloomPruned(spark: SparkSession, warehouse: String,
-                               table: String, column: String,
-                               values: Seq[Any],
-                               commit: Option[Long] = None): Option[DataFrame] = {
-    import org.apache.spark.sql.functions.col
-    val resolved = commit match {
-      case Some(c) => commitVersion(spark, warehouse, c)
-      case None => currentCommit(spark, warehouse)
-    }
-    resolved.flatMap(_._2.get(table)).flatMap { dataPath =>
-      pinnedVersion(dataPath).map { case (tablePath, v) =>
-        // version-pin member: the member chain's own index-pruned read
-        resolveVersion(spark, tablePath, Some(v)).map { _ =>
-          spark.read.format("graft").option("table", tablePath)
-            .option("version", v).load()
-            .filter(col(column).isin(values: _*))
-        }
-      }.getOrElse(Some(dataPath).map { dataPath =>
-      val exact = (df: DataFrame) => df.filter(col(column).isin(values: _*))
-      val full = () => readDataDir(spark, dataPath, Seq(dataPath))
-      val dn = dataPath.substring(dataPath.lastIndexOf('/') + 1)
-      val (fs, _) = fsFor(spark, warehouse)
-      val idx = new Path(new Path(new Path(warehouse), table), s"_index/$dn")
-      probeBloomEntry(spark, fs, idx, column, values,
-          full().schema.find(_.name == column).map(_.dataType)) match {
-        case None => exact(full()) // unindexed or un-probeable → full read
-        case Some(Nil) => exact(full()).limit(0)
-        case Some(files) =>
-          exact(readDataDir(spark, dataPath, files.map(f => s"$dataPath/$f")))
-      }
-      })
-    }
-  }
-
   /** Statistics persisted with a table of a commit set (latest commit by
-    * default; pass `commit` for a retained older one) — the commit-set
-    * counterpart of [[readStats]]. Carried-forward tables resolve to the
-    * stats of the data dir their commit line re-references. None when
-    * that table's state was committed without `collectStats`. */
+    * default; pass `commit` for a retained older one): the stats of the
+    * member version the commit pins. None when that version was
+    * published without `collectStats`. */
   def readCommittedStats(spark: SparkSession, warehouse: String, table: String,
-                         commit: Option[Long] = None): Option[TableStats] = {
-    val resolved = commit match {
-      case Some(c) => commitVersion(spark, warehouse, c)
-      case None => currentCommit(spark, warehouse)
-    }
-    resolved.flatMap(_._2.get(table))
-      .flatMap(statsForDataPath(spark, warehouse, table, _))
-  }
-
-  /** Stats for an already-resolved commit-set data path — for callers
-    * that hold a whole table → dataPath map from ONE commit read
-    * (e.g. a multi-table SQL attach) and must not re-read the commit
-    * file per table. */
-  def statsForDataPath(spark: SparkSession, warehouse: String, table: String,
-                       dataPath: String): Option[TableStats] =
-    pinnedVersion(dataPath) match {
-      case Some((tablePath, v)) => // pin: the member chain's own stats
-        readStats(spark, tablePath, Some(v))
-      case None =>
-        val dn = dataPath.substring(dataPath.lastIndexOf('/') + 1)
-        val (fs, _) = fsFor(spark, warehouse)
-        parseStats(spark, fs,
-          new Path(new Path(new Path(warehouse), table), s"_stats/$dn"))
-    }
+                         commit: Option[Long] = None): Option[TableStats] =
+    commitAt(spark, warehouse, commit).flatMap(_._2.get(table))
+      .flatMap(v => readStats(spark, s"$warehouse/$table", Some(v)))
 }

@@ -39,4 +39,32 @@ class ExcelReaderSpec extends SparkSpec {
     }
     assert(counts === Seq(7, 15, 24))
   }
+
+  test("a self-closing styled blank cell is empty, not the next row's value") {
+    // Excel writes a styled blank cell as `<c r="A2" s="1"/>`
+    val path = java.nio.file.Files.createTempDirectory("graft_xlsx_")
+      .resolve("passport_blacklist_01032021.xlsx")
+    def str(ref: String, s: String) =
+      s"""<c r="$ref" t="inlineStr"><is><t>$s</t></is></c>"""
+    val sheet =
+      """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>""" +
+      """<worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main">""" +
+      s"""<sheetData><row r="1">${str("A1", "date")}${str("B1", "passport")}</row>""" +
+      """<row r="2"><c r="A2" s="1"/><c r="B2" s="1"/></row>""" +
+      s"""<row r="3"><c r="A3" s="1"><v>44256</v></c>${str("B3", "4010 123456")}</row>""" +
+      "</sheetData></worksheet>"
+    val zip = new java.util.zip.ZipOutputStream(java.nio.file.Files.newOutputStream(path))
+    try {
+      zip.putNextEntry(new java.util.zip.ZipEntry("xl/worksheets/sheet1.xml"))
+      zip.write(sheet.getBytes("UTF-8"))
+      zip.closeEntry()
+    } finally zip.close()
+    assert(ExcelReader.readSheet(path.toString) === Vector(
+      Vector(Some("date"), Some("passport")),
+      Vector(None, None),
+      Vector(Some("44256"), Some("4010 123456"))))
+    val rows = BankFeeds.blacklist(spark, path.toString).collect()
+    assert(rows.map(r => (r.getString(0), String.valueOf(r.getDate(1)))).toSeq ===
+      Seq(("4010 123456", "2021-03-01")))
+  }
 }

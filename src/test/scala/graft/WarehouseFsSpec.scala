@@ -151,12 +151,12 @@ class WarehouseFsSpec extends SparkSpec {
     assert(WarehouseFs.readTableVersion(spark, s"${tmpDir()}/absent", 1L).isEmpty)
   }
 
-  test("publishAtomicAll flips every table in one commit; sets stay consistent") {
+  test("a commit set flips every table in one commit; sets stay consistent") {
     val w = tmpDir()
-    val c1 = WarehouseFs.publishAtomicAll(Map(
+    val c1 = WarehouseFs.publishAtomicVersioned(spark, Map(
       "mart" -> Seq((1, "a")).toDF("id", "v"),
       "blacklist" -> Seq(1).toDF("id")), w)
-    val c2 = WarehouseFs.publishAtomicAll(Map(
+    val c2 = WarehouseFs.publishAtomicVersioned(spark, Map(
       "mart" -> Seq((2, "b")).toDF("id", "v"),
       "blacklist" -> Seq(2).toDF("id")), w)
     assert(Seq(c1, c2) === Seq(1L, 2L))
@@ -170,33 +170,48 @@ class WarehouseFsSpec extends SparkSpec {
       .select("v").collect().map(_.getString(0)).toSeq === Seq("a"))
     assert(WarehouseFs.readCommitted(spark, w, "blacklist", Some(c1)).get
       .collect().map(_.getInt(0)).toSeq === Seq(1))
+    // one commit file pins a version of every member: `table=@version`
+    // lines, sorted by table
+    assert(WarehouseFs.currentCommit(spark, w).get ===
+      ((2L, Map("mart" -> 2L, "blacklist" -> 2L))))
+    assert(new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(s"$w/_commits/00000002")), "UTF-8") ===
+      "blacklist=@2\nmart=@2")
   }
 
-  test("publishAtomicAll GC keeps the retained window and drops crash orphans") {
+  test("commit-set retention: expired commits resolve to None, retained ones read") {
     val w = tmpDir()
-    WarehouseFs.publishAtomicAll(Map("t" -> Seq(1).toDF("id")), w, keepCommits = 2)
-    // simulate a crashed attempt: a data dir with no commit referencing it
-    Seq(99).toDF("id").write.parquet(s"$w/t/c00000099")
-    WarehouseFs.publishAtomicAll(Map("t" -> Seq(2).toDF("id")), w, keepCommits = 2)
-    WarehouseFs.publishAtomicAll(Map("t" -> Seq(3).toDF("id")), w, keepCommits = 2)
-    // window of 2: commit 1 expired, orphan GC'd, 2 and 3 retained
+    (1 to 3).foreach(i => WarehouseFs.publishAtomicVersioned(spark,
+      Map("t" -> Seq(i).toDF("id")), w, keepCommits = 2))
+    // window of 2: commit 1 expired, 2 and 3 retained
     assert(WarehouseFs.commitVersion(spark, w, 1L) === None)
-    assert(!new java.io.File(s"$w/t/c00000099").exists())
-    assert(!new java.io.File(s"$w/t/c00000001").exists())
+    assert(WarehouseFs.readCommitted(spark, w, "t", Some(1L)) === None)
+    assert(WarehouseFs.listNames(spark, s"$w/_commits")
+      .filterNot(_.startsWith(".")) === Seq("00000002", "00000003"))
     assert(WarehouseFs.readCommitted(spark, w, "t", Some(2L)).get
       .collect().map(_.getInt(0)).toSeq === Seq(2))
     assert(WarehouseFs.readCommitted(spark, w, "t").get
       .collect().map(_.getInt(0)).toSeq === Seq(3))
+    // pinned VERSIONS live by the member chain's own keepVersions: a
+    // retained commit whose pinned version expired resolves to None
+    WarehouseFs.publishAtomicVersioned(spark, Map("t" -> Seq(4).toDF("id")), w,
+      keepCommits = 2, keepVersions = 1)
+    assert(WarehouseFs.commitVersion(spark, w, 3L).get._2 === Map("t" -> 3L))
+    assert(WarehouseFs.readCommitted(spark, w, "t", Some(3L)) === None)
+    assert(WarehouseFs.readCommitted(spark, w, "t").get
+      .collect().map(_.getInt(0)).toSeq === Seq(4))
   }
 
   test("a torn commit write (stray tmp commit file) is invisible to readers") {
     val w = tmpDir()
-    WarehouseFs.publishAtomicAll(Map("t" -> Seq(1).toDF("id")), w)
-    // a writer that died between create and rename leaves only a dot-tmp
+    WarehouseFs.publishAtomicVersioned(spark, Map("t" -> Seq(1).toDF("id")), w)
+    // a writer that published its member version, then died between
+    // creating the commit file and its rename, leaves only a dot-tmp
+    WarehouseFs.publishVersioned(Seq(2).toDF("id"), s"$w/t")
     java.nio.file.Files.write(
       java.nio.file.Paths.get(s"$w/_commits/.tmp-00000002"),
-      "t=c00000002".getBytes("UTF-8"))
-    assert(WarehouseFs.currentCommit(spark, w).get._1 === 1L)
+      "t=@2".getBytes("UTF-8"))
+    assert(WarehouseFs.currentCommit(spark, w).get === ((1L, Map("t" -> 1L))))
     assert(WarehouseFs.readCommitted(spark, w, "t").get
       .collect().map(_.getInt(0)).toSeq === Seq(1))
   }
@@ -249,25 +264,27 @@ class WarehouseFsSpec extends SparkSpec {
     val wh = tmpDir()
     val a1 = Seq((1, "x"), (2, "y"), (3, "y")).toDF("id", "k")
     val b1 = (1 to 7).toDF("id")
-    WarehouseFs.publishAtomicAll(Map("ta" -> a1, "tb" -> b1), wh, collectStats = true)
+    WarehouseFs.publishAtomicVersioned(spark, Map("ta" -> a1, "tb" -> b1), wh,
+      keepVersions = 2, collectStats = true)
     val sa = WarehouseFs.readCommittedStats(spark, wh, "ta").get
     assert(sa.rowCount === 3 && sa.column("k").get.nDistinct.get === 2)
     assert(WarehouseFs.readCommittedStats(spark, wh, "tb").get.rowCount === 7)
-    // commit 2 changes only tb; ta carries forward and still resolves the
-    // SAME stats (its commit line re-references the same data dir)
-    WarehouseFs.publishAtomicAll(Map("tb" -> (1 to 9).toDF("id")), wh,
-      carryForward = Set("ta"), collectStats = true)
+    // commit 2 changes only tb; ta re-pins its version and still
+    // resolves the SAME stats
+    WarehouseFs.publishAtomicVersioned(spark, Map("tb" -> (1 to 9).toDF("id")), wh,
+      pinCurrent = Set("ta"), keepVersions = 2, collectStats = true)
+    assert(WarehouseFs.currentCommit(spark, wh).get._2 === Map("ta" -> 1L, "tb" -> 2L))
     assert(WarehouseFs.readCommittedStats(spark, wh, "ta").get.rowCount === 3)
     assert(WarehouseFs.readCommittedStats(spark, wh, "tb").get.rowCount === 9)
     // a pinned commit resolves ITS stats
     assert(WarehouseFs.readCommittedStats(spark, wh, "tb", commit = Some(1L))
       .get.rowCount === 7)
     // a commit published without stats degrades to None
-    WarehouseFs.publishAtomicAll(Map("tb" -> (1 to 2).toDF("id")), wh,
-      carryForward = Set("ta"))
+    WarehouseFs.publishAtomicVersioned(spark, Map("tb" -> (1 to 2).toDF("id")), wh,
+      pinCurrent = Set("ta"), keepVersions = 2)
     assert(WarehouseFs.readCommittedStats(spark, wh, "tb").isEmpty)
-    // keepCommits=2 GC'd commit 1's tb data dir AND its stats
-    assert(WarehouseFs.listNames(spark, s"$wh/tb/_stats") === Seq("c00000002"))
+    // keepVersions=2: the member chain GC'd tb's version 1 AND its stats
+    assert(WarehouseFs.listNames(spark, s"$wh/tb/_stats") === Seq("v00000002"))
   }
 
   test("stats-informed read broadcasts a committed dim the size estimate alone would not") {
@@ -482,11 +499,12 @@ class WarehouseFsSpec extends SparkSpec {
     val w = tmpDir()
     val mart1 = Seq((1L, 100L), (2L, 200L)).toDF("k", "amt")
     val bl = Seq(("p1", 1)).toDF("passport", "flag")
-    WarehouseFs.publishAtomicAll(Map("mart" -> mart1, "bl" -> bl), w, keepCommits = 5)
-    // commit 2: mart changes (update + insert), bl carried forward
+    WarehouseFs.publishAtomicVersioned(spark, Map("mart" -> mart1, "bl" -> bl), w,
+      keepCommits = 5)
+    // commit 2: mart changes (update + insert), bl re-pins its version
     val mart2 = Seq((1L, 150L), (2L, 200L), (3L, 300L)).toDF("k", "amt")
-    WarehouseFs.publishAtomicAll(Map("mart" -> mart2), w, keepCommits = 5,
-      carryForward = Set("bl"))
+    WarehouseFs.publishAtomicVersioned(spark, Map("mart" -> mart2), w,
+      keepCommits = 5, pinCurrent = Set("bl"))
 
     val feed = WarehouseFs.changeFeedCommitted(spark, w, "mart", Seq("k"), 1, 2).get
     val by = feed.collect().groupBy(_.getAs[String]("_change_type"))
@@ -496,13 +514,19 @@ class WarehouseFsSpec extends SparkSpec {
     assert(by("update_postimage") === Set((1L, 150L)))
     assert(!by.contains("delete"))
 
-    // carried table: both commits resolve the same dir → empty, right schema
+    // re-pinned table: both commits pin the same version → empty, right
+    // schema, no data file read
     val blFeed = WarehouseFs.changeFeedCommitted(spark, w, "bl", Seq("passport"), 1, 2).get
     assert(blFeed.count() === 0)
     assert(blFeed.columns.toSeq === Seq("passport", "flag", "_change_type"))
-    // unknown table / expired commit → None
+    assert(blFeed.inputFiles.isEmpty, blFeed.inputFiles.toSeq.toString)
+    // unknown table / never-written commit → None
     assert(WarehouseFs.changeFeedCommitted(spark, w, "nope", Seq("k"), 1, 2).isEmpty)
     assert(WarehouseFs.changeFeedCommitted(spark, w, "mart", Seq("k"), 0, 2).isEmpty)
+    // expired commit → None: a window of 1 drops commits 1 and 2
+    WarehouseFs.publishAtomicVersioned(spark, Map.empty, w,
+      pinCurrent = Set("mart", "bl"), keepCommits = 1)
+    assert(WarehouseFs.changeFeedCommitted(spark, w, "mart", Seq("k"), 1, 3).isEmpty)
   }
 
   test("tableChanges refuses ranges wider than the plan budget (batch twin of maxVersionsPerTrigger)") {
@@ -529,10 +553,11 @@ class WarehouseFsSpec extends SparkSpec {
     val w = tmpDir()
     val mart1 = Seq((1L, 100L), (2L, 200L)).toDF("k", "amt")
     val bl = Seq(("p1", 1)).toDF("passport", "flag")
-    WarehouseFs.publishAtomicAll(Map("mart" -> mart1, "bl" -> bl), w, keepCommits = 5)
+    WarehouseFs.publishAtomicVersioned(spark, Map("mart" -> mart1, "bl" -> bl), w,
+      keepCommits = 5)
     val mart2 = Seq((1L, 150L), (2L, 200L), (3L, 300L)).toDF("k", "amt")
-    WarehouseFs.publishAtomicAll(Map("mart" -> mart2), w, keepCommits = 5,
-      carryForward = Set("bl"))
+    WarehouseFs.publishAtomicVersioned(spark, Map("mart" -> mart2), w,
+      keepCommits = 5, pinCurrent = Set("bl"))
     graft.sources.GraftCatalog.writeProps(spark, s"$w/mart", Map("keyCols" -> "k"))
     graft.sources.GraftCatalog.writeProps(spark, s"$w/bl",
       Map("keyCols" -> "passport"))
@@ -545,7 +570,7 @@ class WarehouseFsSpec extends SparkSpec {
     // omitted toCommit = the current commit
     assert(canon(spark.sql(s"SELECT * FROM commit_changes('$w', 'mart', 1)")) ===
       canon(apiFeed))
-    // the carried member inherits the scan-free empty: same schema, zero rows
+    // the re-pinned member inherits the scan-free empty: same schema, zero rows
     val blSql = spark.sql(s"SELECT * FROM commit_changes('$w', 'bl', 1, 2)")
     assert(blSql.count() === 0)
     assert(blSql.columns.toSeq === Seq("passport", "flag", "_change_type"))
@@ -594,9 +619,14 @@ class WarehouseFsSpec extends SparkSpec {
     val refs = WarehouseFs.readCommitted(spark, w, "mart").get.inputFiles
     assert(refs.count(_.contains("/v00000001/")) === 7,
       s"untouched files must be shared across commits: ${refs.toSeq}")
-    // bloom-pruned commit reads resolve through the member chain's index
-    assert(WarehouseFs.readCommittedBloomPruned(spark, w, "mart", "id",
-      Seq(77L)).get.count() === 1)
+    // a point lookup on the pinned version prunes through the member
+    // chain's bloom index
+    val pin = WarehouseFs.currentCommit(spark, w).get._2("mart")
+    assert(graftRead(s"$w/mart", Some(pin)).filter(col("id") === 77L)
+      .count() === 1)
+    val (_, _, kept, total) = WarehouseFs.prunedFiles(spark, s"$w/mart",
+      point = Map("id" -> Seq(77L)), version = Some(pin)).get
+    assert(kept === 1 && total === 8, s"kept $kept of $total files")
   }
 
   test("commit-set bloom index: pruned point lookups, carry-forward reuse, GC") {
@@ -605,27 +635,33 @@ class WarehouseFsSpec extends SparkSpec {
       .select(col("id"), concat(lit("card"), col("id")).as("card"))
       .repartitionByRange(6, col("id"))
     val bl = Seq(("p1", 1), ("p2", 1)).toDF("passport", "flag")
-    WarehouseFs.publishAtomicAll(Map("mart" -> mart, "bl" -> bl), w,
-      keepCommits = 5, bloomIndex = Map("mart" -> Seq("card")))
-    // pruned lookup: parity + file subset via the index relation
-    val got = WarehouseFs.readCommittedBloomPruned(spark, w, "mart", "card",
-      Seq("card4321")).get
-    assert(got.select("id").as[Long].collect() === Array(4321L))
-    assert(spark.read.parquet(s"$w/mart/_index/c00000001").count() === 6)
-    // unindexed table falls back to a full read
-    assert(WarehouseFs.readCommittedBloomPruned(spark, w, "bl", "passport",
-      Seq("p2")).get.count() === 1)
-    // commit 2 carries mart forward: same data dir → same index entry, no rebuild
-    WarehouseFs.publishAtomicAll(Map("bl" -> bl), w, keepCommits = 5,
-      carryForward = Set("mart"))
-    assert(WarehouseFs.readCommittedBloomPruned(spark, w, "mart", "card",
-      Seq("card9999")).get.count() === 1)
-    assert(WarehouseFs.listNames(spark, s"$w/mart/_index") === Seq("c00000001"))
-    // GC: a tight window drops the expired commit's index with its dir
-    WarehouseFs.publishAtomicAll(
+    WarehouseFs.publishAtomicVersioned(spark, Map("mart" -> mart, "bl" -> bl), w,
+      keepCommits = 5, keepVersions = 1, bloomIndex = Map("mart" -> Seq("card")))
+    def pin(t: String) = WarehouseFs.currentCommit(spark, w).get._2(t)
+    // the point lookup on a commit-set member: the graft source at the
+    // version the latest commit pins
+    def lookup(t: String, c: String, v: String) =
+      graftRead(s"$w/$t", Some(pin(t))).filter(col(c).isin(v))
+    def pruned(v: String) = WarehouseFs.prunedFiles(spark, s"$w/mart",
+      point = Map("card" -> Seq(v)), version = Some(pin("mart"))).get
+    // pruned lookup: parity + the index keeps 1 of the 6 files
+    assert(lookup("mart", "card", "card4321").select("id").as[Long].collect() ===
+      Array(4321L))
+    assert(pruned("card4321")._3 === 1 && pruned("card4321")._4 === 6)
+    // an unindexed member reads everything, still exact
+    assert(lookup("bl", "passport", "p2").count() === 1)
+    // commit 2 re-pins mart: same version → same index entry, no rebuild
+    WarehouseFs.publishAtomicVersioned(spark, Map("bl" -> bl), w,
+      keepCommits = 5, keepVersions = 1, pinCurrent = Set("mart"))
+    assert(pin("mart") === 1L)
+    assert(lookup("mart", "card", "card9999").count() === 1)
+    assert(pruned("card9999")._3 === 1)
+    assert(WarehouseFs.listNames(spark, s"$w/mart/_index") === Seq("v00000001"))
+    // GC: the member chain drops the expired version's index with its data
+    WarehouseFs.publishAtomicVersioned(spark,
       Map("mart" -> mart.limit(10), "bl" -> bl), w, keepCommits = 1,
-      bloomIndex = Map("mart" -> Seq("card")))
-    assert(WarehouseFs.listNames(spark, s"$w/mart/_index") === Seq("c00000003"))
+      keepVersions = 1, bloomIndex = Map("mart" -> Seq("card")))
+    assert(WarehouseFs.listNames(spark, s"$w/mart/_index") === Seq("v00000002"))
   }
 
   test("bloom index on a partitioned version: partition column survives the file-list read") {
