@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.operators.AnnOps
 
 /** Measured ANN quality artifact: recall@10 of each approximate search
@@ -61,19 +60,13 @@ object AnnRecall {
     val sfDir = args.lift(0)
       .orElse(sys.env.get("SPARK_GRAFT_SF_DIR"))
       .getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.defaultCpus
+    val spark = GraftSession.builder(cpus).appName("graft-ann-recall").getOrCreate()
 
     val k = 10
     // the parquet table is one file → one partition; spread it or every
     // sweep below serializes on a single core
-    val emb = Tables.embeddings(spark, sfDir).repartition(cpus.toInt).cache()
+    val emb = Tables.embeddings(spark, sfDir).repartition(cpus).cache()
     val queryIds = emb.select("vec_id").orderBy("vec_id").limit(50)
       .collect().map(_.getLong(0)).toSeq
     val truth = AnnOps.bruteForceTopK(emb, queryIds, k).cache()

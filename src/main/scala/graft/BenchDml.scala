@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.sources.WarehouseFs
@@ -44,15 +43,8 @@ object BenchDml {
     val loadBefore = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
     val rows = sys.env.getOrElse("SPARK_GRAFT_DML_ROWS", "20000000").toLong
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.builder().appName("graft-bench-dml").getOrCreate()
 
     def timed[T](body: => T): Double = {
       val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.DedupOps
 
@@ -81,20 +81,14 @@ object DedupQuality {
     val sfDir = args.lift(0)
       .orElse(sys.env.get("SPARK_GRAFT_SF_DIR"))
       .getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.defaultCpus
+    val spark = GraftSession.builder(cpus).appName("graft-dedup-quality").getOrCreate()
 
     // deterministic sample: every 3rd doc — O(n²) truth stays tractable
     // while near-dup pairs planted by the generator survive the slice
     val docs = Tables.documents(spark, sfDir)
       .filter(pmod(col("doc_id"), lit(3)) === 0)
-      .repartition(cpus.toInt).cache()
+      .repartition(cpus).cache()
     val sampleN = docs.count()
 
     def r4(v: Double) = math.rint(v * 1e4) / 1e4

@@ -39,13 +39,7 @@ object EtlPipeline {
     val feedDir = args.lift(0).getOrElse(BankFeeds.ReferenceDir)
     val whDir = args.lift(1).getOrElse("/tmp/graft_warehouse")
     val bankDir = args.lift(2)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.builder().appName("graft-etl").getOrCreate()
     run(spark, feedDir, whDir, bankDir)
     spark.stop()
   }
@@ -265,8 +259,7 @@ object EtlPipeline {
     // terminal-scoped investigation prunes most row groups via the pushed
     // parquet min/max filter while intra-day time slices stay clustered.
     // Same rows, atomic per-partition swap; O(new days), never O(history).
-    if (loadedDays.nonEmpty &&
-        spark.conf.getOption("spark.graft.etl.zorderFact").forall(_.toBoolean))
+    if (loadedDays.nonEmpty)
       zOrderFactDays(spark, tablePath("dwh_fact_transactions"), loadedDays)
 
     if (readIf("dwh_fact_transactions").isEmpty || readIf("dwh_dim_terminals_hist").isEmpty) {

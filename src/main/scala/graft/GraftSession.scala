@@ -3,8 +3,14 @@ package graft
 import org.apache.spark.sql.SparkSession
 import graft.sources.WarehouseFs
 
-/** SQL entry point: registers the testdata tables as temp views and the
-  * engine's custom functions (cosine_f32 / dot_f32 / l2norm_f32), so the
+/** The engine's session factory and SQL entry point.
+  *
+  * [[builder]] is the one way a session is made: every main and the
+  * specs build through it, so every session carries the engine's one
+  * extension point, [[graft.plans.GraftExtensions]] (rules, strategies,
+  * parser, table functions and the custom SQL functions such as
+  * cosine_f32 / dot_f32 / l2norm_f32), and the `graft` catalog.
+  * [[attach]] then registers the testdata tables as temp views, so the
   * whole operator surface is reachable from `spark.sql(...)` — the
   * reference's users write SQL (shipped to Oracle); here the same SQL runs
   * on Catalyst with the engine's extensions in scope.
@@ -13,6 +19,25 @@ object GraftSession {
   val TableNames: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part", "orders",
     "lineitem", "events", "documents", "embeddings")
+
+  /** Cores a session runs on unless told otherwise: `SPARK_GRAFT_CPUS`,
+    * else every core the JVM sees. */
+  def defaultCpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** A preconfigured builder: `local[cpus]`, as many shuffle partitions,
+    * UTC, no UI, WARN logging, [[graft.plans.GraftExtensions]] and the
+    * `graft` catalog class. Callers add only what is theirs (app name,
+    * dirs, the catalog's warehouse) and call `getOrCreate()`. */
+  def builder(cpus: Int = defaultCpus): SparkSession.Builder =
+    SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .config("spark.log.level", "WARN")
+      .config("spark.sql.extensions", classOf[graft.plans.GraftExtensions].getName)
+      .config("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
 
   // attach() is called at the top of every SQL-entry query, and each call
   // was re-running `spark.read.parquet` (path listing + footer schema
@@ -24,7 +49,8 @@ object GraftSession {
   // re-attaches. Weak keys: stopped test sessions drop out.
   private val attachedDir = new java.util.WeakHashMap[SparkSession, String]
 
-  /** Idempotent per-session setup. */
+  /** Idempotent per-session setup: the testdata tables as temp views
+    * (the functions come with the session, not with this call). */
   def attach(spark: SparkSession, sfDir: String): SparkSession = {
     attachedDir.synchronized {
       if (attachedDir.get(spark) == sfDir) return spark
@@ -44,13 +70,6 @@ object GraftSession {
       case t =>
         Tables.table(spark, sfDir, t).createOrReplaceTempView(t)
     }
-    org.apache.spark.sql.graft.VectorExpressions.register(spark)
-    org.apache.spark.sql.graft.TextHashExpressions.register(spark)
-    org.apache.spark.sql.graft.AggExpressions.register(spark)
-    org.apache.spark.sql.graft.ZOrderExpressions.register(spark)
-    org.apache.spark.sql.graft.SketchExpressions.register(spark)
-    org.apache.spark.sql.graft.BloomExpressions.register(spark)
-    org.apache.spark.sql.graft.TopKSketch.register(spark)
     attachedDir.synchronized { attachedDir.put(spark, sfDir) }
     spark
   }

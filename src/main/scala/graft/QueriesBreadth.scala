@@ -176,12 +176,11 @@ object QueriesBreadth {
     // Feed-ingest parity: the reference's quirkiest parser (main.py:316-335,
     // 370 — `;` separator, whitespace-dirty rows, decimal-comma amounts)
     // under the hash gate. Reads the .txt feeds of the session's feed dir
-    // (`BankFeeds.FeedDirConf`, the reference's own files unless set; the
+    // (`BankFeeds.feedDir`, the reference's own files unless set; the
     // path is feed-relative, not SF-relative); amt → double for
     // cross-engine dtype parity.
     "feed_transactions_typed" -> ((s, _) =>
-      BankFeeds.transactions(s,
-        s.conf.get(BankFeeds.FeedDirConf, BankFeeds.ReferenceDir) + "/transactions_*.txt")
+      BankFeeds.transactions(s, BankFeeds.feedDir(s) + "/transactions_*.txt")
         .withColumn("amt", col("amt").cast(DoubleType))),
 
     // arg-min/arg-max aggregates (min_by/max_by) with a unique ordering
@@ -375,6 +374,21 @@ object QueriesBreadth {
     })
   )
 
+  /** DuckDB oracle of `feed_transactions_typed` over the feeds in
+    * `feedDir`; `Verify` writes it over the session's feed dir. */
+  def feedTransactionsOracle(feedDir: String): String =
+      s"""SELECT
+          trim(transaction_id) AS trans_id,
+          strptime(trim(transaction_date), '%Y-%m-%d %H:%M:%S') AS trans_date,
+          CAST(CAST(replace(trim(amount), ',', '.') AS DECIMAL(20,2)) AS DOUBLE) AS amt,
+          trim(card_num) AS card_num,
+          trim(oper_type) AS oper_type,
+          trim(oper_result) AS oper_result,
+          trim(terminal) AS terminal
+        FROM read_csv('$feedDir/transactions_*.txt', delim=';', header=true,
+          columns={'transaction_id':'VARCHAR','transaction_date':'VARCHAR','amount':'VARCHAR',
+                   'card_num':'VARCHAR','oper_type':'VARCHAR','oper_result':'VARCHAR','terminal':'VARCHAR'})"""
+
   val oracleSql: Map[String, String] = Map(
     "join_6way_same_nation" ->
       """SELECT n_name,
@@ -485,18 +499,7 @@ object QueriesBreadth {
           CAST(list_sum(list_transform(range(1, l_linenumber + 1), x -> x * x)) AS BIGINT) AS sum_squares
         FROM lineitem WHERE l_linenumber >= 1""",
 
-    "feed_transactions_typed" ->
-      s"""SELECT
-          trim(transaction_id) AS trans_id,
-          strptime(trim(transaction_date), '%Y-%m-%d %H:%M:%S') AS trans_date,
-          CAST(CAST(replace(trim(amount), ',', '.') AS DECIMAL(20,2)) AS DOUBLE) AS amt,
-          trim(card_num) AS card_num,
-          trim(oper_type) AS oper_type,
-          trim(oper_result) AS oper_result,
-          trim(terminal) AS terminal
-        FROM read_csv('${BankFeeds.ReferenceDir}/transactions_*.txt', delim=';', header=true,
-          columns={'transaction_id':'VARCHAR','transaction_date':'VARCHAR','amount':'VARCHAR',
-                   'card_num':'VARCHAR','oper_type':'VARCHAR','oper_result':'VARCHAR','terminal':'VARCHAR'})""",
+    "feed_transactions_typed" -> feedTransactionsOracle(BankFeeds.ReferenceDir),
 
     "agg_min_max_by" ->
       """SELECT lang,

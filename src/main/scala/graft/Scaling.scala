@@ -112,14 +112,7 @@ object Scaling {
       .getOrElse("/root/testdata/sf0.1")
     val factor = sys.env.getOrElse("SPARK_GRAFT_SCALE_FACTOR", "10").toInt
     val scaledDir = sys.env.getOrElse("SPARK_GRAFT_SCALED_DIR", "/tmp/graft_scaled_sf")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.builder().appName("graft-scaling").getOrCreate()
 
     // the marker's CONTENT (base + factor) is validated, not just its
     // existence: a replica built from a different base or factor is

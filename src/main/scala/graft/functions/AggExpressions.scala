@@ -163,9 +163,4 @@ object AggExpressions {
       AnsiSumLong(UnscaledValue(ExpressionUtils.expression(c)))
         .toAggregateExpression(),
       DecimalType.MAX_PRECISION, scale, nullOnOverflow = true))
-
-  /** SQL registration: `elementwise_min(array_col)`. Idempotent. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "elementwise_min", es => ElementwiseMinAgg(es.head), "scala_udf")
 }

@@ -167,13 +167,4 @@ object BloomExpressions {
   def bloom_might_contain(bloom: Column, item: Column, numHashes: Int = 7): Column =
     ExpressionUtils.column(BloomMightContain(
       ExpressionUtils.expression(bloom), ExpressionUtils.expression(item), numHashes))
-
-  /** SQL registration: bloom_build(col) / bloom_might_contain(bloom, item)
-    * with the default 1 Mib × k=7 geometry. Idempotent. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("bloom_build", es => BloomAgg(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("bloom_might_contain",
-      es => BloomMightContain(es(0), es(1)), "scala_udf")
-  }
 }

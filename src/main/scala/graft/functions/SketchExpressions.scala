@@ -383,20 +383,4 @@ object SketchExpressions {
   def kmv_intersect_est(a: Column, b: Column, k: Int = 4096): Column =
     ExpressionUtils.column(KmvIntersectEstimate(
       ExpressionUtils.expression(a), ExpressionUtils.expression(b), k))
-
-  /** SQL registration: cms_sketch(col) / cms_estimate(sketch, item) /
-    * kmv_sketch(col) / kmv_estimate(sketch) with default geometries.
-    * Idempotent. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("cms_sketch", es => CountMinAgg(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("cms_estimate",
-      es => CmsEstimate(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("kmv_sketch", es => KmvAgg(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("kmv_estimate", es => KmvEstimate(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("kmv_union_est",
-      es => KmvUnionEstimate(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("kmv_intersect_est",
-      es => KmvIntersectEstimate(es(0), es(1)), "scala_udf")
-  }
 }

@@ -227,18 +227,6 @@ object TextHashExpressions {
   def minhash_signature(tokens: Column, numHashes: Int): Column =
     ExpressionUtils.column(MinHashSignature(ExpressionUtils.expression(tokens), numHashes))
 
-  /** SQL registration: simhash64 / simhash64_md5 / minhash_sig(tokens, n).
-    * Idempotent; `n` must be a foldable integer (it parameterizes codegen). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("simhash64", es => SimHash64(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("simhash64_md5",
-      es => SimHash64(es.head, portable = true), "scala_udf")
-    reg.createOrReplaceTempFunction("minhash_sig", es => {
-      require(es.length == 2 && es(1).foldable, "minhash_sig(tokens, <int literal>)")
-      MinHashSignature(es.head, es(1).eval().asInstanceOf[Number].intValue())
-    }, "scala_udf")
-  }
   def simhash64(tokens: Column): Column =
     ExpressionUtils.column(SimHash64(ExpressionUtils.expression(tokens)))
   /** md5-based SimHash — bit-identical to a SQL reimplementation over

@@ -187,12 +187,4 @@ object TopKSketch {
   def topk_sketch(c: Column, capacity: Int = 256): Column =
     ExpressionUtils.column(
       TopKAgg(ExpressionUtils.expression(c), capacity).toAggregateExpression())
-
-  /** SQL registration: `topk_sketch(col)` with the default capacity.
-    * Idempotent. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("topk_sketch",
-      es => TopKAgg(es.head), "scala_udf")
-  }
 }

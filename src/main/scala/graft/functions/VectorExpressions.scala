@@ -4,7 +4,6 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -178,12 +177,4 @@ object VectorExpressions {
     ExpressionUtils.column(L2NormF32(ExpressionUtils.expression(a)))
   def vec_cosine(a: Column, b: Column): Column =
     ExpressionUtils.column(CosineSimilarityF32(ExpressionUtils.expression(a), ExpressionUtils.expression(b)))
-
-  /** SQL registration: cosine_f32 / dot_f32 / l2norm_f32. Idempotent. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("cosine_f32", es => CosineSimilarityF32(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("dot_f32", es => DotProductF32(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("l2norm_f32", es => L2NormF32(es.head), "scala_udf")
-  }
 }

@@ -4,7 +4,6 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.classic.ExpressionUtils
@@ -124,12 +123,4 @@ object ZOrderExpressions {
 
   def z_ordern(cols: Column*): Column =
     ExpressionUtils.column(ZOrderN(cols.map(ExpressionUtils.expression)))
-
-  /** SQL registration: z_order2(a, b), z_ordern(c1, …, ck). */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "z_order2", es => ZOrder2(es(0), es(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "z_ordern", es => ZOrderN(es), "scala_udf")
-  }
 }

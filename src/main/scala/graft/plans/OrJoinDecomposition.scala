@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.expressions.{And, Coalesce, Expression, Literal, Not, Or}
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical.{Join, JoinHint, LogicalPlan, Union}
@@ -26,8 +25,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * non-deterministic c₁ (rand() etc.) could disagree across branches and
   * duplicate or drop rows relative to the original join.
   *
-  * Register via `.withExtensions(OrJoinDecomposition.install)` or
-  * spark.sql.extensions=graft.plans.GraftExtensions.
+  * Installed by [[graft.plans.GraftExtensions]].
   */
 object OrJoinDecomposition extends Rule[LogicalPlan] {
 
@@ -46,31 +44,5 @@ object OrJoinDecomposition extends Rule[LogicalPlan] {
       // both branches share children, so their outputs carry the same
       // attribute ids — the same shape as df.union(df), which Union accepts
       Union(Seq(b1, b2))
-  }
-
-  /** SparkSessionExtensions installer. */
-  def install(e: SparkSessionExtensions): Unit =
-    e.injectOptimizerRule(_ => OrJoinDecomposition)
-}
-
-/** spark.sql.extensions entry point. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit = {
-    OrJoinDecomposition.install(e)
-    org.apache.spark.sql.graft.TopKPerGroupOp.install(e)
-    // SQL MERGE/UPDATE/DELETE over graft catalog tables → the CoW verbs
-    e.injectResolutionRule(_ => org.apache.spark.sql.graft.GraftDmlRule)
-    // (deletion vectors reconcile INSIDE the DSv2 scan — GraftDvScan —
-    // so no plan-swap rule is needed for masked versions anymore)
-    // spark.readStream.table("graft.t") → the graft-cdf change-feed source
-    e.injectResolutionRule(s => new graft.streaming.GraftStreamTableRule(s))
-    // OPTIMIZE / VACUUM / DESCRIBE HISTORY maintenance statements
-    e.injectParser((_, delegate) =>
-      new org.apache.spark.sql.graft.GraftMaintenanceParser(delegate))
-    // SELECT * FROM table_changes('graft.t', from[, to]) — batch change feed
-    e.injectTableFunction(GraftTableChanges.description)
-    // SELECT * FROM commit_changes('graft', 't', from[, to]) — the
-    // atomic COMMIT-SET feed (transactionally consistent across members)
-    e.injectTableFunction(GraftCommitChanges.description)
   }
 }

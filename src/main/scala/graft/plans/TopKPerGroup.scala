@@ -5,7 +5,7 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.TaskContext
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSessionExtensions}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, BindReferences, Expression, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
@@ -31,8 +31,8 @@ import org.apache.spark.util.collection.ExternalSorter
   * (SparkStrategy) → [[TopKPerGroupExec]] (physical). The exec declares
   * `ClusteredDistribution(group)`, so EnsureRequirements inserts exactly
   * the hash Exchange the window form also needs — minus its sort.
-  * Install via `TopKPerGroupOp.install` (SparkSessionExtensions) or the
-  * self-registering [[TopKPerGroupOp.topKPerGroup]] entry point.
+  * Entry point: [[TopKPerGroupOp.topKPerGroup]]; the strategy is
+  * installed by [[graft.plans.GraftExtensions]] with every session.
   *
   * Semantics: largest-k by `order`, NULL order values excluded (the
   * window idiom's `orderBy(desc)` ranks NULLs last, so for k < group
@@ -217,18 +217,11 @@ object TopKPerGroupOp {
     }
   }
 
-  /** SparkSessionExtensions installer (spark.sql.extensions path). */
-  def install(e: SparkSessionExtensions): Unit =
-    e.injectPlannerStrategy(_ => Strategy)
-
-  /** Largest-k rows per group by `orderCol`. Self-registers the strategy
-    * in the session's experimental strategies if not yet present. */
+  /** Largest-k rows per group by `orderCol`. The session plans the node
+    * with [[Strategy]], which [[graft.plans.GraftExtensions]] installs. */
   def topKPerGroup(df: DataFrame, groupCols: Seq[String], orderCol: String,
                    k: Int): DataFrame = {
     val spark = df.sparkSession
-    if (!spark.experimental.extraStrategies.contains(Strategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ Strategy
     val budget = spark.conf.getOption("spark.graft.topk.maxBufferedRows")
       .map(_.toLong).getOrElse(DefaultMaxBufferedRows)
     val byteBudget = spark.conf.getOption("spark.graft.topk.maxBufferedBytes")

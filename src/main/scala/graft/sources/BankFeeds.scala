@@ -35,8 +35,11 @@ object BankFeeds {
   val ReferenceDir = "/root/reference"
 
   /** Session conf naming the feed directory `feed_transactions_typed`
-    * reads; unset, it is [[ReferenceDir]]. */
+    * and its oracle read; unset, it is [[ReferenceDir]]. */
   val FeedDirConf = "spark.graft.feedDir"
+
+  /** The session's feed directory ([[FeedDirConf]], else [[ReferenceDir]]). */
+  def feedDir(spark: SparkSession): String = spark.conf.get(FeedDirConf, ReferenceDir)
 
   val txStagingSchema: StructType = StructType(Seq(
     StructField("transaction_id", StringType),

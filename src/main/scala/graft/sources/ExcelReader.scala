@@ -13,6 +13,7 @@ import scala.util.matching.Regex
   * zip+XML parse is the right size. Cell types handled: shared strings
   * (t="s"), inline strings (t="inlineStr"), and numbers — including Excel
   * serial dates, which callers convert via [[ExcelReader.serialToDate]].
+  * An error cell (t="e", e.g. `#N/A`) reads as empty, never as text.
   *
   * Scale note: dimension feeds stay driver-side by nature; fact-volume
   * data arrives as CSV/parquet and goes through spark.read (BankFeeds).
@@ -26,9 +27,25 @@ object ExcelReader {
   private val InlineRe: Regex = """(?s)<t[^>]*>(.*?)</t>""".r
   private val SiRe: Regex = """(?s)<si>(.*?)</si>""".r
 
-  private def unescape(s: String): String =
-    s.replace("&lt;", "<").replace("&gt;", ">").replace("&quot;", "\"")
-      .replace("&apos;", "'").replace("&amp;", "&")
+  // the five named XML entities and numeric character references
+  // (`&#1040;`, `&#x410;`), decoded in one pass so `&amp;#1040;` stays
+  // the literal text `&#1040;`
+  private val EntityRe: Regex =
+    """&(?:#(\d{1,7})|#[xX]([0-9a-fA-F]{1,6})|(lt|gt|quot|apos|amp));""".r
+
+  private def unescape(s: String): String = EntityRe.replaceAllIn(s, m => {
+    val decoded =
+      if (m.group(3) != null) m.group(3) match {
+        case "lt" => "<"; case "gt" => ">"; case "quot" => "\""
+        case "apos" => "'"; case _ => "&"
+      } else {
+        val cp = if (m.group(1) != null) m.group(1).toInt
+                 else Integer.parseInt(m.group(2), 16)
+        if (Character.isValidCodePoint(cp)) new String(Character.toChars(cp))
+        else m.matched
+      }
+    Regex.quoteReplacement(decoded)
+  })
 
   private def colIndex(letters: String): Int =
     letters.foldLeft(0)((acc, c) => acc * 26 + (c - 'A' + 1)) - 1
@@ -67,6 +84,7 @@ object ExcelReader {
         val attrs = m.group(3); val body = m.group(4)
         val value: Option[String] =
           if (body == null) None // self-closing: no value
+          else if (attrs.contains("t=\"e\"")) None // #N/A, #VALUE!, …: no value
           else if (attrs.contains("t=\"s\""))
             ValRe.findFirstMatchIn(body).map(v => shared(v.group(1).trim.toInt))
           else if (attrs.contains("t=\"inlineStr\""))

@@ -64,7 +64,6 @@ class BloomSpec extends SparkSpec {
   }
 
   test("SQL registration: bloom_build / bloom_might_contain callable from spark.sql") {
-    BloomExpressions.register(spark)
     inserted.createOrReplaceTempView("bloom_in")
     val hit = spark.sql(
       """SELECT bloom_might_contain(bf, 'shingle_7') AS hit FROM

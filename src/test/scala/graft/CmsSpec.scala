@@ -57,7 +57,6 @@ class CmsSpec extends SparkSpec {
   }
 
   test("SQL registration: cms_sketch / cms_estimate callable from spark.sql") {
-    SketchExpressions.register(spark)
     freqData.createOrReplaceTempView("cms_in")
     val est = spark.sql(
       """SELECT cms_estimate(sk, 'key_5') AS est FROM

@@ -126,7 +126,6 @@ class KmvSpec extends SparkSpec {
   }
 
   test("SQL registration: kmv_sketch / kmv_estimate callable from spark.sql") {
-    SketchExpressions.register(spark)
     Seq("x", "y", "x").toDF("u").createOrReplaceTempView("kmv_in")
     val est = spark.sql(
       "SELECT kmv_estimate(kmv_sketch(u)) AS e FROM kmv_in")

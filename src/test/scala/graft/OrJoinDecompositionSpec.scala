@@ -5,8 +5,8 @@ import graft.plans.OrJoinDecomposition
 /** Exercises the rule through spark.experimental.extraOptimizations —
   * runtime-injectable on the shared session (SparkSession.getOrCreate
   * returns the existing session, so builder-time withExtensions cannot be
-  * tested per-suite in one JVM; production installs use
-  * OrJoinDecomposition.install / spark.sql.extensions=GraftExtensions).
+  * tested per-suite in one JVM; every session GraftSession.builder makes
+  * installs the rule through spark.sql.extensions=GraftExtensions).
   */
 class OrJoinDecompositionSpec extends SparkSpec {
   import spark.implicits._

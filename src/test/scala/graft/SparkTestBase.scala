@@ -20,22 +20,15 @@ object SparkTestBase {
   lazy val refDir: String =
     if (ReferenceFeeds.holdsAll(BankFeeds.ReferenceDir)) BankFeeds.ReferenceDir
     else ReferenceFeeds.generated()
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", s"/tmp/graft_test_warehouse_$pid")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-      .config("spark.sql.catalog.graft.warehouse", catalogWarehouse)
-      .config("spark.ui.enabled", "false")
-      .config(BankFeeds.FeedDirConf, refDir)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** The mains' session ([[GraftSession.builder]]) on a fixed 8 cores,
+    * so partition and file counts the specs see do not depend on the
+    * host. */
+  lazy val spark: SparkSession = GraftSession.builder(8)
+    .appName("graft-tests")
+    .config("spark.sql.warehouse.dir", s"/tmp/graft_test_warehouse_$pid")
+    .config("spark.sql.catalog.graft.warehouse", catalogWarehouse)
+    .config(BankFeeds.FeedDirConf, refDir)
+    .getOrCreate()
 }
 
 abstract class SparkSpec extends AnyFunSuite

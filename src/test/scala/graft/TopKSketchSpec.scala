@@ -55,7 +55,6 @@ class TopKSketchSpec extends SparkSpec {
   }
 
   test("SQL registration: topk_sketch callable from spark.sql") {
-    org.apache.spark.sql.graft.TopKSketch.register(spark)
     Seq("x", "y", "x").toDF("w").createOrReplaceTempView("topk_in")
     val sk = spark.sql(
       "SELECT topk_sketch(w) AS sk FROM topk_in")
