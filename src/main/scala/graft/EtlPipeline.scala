@@ -1,6 +1,7 @@
 package graft
 
 import java.sql.{Date, Timestamp}
+import java.util.concurrent.{Callable, ExecutionException, Executors, Future, TimeUnit}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.{FraudDetection, Scd}
@@ -26,6 +27,35 @@ import graft.sources.{BankFeeds, WarehouseFs}
   *     deterministic demo fixtures are derived from the card numbers seen
   *     in the feed (clearly a demo: the reference assumes these tables
   *     pre-exist in the bank, main.py:410-414).
+  *
+  * Stage graph of one run (the reference runs every step in turn):
+  * {{{
+  *   loads, concurrent       terminals → SCD2 → stage
+  *                           blacklist → SCD1 → stage → added min(entry_dt)
+  *                           transactions → fact append → Z-order
+  *   serial                  bank tables → fraud mart
+  *   member commits,         each staged dim: sync (or first publish)
+  *   concurrent              mart report day: partition overwrite (or first publish)
+  *   serial                  fold check → seal (one commit file)
+  * }}}
+  * The branches share no input and no mutable state: each returns what it
+  * staged or loaded, and each member commits to its own chain through its
+  * own manifest CAS. They run on a pool of at most three threads that the
+  * run creates (so the threads inherit the caller's Spark local
+  * properties: job group, scheduler pool) and stops before it returns.
+  *
+  * Failure contract: a run waits for every branch, then rethrows the
+  * first failure in branch order and commits nothing. A run that fails
+  * before its seal takes back what it wrote, after every branch has
+  * ended: each member version it committed (a member committed beside a
+  * failed one, or before a failed seal) is restored to the version it
+  * committed onto, a member it published first is deleted, and so are
+  * the fact `day=` partitions it appended and its `_work/` staging. The
+  * fact is outside the commit set, so a re-run would otherwise skip such
+  * a day and never derive its fraud events; a kept member version would
+  * carry this run's mart events into the re-run's commit beside the
+  * re-run's own. A re-run with good input then equals an uninterrupted
+  * run.
   */
 object EtlPipeline {
   private val DayRe = """(\d{2})(\d{2})(\d{4})""".r.unanchored
@@ -49,6 +79,23 @@ object EtlPipeline {
     * outside. */
   private val servedTables =
     Seq("dwh_dim_terminals_hist", "dwh_fact_pssprt_blcklst", "rep_fraud")
+
+  /** The widest fan-out of a run: the three loads, or the two dims' and
+    * the mart's member commits. */
+  private val Branches = 3
+  /** Name of a run's pool threads. */
+  private[graft] val BranchThread = "graft-etl-branch"
+
+  /** Waits for every branch, then rethrows the first failure in branch
+    * order. An interrupt while waiting passes through at once, with the
+    * branches still running. */
+  private def awaitAll(branches: Seq[Future[_]]): Unit = {
+    val failures = branches.flatMap { f =>
+      try { f.get(); None }
+      catch { case e: ExecutionException => Some(e.getCause) }
+    }
+    failures.headOption.foreach(e => throw e)
+  }
 
   /** @param asOf logical "run time" (defaults to now) — drives the SCD2
     *   as-of snapshot and report_dt; injectable so tests can replay one
@@ -78,13 +125,12 @@ object EtlPipeline {
     // protect against, and re-committing O(history) fact bytes nightly
     // is exactly what the member chains' file sharing exists to avoid.
     val workDir = s"$whDir/_work"
-    val committedTables: Map[String, Long] =
-      WarehouseFs.currentCommit(spark, whDir).map(_._2).getOrElse(Map.empty)
-    val workWritten = scala.collection.mutable.LinkedHashSet.empty[String]
+    val baseCommit = WarehouseFs.currentCommit(spark, whDir)
+    val committedTables: Map[String, Long] = baseCommit.map(_._2).getOrElse(Map.empty)
     // reads resolve, in order: this run's own staged state, the version
     // the latest commit pins, the plain directory (the transactions fact)
-    def readIf(name: String): Option[DataFrame] =
-      if (workWritten(name)) Some(spark.read.parquet(s"$workDir/$name"))
+    def read(name: String, staged: Boolean): Option[DataFrame] =
+      if (staged) Some(spark.read.parquet(s"$workDir/$name"))
       else committedTables.get(name)
         .map(v => WarehouseFs.readTableVersion(spark, tablePath(name), v).getOrElse(
           // an expired version pin must fail LOUDLY: falling through to
@@ -94,9 +140,28 @@ object EtlPipeline {
             s"etl: $name resolves to an expired member version (@$v) " +
               "— raise the member table's keepVersions")))
         .orElse(WarehouseFs.readTable(spark, tablePath(name)))
-    def overwrite(df: DataFrame, name: String): Unit = {
-      WarehouseFs.publish(df, s"$workDir/$name"); workWritten += name
+    def overwrite(df: DataFrame, name: String): Unit =
+      WarehouseFs.publish(df, s"$workDir/$name")
+
+    val factPath = tablePath("dwh_fact_transactions")
+    // Loaded days come from the partition directory names (pure
+    // filesystem metadata) — no fact scan, no collect.
+    val existingDays: Set[String] =
+      WarehouseFs.listNames(spark, factPath)
+        .filter(_.startsWith("day=")).map(_.stripPrefix("day=")).toSet
+    // the run's pool: its threads start on first use, from this thread
+    val pool = Executors.newFixedThreadPool(Branches, (r: Runnable) => {
+      val t = new Thread(r, BranchThread); t.setDaemon(true); t
+    })
+    def fork[T](branch: () => T): Future[T] =
+      pool.submit(new Callable[T] { def call(): T = branch() })
+    // ends every branch: a failure's cleanup runs only after this, since
+    // a run's thread interrupted while waiting leaves its branches running
+    def stopPool(): Unit = {
+      pool.shutdownNow()
+      pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
     }
+
     // One commit spanning everything this run changed. Served tables are
     // VERSIONED MEMBER CHAINS at their own table paths ($wh/<name>): a
     // changed dim SYNCS by row-level delta into its chain
@@ -119,9 +184,9 @@ object EtlPipeline {
       "rep_fraud" -> Seq("passport"),
       "dwh_fact_pssprt_blcklst" -> Seq("passport_num"),
       "dwh_dim_terminals_hist" -> Seq("terminal_id"))
-    def commitAtomic(martDay: Option[DataFrame]): Unit = {
-      def isVersioned(n: String) =
-        WarehouseFs.currentVersion(spark, tablePath(n)).isDefined
+    def commitAtomic(staged: Seq[String], martDay: Option[DataFrame]): Unit = {
+      def headOf(n: String) = WarehouseFs.currentVersion(spark, tablePath(n)).map(_._1)
+      def isVersioned(n: String) = headOf(n).isDefined
       // the first publish of a member with no version yet. Stats ride
       // with every member publish: served tables are dims/mart-sized
       // (never the fact), so the profiling scan is cheap and readers get
@@ -130,295 +195,346 @@ object EtlPipeline {
         WarehouseFs.publishVersioned(df, tablePath(n), partitionBy = partBy,
           keepVersions = memberKeep, collectStats = true,
           bloomIndexCols = bloomCols.getOrElse(n, Nil))
-      var touched = false
-      for (n <- workWritten) {
+      // the version each member commits onto (None: its first publish)
+      val heads = (staged ++ martDay.map(_ => "rep_fraud")).map(n => n -> headOf(n)).toMap
+      // each member commits to its own chain through its own manifest
+      // CAS, so the members commit concurrently; the seal below pins
+      // them together
+      val members = staged.map[() => Unit] { n => () => {
         val state = spark.read.parquet(s"$workDir/$n")
-        if (isVersioned(n))
+        if (heads(n).isDefined)
           WarehouseFs.syncToState(state, tablePath(n), syncKeys(n),
             keepVersions = memberKeep)
         else lift(n, state)
-        touched = true
-      }
-      martDay.foreach { rep =>
-        if (isVersioned("rep_fraud"))
+      }} ++ martDay.map[() => Unit] { rep => () =>
+        if (heads("rep_fraud").isDefined)
           // CoW partition overwrite: replace only this run's report
           // day(s), carry every other day's files by reference
           WarehouseFs.overwritePartitions(rep, tablePath("rep_fraud"),
             Seq("report_dt"), keepVersions = memberKeep)
         else lift("rep_fraud", rep, Seq("report_dt"))
-        touched = true
       }
-      // every member a prior commit pinned stays pinned, including tables
-      // committed into this warehouse beside the served set
-      val allServed = (servedTables ++ committedTables.keySet).distinct
-      // maintenance cadence: a member whose CoW chain spans more data
-      // dirs than the budget folds back into ONE clean dir version
-      // (indexes/stats preserved, CAS-pinned) BEFORE the seal, so the
-      // commit pins the compacted state. Nightly syncs add ~1 dir per
-      // changed member per run; without this the read-side union grows
-      // one parquet relation per night forever. Deletion-vector commits
-      // count toward the same span (each adds its version's dir to the
-      // referenced set), and the fold reads MASKED and publishes a clean
-      // dir version — so accumulated DVs retire here too and the
-      // nightly path never serves a long mask chain. The fold rewrites the
-      // member once per ~spanMax nights — amortized O(table/spanMax)
-      // per night, and the next commit feed across it honestly scans
-      // both sides (nothing is shared with the pre-fold version).
-      val spanMax = spark.conf.getOption("spark.graft.etl.compactSpanDirs")
-        .map(_.toInt).getOrElse(16)
-      // second trigger, same fold: accumulated MASK ROWS. A
-      // high-frequency merge-on-read delete workload can mask thousands
-      // of rows while staying within a small dir span (deltas are tiny
-      // files) — every read then pays the per-row mask check for rows
-      // that will never come back. When the live mask exceeds the
-      // budget, fold now rather than waiting for the span rule.
-      val maskedMaxDefault = spark.conf
-        .getOption("spark.graft.etl.compactMaskedRows")
-        .map(_.toLong).getOrElse(100000L)
-      def maskedMaxOf(n: String): Long = WarehouseFs
-        .storedCompactMaskedRows(spark, tablePath(n)) // per-table property
-        .getOrElse(maskedMaxDefault)
-      for (n <- allServed if isVersioned(n)
-           if WarehouseFs.versionSpanDirs(spark, tablePath(n)).exists(_ > spanMax) ||
-             (WarehouseFs.hasDeletionVectors(spark, tablePath(n)) &&
-               WarehouseFs.deletionVectorRows(spark, tablePath(n)) > maskedMaxOf(n))) {
-        graft.operators.ScaleJoins.compactParquet(spark, tablePath(n),
-          keepVersions = memberKeep)
-        touched = true
-      }
-      if (touched) {
-        WarehouseFs.publishAtomicVersioned(spark, Map.empty, whDir,
-          pinCurrent = allServed.filter(isVersioned).toSet,
-          keepVersions = memberKeep)
-        WarehouseFs.deleteIfExists(spark, workDir)
+      try {
+        awaitAll(members.map(fork(_)))
+        // every member a prior commit pinned stays pinned, including tables
+        // committed into this warehouse beside the served set
+        val allServed = (servedTables ++ committedTables.keySet).distinct
+        // maintenance cadence: a member whose CoW chain spans more data
+        // dirs than the budget folds back into ONE clean dir version
+        // (indexes/stats preserved, CAS-pinned) BEFORE the seal, so the
+        // commit pins the compacted state. Nightly syncs add ~1 dir per
+        // changed member per run; without this the read-side union grows
+        // one parquet relation per night forever. Deletion-vector commits
+        // count toward the same span (each adds its version's dir to the
+        // referenced set), and the fold reads MASKED and publishes a clean
+        // dir version — so accumulated DVs retire here too and the
+        // nightly path never serves a long mask chain. The fold rewrites the
+        // member once per ~spanMax nights — amortized O(table/spanMax)
+        // per night, and the next commit feed across it honestly scans
+        // both sides (nothing is shared with the pre-fold version).
+        val spanMax = spark.conf.getOption("spark.graft.etl.compactSpanDirs")
+          .map(_.toInt).getOrElse(16)
+        // second trigger, same fold: accumulated MASK ROWS. A
+        // high-frequency merge-on-read delete workload can mask thousands
+        // of rows while staying within a small dir span (deltas are tiny
+        // files) — every read then pays the per-row mask check for rows
+        // that will never come back. When the live mask exceeds the
+        // budget, fold now rather than waiting for the span rule.
+        val maskedMaxDefault = spark.conf
+          .getOption("spark.graft.etl.compactMaskedRows")
+          .map(_.toLong).getOrElse(100000L)
+        def maskedMaxOf(n: String): Long = WarehouseFs
+          .storedCompactMaskedRows(spark, tablePath(n)) // per-table property
+          .getOrElse(maskedMaxDefault)
+        val folded = for (n <- allServed if isVersioned(n)
+             if WarehouseFs.versionSpanDirs(spark, tablePath(n)).exists(_ > spanMax) ||
+               (WarehouseFs.hasDeletionVectors(spark, tablePath(n)) &&
+                 WarehouseFs.deletionVectorRows(spark, tablePath(n)) > maskedMaxOf(n)))
+          yield graft.operators.ScaleJoins.compactParquet(spark, tablePath(n),
+            keepVersions = memberKeep)
+        if (members.nonEmpty || folded.nonEmpty) {
+          WarehouseFs.publishAtomicVersioned(spark, Map.empty, whDir,
+            pinCurrent = allServed.filter(isVersioned).toSet,
+            keepVersions = memberKeep)
+          WarehouseFs.deleteIfExists(spark, workDir)
+        }
+      } catch { case e: Throwable =>
+        // all or nothing: a member that committed beside a failed one, or
+        // before a failed seal, goes back to the version it committed onto,
+        // and a member this run published first is deleted. Kept, its
+        // chain would carry this run's mart events into the next commit
+        // beside the re-run's own.
+        try {
+          stopPool()
+          if (WarehouseFs.currentCommit(spark, whDir) == baseCommit)
+            for ((n, head) <- heads) head match {
+              case Some(v) => WarehouseFs.restoreVersion(spark, tablePath(n), v,
+                keepVersions = memberKeep)
+              case None => WarehouseFs.deleteIfExists(spark, tablePath(n))
+            }
+        } catch { case undo: Throwable => e.addSuppressed(undo) }
+        throw e
       }
     }
 
     val termAttrs = Seq("terminal_type", "terminal_city", "terminal_address")
 
-    // --- terminals: daily full snapshots → SCD2 history (main.py:556-565)
-    for ((day, path) <- feed("terminals")) {
-      val loadTs = Timestamp.valueOf(s"$day 00:00:00")
-      val hist = readIf("dwh_dim_terminals_hist")
-      val already = hist.exists(h =>
-        h.filter(col("effective_from") === lit(loadTs)).limit(1).count() > 0)
-      if (!already) {
-        val snap = BankFeeds.terminals(spark, path)
-        overwrite(Scd.scd2Apply(spark, hist, snap, "terminal_id", termAttrs, loadTs),
-          "dwh_dim_terminals_hist")
+    // --- terminals: daily full snapshots → SCD2 history (main.py:556-565).
+    // Result: whether this run staged a history.
+    val loadTerminals = () =>
+      feed("terminals").foldLeft(false) { case (staged, (day, path)) =>
+        val loadTs = Timestamp.valueOf(s"$day 00:00:00")
+        val hist = read("dwh_dim_terminals_hist", staged)
+        val already = hist.exists(h =>
+          h.filter(col("effective_from") === lit(loadTs)).limit(1).count() > 0)
+        if (already) staged
+        else {
+          val snap = BankFeeds.terminals(spark, path)
+          overwrite(Scd.scd2Apply(spark, hist, snap, "terminal_id", termAttrs, loadTs),
+            "dwh_dim_terminals_hist")
+          true
+        }
       }
-    }
 
     // --- blacklist: cumulative feed → SCD1 fact (main.py:566-570).
     // The pre-feed state is materialized (localCheckpoint) so the
     // added-entry delta below survives the publish swapping the directory
     // out from under a lazy reader. The blacklist is a small dim — this is
-    // a tiny job, not a fact scan.
-    val passportFeeds = feed("passport")
-    val blBefore =
-      if (passportFeeds.isEmpty) None
-      else readIf("dwh_fact_pssprt_blcklst").map(_.localCheckpoint())
-    for ((_, path) <- passportFeeds) {
-      val snap = BankFeeds.blacklist(spark, path)
-      overwrite(Scd.scd1Apply(readIf("dwh_fact_pssprt_blcklst"), snap,
-        "passport_num", Seq("entry_dt")), "dwh_fact_pssprt_blcklst")
-    }
-    // Entries added by this run whose entry_dt reaches back to an
-    // already-loaded fact day are RETROACTIVE: rule 1 would have flagged
-    // those past transactions had the entry existed — the mart pass below
-    // re-derives exactly the affected days (a full rebuild would too, but
-    // at O(history) every night).
-    val blAddedMinEntry: Option[Date] =
-      if (passportFeeds.isEmpty) None
-      else readIf("dwh_fact_pssprt_blcklst").flatMap { after =>
-        val added = blBefore match {
-          case Some(before) => after.exceptAll(before)
-          case None => after
-        }
-        Option(added.agg(min(col("entry_dt"))).head().getDate(0))
+    // a tiny job, not a fact scan. Result: whether this run staged a
+    // blacklist, and the earliest entry_dt it added.
+    val loadBlacklist = () => {
+      val bl = "dwh_fact_pssprt_blcklst"
+      val passportFeeds = feed("passport")
+      val blBefore =
+        if (passportFeeds.isEmpty) None
+        else read(bl, staged = false).map(_.localCheckpoint())
+      for (((_, path), i) <- passportFeeds.zipWithIndex) {
+        val snap = BankFeeds.blacklist(spark, path)
+        overwrite(Scd.scd1Apply(read(bl, staged = i > 0), snap,
+          "passport_num", Seq("entry_dt")), bl)
       }
+      // Entries added by this run whose entry_dt reaches back to an
+      // already-loaded fact day are RETROACTIVE: rule 1 would have flagged
+      // those past transactions had the entry existed — the mart pass below
+      // re-derives exactly the affected days (a full rebuild would too, but
+      // at O(history) every night).
+      val addedMinEntry: Option[Date] =
+        if (passportFeeds.isEmpty) None
+        else read(bl, staged = true).flatMap { after =>
+          val added = blBefore match {
+            case Some(before) => after.exceptAll(before)
+            case None => after
+          }
+          Option(added.agg(min(col("entry_dt"))).head().getDate(0))
+        }
+      (passportFeeds.nonEmpty, addedMinEntry)
+    }
 
     // --- transactions: daily increments → append-only fact, partitioned by
     // day for partition pruning (the scalable form of main.py:417's
-    // current-day filter). Loaded days come from the partition directory
-    // names (pure filesystem metadata) — no fact scan, no collect.
-    val existingDays: Set[String] =
-      WarehouseFs.listNames(spark, tablePath("dwh_fact_transactions"))
-        .filter(_.startsWith("day=")).map(_.stripPrefix("day=")).toSet
-    val loadedDays = for ((day, path) <- feed("transactions") if !existingDays.contains(day))
-      yield {
-        BankFeeds.transactionsFact(spark, path)
-          .withColumn("day", to_date(col("trans_date")))
-          .write.mode(SaveMode.Append).partitionBy("day")
-          .parquet(tablePath("dwh_fact_transactions"))
-        day
+    // current-day filter), then layout compaction of the freshly loaded
+    // day partitions: rows recluster along a Z-order curve over (time of
+    // day, terminal), so a terminal-scoped investigation prunes most row
+    // groups via the pushed parquet min/max filter while intra-day time
+    // slices stay clustered. Same rows, atomic per-partition swap;
+    // O(new days), never O(history). Result: the days loaded.
+    val loadFact = () => {
+      val days = for ((day, path) <- feed("transactions") if !existingDays.contains(day))
+        yield {
+          BankFeeds.transactionsFact(spark, path)
+            .withColumn("day", to_date(col("trans_date")))
+            .write.mode(SaveMode.Append).partitionBy("day")
+            .parquet(factPath)
+          day
+        }
+      if (days.nonEmpty) zOrderFactDays(spark, factPath, days)
+      days
+    }
+
+    try {
+      val terminalsF = fork(loadTerminals)
+      val blacklistF = fork(loadBlacklist)
+      val factF = fork(loadFact)
+      awaitAll(Seq(terminalsF, blacklistF, factF))
+      val (blStaged, blAddedMinEntry) = blacklistF.get()
+      val loadedDays = factF.get()
+      val staged = Seq("dwh_dim_terminals_hist" -> terminalsF.get(),
+        "dwh_fact_pssprt_blcklst" -> blStaged).collect { case (n, true) => n }
+      def readIf(name: String): Option[DataFrame] = read(name, staged.contains(name))
+
+      if (readIf("dwh_fact_transactions").isEmpty || readIf("dwh_dim_terminals_hist").isEmpty) {
+        println("[etl] no transactions/terminals loaded — skipping fraud mart")
+        commitAtomic(staged, None) // dims/blacklist staged so far still flip together
+        return
       }
 
-    // --- layout compaction of the freshly loaded day partitions: rows
-    // recluster along a Z-order curve over (time of day, terminal), so a
-    // terminal-scoped investigation prunes most row groups via the pushed
-    // parquet min/max filter while intra-day time slices stay clustered.
-    // Same rows, atomic per-partition swap; O(new days), never O(history).
-    if (loadedDays.nonEmpty)
-      zOrderFactDays(spark, tablePath("dwh_fact_transactions"), loadedDays)
-
-    if (readIf("dwh_fact_transactions").isEmpty || readIf("dwh_dim_terminals_hist").isEmpty) {
-      println("[etl] no transactions/terminals loaded — skipping fraud mart")
-      commitAtomic(None) // dims/blacklist staged so far still flip together
-      return
-    }
-
-    // --- bank dimension tables (pre-existing in the reference's Oracle).
-    // Resolution order: explicit parquet fixtures → JDBC if the env gate is
-    // set (graft.sources.BankJdbc — the reference's actual transport,
-    // main.py:410-414) → deterministic demo fixtures.
-    val (clients, accounts, cards) = bankDir match {
-      case Some(dir) =>
-        (spark.read.parquet(s"$dir/clients.parquet"),
-         spark.read.parquet(s"$dir/accounts.parquet"),
-         spark.read.parquet(s"$dir/cards.parquet"))
-      case None => graft.sources.BankJdbc.fromEnv() match {
-        case Some(cfg) =>
-          (graft.sources.BankJdbc.readTable(spark, cfg, "bank.clients"),
-           graft.sources.BankJdbc.readTable(spark, cfg, "bank.accounts"),
-           graft.sources.BankJdbc.readTable(spark, cfg, "bank.cards"))
-        case None => demoBankTables(spark, whDir,
-          blacklist = readIf("dwh_fact_pssprt_blcklst"))
+      // --- bank dimension tables (pre-existing in the reference's Oracle).
+      // Resolution order: explicit parquet fixtures → JDBC if the env gate is
+      // set (graft.sources.BankJdbc — the reference's actual transport,
+      // main.py:410-414) → deterministic demo fixtures.
+      val (clients, accounts, cards) = bankDir match {
+        case Some(dir) =>
+          (spark.read.parquet(s"$dir/clients.parquet"),
+           spark.read.parquet(s"$dir/accounts.parquet"),
+           spark.read.parquet(s"$dir/cards.parquet"))
+        case None => graft.sources.BankJdbc.fromEnv() match {
+          case Some(cfg) =>
+            (graft.sources.BankJdbc.readTable(spark, cfg, "bank.clients"),
+             graft.sources.BankJdbc.readTable(spark, cfg, "bank.accounts"),
+             graft.sources.BankJdbc.readTable(spark, cfg, "bank.cards"))
+          case None => demoBankTables(spark, whDir,
+            blacklist = readIf("dwh_fact_pssprt_blcklst"))
+        }
       }
-    }
 
-    // --- fraud mart rebuild, INCREMENTAL over the days this run loaded
-    // (the scalable form of main.py:574-576: the reference itself only
-    // touches the current day, main.py:417). The fact is day-partitioned,
-    // so every slice below is partition PRUNING — the nightly run reads
-    // O(days loaded), never O(history).
-    //
-    // Each CONTIGUOUS run of newly loaded days becomes its own window
-    // [a, b]: the a-1 lookback day feeds rule 3's ±1 h window across the
-    // midnight boundary (its own already-reported events are cut back out
-    // by the event-day >= a filter), and when day b+1 was loaded by an
-    // EARLIER run (a backfilled middle day), the window extends right to
-    // re-derive b→b+1 midnight-crossing pairs that could not exist when
-    // b+1 originally ran. Days re-derived this way (and days re-examined
-    // for a retroactive blacklist entry) are deduplicated by anti-joining
-    // the existing mart on the full event row — only genuinely new events
-    // are appended, so event rows never duplicate across report_dt
-    // partitions. The anti-join relies on the derivation being
-    // deterministic for unchanged inputs (it is: every rule is a pure
-    // transformation); it only runs on out-of-order or retroactive runs,
-    // never on the in-order nightly hot path.
-    //
-    // A run that loaded nothing new and added no retroactive blacklist
-    // entry keeps the mart as-is (idempotent re-run); with no mart yet it
-    // falls back to a full-history rebuild (backfill). Terminal-attribute
-    // changes do NOT trigger re-derivation: the view joins the terminal
-    // history as-of run time, exactly like the reference (main.py:417) —
-    // past mart rows keep the dims they were derived with.
-    val factPath = tablePath("dwh_fact_transactions")
-    // the mart resolves like every served table: the version the latest
-    // commit pins
-    def readMart(): Option[DataFrame] = readIf("rep_fraud")
-    val martExists = readMart().isDefined
-    val allDays = WarehouseFs.listNames(spark, factPath)
-      .filter(_.startsWith("day=")).map(_.stripPrefix("day=")).sorted
-    def nextDay(d: String) = java.time.LocalDate.parse(d).plusDays(1).toString
-    def prevDay(d: String) = java.time.LocalDate.parse(d).minusDays(1).toString
-    // contiguous [a, b] runs of the newly loaded days; one all-covering
-    // window when there is no mart yet (backfill rebuilds everything)
-    val windows: Seq[(String, String)] =
-      if (!martExists) { if (allDays.isEmpty) Nil else Seq((allDays.head, allDays.last)) }
-      else loadedDays.sorted.foldLeft(Vector.empty[(String, String)]) {
-        case (acc :+ ((a, b)), d) if nextDay(b) == d => acc :+ (a -> d)
-        case (acc, d) => acc :+ (d -> d)
+      // --- fraud mart rebuild, INCREMENTAL over the days this run loaded
+      // (the scalable form of main.py:574-576: the reference itself only
+      // touches the current day, main.py:417). The fact is day-partitioned,
+      // so every slice below is partition PRUNING — the nightly run reads
+      // O(days loaded), never O(history).
+      //
+      // Each CONTIGUOUS run of newly loaded days becomes its own window
+      // [a, b]: the a-1 lookback day feeds rule 3's ±1 h window across the
+      // midnight boundary (its own already-reported events are cut back out
+      // by the event-day >= a filter), and when day b+1 was loaded by an
+      // EARLIER run (a backfilled middle day), the window extends right to
+      // re-derive b→b+1 midnight-crossing pairs that could not exist when
+      // b+1 originally ran. Days re-derived this way (and days re-examined
+      // for a retroactive blacklist entry) are deduplicated by anti-joining
+      // the existing mart on the full event row — only genuinely new events
+      // are appended, so event rows never duplicate across report_dt
+      // partitions. The anti-join relies on the derivation being
+      // deterministic for unchanged inputs (it is: every rule is a pure
+      // transformation); it only runs on out-of-order or retroactive runs,
+      // never on the in-order nightly hot path.
+      //
+      // A run that loaded nothing new and added no retroactive blacklist
+      // entry keeps the mart as-is (idempotent re-run); with no mart yet it
+      // falls back to a full-history rebuild (backfill). Terminal-attribute
+      // changes do NOT trigger re-derivation: the view joins the terminal
+      // history as-of run time, exactly like the reference (main.py:417) —
+      // past mart rows keep the dims they were derived with.
+      //
+      // the mart resolves like every served table: the version the latest
+      // commit pins
+      def readMart(): Option[DataFrame] = readIf("rep_fraud")
+      val martExists = readMart().isDefined
+      val allDays = WarehouseFs.listNames(spark, factPath)
+        .filter(_.startsWith("day=")).map(_.stripPrefix("day=")).sorted
+      def nextDay(d: String) = java.time.LocalDate.parse(d).plusDays(1).toString
+      def prevDay(d: String) = java.time.LocalDate.parse(d).minusDays(1).toString
+      // contiguous [a, b] runs of the newly loaded days; one all-covering
+      // window when there is no mart yet (backfill rebuilds everything)
+      val windows: Seq[(String, String)] =
+        if (!martExists) { if (allDays.isEmpty) Nil else Seq((allDays.head, allDays.last)) }
+        else loadedDays.sorted.foldLeft(Vector.empty[(String, String)]) {
+          case (acc :+ ((a, b)), d) if nextDay(b) == d => acc :+ (a -> d)
+          case (acc, d) => acc :+ (d -> d)
+        }
+      // right-edge extension: day b+1 exists from an earlier run → re-derive
+      // its rows (anti-joined below) to recover b→b+1 crossing pairs
+      val extended: Seq[(String, String, Option[String])] = windows.map { case (a, b) =>
+        (a, b, Some(nextDay(b)).filter(d => martExists && existingDays.contains(d)))
       }
-    // right-edge extension: day b+1 exists from an earlier run → re-derive
-    // its rows (anti-joined below) to recover b→b+1 crossing pairs
-    val extended: Seq[(String, String, Option[String])] = windows.map { case (a, b) =>
-      (a, b, Some(nextDay(b)).filter(d => martExists && existingDays.contains(d)))
-    }
-    // retroactive blacklist scope: previously loaded days on/after the
-    // earliest added entry_dt, minus days this run already (re-)derives
-    val covered = extended.flatMap { case (a, b, ext) =>
-      Iterator.iterate(a)(nextDay).takeWhile(_ <= b) ++ ext
-    }.toSet
-    val retroDays: Seq[String] =
-      if (!martExists) Nil
-      else blAddedMinEntry.toSeq.flatMap { minEntry =>
-        existingDays.toSeq.filter(d => d >= minEntry.toString && !covered(d))
-      }.sorted
-    if (windows.isEmpty && retroDays.isEmpty) {
-      println("[etl] no new transaction days, no retroactive blacklist — fraud mart unchanged")
-      commitAtomic(None) // dims/blacklist staged so far still flip together
-      return
-    }
+      // retroactive blacklist scope: previously loaded days on/after the
+      // earliest added entry_dt, minus days this run already (re-)derives
+      val covered = extended.flatMap { case (a, b, ext) =>
+        Iterator.iterate(a)(nextDay).takeWhile(_ <= b) ++ ext
+      }.toSet
+      val retroDays: Seq[String] =
+        if (!martExists) Nil
+        else blAddedMinEntry.toSeq.flatMap { minEntry =>
+          existingDays.toSeq.filter(d => d >= minEntry.toString && !covered(d))
+        }.sorted
+      if (windows.isEmpty && retroDays.isEmpty) {
+        println("[etl] no new transaction days, no retroactive blacklist — fraud mart unchanged")
+        commitAtomic(staged, None) // dims/blacklist staged so far still flip together
+        return
+      }
 
-    val hist = readIf("dwh_dim_terminals_hist").get
-    val bl = readIf("dwh_fact_pssprt_blcklst").get
-    val asOfTs = asOf.getOrElse(new Timestamp(System.currentTimeMillis()))
-    val reportDt = new Date(asOfTs.getTime)
-    val evCols = Seq("event_dt", "passport", "fio", "phone", "event_type")
-    // full event rows already in the mart — the dedup side of the
-    // anti-joins; only read when an extension/retro pass actually runs
-    lazy val martRows = readMart().get
-      .select(evCols.map(col): _*)
-    def derive(from: String, to: String): DataFrame = {
-      val tx = factSlice(spark, factPath, Date.valueOf(from), Date.valueOf(to))
-      val view = FraudDetection.dataView(clients, accounts, cards, tx, hist, asOfTs)
-      FraudDetection.repFraud(view, bl, reportDt)
-    }
+      val hist = readIf("dwh_dim_terminals_hist").get
+      val bl = readIf("dwh_fact_pssprt_blcklst").get
+      val asOfTs = asOf.getOrElse(new Timestamp(System.currentTimeMillis()))
+      val reportDt = new Date(asOfTs.getTime)
+      val evCols = Seq("event_dt", "passport", "fio", "phone", "event_type")
+      // full event rows already in the mart — the dedup side of the
+      // anti-joins; only read when an extension/retro pass actually runs
+      lazy val martRows = readMart().get
+        .select(evCols.map(col): _*)
+      def derive(from: String, to: String): DataFrame = {
+        val tx = factSlice(spark, factPath, Date.valueOf(from), Date.valueOf(to))
+        val view = FraudDetection.dataView(clients, accounts, cards, tx, hist, asOfTs)
+        FraudDetection.repFraud(view, bl, reportDt)
+      }
 
-    val windowEvs = extended.map { case (a, b, ext) =>
-      val ev = derive(prevDay(a), ext.getOrElse(b))
-        .filter(to_date(col("event_dt")) >= lit(Date.valueOf(a)))
-      ext match {
-        case None => ev
-        case Some(e) =>
-          // [a, b] days are new — nothing to deduplicate; the re-derived
-          // extension day keeps only events absent from the mart
-          val inWin = ev.filter(to_date(col("event_dt")) <= lit(Date.valueOf(b)))
-          val extNew = ev.filter(to_date(col("event_dt")) === lit(Date.valueOf(e)))
+      val windowEvs = extended.map { case (a, b, ext) =>
+        val ev = derive(prevDay(a), ext.getOrElse(b))
+          .filter(to_date(col("event_dt")) >= lit(Date.valueOf(a)))
+        ext match {
+          case None => ev
+          case Some(e) =>
+            // [a, b] days are new — nothing to deduplicate; the re-derived
+            // extension day keeps only events absent from the mart
+            val inWin = ev.filter(to_date(col("event_dt")) <= lit(Date.valueOf(b)))
+            val extNew = ev.filter(to_date(col("event_dt")) === lit(Date.valueOf(e)))
+              .join(martRows, evCols, "left_anti")
+            inWin.unionByName(extNew.select(ev.columns.map(col).toSeq: _*))
+        }
+      }
+      // retro pass: re-derive the affected days with the updated blacklist;
+      // everything previously reported anti-joins away, leaving exactly the
+      // new rule-1 events. No lookback: rule 1 is per-transaction, and any
+      // rule-3 row here is already in the mart.
+      val retroEvs = retroDays match {
+        case Nil => Nil
+        case ds =>
+          val ev = derive(ds.head, ds.last)
+            .filter(to_date(col("event_dt")).isInCollection(ds.map(Date.valueOf)))
             .join(martRows, evCols, "left_anti")
-          inWin.unionByName(extNew.select(ev.columns.map(col).toSeq: _*))
+          Seq(ev)
       }
-    }
-    // retro pass: re-derive the affected days with the updated blacklist;
-    // everything previously reported anti-joins away, leaving exactly the
-    // new rule-1 events. No lookback: rule 1 is per-transaction, and any
-    // rule-3 row here is already in the mart.
-    val retroEvs = retroDays match {
-      case Nil => Nil
-      case ds =>
-        val ev = derive(ds.head, ds.last)
-          .filter(to_date(col("event_dt")).isInCollection(ds.map(Date.valueOf)))
-          .join(martRows, evCols, "left_anti")
-        Seq(ev)
-    }
-    val newEvents = (windowEvs ++ retroEvs)
-      .map(_.select(evCols.map(col) :+ col("report_dt"): _*))
-      .reduce(_ unionByName _)
-    // a second run under the SAME report_dt (late feed batch on the same
-    // calendar day) must not drop what the first run wrote: the partition
-    // overwrite replaces the whole partition, so merge it back in
-    val rep = (if (martExists)
-        newEvents.unionByName(
-          readMart().get.filter(col("report_dt") === lit(reportDt))
-            .select(evCols.map(col) :+ col("report_dt"): _*)).distinct()
-      else newEvents)
-    // this run's (merged) report day replaces its partition of the
-    // rep_fraud MEMBER CHAIN as one CoW commit — historical days' files
-    // carry by reference — then the whole served set pins in one commit
-    // file. localCheckpoint materializes the result BEFORE the commit
-    // replaces the partition it may be reading (the mart merge/anti-join
-    // read the member); rep is bounded (the run's windows), so the
-    // checkpoint is O(new events).
-    val repFinal = rep.localCheckpoint()
-    commitAtomic(Some(repFinal))
-    val repCount = repFinal.count()
+      val newEvents = (windowEvs ++ retroEvs)
+        .map(_.select(evCols.map(col) :+ col("report_dt"): _*))
+        .reduce(_ unionByName _)
+      // a second run under the SAME report_dt (late feed batch on the same
+      // calendar day) must not drop what the first run wrote: the partition
+      // overwrite replaces the whole partition, so merge it back in
+      val rep = (if (martExists)
+          newEvents.unionByName(
+            readMart().get.filter(col("report_dt") === lit(reportDt))
+              .select(evCols.map(col) :+ col("report_dt"): _*)).distinct()
+        else newEvents)
+      // this run's (merged) report day replaces its partition of the
+      // rep_fraud MEMBER CHAIN as one CoW commit — historical days' files
+      // carry by reference — then the whole served set pins in one commit
+      // file. localCheckpoint materializes the result BEFORE the commit
+      // replaces the partition it may be reading (the mart merge/anti-join
+      // read the member); rep is bounded (the run's windows), so the
+      // checkpoint is O(new events).
+      val repFinal = rep.localCheckpoint()
+      commitAtomic(staged, Some(repFinal))
+      val repCount = repFinal.count()
 
-    val winStr = extended.map { case (a, b, ext) =>
-      s"$a..$b${ext.map("+" + _).getOrElse("")}" }.mkString(",")
-    println(s"[etl] fact_days=${allDays.size} loaded=${loadedDays.size} " +
-      s"windows=$winStr retro=${retroDays.size} rep_fraud~=$repCount")
+      val winStr = extended.map { case (a, b, ext) =>
+        s"$a..$b${ext.map("+" + _).getOrElse("")}" }.mkString(",")
+      println(s"[etl] fact_days=${allDays.size} loaded=${loadedDays.size} " +
+        s"windows=$winStr retro=${retroDays.size} rep_fraud~=$repCount")
+    } catch { case e: Throwable =>
+      // a run that failed before its seal commits nothing (commitAtomic
+      // has taken its member versions back): take back the fact days it
+      // appended and its staging. After the seal (the commit moved) the
+      // days stay: the sealed mart holds their events.
+      try {
+        stopPool()
+        if (WarehouseFs.currentCommit(spark, whDir) == baseCommit) {
+          WarehouseFs.listNames(spark, factPath)
+            .filter(n => n.startsWith("day=") && !existingDays(n.stripPrefix("day=")))
+            .foreach(n => WarehouseFs.deleteIfExists(spark, s"$factPath/$n"))
+          WarehouseFs.deleteIfExists(spark, workDir)
+        }
+      } catch { case cleanup: Throwable => e.addSuppressed(cleanup) }
+      throw e
+    } finally stopPool()
   }
 
   /** Z-order-compact the named day partitions of the transactions fact in

@@ -26,6 +26,13 @@ object ExcelReader {
   private val ValRe: Regex = """(?s)<v>(.*?)</v>""".r
   private val InlineRe: Regex = """(?s)<t[^>]*>(.*?)</t>""".r
   private val SiRe: Regex = """(?s)<si>(.*?)</si>""".r
+  // the workbook's first `<sheet …>` element, and its relationship id
+  // (`r:id`, whatever the namespace prefix)
+  private val FirstSheetRe: Regex = """<sheet\b[^>]*>""".r
+  private val RelIdRe: Regex = """\s\w+:id="([^"]*)"""".r
+  private val RelationshipRe: Regex = """<Relationship\b[^>]*>""".r
+  private def attr(elem: String, name: String): Option[String] =
+    s"""\\s$name="([^"]*)"""".r.findFirstMatchIn(elem).map(_.group(1))
 
   // the five named XML entities and numeric character references
   // (`&#1040;`, `&#x410;`), decoded in one pass so `&amp;#1040;` stays
@@ -59,7 +66,27 @@ object ExcelReader {
       new String(zip.getInputStream(e).readAllBytes(), "UTF-8")
     }
 
-  /** Reads sheet1 into rows of Option[String] cells (None = absent cell),
+  /** Zip entry of the workbook's first sheet: the first `<sheet>` of
+    * `xl/workbook.xml`, resolved through `xl/_rels/workbook.xml.rels`
+    * (a target is relative to `xl/` unless it starts with `/`). Excel
+    * stores a sheet under any name, so `sheet1.xml` is not assumed. */
+  private def firstSheetEntry(zip: ZipFile, path: String): String = {
+    def refuse(why: String) =
+      throw new IllegalArgumentException(s"$path: not a readable xlsx: $why")
+    val workbook = entryText(zip, "xl/workbook.xml").getOrElse(refuse("no xl/workbook.xml"))
+    val relId = FirstSheetRe.findFirstIn(workbook)
+      .flatMap(e => RelIdRe.findFirstMatchIn(e).map(_.group(1)))
+      .getOrElse(refuse("the workbook lists no sheet"))
+    val rels = entryText(zip, "xl/_rels/workbook.xml.rels")
+      .getOrElse(refuse("no xl/_rels/workbook.xml.rels"))
+    val target = RelationshipRe.findAllIn(rels)
+      .find(e => attr(e, "Id").contains(relId))
+      .flatMap(attr(_, "Target"))
+      .getOrElse(refuse(s"no relationship $relId for the first sheet"))
+    if (target.startsWith("/")) target.drop(1) else s"xl/$target"
+  }
+
+  /** Reads the first sheet into rows of Option[String] cells (None = absent cell),
     * addressed by 0-based (row, column) with the sheet's own row numbers.
     * Shared-string cells are resolved; numeric cells keep their raw text
     * (e.g. "44256" for a serial date).
@@ -74,8 +101,9 @@ object ExcelReader {
             InlineRe.findAllMatchIn(m.group(1)).map(t => unescape(t.group(1))).mkString
           }
         }
-      val sheet = entryText(zip, "xl/worksheets/sheet1.xml")
-        .getOrElse(throw new IllegalArgumentException(s"no sheet1 in $path"))
+      val sheetEntry = firstSheetEntry(zip, path)
+      val sheet = entryText(zip, sheetEntry)
+        .getOrElse(throw new IllegalArgumentException(s"no $sheetEntry in $path"))
 
       val cells = mutable.Map.empty[(Int, Int), String]
       var maxRow = -1; var maxCol = -1

@@ -1,5 +1,6 @@
 package graft.sources
 
+import java.util.concurrent.atomic.AtomicReference
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 
@@ -266,11 +267,12 @@ object WarehouseFs {
     * naive exists+rename pair loses updates. A spec installs a
     * competing committer here to prove the PRIMITIVE, not the check,
     * arbitrates: two racers can never both report success. */
-  private[graft] var casWindowHook: Option[() => Unit] = None
-  private def fireCasWindowHook(): Unit = casWindowHook match {
-    case Some(h) => casWindowHook = None; h()
-    case None =>
-  }
+  private val casWindowHookRef = new AtomicReference[Option[() => Unit]](None)
+  private[graft] def casWindowHook: Option[() => Unit] = casWindowHookRef.get
+  private[graft] def casWindowHook_=(h: Option[() => Unit]): Unit =
+    casWindowHookRef.set(h)
+  private def fireCasWindowHook(): Unit =
+    casWindowHookRef.getAndSet(None).foreach(_())
 
   private def commitManifest(fs: FileSystem, dest: Path,
                              body: String): Boolean = {
@@ -789,7 +791,10 @@ object WarehouseFs {
     * spec installs a competing ALTER here to prove the epoch CAS makes
     * the loser refuse loudly instead. Self-clears before firing so the
     * competitor's own commit runs hook-free. */
-  private[graft] var ddlTestHook: Option[() => Unit] = None
+  private val ddlTestHookRef = new AtomicReference[Option[() => Unit]](None)
+  private[graft] def ddlTestHook: Option[() => Unit] = ddlTestHookRef.get
+  private[graft] def ddlTestHook_=(h: Option[() => Unit]): Unit =
+    ddlTestHookRef.set(h)
 
   private def commitDdl(fs: FileSystem, t: Path, base: DdlState,
                         decl: Option[org.apache.spark.sql.types.StructType],
@@ -798,10 +803,7 @@ object WarehouseFs {
     fs.mkdirs(dir)
     val body = (dropped.toSeq.sorted.map("dropped:" + _) ++
       Seq(decl.fold("retired")(_.json))).mkString("\n")
-    ddlTestHook match {
-      case Some(h) => ddlTestHook = None; h()
-      case None =>
-    }
+    ddlTestHookRef.getAndSet(None).foreach(_())
     if (!commitGuard.commit(fs, new Path(dir, vname(base.epoch + 1L)),
         body.getBytes("UTF-8"))) false
     else {
@@ -3296,12 +3298,16 @@ object WarehouseFs {
 
   /** Test seam: runs ONCE right before a DML's first commit attempt —
     * a spec installs a competing DML here to force a deterministic CAS
-    * race (thread timing would make the interleaving flaky). */
-  private[graft] var casTestHook: Option[() => Unit] = None
-  private def fireCasTestHook(): Unit = casTestHook match {
-    case Some(h) => casTestHook = None; h()
-    case None =>
-  }
+    * race (thread timing would make the interleaving flaky). Each of
+    * the three seams is claimed by an atomic `getAndSet(None)`, so with
+    * commits running concurrently in one JVM (the nightly's member
+    * commits) exactly one of them fires it, once. */
+  private val casTestHookRef = new AtomicReference[Option[() => Unit]](None)
+  private[graft] def casTestHook: Option[() => Unit] = casTestHookRef.get
+  private[graft] def casTestHook_=(h: Option[() => Unit]): Unit =
+    casTestHookRef.set(h)
+  private def fireCasTestHook(): Unit =
+    casTestHookRef.getAndSet(None).foreach(_())
 
   /** CAS-loss arbitration — the optimistic-concurrency core. A DML that
     * lost the manifest race may REBASE onto the winner (re-point its

@@ -433,4 +433,111 @@ class EtlPipelineSpec extends SparkSpec {
     assert(after > before, "retroactive entries produced no new rule-1 events")
     assertMartParity(whInc, whFull)
   }
+
+  /** The failure specs' inputs: bank tables, nights 1 and 2 as feed
+    * dirs, and a reference warehouse of both nights run uninterrupted. */
+  private lazy val failureFixture = {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_fail_").toString
+    val bank = s"$tmp/bank"
+    firstRun
+    exportBank(wh, bank)
+    for (i <- 1 to 2) stageFeeds(s"$tmp/feeds_$i", Seq(txFile(i), termFile(i), blFile(i)))
+    val whRef = s"$tmp/wh_ref"
+    for (i <- 1 to 2)
+      EtlPipeline.run(spark, s"$tmp/feeds_$i", whRef, Some(bank), Some(asOf(i)))
+    (tmp, bank, whRef)
+  }
+  /** Failure contract: after a good night 1 (and `arm`, which may plant a
+    * fault in the warehouse), night 2 from `feeds2` with `bank2` fails as
+    * `expected`, and leaves the commit, the fact's day partitions and the
+    * staging as they were, with no pool thread alive. Returns the
+    * warehouse. */
+  private def failNight2(name: String, feeds2: String, bank2: String,
+      arm: String => Unit = _ => ())(expected: Throwable => Boolean): String = {
+    val (tmp, bank, _) = failureFixture
+    val whFail = s"$tmp/wh_$name"
+    EtlPipeline.run(spark, s"$tmp/feeds_1", whFail, Some(bank), Some(asOf(1)))
+    arm(whFail)
+    val commitBefore = graft.sources.WarehouseFs.currentCommit(spark, whFail)
+    val e = intercept[Throwable](
+      EtlPipeline.run(spark, feeds2, whFail, Some(bank2), Some(asOf(2))))
+    assert(expected(e), e)
+    assert(graft.sources.WarehouseFs.currentCommit(spark, whFail) === commitBefore)
+    assert(factDays(whFail) === Seq("day=2021-03-01"))
+    assert(!new java.io.File(s"$whFail/_work").exists())
+    assert(!Thread.getAllStackTraces.keySet.asScala.exists(t =>
+      t.isAlive && t.getName == EtlPipeline.BranchThread))
+    whFail
+  }
+  private def factDays(whDir: String) = new java.io.File(s"$whDir/dwh_fact_transactions")
+    .list().filter(_.startsWith("day=")).sorted.toSeq
+  /** Re-runs night 2 with the good input as of `night` into a warehouse a
+    * failed night 2 left behind: it then equals the reference (its mart
+    * up to `report_dt` when the re-run's day differs), and night 2's
+    * fraud events are there, each once. */
+  private def assertRerunEqualsReference(whFail: String, night: Int): Unit = {
+    val (tmp, bank, whRef) = failureFixture
+    EtlPipeline.run(spark, s"$tmp/feeds_2", whFail, Some(bank), Some(asOf(night)))
+    assert(factDays(whFail) === Seq("day=2021-03-01", "day=2021-03-02"))
+    for (t <- Seq("rep_fraud", "dwh_dim_terminals_hist", "dwh_fact_pssprt_blcklst")) {
+      def read(wh: String) =
+        if (t == "rep_fraud" && night != 2) served(wh, t).drop("report_dt") else served(wh, t)
+      val (got, want) = (read(whFail), read(whRef))
+      assert(got.count() === want.count(), t)
+      assert(got.exceptAll(want).count() === 0, t)
+      assert(want.exceptAll(got).count() === 0, t)
+    }
+    assert(served(whFail, "rep_fraud").filter(to_date(col("event_dt")) === "2021-03-02")
+      .count() > 0, "night 2's fraud events were never derived")
+  }
+
+  test("a run failing after the fact append commits nothing and takes its day back") {
+    // the bank dir exists but lacks clients.parquet: the run fails in the
+    // mart phase, after night 2's transactions were appended
+    val (tmp, _, _) = failureFixture
+    val noBank = s"$tmp/bank_without_clients"
+    new java.io.File(noBank).mkdirs()
+    val whFail = failNight2("no_clients", s"$tmp/feeds_2", noBank)(
+      _.getMessage.contains("clients.parquet"))
+    assertRerunEqualsReference(whFail, night = 2)
+  }
+
+  test("a failing load branch fails the run after every branch ends; nothing commits") {
+    // a corrupt terminals snapshot fails one branch while the fact branch
+    // appends night 2 beside it
+    val (tmp, bank, _) = failureFixture
+    val bad = stageFeeds(s"$tmp/feeds_2_bad_terminals", Seq(txFile(2), blFile(2)))
+    java.nio.file.Files.write(java.nio.file.Paths.get(bad, termFile(2)),
+      "not a zip archive".getBytes("UTF-8"))
+    val whFail = failNight2("bad_terminals", bad, bank)(
+      _.isInstanceOf[java.util.zip.ZipException])
+    assertRerunEqualsReference(whFail, night = 2)
+  }
+
+  test("a member commit failing beside the mart's is taken back; a later re-run duplicates no event") {
+    import graft.sources.WarehouseFs
+    import java.nio.file.{Files, Paths, StandardOpenOption}
+    val (tmp, bank, _) = failureFixture
+    // a stored CHECK that night 2's terminal versions violate fails the
+    // terminal history's member commit; the mart's commit runs beside it
+    def props(wh: String) = Paths.get(wh, "dwh_dim_terminals_hist", "_meta", "props")
+    val check = "check.before_night2 = effective_from < TIMESTAMP '2021-03-02 00:00:00'\n"
+    val whFail = failNight2("member_commit", s"$tmp/feeds_2", bank, arm = { wh =>
+      assert(!Files.exists(props(wh)))
+      Files.createDirectories(props(wh).getParent)
+      Files.write(props(wh), check.getBytes("UTF-8"), StandardOpenOption.CREATE_NEW)
+    })(_.getMessage.contains("CHECK constraint violated"))
+    // the mart's member version landed, then a restore to the version it
+    // committed onto took it back
+    val mart = s"$whFail/rep_fraud"
+    val pinned = WarehouseFs.currentCommit(spark, whFail).get._2("rep_fraud")
+    assert(WarehouseFs.listVersions(spark, mart).max === pinned + 2)
+    val (head, pin) = (WarehouseFs.readTable(spark, mart).get,
+      WarehouseFs.readTableVersion(spark, mart, pinned).get)
+    assert(head.exceptAll(pin).count() === 0 && pin.exceptAll(head).count() === 0)
+    Files.delete(props(whFail))
+    // a re-run on a later day writes night 2's events under a new
+    // report_dt: a kept mart version would carry them twice
+    assertRerunEqualsReference(whFail, night = 3)
+  }
 }

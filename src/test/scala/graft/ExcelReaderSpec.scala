@@ -45,15 +45,28 @@ class ExcelReaderSpec extends SparkSpec {
     s"""<c r="$ref" t="inlineStr"><is><t>$s</t></is></c>"""
 
   /** A one-sheet .xlsx holding `rows` (the `<row>` elements) and, when
-    * given, `xl/sharedStrings.xml` entries (each an `<si>` body). */
-  private def writeXlsx(rows: String, shared: Seq[String] = Nil): java.nio.file.Path = {
+    * given, `xl/sharedStrings.xml` entries (each an `<si>` body). The
+    * sheet is the workbook's relationship `rId7`, stored at
+    * `sheetTarget` (relative to `xl/`, or absolute). */
+  private def writeXlsx(rows: String, shared: Seq[String] = Nil,
+                        sheetTarget: String = "worksheets/sheet1.xml"): java.nio.file.Path = {
     val path = java.nio.file.Files.createTempDirectory("graft_xlsx_")
       .resolve("passport_blacklist_01032021.xlsx")
+    val head = """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>"""
+    val rel = "http://schemas.openxmlformats.org/officeDocument/2006/relationships"
     val sheet =
-      """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>""" +
-      """<worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main">""" +
+      head + """<worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main">""" +
       s"<sheetData>$rows</sheetData></worksheet>"
-    val entries = Seq("xl/worksheets/sheet1.xml" -> sheet) ++
+    val workbook =
+      head + s"""<workbook xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main" xmlns:r="$rel">""" +
+      """<sheets><sheet name="Лист1" sheetId="1" r:id="rId7"/></sheets></workbook>"""
+    val rels =
+      head + """<Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships">""" +
+      s"""<Relationship Id="rId1" Type="$rel/sharedStrings" Target="sharedStrings.xml"/>""" +
+      s"""<Relationship Target="$sheetTarget" Type="$rel/worksheet" Id="rId7"/></Relationships>"""
+    val sheetEntry = if (sheetTarget.startsWith("/")) sheetTarget.drop(1) else s"xl/$sheetTarget"
+    val entries = Seq("xl/workbook.xml" -> workbook, "xl/_rels/workbook.xml.rels" -> rels,
+        sheetEntry -> sheet) ++
       (if (shared.isEmpty) Nil
        else Seq("xl/sharedStrings.xml" -> shared.map(si => s"<si>$si</si>").mkString("<sst>", "", "</sst>")))
     val zip = new java.util.zip.ZipOutputStream(java.nio.file.Files.newOutputStream(path))
@@ -104,5 +117,19 @@ class ExcelReaderSpec extends SparkSpec {
     val rows = BankFeeds.blacklist(spark, path.toString).collect()
     assert(rows.map(r => (r.getString(0), String.valueOf(r.getDate(1)))).toSeq ===
       Seq(("4010 111111", "null")))
+  }
+
+  test("the first sheet resolves through the workbook and its rels, under any name") {
+    // a workbook whose only sheet is not `sheet1.xml`; one target is
+    // relative to `xl/`, the other absolute within the package
+    for (target <- Seq("worksheets/passports.xml", "/xl/worksheets/Лист1.xml")) {
+      val path = writeXlsx(
+        s"""<row r="1">${str("A1", "date")}${str("B1", "passport")}</row>""" +
+        s"""<row r="2"><c r="A2"><v>44256</v></c>${str("B2", "4010 123456")}</row>""",
+        sheetTarget = target)
+      assert(ExcelReader.readSheet(path.toString) === Vector(
+        Vector(Some("date"), Some("passport")),
+        Vector(Some("44256"), Some("4010 123456"))), target)
+    }
   }
 }
