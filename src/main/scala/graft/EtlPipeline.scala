@@ -1,8 +1,10 @@
 package graft
 
 import java.sql.{Date, Timestamp}
-import java.util.concurrent.{Callable, ExecutionException, Executors, Future, TimeUnit}
+import java.util.concurrent.{Callable, ConcurrentLinkedQueue, ExecutionException, Executors,
+  Future, TimeUnit}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import graft.operators.{FraudDetection, Scd}
 import graft.sources.{BankFeeds, WarehouseFs}
@@ -33,29 +35,36 @@ import graft.sources.{BankFeeds, WarehouseFs}
   *   loads, concurrent       terminals → SCD2 → stage
   *                           blacklist → SCD1 → stage → added min(entry_dt)
   *                           transactions → fact append → Z-order
-  *   serial                  bank tables → fraud mart
-  *   member commits,         each staged dim: sync (or first publish)
-  *   concurrent              mart report day: partition overwrite (or first publish)
+  *   then, concurrent        each staged dim: member sync (or first publish)
+  *                           bank tables → fraud mart → its report day:
+  *                             partition overwrite (or first publish)
   *   serial                  fold check → seal (one commit file)
   * }}}
-  * The branches share no input and no mutable state: each returns what it
-  * staged or loaded, and each member commits to its own chain through its
-  * own manifest CAS. They run on a pool of at most three threads that the
-  * run creates (so the threads inherit the caller's Spark local
-  * properties: job group, scheduler pool) and stops before it returns.
+  * A staged state is a materialized frame (`localCheckpoint`), private to
+  * the run: the mart and the member sync read it without re-deriving it,
+  * and nothing is written for it but the member commit. The dims commit
+  * while the mart is built, since the mart reads their staged states, not
+  * their chains. The branches share no mutable state: each returns what
+  * it staged or loaded, and each member commits to its own chain through
+  * its own manifest CAS. They run on a pool of at most three threads that
+  * the run creates (so the threads inherit the caller's Spark local
+  * properties: job group, scheduler pool) and stops before it returns;
+  * the staged states are released then too.
   *
-  * Failure contract: a run waits for every branch, then rethrows the
-  * first failure in branch order and commits nothing. A run that fails
-  * before its seal takes back what it wrote, after every branch has
-  * ended: each member version it committed (a member committed beside a
-  * failed one, or before a failed seal) is restored to the version it
-  * committed onto, a member it published first is deleted, and so are
-  * the fact `day=` partitions it appended and its `_work/` staging. The
-  * fact is outside the commit set, so a re-run would otherwise skip such
-  * a day and never derive its fraud events; a kept member version would
-  * carry this run's mart events into the re-run's commit beside the
-  * re-run's own. A re-run with good input then equals an uninterrupted
-  * run.
+  * Failure contract: a run rethrows the first failure in branch order and
+  * commits nothing. A run that fails before its seal (in a load, the
+  * mart, a member commit, the fold or the seal) takes back what it wrote
+  * on one path: it stops the pool, then restores every member it
+  * committed to the head that member had before the run (a member it
+  * published first is deleted), and deletes the fact `day=` partitions it
+  * appended. The fact is outside the commit set, so a re-run would
+  * otherwise skip such a day and never derive its fraud events; a kept
+  * member version would carry this run's mart events into the re-run's
+  * commit beside the re-run's own. A re-run with good input then equals
+  * an uninterrupted run. The take-back adds versions to a member's chain,
+  * so each member keeps as many versions as reach back to the oldest one
+  * a retained commit pins: failed nights in a row never expire a pinned
+  * version.
   */
 object EtlPipeline {
   private val DayRe = """(\d{2})(\d{2})(\d{4})""".r.unanchored
@@ -86,6 +95,12 @@ object EtlPipeline {
   /** Name of a run's pool threads. */
   private[graft] val BranchThread = "graft-etl-branch"
 
+  /** Member versions a member keeps at least — covers the commit window. */
+  private val MemberKeep = 8
+  /** Versions one run adds to a member at most: its commit, a fold and a
+    * take-back. */
+  private val RunVersions = 3
+
   /** Waits for every branch, then rethrows the first failure in branch
     * order. An interrupt while waiting passes through at once, with the
     * branches still running. */
@@ -96,6 +111,13 @@ object EtlPipeline {
     }
     failures.headOption.foreach(e => throw e)
   }
+
+  /** Frees the blocks a materialized (`localCheckpoint`) frame holds. */
+  private def release(df: DataFrame): Unit =
+    df.queryExecution.logical.foreach {
+      case r: LogicalRDD => r.rdd.unpersist(blocking = true); ()
+      case _ => ()
+    }
 
   /** @param asOf logical "run time" (defaults to now) — drives the SCD2
     *   as-of snapshot and report_dt; injectable so tests can replay one
@@ -118,20 +140,19 @@ object EtlPipeline {
     // in ONE commit ([[WarehouseFs.publishAtomicVersioned]]) at the end
     // of the run, so a reader resolving through the latest commit can
     // never join mart(vN) against blacklist(vN−1). During the run the
-    // pipeline stages its intermediate states under `_work/` (private to
-    // the run). The append-only transactions fact deliberately stays
+    // pipeline stages its intermediate states in memory (private to the
+    // run). The append-only transactions fact deliberately stays
     // OUTSIDE the commit set: its day partitions are immutable once
     // written (new days only append), so there is no version mixture to
     // protect against, and re-committing O(history) fact bytes nightly
     // is exactly what the member chains' file sharing exists to avoid.
-    val workDir = s"$whDir/_work"
-    val baseCommit = WarehouseFs.currentCommit(spark, whDir)
+    val retained = WarehouseFs.retainedCommits(spark, whDir)
+    val baseCommit = retained.lastOption
     val committedTables: Map[String, Long] = baseCommit.map(_._2).getOrElse(Map.empty)
     // reads resolve, in order: this run's own staged state, the version
     // the latest commit pins, the plain directory (the transactions fact)
-    def read(name: String, staged: Boolean): Option[DataFrame] =
-      if (staged) Some(spark.read.parquet(s"$workDir/$name"))
-      else committedTables.get(name)
+    def read(name: String, staged: Option[DataFrame]): Option[DataFrame] =
+      staged.orElse(committedTables.get(name)
         .map(v => WarehouseFs.readTableVersion(spark, tablePath(name), v).getOrElse(
           // an expired version pin must fail LOUDLY: falling through to
           // the table path would compute downstream tables from a
@@ -139,9 +160,13 @@ object EtlPipeline {
           throw new IllegalStateException(
             s"etl: $name resolves to an expired member version (@$v) " +
               "— raise the member table's keepVersions")))
-        .orElse(WarehouseFs.readTable(spark, tablePath(name)))
-    def overwrite(df: DataFrame, name: String): Unit =
-      WarehouseFs.publish(df, s"$workDir/$name")
+        .orElse(WarehouseFs.readTable(spark, tablePath(name))))
+    // the run's materialized frames, released when it ends
+    val held = new ConcurrentLinkedQueue[DataFrame]()
+    def hold(df: DataFrame): DataFrame = { held.add(df); df }
+    // stages a dim's new state: materialized once, so the next feed day,
+    // the mart and the member sync read it without re-deriving it
+    def overwrite(df: DataFrame): DataFrame = hold(df.localCheckpoint())
 
     val factPath = tablePath("dwh_fact_transactions")
     // Loaded days come from the partition directory names (pure
@@ -149,13 +174,28 @@ object EtlPipeline {
     val existingDays: Set[String] =
       WarehouseFs.listNames(spark, factPath)
         .filter(_.startsWith("day=")).map(_.stripPrefix("day=")).toSet
+    // every member a prior commit pinned stays pinned, including tables
+    // committed into this warehouse beside the served set
+    val allServed = (servedTables ++ committedTables.keySet).distinct
+    def headOf(n: String) = WarehouseFs.currentVersion(spark, tablePath(n)).map(_._1)
+    def isVersioned(n: String) = headOf(n).isDefined
+    // each member's head before the run's first commit to it: what a
+    // take-back restores (None: the run would publish it first)
+    val heads = allServed.map(n => n -> headOf(n)).toMap
+    // a member keeps every version back to the oldest one a retained
+    // commit pins, plus what this run adds: the versions failed runs
+    // left (each a commit and its take-back) never expire a pin
+    val pinFloor = retained.flatMap(_._2).groupMapReduce(_._1)(_._2)(math.min)
+    def keepOf(n: String): Int =
+      (for (h <- heads(n); p <- pinFloor.get(n))
+        yield math.max(MemberKeep, (h - p).toInt + RunVersions + 1)).getOrElse(MemberKeep)
     // the run's pool: its threads start on first use, from this thread
     val pool = Executors.newFixedThreadPool(Branches, (r: Runnable) => {
       val t = new Thread(r, BranchThread); t.setDaemon(true); t
     })
     def fork[T](branch: () => T): Future[T] =
       pool.submit(new Callable[T] { def call(): T = branch() })
-    // ends every branch: a failure's cleanup runs only after this, since
+    // ends every branch: a failure's take-back runs only after this, since
     // a run's thread interrupted while waiting leaves its branches running
     def stopPool(): Unit = {
       pool.shutdownNow()
@@ -174,7 +214,6 @@ object EtlPipeline {
     // ([[WarehouseFs.changeFeedCommitted]]) diff only non-shared files —
     // the reference's cumulative blacklist feed of ~8 rows/day reads one
     // rewritten file, never the table.
-    val memberKeep = 8 // member versions retained — covers the commit window
     val syncKeys = Map(
       "dwh_dim_terminals_hist" -> Seq("terminal_id", "effective_from"),
       "dwh_fact_pssprt_blcklst" -> Seq("passport_num"))
@@ -184,105 +223,64 @@ object EtlPipeline {
       "rep_fraud" -> Seq("passport"),
       "dwh_fact_pssprt_blcklst" -> Seq("passport_num"),
       "dwh_dim_terminals_hist" -> Seq("terminal_id"))
-    def commitAtomic(staged: Seq[String], martDay: Option[DataFrame]): Unit = {
-      def headOf(n: String) = WarehouseFs.currentVersion(spark, tablePath(n)).map(_._1)
-      def isVersioned(n: String) = headOf(n).isDefined
-      // the first publish of a member with no version yet. Stats ride
-      // with every member publish: served tables are dims/mart-sized
-      // (never the fact), so the profiling scan is cheap and readers get
-      // committed row counts for join planning
-      def lift(n: String, df: DataFrame, partBy: Seq[String] = Nil): Unit =
-        WarehouseFs.publishVersioned(df, tablePath(n), partitionBy = partBy,
-          keepVersions = memberKeep, collectStats = true,
-          bloomIndexCols = bloomCols.getOrElse(n, Nil))
-      // the version each member commits onto (None: its first publish)
-      val heads = (staged ++ martDay.map(_ => "rep_fraud")).map(n => n -> headOf(n)).toMap
-      // each member commits to its own chain through its own manifest
-      // CAS, so the members commit concurrently; the seal below pins
-      // them together
-      val members = staged.map[() => Unit] { n => () => {
-        val state = spark.read.parquet(s"$workDir/$n")
-        if (heads(n).isDefined)
-          WarehouseFs.syncToState(state, tablePath(n), syncKeys(n),
-            keepVersions = memberKeep)
-        else lift(n, state)
-      }} ++ martDay.map[() => Unit] { rep => () =>
-        if (heads("rep_fraud").isDefined)
-          // CoW partition overwrite: replace only this run's report
-          // day(s), carry every other day's files by reference
-          WarehouseFs.overwritePartitions(rep, tablePath("rep_fraud"),
-            Seq("report_dt"), keepVersions = memberKeep)
-        else lift("rep_fraud", rep, Seq("report_dt"))
-      }
-      try {
-        awaitAll(members.map(fork(_)))
-        // every member a prior commit pinned stays pinned, including tables
-        // committed into this warehouse beside the served set
-        val allServed = (servedTables ++ committedTables.keySet).distinct
-        // maintenance cadence: a member whose CoW chain spans more data
-        // dirs than the budget folds back into ONE clean dir version
-        // (indexes/stats preserved, CAS-pinned) BEFORE the seal, so the
-        // commit pins the compacted state. Nightly syncs add ~1 dir per
-        // changed member per run; without this the read-side union grows
-        // one parquet relation per night forever. Deletion-vector commits
-        // count toward the same span (each adds its version's dir to the
-        // referenced set), and the fold reads MASKED and publishes a clean
-        // dir version — so accumulated DVs retire here too and the
-        // nightly path never serves a long mask chain. The fold rewrites the
-        // member once per ~spanMax nights — amortized O(table/spanMax)
-        // per night, and the next commit feed across it honestly scans
-        // both sides (nothing is shared with the pre-fold version).
-        val spanMax = spark.conf.getOption("spark.graft.etl.compactSpanDirs")
-          .map(_.toInt).getOrElse(16)
-        // second trigger, same fold: accumulated MASK ROWS. A
-        // high-frequency merge-on-read delete workload can mask thousands
-        // of rows while staying within a small dir span (deltas are tiny
-        // files) — every read then pays the per-row mask check for rows
-        // that will never come back. When the live mask exceeds the
-        // budget, fold now rather than waiting for the span rule.
-        val maskedMaxDefault = spark.conf
-          .getOption("spark.graft.etl.compactMaskedRows")
-          .map(_.toLong).getOrElse(100000L)
-        def maskedMaxOf(n: String): Long = WarehouseFs
-          .storedCompactMaskedRows(spark, tablePath(n)) // per-table property
-          .getOrElse(maskedMaxDefault)
-        val folded = for (n <- allServed if isVersioned(n)
-             if WarehouseFs.versionSpanDirs(spark, tablePath(n)).exists(_ > spanMax) ||
-               (WarehouseFs.hasDeletionVectors(spark, tablePath(n)) &&
-                 WarehouseFs.deletionVectorRows(spark, tablePath(n)) > maskedMaxOf(n)))
-          yield graft.operators.ScaleJoins.compactParquet(spark, tablePath(n),
-            keepVersions = memberKeep)
-        if (members.nonEmpty || folded.nonEmpty) {
-          WarehouseFs.publishAtomicVersioned(spark, Map.empty, whDir,
-            pinCurrent = allServed.filter(isVersioned).toSet,
-            keepVersions = memberKeep)
-          WarehouseFs.deleteIfExists(spark, workDir)
-        }
-      } catch { case e: Throwable =>
-        // all or nothing: a member that committed beside a failed one, or
-        // before a failed seal, goes back to the version it committed onto,
-        // and a member this run published first is deleted. Kept, its
-        // chain would carry this run's mart events into the next commit
-        // beside the re-run's own.
-        try {
-          stopPool()
-          if (WarehouseFs.currentCommit(spark, whDir) == baseCommit)
-            for ((n, head) <- heads) head match {
-              case Some(v) => WarehouseFs.restoreVersion(spark, tablePath(n), v,
-                keepVersions = memberKeep)
-              case None => WarehouseFs.deleteIfExists(spark, tablePath(n))
-            }
-        } catch { case undo: Throwable => e.addSuppressed(undo) }
-        throw e
-      }
+    // the first publish of a member with no version yet. Stats ride
+    // with every member publish: served tables are dims/mart-sized
+    // (never the fact), so the profiling scan is cheap and readers get
+    // committed row counts for join planning
+    def lift(n: String, df: DataFrame, partBy: Seq[String] = Nil): Unit =
+      WarehouseFs.publishVersioned(df, tablePath(n), partitionBy = partBy,
+        keepVersions = MemberKeep, collectStats = true,
+        bloomIndexCols = bloomCols.getOrElse(n, Nil))
+    // The seal, once every member commit has ended. Each member commits to
+    // its own chain through its own manifest CAS, so the members commit
+    // concurrently; this pins them together.
+    def commitAtomic(members: Seq[Future[_]]): Unit = {
+      awaitAll(members)
+      // maintenance cadence: a member whose CoW chain spans more data
+      // dirs than the budget folds back into ONE clean dir version
+      // (indexes/stats preserved, CAS-pinned) BEFORE the seal, so the
+      // commit pins the compacted state. Nightly syncs add ~1 dir per
+      // changed member per run; without this the read-side union grows
+      // one parquet relation per night forever. Deletion-vector commits
+      // count toward the same span (each adds its version's dir to the
+      // referenced set), and the fold reads MASKED and publishes a clean
+      // dir version — so accumulated DVs retire here too and the
+      // nightly path never serves a long mask chain. The fold rewrites the
+      // member once per ~spanMax nights — amortized O(table/spanMax)
+      // per night, and the next commit feed across it honestly scans
+      // both sides (nothing is shared with the pre-fold version).
+      val spanMax = spark.conf.getOption("spark.graft.etl.compactSpanDirs")
+        .map(_.toInt).getOrElse(16)
+      // second trigger, same fold: accumulated MASK ROWS. A
+      // high-frequency merge-on-read delete workload can mask thousands
+      // of rows while staying within a small dir span (deltas are tiny
+      // files) — every read then pays the per-row mask check for rows
+      // that will never come back. When the live mask exceeds the
+      // budget, fold now rather than waiting for the span rule.
+      val maskedMaxDefault = spark.conf
+        .getOption("spark.graft.etl.compactMaskedRows")
+        .map(_.toLong).getOrElse(100000L)
+      def maskedMaxOf(n: String): Long = WarehouseFs
+        .storedCompactMaskedRows(spark, tablePath(n)) // per-table property
+        .getOrElse(maskedMaxDefault)
+      val folded = for (n <- allServed if isVersioned(n)
+           if WarehouseFs.versionSpanDirs(spark, tablePath(n)).exists(_ > spanMax) ||
+             (WarehouseFs.hasDeletionVectors(spark, tablePath(n)) &&
+               WarehouseFs.deletionVectorRows(spark, tablePath(n)) > maskedMaxOf(n)))
+        yield graft.operators.ScaleJoins.compactParquet(spark, tablePath(n),
+          keepVersions = keepOf(n))
+      if (members.nonEmpty || folded.nonEmpty)
+        WarehouseFs.publishAtomicVersioned(spark, Map.empty, whDir,
+          pinCurrent = allServed.filter(isVersioned).toSet,
+          keepVersions = MemberKeep)
     }
 
     val termAttrs = Seq("terminal_type", "terminal_city", "terminal_address")
 
     // --- terminals: daily full snapshots → SCD2 history (main.py:556-565).
-    // Result: whether this run staged a history.
+    // Result: the history this run staged, if any.
     val loadTerminals = () =>
-      feed("terminals").foldLeft(false) { case (staged, (day, path)) =>
+      feed("terminals").foldLeft(Option.empty[DataFrame]) { case (staged, (day, path)) =>
         val loadTs = Timestamp.valueOf(s"$day 00:00:00")
         val hist = read("dwh_dim_terminals_hist", staged)
         val already = hist.exists(h =>
@@ -290,44 +288,36 @@ object EtlPipeline {
         if (already) staged
         else {
           val snap = BankFeeds.terminals(spark, path)
-          overwrite(Scd.scd2Apply(spark, hist, snap, "terminal_id", termAttrs, loadTs),
-            "dwh_dim_terminals_hist")
-          true
+          Some(overwrite(Scd.scd2Apply(spark, hist, snap, "terminal_id", termAttrs, loadTs)))
         }
       }
 
     // --- blacklist: cumulative feed → SCD1 fact (main.py:566-570).
-    // The pre-feed state is materialized (localCheckpoint) so the
-    // added-entry delta below survives the publish swapping the directory
-    // out from under a lazy reader. The blacklist is a small dim — this is
-    // a tiny job, not a fact scan. Result: whether this run staged a
-    // blacklist, and the earliest entry_dt it added.
+    // Result: the blacklist this run staged, if any, and the earliest
+    // entry_dt it added. The pre-feed state is the version the latest
+    // commit pins: no commit of this run touches it before the delta
+    // below is taken.
     val loadBlacklist = () => {
       val bl = "dwh_fact_pssprt_blcklst"
       val passportFeeds = feed("passport")
-      val blBefore =
-        if (passportFeeds.isEmpty) None
-        else read(bl, staged = false).map(_.localCheckpoint())
-      for (((_, path), i) <- passportFeeds.zipWithIndex) {
+      val blBefore = if (passportFeeds.isEmpty) None else read(bl, None)
+      val staged = passportFeeds.foldLeft(Option.empty[DataFrame]) { case (st, (_, path)) =>
         val snap = BankFeeds.blacklist(spark, path)
-        overwrite(Scd.scd1Apply(read(bl, staged = i > 0), snap,
-          "passport_num", Seq("entry_dt")), bl)
+        Some(overwrite(Scd.scd1Apply(read(bl, st), snap, "passport_num", Seq("entry_dt"))))
       }
       // Entries added by this run whose entry_dt reaches back to an
       // already-loaded fact day are RETROACTIVE: rule 1 would have flagged
       // those past transactions had the entry existed — the mart pass below
       // re-derives exactly the affected days (a full rebuild would too, but
       // at O(history) every night).
-      val addedMinEntry: Option[Date] =
-        if (passportFeeds.isEmpty) None
-        else read(bl, staged = true).flatMap { after =>
-          val added = blBefore match {
-            case Some(before) => after.exceptAll(before)
-            case None => after
-          }
-          Option(added.agg(min(col("entry_dt"))).head().getDate(0))
+      val addedMinEntry: Option[Date] = staged.flatMap { after =>
+        val added = blBefore match {
+          case Some(before) => after.exceptAll(before)
+          case None => after
         }
-      (passportFeeds.nonEmpty, addedMinEntry)
+        Option(added.agg(min(col("entry_dt"))).head().getDate(0))
+      }
+      (staged, addedMinEntry)
     }
 
     // --- transactions: daily increments → append-only fact, partitioned by
@@ -358,13 +348,20 @@ object EtlPipeline {
       awaitAll(Seq(terminalsF, blacklistF, factF))
       val (blStaged, blAddedMinEntry) = blacklistF.get()
       val loadedDays = factF.get()
-      val staged = Seq("dwh_dim_terminals_hist" -> terminalsF.get(),
-        "dwh_fact_pssprt_blcklst" -> blStaged).collect { case (n, true) => n }
-      def readIf(name: String): Option[DataFrame] = read(name, staged.contains(name))
+      val staged: Map[String, DataFrame] = Seq(
+        "dwh_dim_terminals_hist" -> terminalsF.get(),
+        "dwh_fact_pssprt_blcklst" -> blStaged).collect { case (n, Some(s)) => n -> s }.toMap
+      def readIf(name: String): Option[DataFrame] = read(name, staged.get(name))
+      // each staged dim's member commit starts now, beside the mart
+      val dimCommits = staged.toSeq.map { case (n, state) => fork(() =>
+        if (heads(n).isDefined)
+          WarehouseFs.syncToState(state, tablePath(n), syncKeys(n), keepVersions = keepOf(n))
+        else lift(n, state))
+      }
 
       if (readIf("dwh_fact_transactions").isEmpty || readIf("dwh_dim_terminals_hist").isEmpty) {
         println("[etl] no transactions/terminals loaded — skipping fraud mart")
-        commitAtomic(staged, None) // dims/blacklist staged so far still flip together
+        commitAtomic(dimCommits) // dims/blacklist staged so far still flip together
         return
       }
 
@@ -448,7 +445,7 @@ object EtlPipeline {
         }.sorted
       if (windows.isEmpty && retroDays.isEmpty) {
         println("[etl] no new transaction days, no retroactive blacklist — fraud mart unchanged")
-        commitAtomic(staged, None) // dims/blacklist staged so far still flip together
+        commitAtomic(dimCommits) // dims/blacklist staged so far still flip together
         return
       }
 
@@ -511,8 +508,15 @@ object EtlPipeline {
       // replaces the partition it may be reading (the mart merge/anti-join
       // read the member); rep is bounded (the run's windows), so the
       // checkpoint is O(new events).
-      val repFinal = rep.localCheckpoint()
-      commitAtomic(staged, Some(repFinal))
+      val repFinal = hold(rep.localCheckpoint())
+      val martCommit = fork(() =>
+        if (heads("rep_fraud").isDefined)
+          // CoW partition overwrite: replace only this run's report
+          // day(s), carry every other day's files by reference
+          WarehouseFs.overwritePartitions(repFinal, tablePath("rep_fraud"),
+            Seq("report_dt"), keepVersions = keepOf("rep_fraud"))
+        else lift("rep_fraud", repFinal, Seq("report_dt")))
+      commitAtomic(dimCommits :+ martCommit)
       val repCount = repFinal.count()
 
       val winStr = extended.map { case (a, b, ext) =>
@@ -520,21 +524,32 @@ object EtlPipeline {
       println(s"[etl] fact_days=${allDays.size} loaded=${loadedDays.size} " +
         s"windows=$winStr retro=${retroDays.size} rep_fraud~=$repCount")
     } catch { case e: Throwable =>
-      // a run that failed before its seal commits nothing (commitAtomic
-      // has taken its member versions back): take back the fact days it
-      // appended and its staging. After the seal (the commit moved) the
-      // days stay: the sealed mart holds their events.
+      // the one take-back path, for a failure anywhere before the seal (a
+      // load, the mart, a member commit, the fold or the seal): every
+      // member this run committed goes back to its head before the run,
+      // a member it published first is deleted, and so are the fact days
+      // it appended. Kept, a member version would carry this run's mart
+      // events into the next commit beside the re-run's own. After the
+      // seal (the commit moved) everything stays: the sealed mart holds
+      // the days' events.
       try {
         stopPool()
         if (WarehouseFs.currentCommit(spark, whDir) == baseCommit) {
+          for ((n, head) <- heads) head match {
+            case Some(v) => WarehouseFs.restoreVersion(spark, tablePath(n), v,
+              keepVersions = keepOf(n))
+            case None => if (isVersioned(n)) WarehouseFs.deleteIfExists(spark, tablePath(n))
+          }
           WarehouseFs.listNames(spark, factPath)
             .filter(n => n.startsWith("day=") && !existingDays(n.stripPrefix("day=")))
             .foreach(n => WarehouseFs.deleteIfExists(spark, s"$factPath/$n"))
-          WarehouseFs.deleteIfExists(spark, workDir)
         }
-      } catch { case cleanup: Throwable => e.addSuppressed(cleanup) }
+      } catch { case undo: Throwable => e.addSuppressed(undo) }
       throw e
-    } finally stopPool()
+    } finally {
+      stopPool()
+      held.forEach(release)
+    }
   }
 
   /** Z-order-compact the named day partitions of the transactions fact in

@@ -556,7 +556,8 @@ object WarehouseFs {
       files: Array[String],
       bitsets: Map[String, Array[org.apache.spark.sql.catalyst.util.ArrayData]],
       utc: Boolean,
-      bytes: Long)
+      bytes: Long,
+      schema: org.apache.spark.sql.types.StructType)
 
   private val bloomEntryMemo =
     new java.util.concurrent.ConcurrentHashMap[(String, String), BloomEntry]()
@@ -577,12 +578,7 @@ object WarehouseFs {
                               physCol: String, values: Seq[Any],
                               colType: => Option[org.apache.spark.sql.types.DataType])
       : Option[Seq[String]] = {
-    val parts =
-      try fs.listStatus(idx).filter { st =>
-        val n = st.getPath.getName
-        st.isFile && !n.startsWith("_") && !n.startsWith(".")
-      }
-      catch { case _: java.io.FileNotFoundException => return None }
+    val parts = bloomEntryParts(fs, idx).getOrElse(return None)
     if (parts.isEmpty) None
     else if (parts.map(_.getLen).sum > BloomEntryMemoMaxBytes) {
       val index = spark.read.parquet(idx.toString)
@@ -606,16 +602,35 @@ object WarehouseFs {
     }
   }
 
-  /** The memoized entry of `idx`, whose part files are `parts`; a miss
-    * reads exactly those files. */
-  private def bloomEntry(spark: SparkSession, fs: FileSystem, idx: Path,
-                         parts: Seq[org.apache.hadoop.fs.FileStatus]): BloomEntry = {
-    val key = (fs.makeQualified(idx).toString,
+  /** The part files of the bloom entry `idx`; None when it is absent. */
+  private def bloomEntryParts(fs: FileSystem, idx: Path)
+      : Option[Seq[org.apache.hadoop.fs.FileStatus]] =
+    try Some(fs.listStatus(idx).filter { st =>
+      val n = st.getPath.getName
+      st.isFile && !n.startsWith("_") && !n.startsWith(".")
+    }.toSeq)
+    catch { case _: java.io.FileNotFoundException => None }
+
+  /** The memo key of the entry `idx` whose part files are `parts`: a
+    * rewritten entry has other names, sizes or times, so a new key. */
+  private def bloomEntryKey(fs: FileSystem, idx: Path,
+                            parts: Seq[org.apache.hadoop.fs.FileStatus]): (String, String) =
+    (fs.makeQualified(idx).toString,
       parts.map(st => s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
         .sorted.mkString("/"))
+
+  /** The memoized entry of `idx`, whose part files are `parts`; a miss
+    * reads exactly those files, with `schema` when the caller knows it
+    * (no inference job). */
+  private def bloomEntry(spark: SparkSession, fs: FileSystem, idx: Path,
+                         parts: Seq[org.apache.hadoop.fs.FileStatus],
+                         schema: Option[org.apache.spark.sql.types.StructType] = None)
+      : BloomEntry = {
+    val key = bloomEntryKey(fs, idx, parts)
     val hit = bloomEntryMemo.get(key)
     if (hit != null) return hit
-    val index = spark.read.parquet(parts.map(_.getPath.toString): _*)
+    val index = schema.fold(spark.read)(spark.read.schema(_))
+      .parquet(parts.map(_.getPath.toString): _*)
     val rows = index.collect()
     def at(c: String) = index.schema.fieldIndex(c)
     val fileAt = at("file")
@@ -628,7 +643,8 @@ object WarehouseFs {
       }
     }.toMap
     val entry = BloomEntry(rows.map(_.getString(fileAt)),
-      bitsets, index.columns.contains("__utc"), parts.map(_.getLen).sum)
+      bitsets, index.columns.contains("__utc"), parts.map(_.getLen).sum,
+      index.schema)
     bloomEntryMemo.synchronized {
       var held = 0L
       bloomEntryMemo.values.forEach(e => held += e.bytes)
@@ -636,6 +652,39 @@ object WarehouseFs {
       bloomEntryMemo.put(key, entry)
     }
     entry
+  }
+
+  /** A per-file metadata entry (bloom index or zone map) as a frame. A
+    * memoized bloom entry is served from the memo as a local relation,
+    * with no Spark job; anything else reads its files. */
+  private def readMetaEntry(spark: SparkSession, fs: FileSystem,
+                            entry: Path): DataFrame = {
+    val memoized = if (!isIndexDir(entry.getParent)) None else bloomEntryParts(fs, entry)
+      .flatMap(parts => Option(bloomEntryMemo.get(bloomEntryKey(fs, entry, parts))))
+      .filter(e => e.schema.fieldNames.forall(c =>
+        c == "file" || c == "__utc" || e.bitsets.contains(c)))
+    memoized.fold(spark.read.parquet(entry.toString)) { e =>
+      val rows = e.files.indices.map { i =>
+        org.apache.spark.sql.Row.fromSeq(e.schema.fieldNames.toSeq.map {
+          case "file" => e.files(i)
+          case "__utc" => true
+          case c => Option(e.bitsets(c)(i)).map(_.toLongArray()).orNull
+        })
+      }
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), e.schema)
+    }
+  }
+
+  /** Write a per-file metadata entry as one file. A bloom entry that
+    * fits the memo is then memoized from the file just written, read
+    * with its known schema: the commit that writes it pays one small
+    * read, and the first point read of the new version none. */
+  private def writeMetaEntry(spark: SparkSession, fs: FileSystem,
+                             df: DataFrame, entry: Path): Unit = {
+    df.coalesce(1).write.mode(SaveMode.Overwrite).parquet(entry.toString)
+    if (isIndexDir(entry.getParent)) bloomEntryParts(fs, entry)
+      .filter(ps => ps.nonEmpty && ps.map(_.getLen).sum <= BloomEntryMemoMaxBytes)
+      .foreach(bloomEntry(spark, fs, entry, _, Some(df.schema)))
   }
 
   /** Read a root-relative file list with partition columns RESTORED:
@@ -1605,7 +1654,7 @@ object WarehouseFs {
     // one, never a torn half. One scan of the version files builds every
     // indexed column's per-file bitset.
     if (bloomIndexCols.nonEmpty)
-      buildBloomIndex(spark, t, dataName, bloomIndexCols.map(frameCol))
+      buildBloomIndex(spark, fs, t, dataName, bloomIndexCols.map(frameCol))
     // phase 1d (zone map): per-file min/max per column — one small-
     // metadata read replaces thousands of parquet footer opens when a
     // range predicate prunes files at 100 TB; same pre-commit discipline
@@ -2030,6 +2079,7 @@ object WarehouseFs {
   // built from [[graft.functions.BloomExpressions]] (codegen'd probe).
 
   private def indexDir(table: Path) = new Path(table, "_index")
+  private def isIndexDir(metaDir: Path) = metaDir == indexDir(metaDir.getParent)
   private def zonesDir(table: Path) = new Path(table, "_zones")
 
   /** Remove `column`'s bitsets from EVERY retained `_index` entry — the
@@ -2220,11 +2270,11 @@ object WarehouseFs {
     * stored RELATIVE to the version dir so a relocated/renamed table
     * keeps its index valid. Values index by their canonical string cast
     * (probe side must cast identically — [[bloomCandidateFiles]] does). */
-  private def buildBloomIndex(spark: SparkSession, t: Path, dataName: String,
-                              cols: Seq[String]): Unit =
-    bloomIndexDf(spark, new Path(t, dataName).toString, dataName, cols)
-      .coalesce(1).write.mode(SaveMode.Overwrite)
-      .parquet(new Path(indexDir(t), dataName).toString)
+  private def buildBloomIndex(spark: SparkSession, fs: FileSystem, t: Path,
+                              dataName: String, cols: Seq[String]): Unit =
+    writeMetaEntry(spark, fs,
+      bloomIndexDf(spark, new Path(t, dataName).toString, dataName, cols),
+      new Path(indexDir(t), dataName))
 
   /** The per-(file, column) bitset relation over `dataPath`'s files,
     * paths relativized to the `marker` dir segment.
@@ -3276,7 +3326,7 @@ object WarehouseFs {
     import org.apache.spark.sql.functions.{col, concat, lit}
     val priorMeta = new Path(metaDir, prior.dirName)
     if (!fs.exists(priorMeta)) return
-    val prev = spark.read.parquet(priorMeta.toString)
+    val prev = readMetaEntry(spark, fs, priorMeta)
     val prevRooted =
       if (prior.isFileList) prev
       else prev.withColumn("file", concat(lit(s"${prior.dirName}/"), col("file")))
@@ -3286,10 +3336,9 @@ object WarehouseFs {
     // vs legacy session-tz) — a mixed-convention index would probe wrong
     val rebuilt = rebuild(cols, prev.columns.contains("__utc"))
       .withColumn("file", concat(lit(s"$dirName/"), col("file")))
-    prevRooted.filter(col("file").isInCollection(carried))
-      .unionByName(rebuilt)
-      .coalesce(1).write.mode(SaveMode.Overwrite)
-      .parquet(new Path(metaDir, dirName).toString)
+    writeMetaEntry(spark, fs,
+      prevRooted.filter(col("file").isInCollection(carried)).unionByName(rebuilt),
+      new Path(metaDir, dirName))
   }
 
   /** Bounded optimistic retries of a lost manifest CAS before giving
@@ -4243,12 +4292,11 @@ object WarehouseFs {
     import org.apache.spark.sql.functions.{col, concat, lit}
     val pm = new Path(metaDir, prior.dirName)
     if (!fs.exists(pm)) return
-    val prev = spark.read.parquet(pm.toString)
+    val prev = readMetaEntry(spark, fs, pm)
     val rooted =
       if (prior.isFileList) prev
       else prev.withColumn("file", concat(lit(s"${prior.dirName}/"), col("file")))
-    rooted.coalesce(1).write.mode(SaveMode.Overwrite)
-      .parquet(new Path(metaDir, dirName).toString)
+    writeMetaEntry(spark, fs, rooted, new Path(metaDir, dirName))
   }
 
   /** Writer parallelism for a deletion-vector delta: enough tasks that a
@@ -5259,27 +5307,45 @@ object WarehouseFs {
                           keyCols: Seq[String], maxPointKeys: Int = 10000,
                           keepVersions: Int = 2,
                           refreshStats: Boolean = true): Unit = {
-    import org.apache.spark.sql.functions.{col, count, count_distinct, lit, when}
+    import org.apache.spark.sql.functions.col
     require(keyCols.nonEmpty, "applyChangeFeed: key columns required")
     require(feed.columns.contains("_change_type"),
       "applyChangeFeed: feed must carry _change_type (a changeFeed output)")
     val r = resolveVersion(spark, table, None).getOrElse(
       throw new IllegalArgumentException(
         s"applyChangeFeed: $table is not a versioned table"))
+    // the effective rows are evaluated ONCE: the cardinality pass, the
+    // key collect and the rewrite all read this persisted feed, so a feed
+    // derived by a join (syncToState's row diff) runs that join once, not
+    // once per reader
+    val effective = feed.filter(col("_change_type") =!= "update_preimage").persist()
+    try applyEffective(spark, effective, table, r, keyCols, maxPointKeys,
+      keepVersions, refreshStats)
+    finally { effective.unpersist(); () }
+  }
+
+  /** [[applyChangeFeedKeys]] over its persisted effective rows. */
+  private def applyEffective(spark: SparkSession, effective: DataFrame,
+                             table: String, r: ResolvedVersion,
+                             keyCols: Seq[String], maxPointKeys: Int,
+                             keepVersions: Int, refreshStats: Boolean): Unit = {
+    import org.apache.spark.sql.functions.{col, count, count_distinct, lit, when}
     val (fs, t) = fsFor(spark, table)
     val all = versionFiles(fs, t, r)
-    val effective = feed.filter(col("_change_type") =!= "update_preimage")
     // the stamp columns a feed rides with (`_commit_version`,
     // `_commit_timestamp`) are provenance, not content — drop them here
     // so any changeFeed / table_changes / graft-cdf output applies as-is
     val upserts = effective.filter(col("_change_type") =!= "delete")
       .drop("_change_type", "_commit_version", "_commit_timestamp")
     // one pass over the effective rows: cardinality + uniqueness (a key
-    // changing twice in one batch is not a version-pair feed)
+    // changing twice in one batch is not a version-pair feed) + the
+    // upsert count
     val allNonNull = keyCols.map(col(_).isNotNull).reduce(_ && _)
     val ks = effective.agg(count(lit(1)), count(when(allNonNull, lit(1))),
-      count_distinct(col(keyCols.head), keyCols.tail.map(col): _*)).head()
+      count_distinct(col(keyCols.head), keyCols.tail.map(col): _*),
+      count(when(col("_change_type") =!= "delete", lit(1)))).head()
     val (nRows, nKeys, nDistinct) = (ks.getLong(0), ks.getLong(1), ks.getLong(2))
+    val nUpserts = ks.getLong(3)
     if (nRows == 0L) return
     require(nKeys == nRows, s"applyChangeFeed: ${nRows - nKeys} null keys")
     require(nDistinct == nKeys,
@@ -5304,7 +5370,7 @@ object WarehouseFs {
         .join(affected, keyCols, "left_anti"))
     // stale-feed deletes for keys no file can hold, and nothing to
     // insert → provably no effect, no version bump
-    if (touched.isEmpty && upserts.isEmpty) return
+    if (touched.isEmpty && nUpserts == 0L) return
     val rewritten = survivors match {
       case Some(s) => s.select(tableCols.map(col): _*)
         .unionByName(upserts.select(tableCols.map(col): _*))
@@ -5328,9 +5394,9 @@ object WarehouseFs {
     * no-change sync provably commits nothing (no version bump — the
     * downstream commit-set feed is then scan-free empty). Keys must be
     * unique and non-null in BOTH states. The diff joins the table's
-    * current files against `newState` twice (cardinality pass +
-    * rewrite); persist `newState` first if deriving it is expensive.
-    * Returns true when a new version was committed. */
+    * current files against `newState` once: its rows persist for the
+    * apply's passes (cardinality, touched keys, rewrite). Returns true
+    * when a new version was committed. */
   def syncToState(newState: DataFrame, table: String, keyCols: Seq[String],
                   keepVersions: Int = 2, maxPointKeys: Int = 10000,
                   refreshStats: Boolean = true): Boolean = {
@@ -5592,6 +5658,15 @@ object WarehouseFs {
                     commit: Long): Option[(Long, Map[String, Long])] =
     commitAt(spark, warehouse, Some(commit))
 
+  /** Every retained commit, ascending: (commit number, table → pinned
+    * member version). One `listStatus` + one small-file read per
+    * retained commit. */
+  private[graft] def retainedCommits(spark: SparkSession, warehouse: String)
+      : Seq[(Long, Map[String, Long])] = {
+    val (fs, w) = fsFor(spark, warehouse)
+    commitNames(fs, w).map(readCommit(fs, w, warehouse, _))
+  }
+
   private def commitAt(spark: SparkSession, warehouse: String,
                        commit: Option[Long]): Option[(Long, Map[String, Long])] = {
     val (fs, w) = fsFor(spark, warehouse)
@@ -5600,18 +5675,21 @@ object WarehouseFs {
       case Some(c) => Some(vname(c)).filter(committed.contains)
       case None => committed.lastOption
     }
-    chosen.map { name =>
-      val in = fs.open(new Path(commitsDir(w), name))
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-                 finally in.close()
-      val pins = text.linesIterator.filter(_.contains("=")).map { line =>
-        val Array(t, pin) = line.trim.split("=", 2)
-        require(pin.startsWith("@"),
-          s"commit $name of $warehouse: '$line' is not a version pin")
-        t -> pin.substring(1).toLong
-      }.toMap
-      (name.toLong, pins)
-    }
+    chosen.map(readCommit(fs, w, warehouse, _))
+  }
+
+  private def readCommit(fs: FileSystem, w: Path, warehouse: String,
+                         name: String): (Long, Map[String, Long]) = {
+    val in = fs.open(new Path(commitsDir(w), name))
+    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+               finally in.close()
+    val pins = text.linesIterator.filter(_.contains("=")).map { line =>
+      val Array(t, pin) = line.trim.split("=", 2)
+      require(pin.startsWith("@"),
+        s"commit $name of $warehouse: '$line' is not a version pin")
+      t -> pin.substring(1).toLong
+    }.toMap
+    (name.toLong, pins)
   }
 
   /** One table out of the latest (or a retained older) commit set. None

@@ -449,25 +449,46 @@ class EtlPipelineSpec extends SparkSpec {
   }
   /** Failure contract: after a good night 1 (and `arm`, which may plant a
     * fault in the warehouse), night 2 from `feeds2` with `bank2` fails as
-    * `expected`, and leaves the commit, the fact's day partitions and the
-    * staging as they were, with no pool thread alive. Returns the
-    * warehouse. */
+    * `expected` ([[failAgain]]). Returns the warehouse. */
   private def failNight2(name: String, feeds2: String, bank2: String,
       arm: String => Unit = _ => ())(expected: Throwable => Boolean): String = {
     val (tmp, bank, _) = failureFixture
     val whFail = s"$tmp/wh_$name"
     EtlPipeline.run(spark, s"$tmp/feeds_1", whFail, Some(bank), Some(asOf(1)))
     arm(whFail)
-    val commitBefore = graft.sources.WarehouseFs.currentCommit(spark, whFail)
-    val e = intercept[Throwable](
-      EtlPipeline.run(spark, feeds2, whFail, Some(bank2), Some(asOf(2))))
+    failAgain(whFail, feeds2, bank2)(expected)
+    whFail
+  }
+  /** Night 2 from `feeds2` with `bank2` fails as `expected` on `whFail`,
+    * and leaves the commit, the fact's day partitions and the staging as
+    * they were, every served member's head reading what the commit pins,
+    * with no pool thread alive. */
+  private def failAgain(whFail: String, feeds2: String, bank2: String)(
+      expected: Throwable => Boolean): Unit = {
+    import graft.sources.WarehouseFs
+    val commitBefore = WarehouseFs.currentCommit(spark, whFail)
+    val e = intercept[Throwable](releasesWhatItHolds(
+      EtlPipeline.run(spark, feeds2, whFail, Some(bank2), Some(asOf(2)))))
     assert(expected(e), e)
-    assert(graft.sources.WarehouseFs.currentCommit(spark, whFail) === commitBefore)
+    assert(WarehouseFs.currentCommit(spark, whFail) === commitBefore)
     assert(factDays(whFail) === Seq("day=2021-03-01"))
     assert(!new java.io.File(s"$whFail/_work").exists())
     assert(!Thread.getAllStackTraces.keySet.asScala.exists(t =>
       t.isAlive && t.getName == EtlPipeline.BranchThread))
-    whFail
+    // the take-back restored every member the run committed: each one's
+    // latest version reads the rows the commit pins
+    for ((t, pin) <- commitBefore.get._2) {
+      val (head, pinned) = (WarehouseFs.readTable(spark, s"$whFail/$t").get,
+        WarehouseFs.readTableVersion(spark, s"$whFail/$t", pin).get)
+      assert(head.exceptAll(pinned).count() === 0 && pinned.exceptAll(head).count() === 0, t)
+    }
+  }
+  /** Runs `body` and asserts it left no RDD persisted: the run released
+    * its staged states, checkpoints and persisted feeds, also on failure. */
+  private def releasesWhatItHolds(body: => Unit): Unit = {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    try body
+    finally assert(spark.sparkContext.getPersistentRDDs.keySet === before)
   }
   private def factDays(whDir: String) = new java.io.File(s"$whDir/dwh_fact_transactions")
     .list().filter(_.startsWith("day=")).sorted.toSeq
@@ -514,19 +535,28 @@ class EtlPipelineSpec extends SparkSpec {
     assertRerunEqualsReference(whFail, night = 2)
   }
 
+  /** A stored CHECK that night 2's terminal versions violate: it fails the
+    * terminal history's member commit, while the other members commit
+    * beside it. */
+  private def terminalsCheck(wh: String) =
+    java.nio.file.Paths.get(wh, "dwh_dim_terminals_hist", "_meta", "props")
+  private def armTerminalsCheck(wh: String): Unit = {
+    import java.nio.file.{Files, StandardOpenOption}
+    val check = "check.before_night2 = effective_from < TIMESTAMP '2021-03-02 00:00:00'\n"
+    assert(!Files.exists(terminalsCheck(wh)))
+    Files.createDirectories(terminalsCheck(wh).getParent)
+    Files.write(terminalsCheck(wh), check.getBytes("UTF-8"), StandardOpenOption.CREATE_NEW)
+  }
+  private def violatesCheck(e: Throwable) = e.getMessage.contains("CHECK constraint violated")
+
   test("a member commit failing beside the mart's is taken back; a later re-run duplicates no event") {
     import graft.sources.WarehouseFs
-    import java.nio.file.{Files, Paths, StandardOpenOption}
+    import java.nio.file.Files
     val (tmp, bank, _) = failureFixture
     // a stored CHECK that night 2's terminal versions violate fails the
     // terminal history's member commit; the mart's commit runs beside it
-    def props(wh: String) = Paths.get(wh, "dwh_dim_terminals_hist", "_meta", "props")
-    val check = "check.before_night2 = effective_from < TIMESTAMP '2021-03-02 00:00:00'\n"
-    val whFail = failNight2("member_commit", s"$tmp/feeds_2", bank, arm = { wh =>
-      assert(!Files.exists(props(wh)))
-      Files.createDirectories(props(wh).getParent)
-      Files.write(props(wh), check.getBytes("UTF-8"), StandardOpenOption.CREATE_NEW)
-    })(_.getMessage.contains("CHECK constraint violated"))
+    val whFail = failNight2("member_commit", s"$tmp/feeds_2", bank,
+      arm = armTerminalsCheck)(violatesCheck)
     // the mart's member version landed, then a restore to the version it
     // committed onto took it back
     val mart = s"$whFail/rep_fraud"
@@ -535,9 +565,28 @@ class EtlPipelineSpec extends SparkSpec {
     val (head, pin) = (WarehouseFs.readTable(spark, mart).get,
       WarehouseFs.readTableVersion(spark, mart, pinned).get)
     assert(head.exceptAll(pin).count() === 0 && pin.exceptAll(head).count() === 0)
-    Files.delete(props(whFail))
+    Files.delete(terminalsCheck(whFail))
     // a re-run on a later day writes night 2's events under a new
     // report_dt: a kept mart version would carry them twice
     assertRerunEqualsReference(whFail, night = 3)
+  }
+
+  test("five failing nights in a row expire no pinned member version; a good re-run equals the reference") {
+    import graft.sources.WarehouseFs
+    val (tmp, bank, _) = failureFixture
+    // each failed night commits the mart and the blacklist, then takes
+    // both back: two versions per member per night, ten in all, past the
+    // eight a member keeps by count
+    val whFail = failNight2("five_nights", s"$tmp/feeds_2", bank,
+      arm = armTerminalsCheck)(violatesCheck)
+    for (_ <- 2 to 5) failAgain(whFail, s"$tmp/feeds_2", bank)(violatesCheck)
+    val mart = s"$whFail/rep_fraud"
+    val pinned = WarehouseFs.currentCommit(spark, whFail).get._2("rep_fraud")
+    assert(WarehouseFs.listVersions(spark, mart).max === pinned + 10)
+    // the served warehouse still resolves every table the commit pins
+    val (_, views) = GraftSession.attachWarehouse(spark, whFail).get
+    assert(views.toSet === Set("dwh_dim_terminals_hist", "dwh_fact_pssprt_blcklst", "rep_fraud"))
+    java.nio.file.Files.delete(terminalsCheck(whFail))
+    releasesWhatItHolds(assertRerunEqualsReference(whFail, night = 3))
   }
 }

@@ -88,6 +88,26 @@ class ReadMetadataMemoSpec extends SparkSpec {
     spark.sql(s"DROP TABLE graft.$t")
   }
 
+  test("the commit that writes a bloom entry memoizes it: the first point " +
+      "SELECT after a copy-on-write DELETE runs one Spark job") {
+    val t = fresh("memo_first")
+    spark.sql(s"CREATE TABLE graft.$t (id BIGINT, grp INT, v STRING) " +
+      "TBLPROPERTIES ('bloomIndexCols'='id', 'keyCols'='id')")
+    spark.sql(s"INSERT INTO graft.$t SELECT id, CAST(id % 10 AS INT), " +
+      s"CONCAT('v', id) FROM range(0, 20000, 1, 4)")
+    spark.sql(s"DELETE FROM graft.$t WHERE id = 7")
+    assert(isFileListVersion(s"$wh/$t"))
+    // no read of the new version ran before this one
+    val (rows, jobs) = jobsOf(
+      spark.sql(s"SELECT id, grp, v FROM graft.$t WHERE id = 12345")
+        .as[(Long, Int, String)].collect().toSeq)
+    assert(rows === Seq((12345L, 5, "v12345")))
+    // without the commit's memo fill the probe of the new entry paid a
+    // schema-inference job and a collect: 3 jobs
+    assert(jobs === 1, s"the first point read should start only its scan job, started $jobs")
+    spark.sql(s"DROP TABLE graft.$t")
+  }
+
   test("a float→double widen and a REINDEX swap the bloom entry: the memo " +
       "misses, and the point read finds its row (no false negative)") {
     val t = tmpTable()
