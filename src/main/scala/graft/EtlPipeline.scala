@@ -97,6 +97,9 @@ object EtlPipeline {
 
   /** Member versions a member keeps at least — covers the commit window. */
   private val MemberKeep = 8
+  /** Live mask rows past which the nightly fold compacts a member that
+    * sets no `compactMaskedRows` table property. */
+  private val MaskedRowsFoldDefault = 100000L
   /** Versions one run adds to a member at most: its commit, a fold and a
     * take-back. */
   private val RunVersions = 3
@@ -257,12 +260,11 @@ object EtlPipeline {
       // files) — every read then pays the per-row mask check for rows
       // that will never come back. When the live mask exceeds the
       // budget, fold now rather than waiting for the span rule.
-      val maskedMaxDefault = spark.conf
-        .getOption("spark.graft.etl.compactMaskedRows")
-        .map(_.toLong).getOrElse(100000L)
+      // The budget is the table's `compactMaskedRows` property, else
+      // MaskedRowsFoldDefault.
       def maskedMaxOf(n: String): Long = WarehouseFs
-        .storedCompactMaskedRows(spark, tablePath(n)) // per-table property
-        .getOrElse(maskedMaxDefault)
+        .storedCompactMaskedRows(spark, tablePath(n))
+        .getOrElse(MaskedRowsFoldDefault)
       val folded = for (n <- allServed if isVersioned(n)
            if WarehouseFs.versionSpanDirs(spark, tablePath(n)).exists(_ > spanMax) ||
              (WarehouseFs.hasDeletionVectors(spark, tablePath(n)) &&

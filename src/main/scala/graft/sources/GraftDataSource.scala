@@ -83,7 +83,8 @@ class GraftSource extends CreatableRelationProvider with StreamSinkProvider
     * I/O per trigger regardless of how many files the keys scatter
     * across, the right shape for high-frequency small batches; the
     * `compactMaskedRows` budget folds the accumulated masks on cadence.
-    * Update and Append modes both land as upserts.
+    * Update and Append modes both land as upserts; in either mode a
+    * micro-batch repeating a key fails and commits nothing.
     *
     * COMMITS ARE EXACTLY-ONCE when the sink has a durable writer
     * identity: each landed micro-batch stamps `txn:<batchId>:<appId>`

@@ -1835,8 +1835,7 @@ object WarehouseFs {
     storedProp(fs, t, "keepDays").flatMap(_.toDoubleOption)
 
   /** The table's own mask-row fold budget (`compactMaskedRows` table
-    * property), overriding the session-level
-    * `spark.graft.etl.compactMaskedRows` for this table. */
+    * property); without it the nightly fold uses its default budget. */
   def storedCompactMaskedRows(spark: SparkSession, table: String): Option[Long] = {
     val (fs, t) = fsFor(spark, table)
     storedProp(fs, t, "compactMaskedRows").flatMap(_.toLongOption)
@@ -2358,19 +2357,7 @@ object WarehouseFs {
       : (Seq[String], Seq[String]) = {
     val (fs, t) = fsFor(spark, table)
     val all = versionFiles(fs, t, r)
-    lazy val schemaV = versionSchema(spark, table, r)
-    var cand: Set[String] = all.toSet
-    point.foreach { case (c, vs) =>
-      if (vs.nonEmpty && !vs.contains(null)) {
-        candidatesRootRelative(spark, table, r, c, vs)
-          .foreach(cs => cand = cand.intersect(cs.toSet))
-        // a point predicate on a partition column prunes by path alone
-        if (all.nonEmpty) schemaV.find(_.name == c).foreach { f =>
-          cand = cand.intersect(
-            partitionCandidates(spark, table, all, c, vs, f.dataType).toSet)
-        }
-      }
-    }
+    var cand: Set[String] = pointCandidates(spark, table, r, all, point).toSet
     ranges.foreach { case (c, (lo, hi)) =>
       zoneCandidateFiles(spark, table, c, lo, hi, Some(r.version)).foreach {
         cs =>
@@ -3140,6 +3127,18 @@ object WarehouseFs {
         .withColumnRenamed("_row_id", RowIdCol)
     else readFilesGroupedDv(spark, table, touched, r)
 
+  /** [[alignToSchema]] for a rewrite that started from
+    * [[readTouchedForRewrite]]: on a tracked table its frame carries the
+    * row-id column, which aligns as a nullable long beside the table's
+    * columns. */
+  private def alignRewrite(df: DataFrame,
+                           schema: org.apache.spark.sql.types.StructType,
+                           ctx: String): DataFrame =
+    alignToSchema(df,
+      if (df.columns.contains(RowIdCol))
+        schema.add(RowIdCol, org.apache.spark.sql.types.LongType, nullable = true)
+      else schema, ctx)
+
   /** [[bloomCandidateFiles]] normalized to table-root-relative paths
     * (dir-format versions store them dir-relative). */
   private def candidatesRootRelative(spark: SparkSession, table: String,
@@ -3148,6 +3147,34 @@ object WarehouseFs {
     bloomCandidateFiles(spark, table, column, values, Some(r.version)).map {
       cs => if (r.isFileList) cs else cs.map(c => s"${r.dirName}/$c")
     }
+
+  /** The point-predicate candidate rule every consumer shares (pruned
+    * reads, the DML verbs, key-driven DML in the point regime, and the
+    * conflict probes against a CAS winner): of `files` (root-relative,
+    * of version `r`), those that might hold a row matching EVERY
+    * `column IN values` predicate — per predicate, `r`'s bloom
+    * candidates, intersected with the partition-path candidates when
+    * the column is a partition column. A predicate with no usable index,
+    * or with an empty or null-bearing value list, prunes nothing: the
+    * result is always a superset of the truly-matching files. */
+  private def pointCandidates(spark: SparkSession, table: String,
+                              r: ResolvedVersion, files: Seq[String],
+                              point: Map[String, Seq[Any]]): Seq[String] = {
+    lazy val schemaV = versionSchema(spark, table, r)
+    var cand: Set[String] = files.toSet
+    point.foreach { case (c, vs) =>
+      if (vs.nonEmpty && !vs.contains(null)) {
+        candidatesRootRelative(spark, table, r, c, vs)
+          .foreach(cs => cand = cand.intersect(cs.toSet))
+        // a point predicate on a partition column prunes by path alone
+        if (files.nonEmpty) schemaV.find(_.name == c).foreach { f =>
+          cand = cand.intersect(
+            partitionCandidates(spark, table, files, c, vs, f.dataType).toSet)
+        }
+      }
+    }
+    files.filter(cand)
+  }
 
   /** Above this many distinct source keys the BLOOM leg of
     * [[candidatesDistributed]] hands off to the key-column scan
@@ -3447,21 +3474,8 @@ object WarehouseFs {
                          point: Map[String, Seq[Any]])
       : Option[(ResolvedVersion, Seq[String]) => Seq[String]] =
     if (point.isEmpty) None
-    else Some { (winner, added) =>
-      var cand = added.toSet
-      val schemaV =
-        if (added.nonEmpty) Some(versionSchema(spark, table, winner)) else None
-      point.foreach { case (c, vs) =>
-        candidatesRootRelative(spark, table, winner, c, vs).foreach { cs =>
-          cand = cand.intersect(cs.toSet)
-        }
-        schemaV.flatMap(_.find(_.name == c)).foreach { f =>
-          val pc = partitionCandidates(spark, table, added, c, vs, f.dataType).toSet
-          if (pc.size < added.size) cand = cand.intersect(pc)
-        }
-      }
-      added.filter(cand)
-    }
+    else Some((winner, added) =>
+      pointCandidates(spark, table, winner, added, point))
 
   /** [[pointProbe]]'s sibling for source-keyed DML (merge/upsert): the
     * winner's added files that might hold any source key, through the
@@ -3809,12 +3823,12 @@ object WarehouseFs {
           fsi.exists(new Path(statsDir(t), r.dirName)))
     }
 
-  /** Delete every row whose `column` is one of `values`, rewriting ONLY
-    * the files that might contain them. A bloom-indexed table resolves
-    * the touched set from metadata; without an index every file is
-    * rewritten (still one pass — but index the column if deletes are
-    * routine). No matching file → provably nothing to delete → no new
-    * version at all. */
+  /** Delete every row whose `column` is one of `values` — the IN-list
+    * form of [[deleteMatching]], whose bloom/partition probes it drives
+    * with `values`: a bloom-indexed table rewrites ONLY the files that
+    * might contain them; without an index every file is rewritten (still
+    * one pass — but index the column if deletes are routine). No
+    * matching file → provably nothing to delete → no new version. */
   def deleteWhere(spark: SparkSession, table: String, column: String,
                   values: Seq[Any], keepVersions: Int = 2,
                   refreshStats: Boolean = true): Unit = {
@@ -3822,68 +3836,31 @@ object WarehouseFs {
     require(values.nonEmpty && !values.contains(null),
       "deleteWhere: keys must be non-empty and non-null (IN-semantics " +
         "never match null — a null-key purge would silently do nothing)")
-    val r = resolveVersion(spark, table, None).getOrElse(
-      throw new IllegalArgumentException(
-        s"deleteWhere: $table is not a versioned table"))
-    val (fs, t) = fsFor(spark, table)
-    val all = versionFiles(fs, t, r)
-    val bloomT = candidatesRootRelative(spark, table, r, column, values)
-      .getOrElse(all)
-    val touched = versionSchema(spark, table, r).find(_.name == column)
-      .map(f => partitionCandidates(spark, table, bloomT, column, values, f.dataType))
-      .getOrElse(bloomT)
-    if (touched.isEmpty) return
-    val rewritten = readTouchedForRewrite(spark, table, touched, r)
-      .filter(!col(column).isin(values: _*) || col(column).isNull)
-    publishCoW(spark, table, r, rewritten, touched,
-      all.diff(touched), keepVersions, refreshStats,
-      conflictProbe = pointProbe(spark, table, Map(column -> values)),
-      op = "delete")
+    deleteMatching(spark, table, col(column).isin(values: _*), keepVersions,
+      refreshStats, pruning = (Map(column -> values), Map.empty))
   }
 
   /** SQL-UPDATE form: for rows whose `column` is one of `values`, set
     * each `set` target column to its expression (evaluated on the old
     * row — `set` can reference any column); all other rows and files
-    * untouched. Same file-granular economics as [[deleteWhere]]. */
+    * untouched. The IN-list form of [[updateMatching]], with
+    * [[deleteWhere]]'s file-granular economics. */
   def updateWhere(spark: SparkSession, table: String, column: String,
                   values: Seq[Any], set: Map[String, Column],
                   keepVersions: Int = 2,
                   refreshStats: Boolean = true): Unit = {
-    import org.apache.spark.sql.functions.{col, when}
+    import org.apache.spark.sql.functions.col
     require(values.nonEmpty && !values.contains(null) && set.nonEmpty,
       "updateWhere: need non-null keys and at least one SET column")
-    val r = resolveVersion(spark, table, None).getOrElse(
-      throw new IllegalArgumentException(
-        s"updateWhere: $table is not a versioned table"))
-    val (fs, t) = fsFor(spark, table)
-    val all = versionFiles(fs, t, r)
-    val bloomT = candidatesRootRelative(spark, table, r, column, values)
-      .getOrElse(all)
-    val touched = versionSchema(spark, table, r).find(_.name == column)
-      .map(f => partitionCandidates(spark, table, bloomT, column, values, f.dataType))
-      .getOrElse(bloomT)
-    if (touched.isEmpty) return
-    val matched = col(column).isin(values: _*)
-    val base = readTouchedForRewrite(spark, table, touched, r)
-    require(set.keySet.subsetOf(base.columns.toSet),
-      s"updateWhere: unknown SET columns ${set.keySet -- base.columns}")
-    val rewritten = base.select(base.columns.toSeq.map { c =>
-      set.get(c) match {
-        case Some(e) => when(matched, e).otherwise(col(c)).as(c)
-        case None => col(c)
-      }
-    }: _*)
-    // a SET expression that widens the column's type would land a file
-    // physically incompatible with the carried ones
-    publishCoW(spark, table, r, alignToSchema(rewritten, base.schema, "updateWhere"),
-      touched, all.diff(touched), keepVersions, refreshStats,
-      conflictProbe = pointProbe(spark, table, Map(column -> values)),
-      op = "update")
+    updateMatching(spark, table, col(column).isin(values: _*), set,
+      keepVersions, refreshStats, pruning = (Map(column -> values), Map.empty))
   }
 
-  /** Upsert: rows of `updates` replace same-key rows and append new keys.
-    * Only files that might contain a matched key rewrite; pure inserts
-    * touch zero existing files.
+  /** Upsert: rows of `updates` replace same-key rows and append new keys
+    * in ONE copy-on-write commit — [[applyChangeFeedKeys]]' apply with
+    * every row an upsert. Only files that might contain a matched key
+    * rewrite; pure inserts touch zero existing files; an empty batch
+    * commits nothing.
     *
     * Two execution regimes, chosen by ONE aggregation pass over the
     * updates (the [[mergeInto]] discipline — no unconditional driver
@@ -3896,83 +3873,22 @@ object WarehouseFs {
     *     file-granular when the keys cluster — falling back to a full
     *     rewrite only on unindexed tables.
     * Matched-ness is decided by the same key anti-join either way, so
-    * the regimes are value-identical. */
+    * the regimes are value-identical. Keys must be non-null and unique
+    * within the batch: a key arriving twice has no defined winner, so
+    * such a batch is refused and the table stays unchanged. */
   def upsertRows(updates: DataFrame, table: String, keyCol: String,
                  keepVersions: Int = 2,
                  refreshStats: Boolean = true,
                  maxPointKeys: Int = 10000,
                  txn: Option[(String, Long)] = None): Unit = {
-    import org.apache.spark.sql.functions.{col, count, count_distinct, lit}
     val spark = updates.sparkSession
     val r = resolveVersion(spark, table, None).getOrElse(
       throw new IllegalArgumentException(
         s"upsertRows: $table is not a versioned table"))
-    // one pass: row count + null keys + the point-vs-bulk cardinality
-    val ks = updates.agg(count(lit(1)), count(col(keyCol)),
-      count_distinct(col(keyCol))).head()
-    val (nRows, nKeys, nDistinct) = (ks.getLong(0), ks.getLong(1), ks.getLong(2))
-    require(nRows > 0L && nKeys == nRows,
-      s"upsertRows: keys must be non-empty and non-null " +
-        s"($nRows rows, ${nRows - nKeys} null keys)")
-    val (fs, t) = fsFor(spark, table)
-    val all = versionFiles(fs, t, r)
-    val touched =
-      if (nDistinct <= maxPointKeys) {
-        val keys = updates.select(keyCol).distinct().collect().map(_.get(0)).toSeq
-        val bloomT = candidatesRootRelative(spark, table, r, keyCol, keys)
-          .getOrElse(all)
-        versionSchema(spark, table, r).find(_.name == keyCol)
-          .map(f => partitionCandidates(spark, table, bloomT, keyCol, keys, f.dataType))
-          .getOrElse(bloomT)
-      } else
-        candidatesDistributed(spark, table, r, Seq(keyCol), updates, nDistinct)
-          .getOrElse(all)
-    val survivors =
-      if (touched.isEmpty) None
-      else Some(readTouchedForRewrite(spark, table, touched, r)
-        .join(updates.select(keyCol).distinct(), Seq(keyCol), "left_anti"))
-    // schema parity is a hard error, not a silent drop: an updates frame
-    // with extra columns means the caller intended an evolution this path
-    // does not do (mixed-schema files would poison the manifest). The
-    // row-id carrier column is OURS, not the caller's — excluded from
-    // the parity check, null-filled on the updates side (fresh keys are
-    // new identities and derive from the new file's base)
-    val tableCols = survivors
-      .map(_.columns.toSeq.filterNot(_ == RowIdCol)).orElse(
-        if (all.nonEmpty) Some(versionSchema(spark, table, r).fieldNames.toSeq)
-        else None)
-    tableCols.foreach { cols =>
-      require(updates.columns.toSet == cols.toSet,
-        s"upsertRows: updates columns ${updates.columns.toSet} must equal " +
-          s"table columns ${cols.toSet} — evolve the schema with publishVersioned")
-    }
-    val rewritten = survivors match {
-      case Some(s) =>
-        val upd =
-          if (s.columns.contains(RowIdCol))
-            updates.withColumn(RowIdCol,
-              org.apache.spark.sql.functions.lit(null).cast("long"))
-          else updates
-        s.unionByName(upd.select(s.columns.map(col): _*))
-      case None =>
-        tableCols.fold(updates)(cols => updates.select(cols.map(col): _*))
-    }
-    val aligned =
-      if (all.nonEmpty) {
-        val schemaV = versionSchema(spark, table, r)
-        val alignTarget =
-          if (rewritten.columns.contains(RowIdCol))
-            org.apache.spark.sql.types.StructType(schemaV :+
-              org.apache.spark.sql.types.StructField(RowIdCol,
-                org.apache.spark.sql.types.LongType, nullable = true))
-          else schemaV
-        alignToSchema(rewritten, alignTarget, "upsertRows")
-      } else rewritten
-    publishCoW(spark, table, r, aligned, touched,
-      all.diff(touched), keepVersions, refreshStats,
-      conflictProbe =
-        keysProbe(spark, table, Seq(keyCol), updates, nDistinct, maxPointKeys),
-      op = "upsert", txn = txn)
+    applyEffective(spark,
+      updates.withColumn("_change_type", org.apache.spark.sql.functions.lit("insert")),
+      table, r, Seq(keyCol), maxPointKeys, keepVersions, refreshStats,
+      "upsertRows", op = "upsert", txn = txn)
   }
 
   /** Append-only commit: `rows` land as the new version's own files and
@@ -4220,7 +4136,7 @@ object WarehouseFs {
   }
 
   /** Delete every row satisfying an ARBITRARY predicate — the general
-    * form behind SQL `DELETE FROM t WHERE …` (the IN-list fast path is
+    * form behind SQL `DELETE FROM t WHERE …` (its IN-list form is
     * [[deleteWhere]]). File-granular when the caller supplies index
     * `pruning` probes extracted from the predicate (the graft catalog's
     * DML translation does — equality/IN conjuncts drive the bloom index
@@ -4249,8 +4165,8 @@ object WarehouseFs {
   }
 
   /** SET each target column for rows satisfying an ARBITRARY predicate —
-    * the general form behind SQL `UPDATE t SET … WHERE …` (the IN-list
-    * fast path is [[updateWhere]]). Same pruning contract as
+    * the general form behind SQL `UPDATE t SET … WHERE …` (its IN-list
+    * form is [[updateWhere]]). Same pruning contract as
     * [[deleteMatching]]; SET expressions evaluate on the OLD row and may
     * reference any column; a widening SET refuses loudly
     * ([[alignToSchema]]). */
@@ -4682,28 +4598,18 @@ object WarehouseFs {
     import org.apache.spark.sql.functions.col
     if (nDistinct <= maxPointKeys) {
       val keyRows = keySource.select(keyCols.map(col): _*).distinct().collect()
-      val schemaV = if (all.nonEmpty) Some(versionSchema(spark, table, r)) else None
-      var cand: Set[String] = all.toSet
-      var pruned = false
-      keyCols.zipWithIndex.foreach { case (c, i) =>
-        val vs = keyRows.map(_.get(i)).distinct.toSeq
-        candidatesRootRelative(spark, table, r, c, vs).foreach { cs =>
-          pruned = true; cand = cand.intersect(cs.toSet)
-        }
-        // a key column that is also a partition column prunes by PATH
-        schemaV.flatMap(_.find(_.name == c)).foreach { f =>
-          val pc = partitionCandidates(spark, table, all, c, vs, f.dataType).toSet
-          if (pc.size < all.size) { pruned = true; cand = cand.intersect(pc) }
-        }
-      }
-      if (pruned) all.filter(cand) else all
+      pointCandidates(spark, table, r, all, keyCols.zipWithIndex.map {
+        case (c, i) => c -> keyRows.map(_.get(i)).distinct.toSeq
+      }.toMap)
     } else
       candidatesDistributed(spark, table, r, keyCols, keySource, nDistinct)
         .getOrElse(all)
   }
 
-  /** Multi-clause MERGE — the lakehouse verb that subsumes
-    * [[upsertRows]] / [[deleteWhere]] / [[updateWhere]] in one commit:
+  /** Multi-clause MERGE — update, delete and insert clauses by key in
+    * one commit (a plain upsert is [[upsertRows]]; predicate deletes and
+    * updates are [[deleteMatching]] / [[updateMatching]]); on a tracked
+    * table matched and untouched rows keep their stable ids:
     * for each source row, a target row with the same key is updated
     * (`whenMatchedUpdate` SET expressions) or deleted
     * (`whenMatchedDelete` condition, checked first), and a source key
@@ -4836,9 +4742,11 @@ object WarehouseFs {
     val srcP = source.select(source.columns.map(c => col(c).as(s"src_$c")).toSeq: _*)
     val target =
       if (touched.isEmpty) None
-      else Some(readFilesGroupedDv(spark, table, touched, r))
+      else Some(readTouchedForRewrite(spark, table, touched, r))
 
     val rewrittenTarget = target.map { tg =>
+      // a tracked target's rows keep their stable ids through the rewrite
+      val carried = tg.columns.filter(_ == RowIdCol).map(col).toSeq
       val cond = keyCols.map(c => tg(c) === col(s"src_$c")).reduce(_ && _)
       val joined = tg.join(srcP, cond, "left_outer")
       // source keys are non-null, so a null src key component ⟺ no match
@@ -4852,7 +4760,7 @@ object WarehouseFs {
           case Some(e) => when(matched, e).otherwise(col(c)).as(c)
           case None => col(c)
         }
-      }: _*)
+      } ++ carried: _*)
     }
     // not-matched = anti-join against the touched files' keys: bloom
     // pruning has no false negatives, so any source key present anywhere
@@ -4867,14 +4775,16 @@ object WarehouseFs {
         Some(ins.select(tableCols.map(col): _*))
       }
     val rewritten = (rewrittenTarget, inserts) match {
-      case (Some(a), Some(b)) => a.unionByName(b)
+      // inserts are new identities: the union null-fills their row-id
+      // carrier, so their ids derive from the new file's base
+      case (Some(a), Some(b)) => a.unionByName(b, allowMissingColumns = true)
       case (Some(a), None) => a
       case (None, Some(b)) => b
       case (None, None) => return // no matched file, no inserts → no-op
     }
     // widened update expressions / narrower source types must not land a
     // file whose physical types differ from the carried files'
-    val aligned = tableSchema.fold(rewritten)(alignToSchema(rewritten, _, "mergeInto"))
+    val aligned = tableSchema.fold(rewritten)(alignRewrite(rewritten, _, "mergeInto"))
     publishCoW(spark, table, r, aligned, touched,
       all.diff(touched), keepVersions, refreshStats,
       conflictProbe =
@@ -5320,38 +5230,49 @@ object WarehouseFs {
     // once per reader
     val effective = feed.filter(col("_change_type") =!= "update_preimage").persist()
     try applyEffective(spark, effective, table, r, keyCols, maxPointKeys,
-      keepVersions, refreshStats)
+      keepVersions, refreshStats, "applyChangeFeed", op = "sync")
     finally { effective.unpersist(); () }
   }
 
-  /** [[applyChangeFeedKeys]] over its persisted effective rows. */
+  /** The keyed copy-on-write apply shared by [[applyChangeFeedKeys]]
+    * (over its persisted effective rows) and [[upsertRows]]: every row
+    * of `effective` upserts its key tuple, except rows whose
+    * `_change_type` is `delete`, which remove theirs. One
+    * audit pass (non-null, unique keys, the point-vs-bulk cardinality),
+    * the touched files of [[candidatesForKeys]], their survivors by a
+    * key anti-join (carrying stable row ids on a tracked table — the
+    * batch's rows are new identities), and one [[publishCoW]] whose
+    * conflict probe is [[keysProbe]]. `verb` names the caller in
+    * refusals; `op` is the history operation. */
   private def applyEffective(spark: SparkSession, effective: DataFrame,
                              table: String, r: ResolvedVersion,
                              keyCols: Seq[String], maxPointKeys: Int,
-                             keepVersions: Int, refreshStats: Boolean): Unit = {
+                             keepVersions: Int, refreshStats: Boolean,
+                             verb: String, op: String,
+                             txn: Option[(String, Long)] = None): Unit = {
     import org.apache.spark.sql.functions.{col, count, count_distinct, lit, when}
     val (fs, t) = fsFor(spark, table)
     val all = versionFiles(fs, t, r)
+    val isUpsert = col("_change_type") =!= "delete"
     // the stamp columns a feed rides with (`_commit_version`,
     // `_commit_timestamp`) are provenance, not content — drop them here
     // so any changeFeed / table_changes / graft-cdf output applies as-is
-    val upserts = effective.filter(col("_change_type") =!= "delete")
+    val upserts = effective.filter(isUpsert)
       .drop("_change_type", "_commit_version", "_commit_timestamp")
-    // one pass over the effective rows: cardinality + uniqueness (a key
-    // changing twice in one batch is not a version-pair feed) + the
+    // one pass over the effective rows: cardinality + uniqueness + the
     // upsert count
     val allNonNull = keyCols.map(col(_).isNotNull).reduce(_ && _)
     val ks = effective.agg(count(lit(1)), count(when(allNonNull, lit(1))),
       count_distinct(col(keyCols.head), keyCols.tail.map(col): _*),
-      count(when(col("_change_type") =!= "delete", lit(1)))).head()
+      count(when(isUpsert, lit(1)))).head()
     val (nRows, nKeys, nDistinct) = (ks.getLong(0), ks.getLong(1), ks.getLong(2))
     val nUpserts = ks.getLong(3)
     if (nRows == 0L) return
-    require(nKeys == nRows, s"applyChangeFeed: ${nRows - nKeys} null keys")
+    require(nKeys == nRows, s"$verb: ${nRows - nKeys} null keys")
     require(nDistinct == nKeys,
-      s"applyChangeFeed: keys must be unique across the batch " +
-        s"($nKeys changes, $nDistinct keys) — fold multi-version feeds " +
-        "version-by-version")
+      s"$verb: keys must be unique across the batch ($nKeys changes, " +
+        s"$nDistinct keys) — a key changing twice in one batch has no " +
+        "defined outcome (fold multi-version feeds version-by-version)")
 
     val affected = effective.select(keyCols.map(col): _*)
     val touched = candidatesForKeys(spark, table, r, all, keyCols, affected,
@@ -5361,25 +5282,31 @@ object WarehouseFs {
       else None
     val tableCols = tableSchema.map(_.fieldNames.toSeq)
       .getOrElse(upserts.columns.toSeq)
+    // schema parity is a hard error, not a silent drop: extra columns
+    // mean the caller intended an evolution this path does not do
+    // (mixed-schema files would poison the manifest)
     require(upserts.columns.toSet == tableCols.toSet,
-      s"applyChangeFeed: feed columns ${upserts.columns.toSet} must equal " +
-        s"replica columns ${tableCols.toSet}")
-    val survivors =
-      if (touched.isEmpty) None
-      else Some(readFilesGroupedDv(spark, table, touched, r)
-        .join(affected, keyCols, "left_anti"))
+      s"$verb: columns ${upserts.columns.toSet} must equal table columns " +
+        s"${tableCols.toSet} — evolve the schema with alterAddColumns/" +
+        "publishVersioned first")
     // stale-feed deletes for keys no file can hold, and nothing to
     // insert → provably no effect, no version bump
     if (touched.isEmpty && nUpserts == 0L) return
-    val rewritten = survivors match {
-      case Some(s) => s.select(tableCols.map(col): _*)
-        .unionByName(upserts.select(tableCols.map(col): _*))
-      case None => upserts.select(tableCols.map(col): _*)
-    }
-    val aligned = tableSchema.fold(rewritten)(
-      alignToSchema(rewritten, _, "applyChangeFeed"))
-    publishCoW(spark, table, r, aligned, touched,
-      all.diff(touched), keepVersions, refreshStats, op = "sync")
+    val fresh = upserts.select(tableCols.map(col): _*)
+    // on a tracked table the survivors carry their stable ids; the
+    // batch's rows are new identities, their carrier null-filled by the
+    // union so their ids derive from the new file's base
+    val rewritten =
+      if (touched.isEmpty) fresh
+      else readTouchedForRewrite(spark, table, touched, r)
+        .join(affected, keyCols, "left_anti")
+        .unionByName(fresh, allowMissingColumns = true)
+    publishCoW(spark, table, r,
+      tableSchema.fold(rewritten)(alignRewrite(rewritten, _, verb)),
+      touched, all.diff(touched), keepVersions, refreshStats,
+      conflictProbe =
+        keysProbe(spark, table, keyCols, affected, nDistinct, maxPointKeys),
+      op = op, txn = txn)
   }
 
   /** Reconcile a versioned table to a NEW full state in ONE

@@ -250,8 +250,8 @@ object EventStreams {
     *
     * The table must exist (bootstrap with
     * `publishVersioned(empty-or-initial, table, bloomIndexCols =
-    * Seq(key))`); updates should be unique per key within a batch, as in
-    * [[upsertSink]]. */
+    * Seq(key))`); updates must be unique per key within a batch — a
+    * micro-batch repeating a key fails and commits nothing. */
   def upsertSinkCoW(updates: DataFrame, table: String, key: String,
                     keepVersions: Int = 2,
                     txnAppId: Option[String] = None)

@@ -398,8 +398,10 @@ class EtlPipelineSpec extends SparkSpec {
     WarehouseFs.deleteMatchingVectors(spark, blPath,
       org.apache.spark.sql.functions.col(keyC) === vKey, keepVersions = 4)
     assert(WarehouseFs.hasDeletionVectors(spark, blPath))
-    withConf("spark.graft.etl.compactMaskedRows" -> "0",
-      "spark.graft.etl.compactSpanDirs" -> "64") {
+    graft.sources.GraftCatalog.writeProps(spark, blPath,
+      graft.sources.GraftCatalog.readProps(spark, blPath) +
+        ("compactMaskedRows" -> "0"))
+    withConf("spark.graft.etl.compactSpanDirs" -> "64") {
       EtlPipeline.run(spark, s"$tmp/feeds_3", whV, None, Some(asOf(3)))
     }
     assert(!WarehouseFs.hasDeletionVectors(spark, blPath),

@@ -210,4 +210,30 @@ class RowTrackingSpec extends SparkSpec {
       "the new image is a NEW identity (upsert replaces, not mutates)")
     assert(f.exists(r => r._2 == "insert" && r._3 == 95000L))
   }
+
+  test("keyed rewrites keep bystanders' identity: a 1-key MERGE, sync or " +
+      "feed apply emits only that key's rows") {
+    val verbs: Seq[(String, String => Unit)] = Seq(
+      "mergeIntoKeys" -> (t => WarehouseFs.mergeIntoKeys(
+        Seq((100L, "merged")).toDF("id", "payload"), t, Seq("id"),
+        whenMatchedUpdate = Map("payload" -> col("src_payload")),
+        whenNotMatchedInsert = false, keepVersions = 12)),
+      "syncToState" -> (t => WarehouseFs.syncToState(
+        WarehouseFs.readTable(spark, t).get.withColumn("payload",
+          when(col("id") === 100L, lit("synced")).otherwise(col("payload"))),
+        t, Seq("id"), keepVersions = 12)),
+      "applyChangeFeedKeys" -> (t => WarehouseFs.applyChangeFeedKeys(spark,
+        Seq((100L, 0L, "applied", "update_postimage"))
+          .toDF("id", "bucket", "payload", "_change_type"),
+        t, Seq("id"), keepVersions = 12)))
+    // key 100 shares its file with 999 rows that must emit nothing:
+    // per verb, (feed rows, feed rows of other keys)
+    val got = verbs.map { case (verb, change) =>
+      val t = tmpTable(); publishTracked(t)
+      change(t)
+      val f = feedRows(WarehouseFs.changeFeed(spark, t, Nil, 1L, 2L).get)
+      verb -> ((f.size, f.count(_._3 != 100L)))
+    }
+    assert(got.forall(_._2 == ((2, 0))), got.mkString(", "))
+  }
 }

@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 
 /** Model-based property test for copy-on-write DML: ANY sequence of
-  * deleteWhere / upsertRows / updateWhere applied to a bloom-indexed
+  * deleteWhere / upsertRows / updateWhere / mergeInto and the range
+  * forms of deleteMatching / updateMatching applied to a bloom-indexed
   * versioned table must match a driver-side Map model exactly — current
   * content, every retained version's time-travel read, and the change
   * feed between consecutive versions (whose application must reconstruct
@@ -22,6 +23,9 @@ class WarehouseDmlPropertySpec extends SparkSpec {
   /** Full MERGE: matched rows with v % 2 == parityDel delete, other
     * matched rows take the source value + 1, unmatched insert. */
   private case class Merge(rows: Seq[(Long, Long)], parityDel: Long) extends Op
+  /** `k BETWEEN lo AND hi`, zone-pruned: deleteMatching when `add` is
+    * None, else updateMatching setting v = v + add. */
+  private case class InRange(lo: Long, hi: Long, add: Option[Long]) extends Op
 
   private val keyGen = Gen.chooseNum(0L, 29L)
   private val opGen: Gen[Op] = Gen.oneOf(
@@ -32,7 +36,9 @@ class WarehouseDmlPropertySpec extends SparkSpec {
       .map { case (ks, a) => Update(ks.distinct, a) },
     Gen.zip(Gen.nonEmptyListOf(Gen.zip(keyGen, Gen.chooseNum(0L, 99L))),
       Gen.chooseNum(0L, 1L))
-      .map { case (rs, p) => Merge(rs.distinctBy(_._1), p) })
+      .map { case (rs, p) => Merge(rs.distinctBy(_._1), p) },
+    Gen.zip(keyGen, keyGen, Gen.option(Gen.chooseNum(1L, 9L)))
+      .map { case (a, b, add) => InRange(a min b, a max b, add) })
 
   private def tableState(t: String, version: Option[Long]): Map[Long, Long] = {
     val df = version.fold(WarehouseFs.readTable(spark, t).get)(v =>
@@ -85,6 +91,22 @@ class WarehouseDmlPropertySpec extends SparkSpec {
               }
             } ++ src.view.filterKeys(k => !model.contains(k))
               .toMap
+          case InRange(lo, hi, add) =>
+            val cond = col("k").between(lo, hi)
+            val pruning = (Map.empty[String, Seq[Any]],
+              Map[String, (Any, Any)]("k" -> ((lo, hi))))
+            add match {
+              case None =>
+                WarehouseFs.deleteMatching(spark, t, cond, keepVersions = 10,
+                  pruning = pruning)
+                model = model.filter { case (k, _) => k < lo || k > hi }
+              case Some(a) =>
+                WarehouseFs.updateMatching(spark, t, cond,
+                  Map("v" -> (col("v") + lit(a))), keepVersions = 10,
+                  pruning = pruning)
+                model = model.map { case (k, v) =>
+                  k -> (if (k >= lo && k <= hi) v + a else v) }
+            }
         }
         snapshots(WarehouseFs.currentVersion(spark, t).get._1) = model
       }

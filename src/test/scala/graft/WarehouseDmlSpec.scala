@@ -543,6 +543,20 @@ class WarehouseDmlSpec extends SparkSpec {
     assert(e.getMessage.contains("must equal"))
   }
 
+  test("upsertRows refuses a batch that repeats a key and leaves the table unchanged") {
+    val t = tmpTable()
+    WarehouseFs.publishVersioned(
+      Seq((1L, "a"), (7L, "b")).toDF("id", "v"), t, bloomIndexCols = Seq("id"))
+    val before = WarehouseFs.currentVersion(spark, t).get._1
+    val e = intercept[IllegalArgumentException] {
+      WarehouseFs.upsertRows(Seq((7L, "x"), (7L, "y")).toDF("id", "v"), t, "id")
+    }
+    assert(e.getMessage.contains("unique"))
+    assert(WarehouseFs.currentVersion(spark, t).get._1 === before)
+    assert(WarehouseFs.readTable(spark, t).get.filter(col("id") === 7L)
+      .select("v").as[String].collect() === Array("b"))
+  }
+
   test("a full delete of a partitioned table leaves a readable, DML-capable empty table") {
     val t = tmpTable()
     WarehouseFs.publishVersioned(
