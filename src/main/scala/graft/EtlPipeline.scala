@@ -240,18 +240,19 @@ object EtlPipeline {
     def commitAtomic(members: Seq[Future[_]]): Unit = {
       awaitAll(members)
       // maintenance cadence: a member whose CoW chain spans more data
-      // dirs than the budget folds back into ONE clean dir version
+      // dirs than the budget folds back into ONE full-publish version
       // (indexes/stats preserved, CAS-pinned) BEFORE the seal, so the
       // commit pins the compacted state. Nightly syncs add ~1 dir per
       // changed member per run; without this the read-side union grows
       // one parquet relation per night forever. Deletion-vector commits
       // count toward the same span (each adds its version's dir to the
-      // referenced set), and the fold reads MASKED and publishes a clean
-      // dir version — so accumulated DVs retire here too and the
-      // nightly path never serves a long mask chain. The fold rewrites the
-      // member once per ~spanMax nights — amortized O(table/spanMax)
-      // per night, and the next commit feed across it honestly scans
-      // both sides (nothing is shared with the pre-fold version).
+      // referenced set), and the fold reads MASKED and publishes a
+      // mask-free version of its own files — so accumulated DVs retire
+      // here too and the nightly path never serves a long mask chain.
+      // The fold rewrites the member once per ~spanMax nights —
+      // amortized O(table/spanMax) per night, and the next commit feed
+      // across it honestly scans both sides (nothing is shared with the
+      // pre-fold version).
       val spanMax = spark.conf.getOption("spark.graft.etl.compactSpanDirs")
         .map(_.toInt).getOrElse(16)
       // second trigger, same fold: accumulated MASK ROWS. A

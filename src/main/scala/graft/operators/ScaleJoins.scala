@@ -55,9 +55,9 @@ object ScaleJoins {
     // through the rename-swap publish
     val current = graft.sources.WarehouseFs.currentVersion(spark, dir)
     val dataDir = current.map(_._2).getOrElse(dir)
-    // resolved-version bytes: a copy-on-write (file-list) version spans
-    // dirs, and the table root also holds retained OLD versions — size
-    // from the manifest's own file set, not a directory walk
+    // resolved-version bytes: a copy-on-write version spans dirs, and
+    // the table root also holds retained OLD versions — size from the
+    // manifest's own file set, not a directory walk
     val bytes = graft.sources.WarehouseFs.currentVersionBytes(spark, dir)
       .getOrElse(graft.sources.WarehouseFs.parquetBytes(spark, dataDir))
     val parts = math.max(1, math.ceil(bytes / (targetMB * 1024.0 * 1024.0)).toInt)
@@ -67,9 +67,9 @@ object ScaleJoins {
     // partition key so each output file stays within one partition
     val partCols = graft.sources.WarehouseFs.listNames(spark, dataDir)
       .filter(_.contains("=")).map(_.takeWhile(_ != '=')).distinct
-    // readTable resolves BOTH manifest formats (a file-list version's
-    // carried files live outside dataDir) — compaction is also how a long
-    // DML chain folds back into one clean dir version
+    // readTable resolves the manifest's file list (carried files live
+    // outside dataDir) — compaction is also how a long DML chain folds
+    // back into one full-publish version
     val df = current match {
       case Some(_) =>
         // a tracked table's fold must carry row IDENTITY through the

@@ -17,8 +17,8 @@ import graft.sources.WarehouseFs
   *
   * {{{
   *   OPTIMIZE graft.t                    -- fold a CoW chain / small files
-  *                                          into one clean, size-targeted
-  *                                          dir version (indexes kept)
+  *                                          into one size-targeted full-
+  *                                          publish version (indexes kept)
   *   OPTIMIZE graft.t ZORDER BY (a, b)   -- same fold, rows re-clustered
   *                                          on the Morton curve; zone maps
   *                                          rebuilt over (a, b)
@@ -216,7 +216,8 @@ class GraftMaintenanceParser(delegate: ParserInterface) extends ParserInterface 
 
 /** `OPTIMIZE t` → [[graft.operators.ScaleJoins.compactParquet]]: reads
   * the resolved current version (carried CoW files included), rewrites
-  * it size-targeted into one clean dir version with the prior version's
+  * it size-targeted into one full-publish version (every file in its
+  * own dir, no mask) with the prior version's
   * bloom/zone/stats metadata preserved, CAS-pinned against concurrent
   * DML. `OPTIMIZE t ZORDER BY (c1[, c2…])` →
   * [[graft.operators.ScaleJoins.zOrderCompact]]: same rewrite, rows
@@ -367,7 +368,9 @@ case class GraftDescribeDetailCommand(path: String)
   * stamped with the VERB that committed it ([[WarehouseFs.commitOperation]]
   * — "full", "append", "delete", "merge", "restore", …; "-" for
   * pre-`op:` manifests): the provenance that answers "which commit was
-  * the bad DML" before a RESTORE. */
+  * the bad DML" before a RESTORE. `format` is always `file-list`, the
+  * one manifest format; the column stays so the result schema does not
+  * change. */
 case class GraftDescribeHistoryCommand(path: String)
     extends LeafRunnableCommand {
   override val output: Seq[Attribute] = Seq(

@@ -95,7 +95,7 @@ class GraftV2ScanBuilder(
   // zone-map rows. Sound only when provably exact:
   // [[graft.sources.WarehouseFs.exactCommittedRowCount]] /
   // [[graft.sources.WarehouseFs.exactCommittedMinMax]] restrict the
-  // answer to dir-format versions, whose metadata was derived from (or
+  // answer to full-publish versions, whose metadata was derived from (or
   // compaction-copied content-identical to) exactly their own files; a
   // CoW version may carry prior metadata forward (`refreshStats =
   // false`) and scans instead. Spark only attempts aggregate pushdown

@@ -55,19 +55,33 @@ object WarehouseFs {
       }
   }
 
-  /** Total bytes of `.parquet` files under `dir` (recursive). Drives
-    * compaction sizing; uses the FileSystem's remote iterator so object
-    * stores page the listing instead of materializing it. */
+  /** Total bytes of the visible `.parquet` files under `dir` (recursive,
+    * [[parquetFilesUnder]]). Drives compaction sizing. */
   def parquetBytes(spark: SparkSession, dir: String): Long = {
     val (fs, p) = fsFor(spark, dir)
-    if (!fs.exists(p)) return 0L
-    var total = 0L
-    val it = fs.listFiles(p, true)
+    if (!fs.exists(p)) 0L else parquetFilesUnder(fs, p, p).map(_._2).sum
+  }
+
+  /** The visible `.parquet` files below `dir` as (path relative to
+    * `root`, length), sorted by path — one recursive listing through the
+    * FileSystem's remote iterator, so object stores page it. Mirrors
+    * Spark's hidden-file convention: a path SEGMENT below `root` that
+    * starts with `_` or `.` (a `_temporary` / `.spark-staging` leftover
+    * of a crashed write, a sidecar dir) is invisible, as
+    * `spark.read.parquet` would skip it. */
+  private def parquetFilesUnder(fs: FileSystem, root: Path,
+                                dir: Path): Seq[(String, Long)] = {
+    val rootLen = fs.makeQualified(root).toUri.getPath.stripSuffix("/").length + 1
+    val out = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
+    val it = fs.listFiles(dir, true)
     while (it.hasNext) {
       val st = it.next()
-      if (st.getPath.getName.endsWith(".parquet")) total += st.getLen
+      val rel = fs.makeQualified(st.getPath).toUri.getPath.drop(rootLen)
+      if (rel.endsWith(".parquet") &&
+          !rel.split('/').exists(s => s.startsWith("_") || s.startsWith(".")))
+        out += ((rel, st.getLen))
     }
-    total
+    out.sortBy(_._1).toSeq
   }
 
   /** Delete `path` recursively if present. */
@@ -280,44 +294,36 @@ object WarehouseFs {
     commitGuard.commit(fs, dest, body.getBytes("UTF-8"))
   }
 
-  // Two manifest formats share the `_versions/NNNNNNNN` pointer file:
-  //   dir format   — content is one data-dir name ("v00000002"): the
-  //                  version is that whole directory (every publish here
-  //                  until r8).
-  //   file-list    — first line "files:v00000003" (the version's OWN data
-  //                  dir, where its rewritten files and its _stats/_index
-  //                  entries live), optionally one "partcols:a,b" header
-  //                  (the table's LOGICAL partition columns — survives an
-  //                  empty state whose flat schema file encodes no
-  //                  layout), then one TABLE-ROOT-RELATIVE file path per
-  //                  line, which may reference PRIOR version dirs.
-  //                  This is what makes copy-on-write DML O(touched
-  //                  files): untouched files are carried by reference.
-  // Both formats additionally carry a `ts:<epochMillis>` header line —
-  // the COMMIT INSTANT, written at seal time. Time-travel resolution
-  // (`TIMESTAMP AS OF`, DESCRIBE HISTORY) prefers it over the manifest
-  // file's modification time: mtime equals the commit instant only on
-  // the filesystem the writer sealed on, and a distcp / backup-restore /
-  // object-store migration rewrites mtimes — silently shifting every
-  // historical timestamp. Manifests from before this header fall back to
-  // mtime (legacy behavior). `ts:` lines never collide with content:
-  // data-dir names start with `v`, file paths with their version dir.
-  // COMPATIBILITY is one-way: this parser reads headerless (pre-`ts:`)
-  // manifests, but a pre-header parser misreads a `ts:` line as a
-  // carried file path (and can miss a following `partcols:` header) —
-  // in a mixed-version or external-reader deployment, upgrade every
-  // reader before the first header-writing writer runs.
+  // Every `_versions/NNNNNNNN` pointer file is a FILE LIST: first line
+  // "files:v00000003" (the version's OWN data dir, where its written
+  // files and its _stats/_index/_zones entries live), optionally one
+  // "partcols:a,b" header (the table's LOGICAL partition columns —
+  // survives an empty state whose flat schema file encodes no layout),
+  // then one TABLE-ROOT-RELATIVE file path per line. A full publish lists
+  // the files it just wrote into its own dir; a copy-on-write, restore or
+  // CONVERT version may reference PRIOR version dirs (or the table root),
+  // which is what makes DML O(touched files): untouched files are carried
+  // by reference. The manifest alone names the version's files — no
+  // reader lists a data dir. A body without a leading `files:` line
+  // (empty, or the pre-file-list single dir name) refuses loudly.
+  // A `ts:<epochMillis>` header line carries the COMMIT INSTANT, written
+  // at seal time. Time-travel resolution (`TIMESTAMP AS OF`, DESCRIBE
+  // HISTORY) prefers it over the manifest file's modification time:
+  // mtime equals the commit instant only on the filesystem the writer
+  // sealed on, and a distcp / backup-restore / object-store migration
+  // rewrites mtimes — silently shifting every historical timestamp.
+  // Manifests without it fall back to mtime. Header lines never collide
+  // with content: file paths start with their version dir.
   // A third header class, `dv:<root-relative sidecar parquet>`, lists the
   // version's deletion-vector DELTA files BY REFERENCE — the same
   // economics as the data-file list: each merge-on-read commit writes
   // only its OWN (file, pos) entries and carries every prior delta by
   // reference, so n scattered deletes cost O(own rows) sidecar I/O each
   // instead of an O(accumulated) single-task rewrite per commit. The
-  // version's mask is the union of the listed deltas; entries whose data
-  // file has since been rewritten are harmless (retired file names never
-  // recur, so they match nothing) and OPTIMIZE drops them at the fold.
-  // Pre-header versions keep the legacy whole-mask `_dv/<dirName>/` dir;
-  // the same one-way compatibility note as `ts:` applies.
+  // version's mask is exactly the union of the listed deltas; entries
+  // whose data file has since been rewritten are harmless (retired file
+  // names never recur, so they match nothing) and OPTIMIZE drops them at
+  // the fold. No `dv:` line means no mask.
   // A fourth header class carries ROW TRACKING (opt-in via the
   // `rowTracking` table property): `ridwm:<watermark>` plus one
   // `rid:<base>:<root-relative file>` line per file. A row's STABLE id
@@ -329,9 +335,9 @@ object WarehouseFs {
   // once and carried forever; the watermark only grows. This is what
   // lets a KEYLESS table serve change feeds, streaming reads, and
   // replica maintenance — the diff keys on `_row_id` instead of
-  // declared key columns. Same one-way reader compatibility as `ts:`.
+  // declared key columns.
   private final case class ResolvedVersion(version: Long, dirName: String,
-                                           files: Option[Seq[String]],
+                                           files: Seq[String],
                                            declaredPartCols: Seq[String] = Nil,
                                            commitTsMillis: Option[Long] = None,
                                            dvFiles: Seq[String] = Nil,
@@ -339,8 +345,15 @@ object WarehouseFs {
                                            txn: Option[(String, Long)] = None,
                                            rowIdBases: Map[String, Long] = Map.empty,
                                            rowIdWm: Option[Long] = None) {
-    def isFileList: Boolean = files.isDefined
     def rowTracked: Boolean = rowIdWm.isDefined
+    /** Does every listed file lie in this version's own nonce-free
+      * `vNNNNNNNN/` dir? Only a full publish ([[publishVersioned]])
+      * writes such a version: its metadata was derived from exactly
+      * these files. Restore, CONVERT, copy-on-write and mask versions
+      * carry files by reference or write attempt-unique dirs. */
+    def ownsAllFiles: Boolean =
+      files.nonEmpty && !dirName.contains('-') &&
+        files.forall(_.startsWith(dirName + "/"))
   }
 
   private def readManifest(fs: FileSystem, p: Path): String = {
@@ -349,15 +362,15 @@ object WarehouseFs {
     finally in.close()
   }
 
-  private def parseManifest(version: Long, content: String): ResolvedVersion = {
+  private def parseManifest(table: Path, version: Long,
+                            content: String): ResolvedVersion = {
     val all = content.split("\n").map(_.trim).filter(_.nonEmpty)
     val ts = all.find(_.startsWith("ts:"))
       .flatMap(_.stripPrefix("ts:").toLongOption)
     val dvRefs = all.filter(_.startsWith("dv:"))
       .map(_.stripPrefix("dv:")).toSeq
     // `op:` — the committing verb ("full", "append", "delete", …): the
-    // DESCRIBE HISTORY provenance RESTORE navigates by. Same one-way
-    // reader compatibility as the `ts:` header.
+    // DESCRIBE HISTORY provenance RESTORE navigates by.
     val op = all.find(_.startsWith("op:"))
       .map(_.stripPrefix("op:").trim).filter(_.nonEmpty)
     // `txn:<batchId>:<appId>` — the idempotent-writer stamp (Delta's
@@ -366,7 +379,7 @@ object WarehouseFs {
     // a crash between the manifest commit and the checkpoint commit is
     // SKIPPED instead of re-run (exactly-once commits, not
     // at-least-once). batchId leads so appIds may contain ':' (they are
-    // usually checkpoint paths). Same one-way reader compatibility.
+    // usually checkpoint paths).
     val txn = all.find(_.startsWith("txn:")).flatMap { l =>
       val v = l.stripPrefix("txn:")
       val cut = v.indexOf(':')
@@ -387,23 +400,25 @@ object WarehouseFs {
     val lines = all.filterNot(l =>
       l.startsWith("ts:") || l.startsWith("dv:") || l.startsWith("op:") ||
         l.startsWith("txn:") || l.startsWith("ridwm:") || l.startsWith("rid:"))
-    if (lines.head.startsWith("files:")) {
-      val partCols = lines.tail.headOption.filter(_.startsWith("partcols:"))
-        .map(_.stripPrefix("partcols:").split(',').map(_.trim)
-          .filter(_.nonEmpty).toSeq).getOrElse(Nil)
-      val fileLines = lines.tail.dropWhile(_.startsWith("partcols:"))
-      ResolvedVersion(version, lines.head.stripPrefix("files:"),
-        Some(fileLines.toSeq), partCols, ts, dvRefs, op, txn,
-        ridBases, ridWm)
-    } else
-      ResolvedVersion(version, lines.head, None, commitTsMillis = ts, op = op,
-        txn = txn, rowIdBases = ridBases, rowIdWm = ridWm)
+    val where = s"manifest ${vname(version)} of $table"
+    if (lines.isEmpty)
+      throw new IllegalStateException(s"$where is empty — no files: line")
+    if (!lines.head.startsWith("files:"))
+      throw new IllegalStateException(
+        s"$where is not a file list (first line '${lines.head}', the " +
+          "retired one-dir format) — re-publish the table")
+    val partCols = lines.tail.headOption.filter(_.startsWith("partcols:"))
+      .map(_.stripPrefix("partcols:").split(',').map(_.trim)
+        .filter(_.nonEmpty).toSeq).getOrElse(Nil)
+    val fileLines = lines.tail.dropWhile(_.startsWith("partcols:"))
+    ResolvedVersion(version, lines.head.stripPrefix("files:"),
+      fileLines.toSeq, partCols, ts, dvRefs, op, txn, ridBases, ridWm)
   }
 
-  /** Every data-dir name a manifest keeps alive: its own dir plus, for a
-    * file-list manifest, each referenced file's version dir. */
+  /** Every data-dir name a manifest keeps alive: its own dir plus each
+    * referenced file's version dir. */
   private def referencedDirs(r: ResolvedVersion): Set[String] =
-    Set(r.dirName) ++ r.files.getOrElse(Nil).map(f => f.takeWhile(_ != '/'))
+    Set(r.dirName) ++ r.files.map(f => f.takeWhile(_ != '/'))
 
   // Committed manifests are IMMUTABLE (tmp → rename, never rewritten in
   // place), so their parses memoize per (qualified table, version) —
@@ -432,40 +447,27 @@ object WarehouseFs {
       if (cached != null) cached
       else {
         if (manifestCache.size() > 16384) manifestCache.clear()
-        val r = parseManifest(v0, readManifest(fs, new Path(vd, vname(v0))))
+        val r = parseManifest(t, v0, readManifest(fs, new Path(vd, vname(v0))))
         manifestCache.put(key, r)
         r
       }
     }
   }
 
-  /** The DataFrame of a resolved version — file-list manifests read their
-    * explicit file set (spanning version dirs), dir manifests read the
-    * whole dir. Reads reconcile against the DECLARED schema when one
-    * exists ([[alterAddColumns]]): files written before an additive
-    * evolution surface the added columns as NULL. */
+  /** The DataFrame of a resolved version: its listed files (spanning
+    * version dirs) under its mask. Reads reconcile against the DECLARED
+    * schema when one exists ([[alterAddColumns]]): files written before
+    * an additive evolution surface the added columns as NULL. */
   private def readResolved(spark: SparkSession, table: String,
-                           r: ResolvedVersion): DataFrame = r.files match {
-    case Some(fl) => readFilesGroupedDv(spark, table, fl, r)
-    case None => readDirVersion(spark, table, r)
-  }
+                           r: ResolvedVersion): DataFrame =
+    readFilesGroupedDv(spark, table, r.files, r)
 
   /** [[readResolved]] WITHOUT the deletion-vector mask — for callers
     * that only need the physical schema (identical masked or not) and
     * must not pay the mask's metadata probe on every call. */
   private def readResolvedRaw(spark: SparkSession, table: String,
-                              r: ResolvedVersion): DataFrame = r.files match {
-    case Some(fl) => readFilesGrouped(spark, table, fl)
-    case None => readDirVersion(spark, table, r)
-  }
-
-  /** A dir-manifest version: its whole data dir (which never carries a
-    * deletion vector), reconciled to the declared schema. */
-  private def readDirVersion(spark: SparkSession, table: String,
-                             r: ResolvedVersion): DataFrame = {
-    val dir = s"$table/${r.dirName}"
-    reconcileDeclared(spark, table, readDataDir(spark, dir, Seq(dir)).drop(RowIdCol))
-  }
+                              r: ResolvedVersion): DataFrame =
+    readFilesGrouped(spark, table, r.files)
 
   // ---- read-side metadata memos ----------------------------------------
   //
@@ -725,7 +727,7 @@ object WarehouseFs {
   // schema lives in a declared-schema sidecar, committed files stay
   // as written, and every read path NULL-fills the columns a file
   // predates (the DSv2 scan gets this from parquet's own
-  // missing-column handling; the API paths from [[reconcileDeclared]]).
+  // missing-column handling; the API paths from [[reconcileTo]]).
   // The first full publishVersioned after an ALTER re-materializes the
   // whole schema in its own files and RETIRES the sidecar — files become
   // the complete truth again. RENAME and DROP ride the same sidecar as
@@ -930,19 +932,19 @@ object WarehouseFs {
     * physical one, the crash window between the retiring manifest
     * commit and the sidecar cleanup left a stale mapping behind — a
     * physical-domain scan would read the absent spelling as NULL.
-    * Decided from the DIR-format version's own parquet schema (one
-    * footer-class read; file-list versions keep the mapping — they
-    * predate any retirement). Fail-open: an unreadable schema keeps the
+    * Decided from a full-publish version's own parquet schema (one
+    * footer-class read; other versions keep the mapping — only a full
+    * publish retires one). Fail-open: an unreadable schema keeps the
     * mapping unchanged. */
   def pruneStaleMapping(spark: SparkSession, table: String,
                         version: Option[Long],
                         mapping: Map[String, String]): Map[String, String] =
     if (mapping.isEmpty) mapping
     else resolveVersion(spark, table, version) match {
-      case Some(r) if !r.isFileList =>
-        val dir = s"$table/${r.dirName}"
+      case Some(r) if r.ownsAllFiles =>
         val raw =
-          try readDataDir(spark, dir, Seq(dir)).schema.fieldNames.toSet
+          try readDataDir(spark, s"$table/${r.dirName}",
+            r.files.map(f => s"$table/$f")).schema.fieldNames.toSet
           catch { case _: Exception => return mapping }
         mapping.filter { case (l, p) => raw.contains(p) || !raw.contains(l) }
       case _ => mapping
@@ -1014,7 +1016,7 @@ object WarehouseFs {
     val r = resolveVersion(spark, table, None).getOrElse(
       throw new IllegalArgumentException(
         s"alterDropColumn: $table is not a versioned table"))
-    val partCols = partitionColsOf(versionFiles(fs, t, r)) ++
+    val partCols = partitionColsOf(r.files) ++
       r.declaredPartCols
     require(!partCols.contains(physicalColumn(spark, table, name)) &&
         !partCols.contains(name),
@@ -1261,10 +1263,6 @@ object WarehouseFs {
     }
   }
 
-  private def reconcileDeclared(spark: SparkSession, table: String,
-                                df: DataFrame): DataFrame =
-    reconcileTo(declaredSchema(spark, table), df)
-
   /** `ALTER TABLE … ADD COLUMNS` for versioned tables: append nullable
     * columns to the schema WITHOUT touching data — O(one sidecar
     * write) on a 100 TB table. Existing rows read NULL for the new
@@ -1492,13 +1490,6 @@ object WarehouseFs {
     buf.toSeq.sorted
   }
 
-  /** One row per RETAINED version, newest last — the `DESCRIBE HISTORY`
-    * surface: (version, commit time, data dir, dir|file-list manifest
-    * format, file count, resolved bytes). Commit time is the instant
-    * STORED in the manifest body at seal time (see the manifest format
-    * comment — mtime would not survive a distcp or backup-restore);
-    * pre-`ts:` manifests fall back to the file's modification time.
-    * Metadata-only: listings + manifest parses, no data I/O. */
   /** The verb that committed `version` ("full", "append", "delete",
     * "update", "merge", "upsert", "sync", "optimize",
     * "overwrite-partitions", "restore") — the provenance a RESTORE
@@ -1525,6 +1516,14 @@ object WarehouseFs {
     if (batches.isEmpty) None else Some(batches.max)
   }
 
+  /** One row per RETAINED version, newest last — the `DESCRIBE HISTORY`
+    * surface: (version, commit time, data dir, manifest format — always
+    * `file-list`, the one format; the column keeps the SQL schema
+    * stable — file count, resolved bytes). Commit time is the instant
+    * STORED in the manifest body at seal time (see the manifest format
+    * comment — mtime would not survive a distcp or backup-restore);
+    * pre-`ts:` manifests fall back to the file's modification time.
+    * Metadata-only: listings + manifest parses, no data I/O. */
   def describeHistory(spark: SparkSession, table: String)
       : Seq[(Long, java.sql.Timestamp, String, String, Int, Long, String, String)] = {
     val (fs, t) = fsFor(spark, table)
@@ -1532,14 +1531,13 @@ object WarehouseFs {
       resolveVersion(spark, table, Some(v)).map { r =>
         val committed = r.commitTsMillis.getOrElse(fs.getFileStatus(
           new Path(versionsDir(t), vname(v))).getModificationTime)
-        val files = versionFiles(fs, t, r)
-        val bytes = files.map(f => fs.getFileStatus(new Path(t, f)).getLen).sum
+        val bytes = r.files.map(f => fs.getFileStatus(new Path(t, f)).getLen).sum
         // the committing verb and idempotent-writer stamp ride along
         // from the SAME manifest parse — the SQL surface must not
         // re-resolve each version (that would be O(n²) metadata RPCs on
         // long histories)
         (v, new java.sql.Timestamp(committed), r.dirName,
-          if (r.isFileList) "file-list" else "dir", files.size, bytes,
+          "file-list", r.files.size, bytes,
           r.op.getOrElse("-"),
           r.txn.fold("-") { case (app, b) => s"$app#$b" })
       }
@@ -1565,7 +1563,7 @@ object WarehouseFs {
       .filter(st => ManifestName.matches(st.getPath.getName))
       .filter { st =>
         val v = st.getPath.getName.toLong
-        parseManifest(v, readManifest(fs, st.getPath)).commitTsMillis
+        parseManifest(t, v, readManifest(fs, st.getPath)).commitTsMillis
           .getOrElse(st.getModificationTime) <= tsMillis
       }
       .map(_.getPath.getName).sorted.lastOption.map(_.toLong)
@@ -1631,6 +1629,8 @@ object WarehouseFs {
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
       .parquet(new Path(t, dataName).toString)
     assertChecks(table, checkObs)
+    // the files just written ARE the version: the manifest lists them
+    val files = writtenFiles(fs, t, dataName, df, "publishVersioned")
     // phase 1b (stats): profile the version's OWN committed files — the
     // stats describe exactly the bytes the manifest will reference, and
     // approx NDV keeps the pass free of countDistinct's Expand blowup
@@ -1675,21 +1675,20 @@ object WarehouseFs {
     // gets a fresh base ABOVE the prior watermark (monotonic: ids never
     // recycle), except files whose rows carry the physical id column (a
     // tracked compaction/OPTIMIZE fold), which keep identity that way
+    val prior = resolveVersion(spark, table, None)
     val ridLines =
-      if (resolveVersion(spark, table, None).exists(_.rowTracked) ||
-          rowTrackingRequested(spark, table)) {
-        val newFiles = versionFiles(fs, t,
-          ResolvedVersion(next, dataName, None))
-        val priorWm = resolveVersion(spark, table, None)
-          .flatMap(_.rowIdWm).getOrElse(0L)
-        ridHeaders(fs, t, spark.sessionState.newHadoopConf(), newFiles,
-          Map.empty, priorWm)
-      } else Nil
+      if (prior.exists(_.rowTracked) || rowTrackingRequested(spark, table))
+        ridHeaders(fs, t, spark.sessionState.newHadoopConf(), files,
+          Map.empty, prior.flatMap(_.rowIdWm).getOrElse(0L))
+      else Nil
+    val partColsHeader =
+      if (partitionBy.nonEmpty) Seq(s"partcols:${partitionBy.mkString(",")}")
+      else Nil
     // the commit instant travels IN the manifest body — mtime survives
     // neither distcp nor backup-restore (see the format comment above)
     require(commitManifest(fs, new Path(vd, vname(next)),
-        (Seq(dataName, s"ts:${System.currentTimeMillis()}", s"op:$op") ++
-          ridLines).mkString("\n")),
+        (Seq(s"files:$dataName", s"ts:${System.currentTimeMillis()}",
+          s"op:$op") ++ ridLines ++ partColsHeader ++ files).mkString("\n")),
       s"publishVersioned: commit of version $next lost a concurrent race on $table")
     // a FULL publish materializes the complete schema in its own files —
     // a declared-schema sidecar ([[alterAddColumns]]) is now redundant
@@ -1751,22 +1750,12 @@ object WarehouseFs {
       s"convertToGraft: $dir is not a directory")
     require(!fs.exists(versionsDir(t)),
       s"convertToGraft: $dir is already a versioned graft table")
-    val rootLen = fs.makeQualified(t).toString.length + 1
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    val it = fs.listFiles(t, true)
-    while (it.hasNext) {
-      val st = it.next()
-      val rel = fs.makeQualified(st.getPath).toString.drop(rootLen)
-      val segs = rel.split('/')
-      val hidden = segs.exists(s => s.startsWith("_") || s.startsWith("."))
-      if (!hidden && rel.endsWith(".parquet")) {
-        require(!segs.init.exists(DataDirName.matches(_)),
-          s"convertToGraft: $dir already contains a managed version dir " +
-            s"(in $rel) — refusing to adopt a half-managed layout")
-        out += rel
-      }
+    val files = parquetFilesUnder(fs, t, t).map(_._1)
+    files.foreach { rel =>
+      require(!rel.split('/').init.exists(DataDirName.matches(_)),
+        s"convertToGraft: $dir already contains a managed version dir " +
+          s"(in $rel) — refusing to adopt a half-managed layout")
     }
-    val files = out.sorted.toSeq
     require(files.nonEmpty, s"convertToGraft: no parquet files under $dir")
     val layouts = files.map(_.split('/').dropRight(1)
       .filter(_.contains('=')).map(_.takeWhile(_ != '=')).toSeq).distinct
@@ -1983,7 +1972,7 @@ object WarehouseFs {
     val parseMemo = scala.collection.mutable.HashMap.empty[String, ResolvedVersion]
     def parseOf(st: org.apache.hadoop.fs.FileStatus): ResolvedVersion =
       parseMemo.getOrElseUpdate(st.getPath.getName,
-        parseManifest(st.getPath.getName.toLong, readManifest(fs, st.getPath)))
+        parseManifest(t, st.getPath.getName.toLong, readManifest(fs, st.getPath)))
     val (kept0, expired) = statuses.partition { st =>
       byCount(st.getPath.getName) || cutoff.exists(c =>
         parseOf(st).commitTsMillis.getOrElse(st.getModificationTime) >= c)
@@ -2043,8 +2032,8 @@ object WarehouseFs {
     // (`dv:` header), so a kept manifest keeps every referenced delta's
     // dir alive — exactly the data-file liveness rule (in-flight
     // attempt deltas spared for the same reason as data dirs)
-    val dvLive = owned ++ parsed.flatMap(_.dvFiles.flatMap(
-      _.split('/').drop(1).headOption))
+    val dvLive = parsed.flatMap(_.dvFiles.flatMap(
+      _.split('/').drop(1).headOption)).toSet
     if (fs.exists(dvDir(t)))
       fs.listStatus(dvDir(t))
         .filter(st => !st.getPath.getName.startsWith(".") &&
@@ -2186,32 +2175,22 @@ object WarehouseFs {
       require(logical.exists(_.name == c),
         s"REINDEX: $table has no column '$c'"))
     if (doBloom.nonEmpty || doZone.nonEmpty) {
-      // raw physical read of the resolved file set, with the `file`
-      // spelling the probes expect: table-root-relative for file-list
-      // manifests (CoW chains, CONVERTed adoptions), data-dir-relative
-      // for dir manifests. Masked rows may stay indexed — entries are
-      // supersets; the mask re-applies at read.
-      val (committed, rel) =
-        if (r.isFileList) {
-          val files = versionFiles(fs, t, r)
-          require(files.nonEmpty, s"REINDEX: $table@v${r.version} is empty")
-          val paths = files.map(f => new Path(t, f).toString)
-          // one single-file probe pins how THIS filesystem renders
-          // `_metadata.file_path` (scheme and slashing vary by FS) —
-          // the prefix then relativizes every row without string games
-          val probe = spark.read.parquet(paths.head)
-            .select(col("_metadata.file_path")).limit(1).head().getString(0)
-          require(probe.endsWith(files.head),
-            s"REINDEX: cannot relativize $probe against ${files.head}")
-          val prefixLen = probe.length - files.head.length
-          (spark.read.option("basePath", t.toString).parquet(paths: _*),
-            expr(s"substring(_metadata.file_path, ${prefixLen + 1})"))
-        } else {
-          val marker = s"/${r.dirName}/"
-          (spark.read.parquet(new Path(t, r.dirName).toString),
-            expr(s"substring(_metadata.file_path, " +
-              s"instr(_metadata.file_path, '$marker') + ${marker.length})"))
-        }
+      // raw physical read of the resolved file set, with the
+      // table-root-relative `file` spelling the probes expect. Masked
+      // rows may stay indexed — entries are supersets; the mask
+      // re-applies at read.
+      val files = r.files
+      require(files.nonEmpty, s"REINDEX: $table@v${r.version} is empty")
+      val paths = files.map(f => new Path(t, f).toString)
+      // one single-file probe pins how THIS filesystem renders
+      // `_metadata.file_path` (scheme and slashing vary by FS) — the
+      // prefix then relativizes every row without string games
+      val probe = spark.read.parquet(paths.head)
+        .select(col("_metadata.file_path")).limit(1).head().getString(0)
+      require(probe.endsWith(files.head),
+        s"REINDEX: cannot relativize $probe against ${files.head}")
+      val committed = spark.read.option("basePath", t.toString).parquet(paths: _*)
+      val rel = expr(s"substring(_metadata.file_path, ${probe.length - files.head.length + 1})")
       def physOf(c: String) = physicalColumn(spark, table, c)
       def declared(c: String) = logical.find(_.name == c).get.dataType
       // ONE aggregation pass builds both sketch families (the scan is
@@ -2266,17 +2245,19 @@ object WarehouseFs {
 
   /** One scan of the version's committed files → per-(file, column)
     * bitsets, wide layout: (file, b_<col1>, b_<col2>, …). `file` is
-    * stored RELATIVE to the version dir so a relocated/renamed table
-    * keeps its index valid. Values index by their canonical string cast
-    * (probe side must cast identically — [[bloomCandidateFiles]] does). */
+    * stored TABLE-ROOT-relative (the manifest's spelling) so a
+    * relocated/renamed table keeps its index valid. Values index by
+    * their canonical string cast (probe side must cast identically —
+    * [[bloomCandidateFiles]] does). */
   private def buildBloomIndex(spark: SparkSession, fs: FileSystem, t: Path,
                               dataName: String, cols: Seq[String]): Unit =
     writeMetaEntry(spark, fs,
       bloomIndexDf(spark, new Path(t, dataName).toString, dataName, cols),
       new Path(indexDir(t), dataName))
 
-  /** The per-(file, column) bitset relation over `dataPath`'s files,
-    * paths relativized to the `marker` dir segment.
+  /** The per-(file, column) bitset relation over the files of the data
+    * dir `dataPath` named `marker0`, spelled root-relative
+    * (`marker0/…`, [[rootRelFile]]).
     *
     * Values hash by their canonical string cast rendered under a PINNED
     * UTC time zone (`utc = true`, the default, marked by a constant
@@ -2292,12 +2273,10 @@ object WarehouseFs {
   private def bloomIndexDf(spark: SparkSession, dataPath: String,
                            marker0: String, cols: Seq[String],
                            utc: Boolean = true): DataFrame = {
-    import org.apache.spark.sql.functions.{col, expr, lit}
+    import org.apache.spark.sql.functions.{col, lit}
     import org.apache.spark.sql.graft.BloomExpressions.bloom_build
     val committed = readDataDir(spark, dataPath, Seq(dataPath))
-    val marker = s"/$marker0/"
-    val rel = expr(
-      s"substring(_metadata.file_path, instr(_metadata.file_path, '$marker') + ${marker.length})")
+    val rel = rootRelFile(marker0)
     def canon(c: String): Column =
       if (utc) castString(col(c), Some("UTC")) else col(c).cast("string")
     val aggs = cols.map(c =>
@@ -2310,35 +2289,20 @@ object WarehouseFs {
     if (utc) base.withColumn("__utc", lit(true)) else base
   }
 
+  /** `_metadata.file_path` of a row read from a file under the data
+    * dir `dir`, spelled table-root-relative (`dir/…`) — the spelling of
+    * manifest file lines, metadata entries and mask entries (URI-escaped,
+    * as `_metadata.file_path` renders it; see [[relUriSpelling]]). */
+  private def rootRelFile(dir: String): Column =
+    org.apache.spark.sql.functions.expr(
+      s"concat('$dir/', substring(_metadata.file_path, " +
+        s"instr(_metadata.file_path, '/$dir/') + ${dir.length + 2}))")
+
   /** A string cast evaluated under an EXPLICIT time zone (the
     * DataFrame-API `cast` always uses the session zone). */
   private def castString(c: Column, tz: Option[String]): Column =
     org.apache.spark.sql.graft.BloomExpressions.cast_string_tz(
       c, tz.getOrElse("UTC"))
-
-  /** Root-relative parquet files of a PLAIN (non-manifest) table dir.
-    * Mirrors Spark's hidden-file convention: any path SEGMENT starting
-    * with `_` or `.` (a `_temporary`/`.spark-staging` leftover of a
-    * crashed write, a `_SUCCESS`-adjacent sidecar dir) is invisible —
-    * `spark.read.parquet` would skip it, so a scan assembled from this
-    * list must too, or it would serve partial/duplicate rows. */
-  private def plainDirFiles(spark: SparkSession, table: String): Seq[String] = {
-    val (fs, t) = fsFor(spark, table)
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    val prefix = t.toString
-    val it = fs.listFiles(t, true)
-    while (it.hasNext) {
-      val st = it.next()
-      if (st.getPath.getName.endsWith(".parquet")) {
-        val full = st.getPath.toString
-        val rel = full.substring(full.indexOf(prefix) + prefix.length + 1)
-        val hidden = rel.split('/')
-          .exists(s => s.startsWith("_") || s.startsWith("."))
-        if (!hidden) out += rel
-      }
-    }
-    out.sorted.toSeq
-  }
 
   /** The candidate core shared by [[prunedFiles]] and the DML verbs
     * (which prune against the version they already resolved): ONE file
@@ -2355,15 +2319,11 @@ object WarehouseFs {
                              point: Map[String, Seq[Any]],
                              ranges: Map[String, (Any, Any)])
       : (Seq[String], Seq[String]) = {
-    val (fs, t) = fsFor(spark, table)
-    val all = versionFiles(fs, t, r)
+    val all = r.files
     var cand: Set[String] = pointCandidates(spark, table, r, all, point).toSet
     ranges.foreach { case (c, (lo, hi)) =>
-      zoneCandidateFiles(spark, table, c, lo, hi, Some(r.version)).foreach {
-        cs =>
-          val rooted = if (r.isFileList) cs else cs.map(f => s"${r.dirName}/$f")
-          cand = cand.intersect(rooted.toSet)
-      }
+      zoneCandidateFiles(spark, table, c, lo, hi, Some(r.version))
+        .foreach(cs => cand = cand.intersect(cs.toSet))
     }
     (all.filter(cand), all)
   }
@@ -2392,13 +2352,15 @@ object WarehouseFs {
         // already serves): no manifest → no indexes → no pruning, but
         // the scan must not fail where the schema resolution succeeded;
         // partition columns come straight off the root-relative layout —
-        // no version-dir segment to drop here
-        val files = plainDirFiles(spark, table)
-        val partCols = files.headOption.map {
-          _.split('/').dropRight(1).filter(_.contains('='))
-            .map(_.takeWhile(_ != '=')).toSeq
-        }.getOrElse(Nil)
-        Some((files.map(f => s"$table/$f"), partCols, files.size, files.size))
+        // no version-dir segment to drop here. Hidden segments stay
+        // hidden, as `spark.read.parquet` would skip them, or the scan
+        // would serve partial/duplicate rows
+        val files = {
+          val (fs, t) = fsFor(spark, table)
+          parquetFilesUnder(fs, t, t).map(_._1)
+        }
+        Some((files.map(f => s"$table/$f"), partitionColsOf(files),
+          files.size, files.size))
       case None => None
     }
 
@@ -2530,8 +2492,9 @@ object WarehouseFs {
     }: _*)
   }
 
-  /** The version-dir-relative files of `table`@`version` (current by
-    * default) that MIGHT contain one of `values` in `column`, per the
+  /** The files of `table`@`version` (current by default), always
+    * table-root-relative like the manifest's own file lines, that MIGHT
+    * contain one of `values` in `column`, per the
     * persisted bloom index. None = the version has no index over that
     * column (caller degrades to a full read, never fails); Some(files) is
     * a superset of the truly-matching files — bloom false positives cost
@@ -2568,15 +2531,14 @@ object WarehouseFs {
   // by (repartitionByRange / Z-order): then each file covers a narrow
   // slice and a range predicate keeps only its overlap.
 
-  /** Per-file min/max relation over `dataPath`'s files — wide layout
-    * (file, min_<c>, max_<c>, …), one scan for all columns. */
+  /** Per-file min/max relation over the files of the data dir
+    * `dataPath` named `marker0` — wide layout (file, min_<c>, max_<c>,
+    * …), one scan for all columns, `file` spelled root-relative. */
   private def zoneMapDf(spark: SparkSession, dataPath: String,
                         marker0: String, cols: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.functions.{col, expr, max, min}
+    import org.apache.spark.sql.functions.{col, max, min}
     val committed = readDataDir(spark, dataPath, Seq(dataPath))
-    val marker = s"/$marker0/"
-    val rel = expr(
-      s"substring(_metadata.file_path, instr(_metadata.file_path, '$marker') + ${marker.length})")
+    val rel = rootRelFile(marker0)
     val aggs = cols.flatMap(c =>
       Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c")))
     committed
@@ -2585,8 +2547,9 @@ object WarehouseFs {
       .agg(aggs.head, aggs.tail: _*)
   }
 
-  /** Files of `table`@`version` (current by default) whose [min, max]
-    * zone OVERLAPS [lo, hi] on `column` (inclusive; pass the column's
+  /** Files of `table`@`version` (current by default), always
+    * table-root-relative, whose [min, max] zone OVERLAPS [lo, hi] on
+    * `column` (inclusive; pass the column's
     * native type). None = no zone map over that column — degrade to a
     * full read. All-null files never match. */
   def zoneCandidateFiles(spark: SparkSession, table: String, column: String,
@@ -2705,34 +2668,12 @@ object WarehouseFs {
 
   /** The version's deletion-vector relation — (file STRING
     * table-root-relative, pos LONG parquet row index) — if it carries
-    * one: the union of the manifest's `dv:` delta references, or the
-    * legacy whole-mask `_dv/<dirName>/` dir for pre-header versions
-    * (then one `exists` probe). Dir-format versions never carry one
-    * (only DV/CoW commits write them). */
+    * one: the union of the manifest's `dv:` delta references. No `dv:`
+    * line, no mask — metadata-only, no probe. */
   private def readDvRelation(spark: SparkSession, table: String,
-                             r: ResolvedVersion): Option[DataFrame] = {
-    if (!r.isFileList) return None
-    if (r.dvFiles.nonEmpty)
-      return Some(spark.read.parquet(r.dvFiles.map(f => s"$table/$f"): _*))
-    val (fs, t) = fsFor(spark, table)
-    val p = new Path(dvDir(t), r.dirName)
-    if (fs.exists(p)) Some(spark.read.parquet(p.toString)) else None
-  }
-
-  /** The version's deletion-vector delta files as root-relative refs —
-    * what the NEXT commit carries by reference. Manifest header when
-    * present; a legacy whole-mask dir lists its parquet files. */
-  private def dvFileRefs(spark: SparkSession, table: String,
-                         r: ResolvedVersion): Seq[String] = {
-    if (!r.isFileList) return Nil
-    if (r.dvFiles.nonEmpty) return r.dvFiles
-    val (fs, t) = fsFor(spark, table)
-    val p = new Path(dvDir(t), r.dirName)
-    if (!fs.exists(p)) Nil
-    else fs.listStatus(p).map(_.getPath.getName)
-      .filter(_.endsWith(".parquet")).sorted
-      .map(n => s"_dv/${r.dirName}/$n").toSeq
-  }
+                             r: ResolvedVersion): Option[DataFrame] =
+    if (r.dvFiles.isEmpty) None
+    else Some(spark.read.parquet(r.dvFiles.map(f => s"$table/$f"): _*))
 
   /** Does `table`@`version` (current by default) mask rows through a
     * deletion vector? Metadata-only, and memoized per (table, version)
@@ -2748,18 +2689,11 @@ object WarehouseFs {
       else {
         dvProbeCount.incrementAndGet()
         if (dvPresenceCache.size() > 65536) dvPresenceCache.clear()
-        val v = readDvRelationExists(spark, table, r)
+        val v = r.dvFiles.nonEmpty
         dvPresenceCache.put(key, java.lang.Boolean.valueOf(v))
         v
       }
     }
-
-  private def readDvRelationExists(spark: SparkSession, table: String,
-                                   r: ResolvedVersion): Boolean =
-    r.isFileList && (r.dvFiles.nonEmpty || {
-      val (fs, t) = fsFor(spark, table)
-      fs.exists(new Path(dvDir(t), r.dirName))
-    })
 
   /** Per-file masked row positions for a scan over `relFiles` (manifest
     * spelling, table-root-relative) of `table`@`version`: keys are the
@@ -2806,7 +2740,7 @@ object WarehouseFs {
     * scan; the fold consolidates). Metadata-only. */
   def deletionVectorDeltaFiles(spark: SparkSession, table: String): Int =
     resolveVersion(spark, table, None)
-      .map(dvFileRefs(spark, table, _).size).getOrElse(0)
+      .map(_.dvFiles.size).getOrElse(0)
 
   /** Rows masked by the CURRENT version's deletion vector (0 when
     * none) — the OPTIMIZE-cadence signal beside [[versionSpanDirs]].
@@ -2815,8 +2749,7 @@ object WarehouseFs {
   def deletionVectorRows(spark: SparkSession, table: String): Long =
     resolveVersion(spark, table, None).flatMap { r =>
       readDvRelation(spark, table, r).map { dv =>
-        val (fs, t) = fsFor(spark, table)
-        val live = versionFiles(fs, t, r).map(relUriSpelling).toSet
+        val live = r.files.map(relUriSpelling).toSet
         dv.groupBy("file").count().collect()
           .filter(e => live.contains(e.getString(0)))
           .map(_.getLong(1)).sum
@@ -2845,12 +2778,9 @@ object WarehouseFs {
       require(DataDirName.matches(dir),
         s"taggedMaskedRead: unmanaged file group '$dir' cannot carry a " +
           "deletion-vector mask (internal invariant)")
-      val marker = s"/$dir/"
-      val rel = expr(s"concat('$dir/', substring(_metadata.file_path, " +
-        s"instr(_metadata.file_path, '$marker') + ${marker.length}))")
       val raw = readDataDir(spark, s"$table/$dir", fs0.map(f => s"$table/$f"))
         .drop(RowIdCol)
-      val tagged = raw.select(Seq(rel.as("__dv_file"),
+      val tagged = raw.select(Seq(rootRelFile(dir).as("__dv_file"),
         expr("_metadata.row_index").as("__dv_pos")) ++
         raw.columns.map(col).toSeq: _*)
       val masked =
@@ -2938,23 +2868,6 @@ object WarehouseFs {
   // resolve their touched files DISTRIBUTIVELY against the persisted
   // bloom index (candidatesDistributed) — file-granular either way.
   // Keys must be non-null.
-
-  /** Root-relative file set of a resolved version. */
-  private def versionFiles(fs: FileSystem, t: Path,
-                           r: ResolvedVersion): Seq[String] =
-    r.files.getOrElse {
-      val base = new Path(t, r.dirName)
-      val out = scala.collection.mutable.ArrayBuffer.empty[String]
-      val it = fs.listFiles(base, true)
-      while (it.hasNext) {
-        val st = it.next()
-        if (st.getPath.getName.endsWith(".parquet")) {
-          val full = st.getPath.toString
-          out += full.substring(full.indexOf(s"/${r.dirName}/") + 1)
-        }
-      }
-      out.sorted.toSeq
-    }
 
   // ---- row tracking (stable per-row identity without key columns) ------
   //
@@ -3060,8 +2973,7 @@ object WarehouseFs {
             s"readFilesRowId: cannot relativize $probe against ${fs0.head}")
           expr(s"substring(_metadata.file_path, " +
             s"${probe.length - fs0.head.length + 1})")
-        } else expr(s"concat('$dir/', substring(_metadata.file_path, " +
-          s"instr(_metadata.file_path, '/$dir/') + ${dir.length + 2}))")
+        } else rootRelFile(dir)
       val phys: Column =
         if (raw.columns.contains(RowIdCol)) col(RowIdCol)
         else lit(null).cast("long")
@@ -3109,10 +3021,8 @@ object WarehouseFs {
     * with the enabling step. */
   def readWithRowId(spark: SparkSession, table: String,
                     version: Option[Long] = None): Option[DataFrame] =
-    resolveVersion(spark, table, version).map { r =>
-      val (fs, t) = fsFor(spark, table)
-      readFilesRowId(spark, table, versionFiles(fs, t, r), r)
-    }
+    resolveVersion(spark, table, version)
+      .map(r => readFilesRowId(spark, table, r.files, r))
 
   /** The touched-file read a CoW rewrite starts from: on a TRACKED
     * table, survivors carry their stable id in the physical carrier
@@ -3139,15 +3049,6 @@ object WarehouseFs {
         schema.add(RowIdCol, org.apache.spark.sql.types.LongType, nullable = true)
       else schema, ctx)
 
-  /** [[bloomCandidateFiles]] normalized to table-root-relative paths
-    * (dir-format versions store them dir-relative). */
-  private def candidatesRootRelative(spark: SparkSession, table: String,
-                                     r: ResolvedVersion, column: String,
-                                     values: Seq[Any]): Option[Seq[String]] =
-    bloomCandidateFiles(spark, table, column, values, Some(r.version)).map {
-      cs => if (r.isFileList) cs else cs.map(c => s"${r.dirName}/$c")
-    }
-
   /** The point-predicate candidate rule every consumer shares (pruned
     * reads, the DML verbs, key-driven DML in the point regime, and the
     * conflict probes against a CAS winner): of `files` (root-relative,
@@ -3164,7 +3065,7 @@ object WarehouseFs {
     var cand: Set[String] = files.toSet
     point.foreach { case (c, vs) =>
       if (vs.nonEmpty && !vs.contains(null)) {
-        candidatesRootRelative(spark, table, r, c, vs)
+        bloomCandidateFiles(spark, table, c, vs, Some(r.version))
           .foreach(cs => cand = cand.intersect(cs.toSet))
         // a point predicate on a partition column prunes by path alone
         if (files.nonEmpty) schemaV.find(_.name == c).foreach { f =>
@@ -3204,7 +3105,7 @@ object WarehouseFs {
                                  keyCols: Seq[String], source: DataFrame,
                                  schema: org.apache.spark.sql.types.StructType,
                                  within: Seq[String]): Seq[String] = {
-    import org.apache.spark.sql.functions.{col, expr}
+    import org.apache.spark.sql.functions.col
     // probes cast to the table's stored types (the join must compare in
     // the table's domain — see [[sourceKeyProbes]]); no pre-distinct:
     // the semi join dedups without an extra shuffle
@@ -3213,9 +3114,6 @@ object WarehouseFs {
     }: _*).filter(keyCols.map(col(_).isNotNull).reduce(_ && _))
     val taggedGroups = within.groupBy(_.takeWhile(_ != '/')).toSeq.sortBy(_._1)
       .flatMap { case (dir, fs0) =>
-        val marker = s"/$dir/"
-        val rel = expr(s"concat('$dir/', substring(_metadata.file_path, " +
-          s"instr(_metadata.file_path, '$marker') + ${marker.length}))")
         val paths = fs0.map(f => s"$table/$f")
         val raw =
           if (DataDirName.matches(dir)) readDataDir(spark, s"$table/$dir", paths)
@@ -3226,7 +3124,7 @@ object WarehouseFs {
         // is provably untouched (selecting the column would instead die
         // with an AnalysisException on the pre-ALTER footers)
         if (!keyCols.forall(raw.columns.contains)) None
-        else Some(raw.select(rel.as("__file") +: keyCols.map(col): _*))
+        else Some(raw.select(rootRelFile(dir).as("__file") +: keyCols.map(col): _*))
       }
     if (taggedGroups.isEmpty) return Seq.empty
     taggedGroups.reduce(_ unionByName _)
@@ -3305,12 +3203,8 @@ object WarehouseFs {
     val perCol = bloomSets ++ zoneSets
     if (perCol.isEmpty && !bloomDeferred) None
     else {
-      val metaCand: Seq[String] = perCol.reduceOption(_ intersect _) match {
-        case Some(files) =>
-          (if (r.isFileList) files
-           else files.map(f => s"${r.dirName}/$f")).toSeq
-        case None => versionFiles(fs, t, r) // bloom deferred, no zone leg
-      }
+      val metaCand: Seq[String] = perCol.reduceOption(_ intersect _)
+        .fold(r.files)(_.toSeq) // None: bloom deferred, no zone leg
       val files =
         if (bloomDeferred && metaCand.nonEmpty)
           touchedFilesByScan(spark, table, keyCols, source, schemaV, metaCand)
@@ -3340,8 +3234,8 @@ object WarehouseFs {
     * the prior version had one) is maintained at O(rewritten). */
   /** Carry one per-file metadata relation (bloom index / zone map)
     * across a CoW commit: prior rows for carried files are re-used
-    * as-is (root-relativized once for dir-format priors), only the new
-    * dir is re-derived — O(rewritten), the same economics as the data.
+    * as-is, only the new dir is re-derived — O(rewritten), the same
+    * economics as the data.
     * `colPrefix` identifies the metadata's value columns (`b_`/`min_`),
     * from which the indexed column set is recovered. */
   private def carryFileMetadata(spark: SparkSession, fs: FileSystem,
@@ -3350,21 +3244,17 @@ object WarehouseFs {
                                 colPrefix: String,
                                 rebuild: (Seq[String], Boolean) => DataFrame)
       : Unit = {
-    import org.apache.spark.sql.functions.{col, concat, lit}
+    import org.apache.spark.sql.functions.col
     val priorMeta = new Path(metaDir, prior.dirName)
     if (!fs.exists(priorMeta)) return
     val prev = readMetaEntry(spark, fs, priorMeta)
-    val prevRooted =
-      if (prior.isFileList) prev
-      else prev.withColumn("file", concat(lit(s"${prior.dirName}/"), col("file")))
     val cols = prev.columns.filter(_.startsWith(colPrefix))
       .map(_.stripPrefix(colPrefix)).toSeq
     // new rows must hash under the PRIOR's canonicalization (UTC-marked
     // vs legacy session-tz) — a mixed-convention index would probe wrong
     val rebuilt = rebuild(cols, prev.columns.contains("__utc"))
-      .withColumn("file", concat(lit(s"$dirName/"), col("file")))
     writeMetaEntry(spark, fs,
-      prevRooted.filter(col("file").isInCollection(carried)).unionByName(rebuilt),
+      prev.filter(col("file").isInCollection(carried)).unionByName(rebuilt),
       new Path(metaDir, dirName))
   }
 
@@ -3415,21 +3305,20 @@ object WarehouseFs {
                               blindAppend: Boolean = false)
       : ResolvedVersion = {
     import org.apache.spark.sql.functions.{col => colF}
-    val (fs, t) = fsFor(spark, table)
     def refuse(why: String): Nothing = throw new IllegalStateException(
       s"$verb: concurrent write conflict on $table — $why; " +
         "re-run the DML against the current version")
     val winner = resolveVersion(spark, table, None).getOrElse(
       refuse("the table vanished mid-commit"))
-    val winnerFiles = versionFiles(fs, t, winner)
+    val winnerFiles = winner.files
     val winnerSet = winnerFiles.toSet
     val gone = readFiles.filterNot(winnerSet)
     if (gone.nonEmpty)
       refuse(s"the competing commit rewrote ${gone.size} file(s) this DML " +
         s"read (e.g. ${gone.head})")
     if (checkMask && readFiles.nonEmpty) {
-      val baseRefs = dvFileRefs(spark, table, base)
-      val winnerRefs = dvFileRefs(spark, table, winner)
+      val baseRefs = base.dvFiles
+      val winnerRefs = winner.dvFiles
       if (winnerRefs != baseRefs) {
         val readUri = readFiles.map(relUriSpelling)
         def maskOn(refs: Seq[String]): Option[DataFrame] =
@@ -3450,7 +3339,7 @@ object WarehouseFs {
     }
     if (versionSchema(spark, table, base) != versionSchema(spark, table, winner))
       refuse("the table schema changed underneath (ALTER race)")
-    val baseSet = versionFiles(fs, t, base).toSet
+    val baseSet = base.files.toSet
     val added = winnerFiles.filterNot(baseSet)
     // a BLIND append read nothing, so files the winner added cannot
     // invalidate it — concurrent appends always compose (the one
@@ -3499,9 +3388,9 @@ object WarehouseFs {
     * provably disjoint ([[arbitrateRebase]]) and fails loudly on true
     * overlap, its whole dir an orphan the next GC removes (the
     * lock-free optimistic-commit discipline of a transaction log;
-    * dir-format [[publishVersioned]] keeps deterministic names because
-    * its retry-reclaim semantics depend on them — serialize
-    * full-rewrite publishers externally). */
+    * a full [[publishVersioned]] keeps deterministic names because its
+    * retry-reclaim semantics depend on them — serialize full-rewrite
+    * publishers externally). */
   /** Last-moment manifest honesty check, shared by every file-list
     * commit tail: immediately before [[commitManifest]], verify every
     * DIRECTORY the manifest body is about to reference (its own data
@@ -3524,6 +3413,30 @@ object WarehouseFs {
         s"$verb: referenced dir $d was garbage-collected (a concurrent " +
           s"commit or VACUUM expired it) before this commit sealed on " +
           s"${t} — re-run against the current state")
+    }
+  }
+
+  /** The files a version writer just wrote into its dir `dirName`,
+    * root-relative — the manifest's own file lines. A DML that removed
+    * every row of a PARTITIONED table, or a partitioned full publish of
+    * zero rows, writes no part file at all (dynamic-partition writers
+    * create files lazily), and an empty file list would leave the table
+    * schema-less and unreadable. The empty state is then re-written
+    * FLAT from `frame`'s schema: a single-directory writer emits one
+    * schema-bearing empty file (partition columns persist as ordinary
+    * columns, so the logical schema survives; the layout survives via
+    * the manifest's `partcols:` header, which the next non-empty publish
+    * reapplies). */
+  private def writtenFiles(fs: FileSystem, t: Path, dirName: String,
+                           frame: DataFrame, verb: String): Seq[String] = {
+    val dir = new Path(t, dirName)
+    val files = parquetFilesUnder(fs, t, dir).map(_._1)
+    if (files.nonEmpty) files
+    else {
+      frame.limit(0).coalesce(1).write.mode(SaveMode.Overwrite).parquet(dir.toString)
+      val flat = parquetFilesUnder(fs, t, dir).map(_._1)
+      require(flat.nonEmpty, s"$verb: empty-state write of $t produced no schema file")
+      flat
     }
   }
 
@@ -3581,36 +3494,9 @@ object WarehouseFs {
     (if (partCols.nonEmpty) writer.partitionBy(partCols: _*) else writer)
       .parquet(new Path(t, dirName).toString)
     assertChecks(table, checkObs)
-    def listNew(): Seq[String] = {
-      val base = new Path(t, dirName)
-      val out = scala.collection.mutable.ArrayBuffer.empty[String]
-      val it = fs.listFiles(base, true)
-      while (it.hasNext) {
-        val st = it.next()
-        if (st.getPath.getName.endsWith(".parquet")) {
-          val full = st.getPath.toString
-          out += full.substring(full.indexOf(s"/$dirName/") + 1)
-        }
-      }
-      out.sorted.toSeq
-    }
-    var newFiles = listNew()
-    if (newFiles.isEmpty && carried.isEmpty) {
-      // a DML that removed every row of a PARTITIONED table writes zero
-      // part files (dynamic-partition writers create files lazily), and
-      // an all-empty file list would leave the table schema-less and
-      // unreadable. Re-write the empty state FLAT: a single-directory
-      // writer emits one schema-bearing empty file (partition columns
-      // persist as ordinary columns of the empty file, so the logical
-      // schema survives; the layout itself survives via the manifest's
-      // `partcols:` header, which the next non-empty publish reapplies).
-      toPhysicalCols(rewritten.limit(0)).coalesce(1)
-        .write.mode(SaveMode.Overwrite)
-        .parquet(new Path(t, dirName).toString)
-      newFiles = listNew()
-      require(newFiles.nonEmpty,
-        s"publishCoW: empty-state write of $table produced no schema file")
-    }
+    val newFiles =
+      if (carried.nonEmpty) parquetFilesUnder(fs, t, new Path(t, dirName)).map(_._1)
+      else writtenFiles(fs, t, dirName, toPhysicalCols(rewritten), "publishCoW")
     // commit tail — runs against a BASE version and may re-run against
     // the CAS winner after [[arbitrateRebase]] clears the rebase: every
     // step is metadata-class work (the data dir above wrote exactly
@@ -3644,7 +3530,7 @@ object WarehouseFs {
       // and every read takes the plain path. (Bloom/zone rows of masked
       // rows stay: indexes are supersets, the mask re-applies at read.)
       import org.apache.spark.sql.functions.{col => colF}
-      val priorDvRefs = dvFileRefs(spark, table, base)
+      val priorDvRefs = base.dvFiles
       val (dvToWrite, dvCarriedRefs): (Option[DataFrame], Seq[String]) =
         if (touched.nonEmpty && priorDvRefs.nonEmpty) {
           // dv `file` entries are URI-spelled; `touched` is manifest-spelled
@@ -3784,7 +3670,7 @@ object WarehouseFs {
       require(fs.exists(new Path(t, dirName)),
         s"publishCoW: this attempt's data dir $dirName was garbage-" +
           s"collected by a concurrent commit on $table — re-run the DML")
-      carriedNow = versionFiles(fs, t, base).filterNot(touchedSet)
+      carriedNow = base.files.filterNot(touchedSet)
     }
   }
 
@@ -3795,12 +3681,20 @@ object WarehouseFs {
   def currentVersionBytes(spark: SparkSession, table: String): Option[Long] =
     resolveVersion(spark, table, None).map { r =>
       val (fs, t) = fsFor(spark, table)
-      r.files match {
-        case Some(fl) =>
-          fl.map(f => fs.getFileStatus(new Path(t, f)).getLen).sum
-        case None => parquetBytes(spark, s"$table/${r.dirName}")
-      }
+      filesBytes(fs, t, r.files)
     }
+
+  /** Total length of the root-relative `files` — one `listStatus` per
+    * parent directory, not one status call per file: a version's (or a
+    * hot partition's) 10k files must not pay 10k sequential HEAD-class
+    * RPCs on an object store. */
+  private def filesBytes(fs: FileSystem, t: Path, files: Seq[String]): Long =
+    files.groupBy(f => new Path(t, f).getParent).iterator.map { case (dir, fls) =>
+      val wanted = fls.map(f => new Path(t, f).getName).toSet
+      fs.listStatus(dir).iterator
+        .filter(st => wanted.contains(st.getPath.getName))
+        .map(_.getLen).sum
+    }.sum
 
   /** What per-version metadata the CURRENT version carries: (bloom-
     * indexed columns, zone-map columns, stats present). Lets a rewriting
@@ -3914,8 +3808,7 @@ object WarehouseFs {
           bloomIndexCols = createBloomIndexCols,
           zoneMapCols = createZoneMapCols)
       case Some(r) =>
-        val (fs, t) = fsFor(spark, table)
-        val all = versionFiles(fs, t, r)
+        val all = r.files
         val aligned =
           if (all.nonEmpty) {
             val schemaV = versionSchema(spark, table, r)
@@ -3948,7 +3841,7 @@ object WarehouseFs {
   }
 
   /** Number of data dirs the CURRENT version's file set spans — 1 for a
-    * clean dir-format version, growing by ~1 per copy-on-write commit
+    * full publish, growing by ~1 per copy-on-write commit
     * (each CoW version adds its own dir and carries ancestors). The
     * signal a maintenance cadence watches: every referenced dir is one
     * more parquet relation in each read's union, so a long-running DML
@@ -3962,10 +3855,8 @@ object WarehouseFs {
     * (Hive `key=value` segments) — Nil for flat layouts or absent
     * tables. Pure path arithmetic over the manifest's file list. */
   def layoutPartitionCols(spark: SparkSession, table: String): Seq[String] =
-    resolveVersion(spark, table, None).map { r =>
-      val (fs, t) = fsFor(spark, table)
-      partitionColsOf(versionFiles(fs, t, r))
-    }.getOrElse(Nil)
+    resolveVersion(spark, table, None).map(r => partitionColsOf(r.files))
+      .getOrElse(Nil)
 
   /** DYNAMIC partition overwrite as a copy-on-write commit — the verb
     * behind `INSERT OVERWRITE` in `partitionOverwriteMode=dynamic` (and
@@ -3998,8 +3889,7 @@ object WarehouseFs {
         publishVersioned(data, table, partitionBy = partCols,
           keepVersions = keepVersions, collectStats = refreshStats)
       case Some(r) =>
-        val (fs, t) = fsFor(spark, table)
-        val all = versionFiles(fs, t, r)
+        val all = r.files
         val schemaV = versionSchema(spark, table, r)
         val tableCols = schemaV.fieldNames.toSeq
         require(data.columns.toSet == tableCols.toSet,
@@ -4091,8 +3981,7 @@ object WarehouseFs {
         publishVersioned(data, table, partitionBy = partCols,
           keepVersions = keepVersions, collectStats = refreshStats)
       case Some(r) =>
-        val (fs, t) = fsFor(spark, table)
-        val all = versionFiles(fs, t, r)
+        val all = r.files
         val schemaV = versionSchema(spark, table, r)
         val tableCols = schemaV.fieldNames.toSeq
         require(data.columns.toSet == tableCols.toSet,
@@ -4199,20 +4088,15 @@ object WarehouseFs {
       op = "update")
   }
 
-  /** Carry one per-file metadata relation VERBATIM across a DV-only
-    * commit (the file set is unchanged): prior rows re-point to the new
-    * version key, root-relativized once for dir-format priors. */
+  /** Carry one per-file metadata relation VERBATIM across a commit
+    * that keeps the prior's file set (a DV-only commit, a restore): the
+    * prior rows re-point to the new version key. */
   private def carryMetaVerbatim(spark: SparkSession, fs: FileSystem,
                                 metaDir: Path, prior: ResolvedVersion,
                                 dirName: String): Unit = {
-    import org.apache.spark.sql.functions.{col, concat, lit}
     val pm = new Path(metaDir, prior.dirName)
-    if (!fs.exists(pm)) return
-    val prev = readMetaEntry(spark, fs, pm)
-    val rooted =
-      if (prior.isFileList) prev
-      else prev.withColumn("file", concat(lit(s"${prior.dirName}/"), col("file")))
-    writeMetaEntry(spark, fs, rooted, new Path(metaDir, dirName))
+    if (fs.exists(pm))
+      writeMetaEntry(spark, fs, readMetaEntry(spark, fs, pm), new Path(metaDir, dirName))
   }
 
   /** Writer parallelism for a deletion-vector delta: enough tasks that a
@@ -4250,8 +4134,8 @@ object WarehouseFs {
       .filter(_.endsWith(".parquet")).sorted
       .map(n => s"_dv/$dirName/$n").toSeq
     def commitAgainst(base: ResolvedVersion): Boolean = {
-      val all = versionFiles(fs, t, base)
-      val dvRefs = (dvFileRefs(spark, table, base) ++ ownRefs).distinct
+      val all = base.files
+      val dvRefs = (base.dvFiles ++ ownRefs).distinct
       carryMetaVerbatim(spark, fs, indexDir(t), base, dirName)
       carryMetaVerbatim(spark, fs, zonesDir(t), base, dirName)
       val priorStats = new Path(statsDir(t), base.dirName)
@@ -4358,7 +4242,7 @@ object WarehouseFs {
       throw new IllegalArgumentException(
         s"compactPartition: $table is not a versioned table"))
     val (fs, t) = fsFor(spark, table)
-    val all = versionFiles(fs, t, r)
+    val all = r.files
     val layout = (partitionColsOf(all) ++ r.declaredPartCols).toSet
     val schemaV = versionSchema(spark, table, r)
     spec.keys.foreach { c =>
@@ -4376,19 +4260,8 @@ object WarehouseFs {
       touched = partitionCandidates(spark, table, touched, c, Seq(v), dt)
     }
     if (touched.isEmpty) return 0
-    // sizing: one listStatus per touched partition DIRECTORY, not one
-    // getFileStatus per file — a hot partition's 10k small files (the
-    // exact case this verb exists for) must not pay 10k sequential
-    // HEAD-class RPCs on an object store
-    val bytes = {
-      val byDir = touched.groupBy(f => new Path(t, f).getParent)
-      byDir.iterator.map { case (dir, fls) =>
-        val wanted = fls.map(f => new Path(t, f).getName).toSet
-        fs.listStatus(dir).iterator
-          .filter(st => wanted.contains(st.getPath.getName))
-          .map(_.getLen).sum
-      }.sum
-    }
+    // sizing: one listStatus per touched partition directory
+    val bytes = filesBytes(fs, t, touched)
     val parts = math.max(1,
       math.ceil(bytes / (targetMB * 1024.0 * 1024.0)).toInt)
     val rewritten =
@@ -4427,8 +4300,8 @@ object WarehouseFs {
         s"restore: version $version of $table is not retained " +
           s"(retained: ${listVersions(spark, table).mkString(", ")}) — " +
           "retention governs how far back a restore can reach"))
-    val files = versionFiles(fs, t, r)
-    val dvRefs = dvFileRefs(spark, table, r)
+    val files = r.files
+    val dvRefs = r.dvFiles
     val dirName =
       s"v${vname(cur.version + 1L)}-${java.util.UUID.randomUUID().toString.replace("-", "")}"
     // metadata rides along: the restored version's index/zone relations
@@ -4694,8 +4567,7 @@ object WarehouseFs {
     val r = resolveVersion(spark, table, None).getOrElse(
       throw new IllegalArgumentException(
         s"mergeInto: $table is not a versioned table"))
-    val (fs, t) = fsFor(spark, table)
-    val all = versionFiles(fs, t, r)
+    val all = r.files
 
     // one pass over the source: non-null + unique key tuples (ANSI
     // MERGE's cardinality rule), and the point-vs-bulk decision.
@@ -4827,8 +4699,7 @@ object WarehouseFs {
     val r = resolveVersion(spark, table, None).getOrElse(
       throw new IllegalArgumentException(
         s"mergeIntoKeysVectors: $table is not a versioned table"))
-    val (fs, t) = fsFor(spark, table)
-    val all = versionFiles(fs, t, r)
+    val all = r.files
     // same one-pass source audit as the CoW verb (ANSI cardinality rule)
     val allNonNull = keyCols.map(col(_).isNotNull).reduce(_ && _)
     val ks = source.agg(count(lit(1)), count(when(allNonNull, lit(1))),
@@ -4941,26 +4812,58 @@ object WarehouseFs {
     // KEYLESS tables feed by stable row identity instead: `keyCols =
     // Nil` diffs on `_row_id` (row tracking required — the output then
     // carries the id column, which is what a replica apply keys on)
-    if (keyCols.isEmpty)
-      return changeFeedByRowId(spark, table, fromVersion, toVersion)
+    if (keyCols.isEmpty) changeFeedByRowId(spark, table, fromVersion, toVersion)
+    else fileGranularFeed(spark, table, fromVersion, toVersion, keyCols,
+      (r, files) => readFilesGroupedDv(spark, table, files, r),
+      versionSchema(spark, table, _))
+  }
+
+  /** [[changeFeed]] for a KEYLESS table: the diff keys on the stable
+    * `_row_id` (row tracking), with the SAME file-granular economics —
+    * a file both manifests reference under an unchanged mask holds
+    * bit-identical rows under unchanged ids, so only non-shared (and
+    * mask-changed) files enter the diff. A CoW rewrite carries
+    * survivors' ids physically, so an untouched-but-co-located row
+    * diffs equal and emits nothing; a genuinely changed row emits an
+    * update pair under ONE identity. Output = data columns + `_row_id`
+    * + `_change_type` — a replica maintains itself by applying
+    * deletes/updates/inserts keyed on `_row_id`. */
+  def changeFeedByRowId(spark: SparkSession, table: String,
+                        fromVersion: Long,
+                        toVersion: Long): Option[DataFrame] = {
+    val sides = Seq(fromVersion, toVersion).flatMap(v => resolveVersion(spark, table, Some(v)))
+    require(sides.size < 2 || sides.forall(_.rowTracked),
+      s"changeFeed: $table has no declared keys and versions " +
+        s"$fromVersion/$toVersion are not row-tracked — set " +
+        "TBLPROPERTIES('rowTracking'='true') (the next commit " +
+        "backfills ids) or pass key columns")
+    fileGranularFeed(spark, table, fromVersion, toVersion, Seq("_row_id"),
+      (r, files) => readFilesRowId(spark, table, files, r),
+      r => versionSchema(spark, table, r)
+        .add("_row_id", org.apache.spark.sql.types.LongType, nullable = true))
+  }
+
+  /** The FILE-GRANULAR diff both change feeds share: a file both
+    * manifests reference is bit-identical in both versions, so (keys
+    * being unique per version) every key it holds is unchanged and
+    * cannot produce a feed row — and a key in a non-shared file of one
+    * side cannot hide in a shared file of the other (the shared file is
+    * in BOTH manifests, so that would duplicate the key within a
+    * version). Diffing only the non-shared files is therefore exact,
+    * and a 1-row CoW delete's feed scans 1 rewritten file + its
+    * ancestor instead of two full snapshots: O(touched files), matching
+    * the write side. Each side reads its non-shared files through
+    * `read` (a version and its files); `schema` types a side with none. */
+  private def fileGranularFeed(spark: SparkSession, table: String,
+                               fromVersion: Long, toVersion: Long,
+                               key: Seq[String],
+                               read: (ResolvedVersion, Seq[String]) => DataFrame,
+                               schema: ResolvedVersion => org.apache.spark.sql.types.StructType)
+      : Option[DataFrame] =
     for {
       ro <- resolveVersion(spark, table, Some(fromVersion))
       rn <- resolveVersion(spark, table, Some(toVersion))
     } yield {
-      // FILE-GRANULAR diff: a file both manifests reference is
-      // bit-identical in both versions, so (keys being unique per
-      // version) every key it holds is unchanged and cannot produce a
-      // feed row — and a key in a non-shared file of one side cannot
-      // hide in a shared file of the other (the shared file is in BOTH
-      // manifests, so that would duplicate the key within a version).
-      // Diffing only the non-shared files is therefore exact, and a
-      // 1-row CoW delete's feed scans 1 rewritten file + its ancestor
-      // instead of two full snapshots: O(touched files), matching the
-      // write side. Dir-format versions never share paths → full diff,
-      // the pre-r9 behavior.
-      val (fs, t) = fsFor(spark, table)
-      val of = versionFiles(fs, t, ro)
-      val nf = versionFiles(fs, t, rn)
       // a file both manifests reference is only CONTENT-identical when
       // its deletion-vector entries also agree — a DV-only commit
       // changes logical rows while sharing every path, so files whose
@@ -4978,74 +4881,16 @@ object WarehouseFs {
           a.exceptAll(b).unionByName(b.exceptAll(a))
             .select("file").distinct().collect().map(_.getString(0)).toSet
         }
-      val shared = nf.toSet.intersect(of.toSet).diff(dvChanged)
-      def side(r: ResolvedVersion, own: Seq[String]): DataFrame = {
-        val distinct = own.filterNot(shared)
+      val shared = rn.files.toSet.intersect(ro.files.toSet).diff(dvChanged)
+      def side(r: ResolvedVersion): DataFrame = {
+        val distinct = r.files.filterNot(shared)
         if (distinct.isEmpty)
           spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            versionSchema(spark, table, r))
-        else if (distinct.size == own.size) readResolved(spark, table, r)
-        else readFilesGroupedDv(spark, table, distinct, r)
+            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema(r))
+        else read(r, distinct)
       }
-      rowDiff(side(ro, of), side(rn, nf), keyCols,
-        s"v$fromVersion and v$toVersion of $table")
+      rowDiff(side(ro), side(rn), key, s"v$fromVersion and v$toVersion of $table")
     }
-  }
-
-  /** [[changeFeed]] for a KEYLESS table: the diff keys on the stable
-    * `_row_id` (row tracking), with the SAME file-granular economics —
-    * a file both manifests reference under an unchanged mask holds
-    * bit-identical rows under unchanged ids, so only non-shared (and
-    * mask-changed) files enter the diff. A CoW rewrite carries
-    * survivors' ids physically, so an untouched-but-co-located row
-    * diffs equal and emits nothing; a genuinely changed row emits an
-    * update pair under ONE identity. Output = data columns + `_row_id`
-    * + `_change_type` — a replica maintains itself by applying
-    * deletes/updates/inserts keyed on `_row_id`. */
-  def changeFeedByRowId(spark: SparkSession, table: String,
-                        fromVersion: Long,
-                        toVersion: Long): Option[DataFrame] = {
-    for {
-      ro <- resolveVersion(spark, table, Some(fromVersion))
-      rn <- resolveVersion(spark, table, Some(toVersion))
-    } yield {
-      require(ro.rowTracked && rn.rowTracked,
-        s"changeFeed: $table has no declared keys and versions " +
-          s"$fromVersion/$toVersion are not row-tracked — set " +
-          "TBLPROPERTIES('rowTracking'='true') (the next commit " +
-          "backfills ids) or pass key columns")
-      val (fs, t) = fsFor(spark, table)
-      val of = versionFiles(fs, t, ro)
-      val nf = versionFiles(fs, t, rn)
-      // mask-changed shared files re-enter the diff (see [[changeFeed]])
-      val dvo = readDvRelation(spark, table, ro)
-      val dvn = readDvRelation(spark, table, rn)
-      val dvChanged: Set[String] =
-        if (dvo.isEmpty && dvn.isEmpty) Set.empty
-        else {
-          val empty = dvo.orElse(dvn).get.limit(0)
-          val a = dvo.getOrElse(empty)
-          val b = dvn.getOrElse(empty)
-          a.exceptAll(b).unionByName(b.exceptAll(a))
-            .select("file").distinct().collect().map(_.getString(0)).toSet
-        }
-      val shared = nf.toSet.intersect(of.toSet).diff(dvChanged)
-      def side(r: ResolvedVersion, own: Seq[String]): DataFrame = {
-        val distinct = own.filterNot(shared)
-        if (distinct.isEmpty)
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            org.apache.spark.sql.types.StructType(
-              versionSchema(spark, table, r) :+
-                org.apache.spark.sql.types.StructField("_row_id",
-                  org.apache.spark.sql.types.LongType, nullable = true)))
-        else readFilesRowId(spark, table, distinct, r)
-      }
-      rowDiff(side(ro, of), side(rn, nf), Seq("_row_id"),
-        s"v$fromVersion and v$toVersion of $table")
-    }
-  }
 
   /** The diff core shared by the change feeds and [[syncToState]]:
     * one null-safe full-outer join; unchanged keys yield a null change
@@ -5251,8 +5096,7 @@ object WarehouseFs {
                              verb: String, op: String,
                              txn: Option[(String, Long)] = None): Unit = {
     import org.apache.spark.sql.functions.{col, count, count_distinct, lit, when}
-    val (fs, t) = fsFor(spark, table)
-    val all = versionFiles(fs, t, r)
+    val all = r.files
     val isUpsert = col("_change_type") =!= "delete"
     // the stamp columns a feed rides with (`_commit_version`,
     // `_commit_timestamp`) are provenance, not content — drop them here
@@ -5407,22 +5251,24 @@ object WarehouseFs {
   }
 
   /** Committed row count TRUSTABLE for a metadata-only `COUNT(*)`
-    * answer (the DSv2 aggregate pushdown): restricted to DIR-FORMAT
-    * versions, whose stats were profiled from — or compaction-copied
-    * content-identical to — exactly their own files. A FILE-LIST (CoW)
-    * version may carry prior stats forward (`refreshStats = false`),
-    * making its recorded row count stale; those return None and the
-    * count pays the honest scan. */
+    * answer (the DSv2 aggregate pushdown): restricted to full-publish
+    * versions ([[ResolvedVersion.ownsAllFiles]]), whose stats were
+    * profiled from — or compaction-copied content-identical to —
+    * exactly their own files. A copy-on-write, mask, restore or CONVERT
+    * version may carry prior stats forward (`refreshStats = false`) or
+    * have them rebuilt over carried files, so its recorded row count is
+    * not proven exact; those return None and the count pays the honest
+    * scan. */
   def exactCommittedRowCount(spark: SparkSession, table: String,
                              version: Option[Long] = None): Option[Long] =
-    resolveVersion(spark, table, version).filter(!_.isFileList).flatMap { r =>
+    resolveVersion(spark, table, version).filter(_.ownsAllFiles).flatMap { r =>
       val (fs, t) = fsFor(spark, table)
       parseStats(spark, fs, new Path(statsDir(t), r.dirName)).map(_.rowCount)
     }
 
   /** Exact committed MIN/MAX of zone-mapped columns — the metadata
     * answer behind the DSv2 aggregate pushdown, under the SAME trust
-    * rule as [[exactCommittedRowCount]] (dir-format versions only,
+    * rule as [[exactCommittedRowCount]] (full-publish versions only,
     * whose zone relation was derived from exactly their own files).
     * Folds the per-file (min, max) rows with Spark's own min/max — the
     * same functions that built them, so NULL and NaN semantics match a
@@ -5433,7 +5279,7 @@ object WarehouseFs {
                            columns: Seq[String],
                            version: Option[Long] = None)
       : Option[Map[String, (Any, Any)]] =
-    resolveVersion(spark, table, version).filter(!_.isFileList).flatMap { r =>
+    resolveVersion(spark, table, version).filter(_.ownsAllFiles).flatMap { r =>
       import org.apache.spark.sql.functions.{col, max, min}
       val (fs, t) = fsFor(spark, table)
       val zp = new Path(zonesDir(t), r.dirName)

@@ -372,7 +372,7 @@ class EtlPipelineSpec extends SparkSpec {
 
     // maintenance cadence: the blacklist's CoW chain spans 2 dirs after
     // its day-3 sync; with a 1-dir budget the next run folds it back to
-    // one clean dir version and pins the compacted state — same rows
+    // one full-publish version and pins the compacted state — same rows
     assert(WarehouseFs.versionSpanDirs(spark, blPath) === Some(2))
     val rowsBefore = WarehouseFs.readTable(spark, blPath).get
       .collect().map(_.toSeq).toSet

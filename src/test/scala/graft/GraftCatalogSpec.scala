@@ -426,7 +426,7 @@ class GraftCatalogSpec extends SparkSpec {
     // no streaming writer here → no idempotent-writer stamp
     assert(rows.map(_.getString(3)).toSeq === Seq("-", "-", "-"))
     assert(rows.last.getString(5) === "file-list", "a CoW delete commits a file-list manifest")
-    // OPTIMIZE folds the CoW chain into one clean dir version,
+    // OPTIMIZE folds the CoW chain into one full-publish version,
     // preserving the bloom index through the rewrite
     val opt = spark.sql(s"OPTIMIZE graft.$t").collect()
     assert(opt.head.getLong(0) === 4L)

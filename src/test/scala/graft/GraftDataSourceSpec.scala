@@ -210,6 +210,29 @@ class GraftDataSourceSpec extends SparkSpec {
     assert(c2.head().getLong(0) === 7999)
     assert(!c2.queryExecution.executedPlan.toString.contains("LocalTableScan"),
       "carried CoW stats must never serve a metadata count")
+    def countOf(table: String) = {
+      val c = spark.read.format("graft").option("table", table).load().groupBy().count()
+      (c.head().getLong(0), c.queryExecution.executedPlan.toString.contains("LocalTableScan"))
+    }
+    // OPTIMIZE folds the chain into a full publish of its own files,
+    // profiled from exactly those files: metadata answers again
+    graft.operators.ScaleJoins.compactParquet(spark, t, keepVersions = 5)
+    assert(countOf(t) === ((7999L, true)),
+      "an OPTIMIZE'd version's stats must serve the metadata count")
+    // a RESTORE to the full-publish v1 lists v1's files under its own
+    // attempt dir with v1's stats copied: not its own files, so it scans
+    WarehouseFs.restoreVersion(spark, t, 1L, keepVersions = 5)
+    assert(countOf(t) === ((8000L, false)),
+      "a restored version's copied stats must never serve a metadata count")
+    // CONVERT adopts files where they lie and REINDEX … STATS profiles
+    // them — the version owns no file of its own dir, so it scans too
+    val plain = tmpTable()
+    spark.range(500).toDF("id").write.parquet(plain)
+    WarehouseFs.convertToGraft(spark, plain)
+    WarehouseFs.reindexCurrentVersion(spark, plain, withStats = true)
+    assert(WarehouseFs.readStats(spark, plain).map(_.rowCount) === Some(500L))
+    assert(countOf(plain) === ((500L, false)),
+      "a CONVERTed version's stats must never serve a metadata count")
   }
 
   test("DSv2 reads partitioned CoW file-list versions: partition values survive across version dirs") {

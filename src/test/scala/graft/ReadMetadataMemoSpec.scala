@@ -49,13 +49,17 @@ class ReadMetadataMemoSpec extends SparkSpec {
     } finally sc.removeSparkListener(listener)
   }
 
-  /** Does the table's current manifest list files (a CoW chain) rather
-    * than name one data dir? */
-  private def isFileListVersion(path: String): Boolean = {
+  /** Does every file the table's current manifest lists lie in that
+    * version's own nonce-free data dir (a full publish), rather than some
+    * carry from earlier versions (a copy-on-write chain)? */
+  private def filesInOwnDir(path: String): Boolean = {
     val v = WarehouseFs.currentVersion(spark, path).get._1
-    val body = new String(java.nio.file.Files.readAllBytes(
+    val lines = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(f"$path/_versions/$v%08d")), "UTF-8")
-    body.startsWith("files:")
+      .split("\n").map(_.trim).filter(_.nonEmpty).toSeq
+    val own = lines.head.stripPrefix("files:")
+    val files = lines.tail.filterNot(_.matches("[a-z]+:.*"))
+    !own.contains('-') && files.nonEmpty && files.forall(_.startsWith(s"$own/"))
   }
 
   test("a warm point SELECT on a bloom-indexed table runs exactly one Spark " +
@@ -75,11 +79,11 @@ class ReadMetadataMemoSpec extends SparkSpec {
       assert(rows === Seq(want))
       assert(jobs === 1, s"a warm point read should start only its scan job, started $jobs")
     }
-    assert(isFileListVersion(s"$wh/$t"))
+    assert(!filesInOwnDir(s"$wh/$t"))
     warmPointRead(7L, (7L, 7, "u"))
     warmPointRead(12345L, (12345L, 5, "v12345"))
     spark.sql(s"OPTIMIZE graft.$t")
-    assert(!isFileListVersion(s"$wh/$t"))
+    assert(filesInOwnDir(s"$wh/$t"))
     warmPointRead(15007L, (15007L, 7, "u"))
     warmPointRead(42L, (42L, 2, "v42"))
     // an absent key finds no candidate file and still answers correctly
@@ -96,7 +100,7 @@ class ReadMetadataMemoSpec extends SparkSpec {
     spark.sql(s"INSERT INTO graft.$t SELECT id, CAST(id % 10 AS INT), " +
       s"CONCAT('v', id) FROM range(0, 20000, 1, 4)")
     spark.sql(s"DELETE FROM graft.$t WHERE id = 7")
-    assert(isFileListVersion(s"$wh/$t"))
+    assert(!filesInOwnDir(s"$wh/$t"))
     // no read of the new version ran before this one
     val (rows, jobs) = jobsOf(
       spark.sql(s"SELECT id, grp, v FROM graft.$t WHERE id = 12345")
@@ -201,14 +205,16 @@ class ReadMetadataMemoSpec extends SparkSpec {
       "each get the schema their own conf infers") {
     val t = tmpTable()
     WarehouseFs.publishVersioned(
-      spark.range(3).select(col("id"), (col("id") * 1000L).as("ts")), t)
-    // the version's data dir now holds a file from a non-Spark writer:
-    // nanosecond timestamps and no Spark schema in the footer, so what
-    // inference returns depends on the reading session's conf
+      spark.range(3).select(col("id"), (col("id") * 1000L).as("ts")).coalesce(1), t)
+    // the version's one listed data file is now a file from a non-Spark
+    // writer: nanosecond timestamps and no Spark schema in the footer, so
+    // what inference returns depends on the reading session's conf
     val dir = new java.io.File(WarehouseFs.currentVersion(spark, t).get._2)
+    val listed = dir.listFiles().filter(_.getName.endsWith(".parquet")).toSeq
+    assert(listed.size === 1)
     dir.listFiles().filter(f => f.getName.endsWith(".parquet") ||
       f.getName.endsWith(".parquet.crc")).foreach(f => assert(f.delete()))
-    writeNanosFile(new java.io.File(dir, "part-00000-foreign.parquet").toString,
+    writeNanosFile(listed.head.toString,
       Seq(0L -> 1000000000123L, 1L -> 2000000000456L))
     def session(nanosAsLong: Boolean) = {
       val s = spark.newSession()

@@ -593,6 +593,15 @@ class WarehouseDmlSpec extends SparkSpec {
       "manifest must declare the logical partition columns")
     assert(manifest.linesIterator.exists(_.contains("day=9")),
       "post-empty publishes must restore the key=value layout")
+    // a partitioned FULL publish of zero rows lands the same flat empty
+    // state: its writer emits no part file either, and a manifest must
+    // list at least one schema-bearing file to stay readable
+    WarehouseFs.publishVersioned(
+      Seq.empty[(Long, Int, String)].toDF("id", "day", "user"), t,
+      partitionBy = Seq("day"), keepVersions = 5)
+    val emptied = WarehouseFs.readTable(spark, t).get
+    assert(emptied.count() === 0)
+    assert(emptied.columns.toSet === Set("id", "day", "user"))
   }
 
   test("change feed is file-granular: a 1-row delete's feed scans only the rewritten file + its ancestor") {

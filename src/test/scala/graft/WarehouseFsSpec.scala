@@ -715,6 +715,30 @@ class WarehouseFsSpec extends SparkSpec {
       "a pre-ts manifest must keep resolving by its mtime")
   }
 
+  test("an empty or one-dir manifest body refuses loudly, naming the table and version") {
+    val t = s"${tmpDir()}/t"
+    WarehouseFs.publishVersioned(spark.range(5).toDF(), t, keepVersions = 5)
+    WarehouseFs.publishVersioned(spark.range(9).toDF(), t, keepVersions = 5)
+    val (fs, p) = WarehouseFs.fsFor(spark, t)
+    val vd = new org.apache.hadoop.fs.Path(p, "_versions")
+    def handWrite(v: String, body: String): Unit = {
+      val out = fs.create(new org.apache.hadoop.fs.Path(vd, v), true)
+      try out.write(body.getBytes("UTF-8")) finally out.close()
+    }
+    // an empty body (a torn or truncated write) and the retired one-dir
+    // body (a data-dir name, no `files:` line, no file list)
+    handWrite("00000003", "")
+    handWrite("00000004", s"v00000002\nts:${System.currentTimeMillis()}\nop:full")
+    Seq(3L -> "empty", 4L -> "not a file list").foreach { case (v, why) =>
+      val e = intercept[IllegalStateException](
+        WarehouseFs.readTableVersion(spark, t, v))
+      assert(e.getMessage.contains(f"$v%08d") && e.getMessage.contains(t) &&
+        e.getMessage.contains(why), e.getMessage)
+    }
+    // the well-formed versions still read
+    assert(WarehouseFs.readTableVersion(spark, t, 2L).get.count() === 9)
+  }
+
   test("overwritePartitions refuses TIMESTAMP partition columns loudly") {
     val t = s"${tmpDir()}/t"
     val df = spark.range(10).select(col("id"),
