@@ -64,11 +64,12 @@ object WarehouseFs {
 
   /** The visible `.parquet` files below `dir` as (path relative to
     * `root`, length), sorted by path — one recursive listing through the
-    * FileSystem's remote iterator, so object stores page it. Mirrors
-    * Spark's hidden-file convention: a path SEGMENT below `root` that
-    * starts with `_` or `.` (a `_temporary` / `.spark-staging` leftover
-    * of a crashed write, a sidecar dir) is invisible, as
-    * `spark.read.parquet` would skip it. */
+    * FileSystem's remote iterator, so object stores page it. Spark's
+    * hidden-path rule (`InMemoryFileIndex.shouldFilterOutPathName`): a
+    * path SEGMENT below `root` that starts with `.`, or with `_` and
+    * holds no `=`, is invisible (a `_temporary` / `.spark-staging`
+    * leftover of a crashed write, a sidecar dir), as `spark.read.parquet`
+    * would skip it; a `_p=1` partition dir is data and stays visible. */
   private def parquetFilesUnder(fs: FileSystem, root: Path,
                                 dir: Path): Seq[(String, Long)] = {
     val rootLen = fs.makeQualified(root).toUri.getPath.stripSuffix("/").length + 1
@@ -77,8 +78,8 @@ object WarehouseFs {
     while (it.hasNext) {
       val st = it.next()
       val rel = fs.makeQualified(st.getPath).toUri.getPath.drop(rootLen)
-      if (rel.endsWith(".parquet") &&
-          !rel.split('/').exists(s => s.startsWith("_") || s.startsWith(".")))
+      if (rel.endsWith(".parquet") && !rel.split('/').exists(s =>
+            s.startsWith(".") || (s.startsWith("_") && !s.contains('='))))
         out += ((rel, st.getLen))
     }
     out.sortBy(_._1).toSeq
@@ -136,8 +137,8 @@ object WarehouseFs {
   // layout never renames data at all:
   //
   //   table/
-  //     _versions/00000001    <- manifest file, content = data dir name
-  //     _versions/00000002
+  //     _versions/00000001    <- manifest file: a `files:` list
+  //     _versions/00000002       (the format comment below)
   //     v00000001/part-*.parquet     <- immutable version dirs
   //     v00000002/part-*.parquet
   //
@@ -145,8 +146,8 @@ object WarehouseFs {
   // commits by materializing one new small manifest file under its
   // final `_versions/NNNNNNNN` name through [[commitManifest]] — the
   // compare-and-set primitive below. Readers list `_versions` (one
-  // RPC), take the highest committed name, and read the version dir it
-  // names. A crash before the manifest commit leaves only orphans
+  // RPC), take the highest committed name, and read the files that
+  // manifest lists. A crash before the manifest commit leaves only orphans
   // readers never look at — the pointer can never reference incomplete
   // data — and the next publish reuses/garbage-collects them. Two
   // concurrent publishers race on the same manifest name; the loser's
@@ -403,10 +404,15 @@ object WarehouseFs {
     val where = s"manifest ${vname(version)} of $table"
     if (lines.isEmpty)
       throw new IllegalStateException(s"$where is empty — no files: line")
+    // no in-place migration: every publish parses the current and the
+    // retained manifests, so the way out is a new table path
     if (!lines.head.startsWith("files:"))
       throw new IllegalStateException(
         s"$where is not a file list (first line '${lines.head}', the " +
-          "retired one-dir format) — re-publish the table")
+          "retired one-dir format); this table cannot be read or " +
+          "re-published in place — read its data dir with " +
+          s"spark.read.parquet(\"$table/${lines.head}\") and publish that " +
+          "to a new table path")
     val partCols = lines.tail.headOption.filter(_.startsWith("partcols:"))
       .map(_.stripPrefix("partcols:").split(',').map(_.trim)
         .filter(_.nonEmpty).toSeq).getOrElse(Nil)
@@ -1531,7 +1537,7 @@ object WarehouseFs {
       resolveVersion(spark, table, Some(v)).map { r =>
         val committed = r.commitTsMillis.getOrElse(fs.getFileStatus(
           new Path(versionsDir(t), vname(v))).getModificationTime)
-        val bytes = r.files.map(f => fs.getFileStatus(new Path(t, f)).getLen).sum
+        val bytes = filesBytes(fs, t, r.files)
         // the committing verb and idempotent-writer stamp ride along
         // from the SAME manifest parse — the SQL surface must not
         // re-resolve each version (that would be O(n²) metadata RPCs on
@@ -3229,19 +3235,17 @@ object WarehouseFs {
       else col("__kt").cast("string"))
   }
 
-  /** Commit a copy-on-write version: `rewritten` lands in the version's
-    * own dir, `carried` files ride by reference, the bloom index (when
-    * the prior version had one) is maintained at O(rewritten). */
   /** Carry one per-file metadata relation (bloom index / zone map)
     * across a CoW commit: prior rows for carried files are re-used
     * as-is, only the new dir is re-derived — O(rewritten), the same
-    * economics as the data.
+    * economics as the data. A commit whose new dir holds no file (a
+    * whole-partition delete beside carried files) re-derives nothing.
     * `colPrefix` identifies the metadata's value columns (`b_`/`min_`),
     * from which the indexed column set is recovered. */
   private def carryFileMetadata(spark: SparkSession, fs: FileSystem,
                                 metaDir: Path, prior: ResolvedVersion,
                                 dirName: String, carried: Seq[String],
-                                colPrefix: String,
+                                wroteFiles: Boolean, colPrefix: String,
                                 rebuild: (Seq[String], Boolean) => DataFrame)
       : Unit = {
     import org.apache.spark.sql.functions.col
@@ -3252,9 +3256,10 @@ object WarehouseFs {
       .map(_.stripPrefix(colPrefix)).toSeq
     // new rows must hash under the PRIOR's canonicalization (UTC-marked
     // vs legacy session-tz) — a mixed-convention index would probe wrong
-    val rebuilt = rebuild(cols, prev.columns.contains("__utc"))
+    val kept = prev.filter(col("file").isInCollection(carried))
     writeMetaEntry(spark, fs,
-      prev.filter(col("file").isInCollection(carried)).unionByName(rebuilt),
+      if (wroteFiles) kept.unionByName(rebuild(cols, prev.columns.contains("__utc")))
+      else kept,
       new Path(metaDir, dirName))
   }
 
@@ -3440,6 +3445,9 @@ object WarehouseFs {
     }
   }
 
+  /** Commit a copy-on-write version: `rewritten` lands in the version's
+    * own dir, `carried` files ride by reference, the bloom index (when
+    * the prior version had one) is maintained at O(rewritten). */
   private def publishCoW(spark: SparkSession, table: String,
                          prior: ResolvedVersion, rewritten: DataFrame,
                          touched: Seq[String], carried: Seq[String],
@@ -3514,10 +3522,11 @@ object WarehouseFs {
       // bloom index + zone map: carry untouched files' rows, re-derive
       // only the new dir
       carryFileMetadata(spark, fs, indexDir(t), base, dirName, carriedNow,
-        "b_", (cols, priorUtc) =>
+        newFiles.nonEmpty, "b_", (cols, priorUtc) =>
           bloomIndexDf(spark, s"$table/$dirName", dirName, cols, utc = priorUtc))
       carryFileMetadata(spark, fs, zonesDir(t), base, dirName, carriedNow,
-        "min_", (cols, _) => zoneMapDf(spark, s"$table/$dirName", dirName, cols))
+        newFiles.nonEmpty, "min_", (cols, _) =>
+          zoneMapDf(spark, s"$table/$dirName", dirName, cols))
       // deletion vectors compose across the chain. An untouched-files
       // commit (append, MoR update/merge) carries the prior mask DELTAS
       // by reference at zero sidecar I/O and writes at most its OWN
@@ -3687,13 +3696,16 @@ object WarehouseFs {
   /** Total length of the root-relative `files` — one `listStatus` per
     * parent directory, not one status call per file: a version's (or a
     * hot partition's) 10k files must not pay 10k sequential HEAD-class
-    * RPCs on an object store. */
+    * RPCs on an object store. A listed file that is missing throws, as
+    * a per-file status call would. */
   private def filesBytes(fs: FileSystem, t: Path, files: Seq[String]): Long =
     files.groupBy(f => new Path(t, f).getParent).iterator.map { case (dir, fls) =>
       val wanted = fls.map(f => new Path(t, f).getName).toSet
-      fs.listStatus(dir).iterator
-        .filter(st => wanted.contains(st.getPath.getName))
-        .map(_.getLen).sum
+      val found = fs.listStatus(dir).filter(st => wanted.contains(st.getPath.getName))
+      wanted.diff(found.map(_.getPath.getName).toSet).headOption.foreach { n =>
+        throw new java.io.FileNotFoundException(s"${new Path(dir, n)} is missing")
+      }
+      found.iterator.map(_.getLen).sum
     }.sum
 
   /** What per-version metadata the CURRENT version carries: (bloom-

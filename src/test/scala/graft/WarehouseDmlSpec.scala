@@ -245,6 +245,41 @@ class WarehouseDmlSpec extends SparkSpec {
       Set(Seq(100L, 1)))
   }
 
+  test("a table partitioned by an underscore-named column publishes, deletes and reads back") {
+    val t = tmpTable()
+    WarehouseFs.publishVersioned(
+      (1 to 300).map(i => (i.toLong, i % 3, s"u$i")).toDF("id", "_p", "user")
+        .repartition(col("_p")),
+      t, partitionBy = Seq("_p"), keepVersions = 5, bloomIndexCols = Seq("id"))
+    // `_p=…` dirs are partition data, not hidden sidecars: the full
+    // publish lists their files
+    def listed(): Seq[String] = {
+      val latest = new java.io.File(s"$t/_versions").listFiles()
+        .map(_.getName).filter(_.matches("\\d{8}")).max
+      new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(s"$t/_versions/$latest")), "UTF-8")
+        .linesIterator.filter(_.endsWith(".parquet")).toSeq
+    }
+    assert(listed().nonEmpty && listed().forall(_.contains("/_p=")))
+    val v1 = WarehouseFs.readTable(spark, t).get
+    assert(v1.count() === 300)
+    assert(v1.columns.toSet === Set("id", "_p", "user"))
+    // a bloom-pruned CoW delete rewrites one `_p=…` file and lists it
+    // beside the two carried ones
+    WarehouseFs.deleteWhere(spark, t, "id", Seq(5L), keepVersions = 5)
+    assert(listed().count(_.startsWith(currentDir(t) + "/_p=")) === 1)
+    assert(listed().size === 3)
+    val afterDel = WarehouseFs.readTable(spark, t).get
+    assert(afterDel.count() === 299)
+    assert(afterDel.filter(col("id") === 6L).select("_p").as[Int].collect() ===
+      Array(0))
+    WarehouseFs.deleteWhere(spark, t, "_p", Seq(1), keepVersions = 5)
+    assert(WarehouseFs.readTable(spark, t).get.select("_p").distinct()
+      .as[Int].collect().toSet === Set(0, 2))
+    assert(WarehouseFs.readTable(spark, t).get.count() === 199)
+    assert(WarehouseFs.readTableVersion(spark, t, 1).get.count() === 300)
+  }
+
   test("committed statistics refresh through DML when the prior version carried them") {
     val t = tmpTable()
     WarehouseFs.publishVersioned(spark.range(100).toDF("id"), t,

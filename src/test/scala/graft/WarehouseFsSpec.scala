@@ -737,6 +737,18 @@ class WarehouseFsSpec extends SparkSpec {
     }
     // the well-formed versions still read
     assert(WarehouseFs.readTableVersion(spark, t, 2L).get.count() === 9)
+    // the table cannot be re-published in place (the current manifest
+    // is the one-dir body; nothing is written) — the refusal names the
+    // way out: the named data dir, published to a new table path
+    val inPlace = intercept[IllegalStateException](
+      WarehouseFs.publishVersioned(spark.range(3).toDF(), t, keepVersions = 5))
+    assert(inPlace.getMessage.contains(s"""spark.read.parquet("$t/v00000002")"""),
+      inPlace.getMessage)
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(p, "v00000005")))
+    val moved = s"${tmpDir()}/t2"
+    WarehouseFs.publishVersioned(spark.read.parquet(s"$t/v00000002"), moved)
+    assert(WarehouseFs.readTable(spark, moved).get.as[Long].collect().sorted
+      .toSeq === (0L until 9L))
   }
 
   test("overwritePartitions refuses TIMESTAMP partition columns loudly") {
